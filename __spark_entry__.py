@@ -564,7 +564,7 @@ def q_rolling_7day_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine mirror is for no NULL date to reach the window at
     all. A dateless order has no place on a daily series; Spark keeps
     asc_nulls_first as belt-and-braces. Reproduced + verified on the
-    hostile NULL-date fixture in tools/hostile_data_sweep.py.
+    hostile NULL-date fixture in tools/check_oracle.py testdata_hostile_nonan.
 
     r8 carried the row-count probe channel in this slot (post-mortem:
     docs/QUERIES.md §probe). The decode proved BOTH per-primitive
@@ -1187,7 +1187,7 @@ def q_json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     any magnitude (no scale-6 rounding hazard) and cannot overflow a
     LONG the way `div` would past mean_k ~ 9.2e12. Reproduced +
     verified on the hostile epoch-scale-k fixture
-    (tools/hostile_data_sweep.py).
+    (tools/check_oracle.py testdata_hostile_nonan).
 
     r8 carried the row-count probe channel in this slot; the decode
     proved both checksums agree across engines (post-mortem:

@@ -26,8 +26,7 @@ from pyspark.sql import SparkSession
 from .writers import retry
 
 # The reference's startup layout, typo ("qurantine") deliberately NOT
-# reproduced: the engine's quarantine sink spells it correctly, and
-# naming here must match where writers.write_quarantine points.
+# reproduced: the engine's quarantine sink spells it correctly.
 DEFAULT_FOLDERS = ("data", "processed", "audit", "quarantine", "schema")
 
 

@@ -1,8 +1,9 @@
 """Sinks (reference K1-K4).
 
-- quarantine: bad rows + error_reason + quarantine_date, parquet
-  partitioned by quarantine_date (reference K3 used JSON,
-  ``code/helpers.py:229-244``; parquet keeps pushdown on re-reads).
+- quarantine: written by ``streaming/ingest.process_batch`` — bad rows
+  + error_reason, parquet partitioned by batch_id so a replayed batch
+  overwrites its own partition (reference K3 used date-partitioned
+  JSON, ``code/helpers.py:229-244``).
 - audit: explicit-schema one-row-per-batch table partitioned by
   audit_date (fixes reference anti-pattern §4.3-10: inferred audit
   schema), counts sourced from ``observe()`` metrics, not extra actions.
@@ -17,7 +18,6 @@ from dataclasses import dataclass
 from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 T_ = TypeVar("T_")
@@ -58,20 +58,6 @@ def retry(attempts: int = 3, delay_s: float = 5.0, backoff: float = 2.0):
         return wrapped
 
     return deco
-
-
-@retry()
-def write_quarantine(bad: DataFrame, out_dir: str, error_col: str = "error_reason") -> None:
-    """Bad rows partitioned by quarantine_date; append-mode parquet.
-    Partition pruning on the date keeps replays/inspections cheap."""
-    (
-        bad.withColumn(
-            "quarantine_date", F.date_format(F.current_timestamp(), "yyyy-MM-dd")
-        )
-        .write.mode("append")
-        .partitionBy("quarantine_date")
-        .parquet(out_dir)
-    )
 
 
 @dataclass
@@ -133,10 +119,3 @@ def write_jdbc(
     props.update(properties or {})
     df.write.jdbc(url=url, table=table, mode=mode, properties=props)
 
-
-def write_partitioned_parquet(
-    df: DataFrame, out_dir: str, partition_cols: list[str], mode: str = "append"
-) -> None:
-    """The engine's native serving store: partitioned columnar parquet
-    (replaces the reference's Postgres serving tables for analytics)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(out_dir)

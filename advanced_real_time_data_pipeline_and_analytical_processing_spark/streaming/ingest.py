@@ -28,16 +28,14 @@ Fixes applied vs the reference (SURVEY.md §4.3):
   source files move to ``processed_dir``; if the batch raises they move
   to ``failed_dir``. Implemented with the Hadoop FileSystem API (rename,
   copy+delete fallback semantics on object stores) so the same code
-  serves file:// in tests and s3a:// in production. Alternatively the
-  source itself can archive via ``clean_source``/``source_archive_dir``
-  (Spark's own file-source archiving; note Spark delays archiving a
-  batch's files until a later batch commits, so outcome-based routing
-  still needs the driver-side move).
+  serves file:// in tests and s3a:// in production. (Spark's own
+  ``cleanSource`` archiving is not used: it delays a batch's files until
+  a later batch commits and cannot route by outcome.)
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -76,10 +74,6 @@ class IngestConfig:
     # batch. None disables the corresponding move.
     processed_dir: str | None = None
     failed_dir: str | None = None
-    # Spark-native source archiving (alternative to the driver-side
-    # moves): clean_source in {"archive", "delete"}.
-    clean_source: str | None = None
-    source_archive_dir: str | None = None
     # K1/K2 composition hook: called once per micro-batch with the
     # enriched GOOD frame (data cols + file_path + ingestion_ts +
     # row_hash) and the batch id, AFTER the parquet good sink — the
@@ -100,10 +94,6 @@ def build_stream(spark: SparkSession, cfg: IngestConfig) -> DataFrame:
         reader = reader.option("header", "true")
     if cfg.max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(cfg.max_files_per_trigger))
-    if cfg.clean_source:
-        reader = reader.option("cleanSource", cfg.clean_source)
-        if cfg.source_archive_dir:
-            reader = reader.option("sourceArchiveDir", cfg.source_archive_dir)
     return reader.load(cfg.source_dir)
 
 
@@ -250,10 +240,9 @@ def start_ingest(spark: SparkSession, cfg: IngestConfig):
 
 
 def run_ingest_once(spark: SparkSession, cfg: IngestConfig) -> None:
-    """Synchronous availableNow drain (used by tests/backfills)."""
-    cfg.trigger = {"availableNow": True}
-    q = start_ingest(spark, cfg)
-    q.awaitTermination()
+    """Synchronous availableNow drain (used by tests/backfills). The
+    caller's config is left as it is."""
+    start_ingest(spark, replace(cfg, trigger={"availableNow": True})).awaitTermination()
 
 
 def start_multi_format_ingest(
@@ -271,7 +260,6 @@ def start_multi_format_ingest(
 
 def run_multi_format_once(spark: SparkSession, cfgs: list[IngestConfig]) -> None:
     """availableNow drain of every per-format stream (test/backfill)."""
-    for cfg in cfgs:
-        cfg.trigger = {"availableNow": True}
-    for q in start_multi_format_ingest(spark, cfgs):
+    drains = [replace(cfg, trigger={"availableNow": True}) for cfg in cfgs]
+    for q in start_multi_format_ingest(spark, drains):
         q.awaitTermination()

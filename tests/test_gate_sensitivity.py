@@ -39,7 +39,7 @@ sys.path.insert(0, "/root/repo")
 import __spark_entry__ as em
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.catalog import TABLES
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators import topk
-from tools.driver_gate_replica import table_hash
+from tools.check_oracle import table_hash
 
 SF = "/root/testdata/sf0.001"
 

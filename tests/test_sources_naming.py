@@ -118,26 +118,6 @@ def test_eventgen_partition_independence(spark):
     assert df.rdd.getNumPartitions() == 4
 
 
-def test_bootstrap_layout_creates_reference_folder_set(spark, tmp_path):
-    """Reference K6 (code/utils.py:14-46): base + the five pipeline
-    folders (reference spelling incl. 'qurantine'), idempotent —
-    re-running leaves existing dirs (and their contents) untouched."""
-    import os
-
-    from advanced_real_time_data_pipeline_and_analytical_processing_spark.sources import layout
-
-    base = str(tmp_path / "bucket")
-    made = layout.bootstrap_layout(spark, base)
-    assert sorted(os.listdir(base)) == sorted(layout.DEFAULT_FOLDERS)
-    assert len(made) == 6  # base + 5 folders
-    # idempotent: drop a file in, re-run, file survives
-    probe = os.path.join(base, "data", "probe.txt")
-    with open(probe, "w") as f:
-        f.write("x")
-    layout.bootstrap_layout(spark, base)
-    assert os.path.exists(probe)
-
-
 def test_load_schema_any_via_hadoop_uri(spark, tmp_path):
     # the cluster job's path: schema prefix addressed as a URI, read
     # through Hadoop FileSystem.open (works unchanged against s3a://)

@@ -104,6 +104,25 @@ def test_ingest_exactly_once_on_rerun(spark, dirs):
     assert spark.read.parquet(dirs["good"]).count() == 3
 
 
+def test_drain_helpers_leave_caller_trigger(spark, dirs):
+    """run_ingest_once / run_multi_format_once drain with availableNow on
+    a copy: a config reused for start_ingest afterwards keeps its own
+    trigger."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming.ingest import (
+        run_multi_format_once,
+    )
+
+    write_file(dirs, "a.csv", CSV_GOOD)
+    cfg = make_cfg(dirs)
+    cfg.trigger = {"processingTime": "10 seconds"}
+    run_ingest_once(spark, cfg)
+    assert cfg.trigger == {"processingTime": "10 seconds"}
+    assert spark.read.parquet(dirs["good"]).count() == 2
+
+    run_multi_format_once(spark, [cfg])
+    assert cfg.trigger == {"processingTime": "10 seconds"}
+
+
 def _events(spark):
     rows = [
         ("2024-01-01 00:05:00", "u1", "click", 1.0),

@@ -24,7 +24,7 @@
      errors — both divergence signatures.
 
 The static pass is the MAP; the hostile-data sweep
-(tools/hostile_data_sweep.py over testdata_hostile_nonan, NULLs in
+(tools/check_oracle.py over testdata_hostile_nonan, NULLs in
 every nullable column + int64-edge magnitudes) is the TERRITORY — a
 site is only proven safe by the sweep's full-registry PASS.  Run both.
 
@@ -349,7 +349,7 @@ def main() -> int:
             lines.append(f"- `{name}`: `...{ctx}` — {disp}")
     lines.append("")
     lines.append(
-        "Empirical gate: `tools/hostile_data_sweep.py testdata_hostile_nonan`"
+        "Empirical gate: `tools/check_oracle.py testdata_hostile_nonan`"
         " must be all-PASS — the fixture carries NULLs in every nullable"
         " column and int64-edge magnitudes, so every live site above"
         " diverges there if actually unsafe."

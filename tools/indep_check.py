@@ -1,9 +1,9 @@
 """Standing independent comparator gate (VERDICT r11 order #1 —
 promoted from the session artifact docs/indep_check_r11.py into a tier
-tools/gate.sh runs after the typed replica).
+tools/gate.sh runs after the oracle gate).
 
-Deliberately NOT sharing code with tools/driver_gate_replica.py or
-tools/check_oracle.py: Spark rows via collect() -> (value, type-tag)
+Deliberately NOT sharing code with tools/check_oracle.py (the C1/C2
+oracle gate): Spark rows via collect() -> (value, type-tag)
 multisets; DuckDB via fetchall() on the same connection config. A
 comparator bug in the standing tools would have to be independently
 reproduced here to stay hidden. tests/test_indep_check.py pins the
