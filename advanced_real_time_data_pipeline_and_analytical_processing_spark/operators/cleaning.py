@@ -7,20 +7,26 @@ chain; here it is a single projection so the analyzed plan stays flat
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructType
+
+
+def trim_exprs(schema: StructType) -> list[Column]:
+    """The trim projection of `schema`: string columns trimmed, the rest
+    passed through. Columns are reusable across frames, so a stream with
+    a fixed schema builds this once."""
+    return [
+        F.trim(F.col(f.name)).alias(f.name)
+        if isinstance(f.dataType, StringType)
+        else F.col(f.name)
+        for f in schema.fields
+    ]
 
 
 def trim_strings(df: DataFrame) -> DataFrame:
     """Trim all string columns in ONE select (not N withColumns)."""
-    cols = [
-        F.trim(F.col(f.name)).alias(f.name)
-        if isinstance(f.dataType, StringType)
-        else F.col(f.name)
-        for f in df.schema.fields
-    ]
-    return df.select(*cols)
+    return df.select(*trim_exprs(df.schema))
 
 
 def drop_all_null_rows(df: DataFrame) -> DataFrame:

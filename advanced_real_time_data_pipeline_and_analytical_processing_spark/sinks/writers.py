@@ -13,8 +13,9 @@
 
 from __future__ import annotations
 
+import datetime as dt
 import time
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
@@ -72,30 +73,28 @@ class AuditRecord:
     message: str | None = None
 
 
+# The audit row as a one-row VALUES relation: it plans as a
+# LocalTableScan built in the JVM (no pickled Python RDD, no codegen).
+# Every value is a bound parameter, never formatted into the text —
+# `message` carries arbitrary exception text. Timestamps are cast to
+# TIMESTAMP_LTZ explicitly: a bare TIMESTAMP follows
+# spark.sql.timestampType.
+_AUDIT_CASTS = ", ".join(
+    f"CAST(:{f.name} AS "
+    f"{'TIMESTAMP_LTZ' if isinstance(f.dataType, T.TimestampType) else f.dataType.simpleString()})"
+    for f in AUDIT_SCHEMA.fields
+)
+_AUDIT_SQL = f"SELECT * FROM VALUES ({_AUDIT_CASTS}) AS t({', '.join(AUDIT_SCHEMA.fieldNames())})"
+
+
 @retry()
 def write_audit(spark: SparkSession, out_dir: str, rec: AuditRecord) -> None:
-    """One-row explicit-schema audit append; coalesce(1) is fine at this
-    cardinality (reference K4)."""
-    import datetime as dt
-
+    """One-row explicit-schema audit append (reference K4); one row is
+    one partition, so one file per append."""
     now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    row = [
-        (
-            now,
-            rec.batch_id,
-            rec.source,
-            rec.fmt,
-            rec.total_rows,
-            rec.good_rows,
-            rec.bad_rows,
-            rec.status,
-            rec.message,
-            now.strftime("%Y-%m-%d"),
-        )
-    ]
+    args = {**asdict(rec), "audit_ts": now, "audit_date": now.strftime("%Y-%m-%d")}
     (
-        spark.createDataFrame(row, AUDIT_SCHEMA)
-        .coalesce(1)
+        spark.sql(_AUDIT_SQL, args=args)
         .write.mode("append")
         .partitionBy("audit_date")
         .parquet(out_dir)

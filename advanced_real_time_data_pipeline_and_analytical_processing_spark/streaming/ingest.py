@@ -11,10 +11,13 @@ Fixes applied vs the reference (SURVEY.md §4.3):
   whole-text discovery + batch re-read.
 - §4.3-2 unbounded dedup state: the file source's checkpointed
   exactly-once file tracking replaces ``dropDuplicates(file_path)``.
-- §4.3-3 action storm: good/bad/total counts come from ``observe()``
-  metrics collected during the good-path write — ZERO extra count jobs
-  (the reference ran >=12 actions per batch; we run the sink writes plus
-  at most one tiny file-list collect over the persisted frame).
+- §4.3-3 action storm: the success path runs the sink writes and
+  nothing else — one job each for the good, quarantine (only when there
+  are bad rows) and audit writes, no shuffle. The good/bad/total counts
+  and the batch's file list come from ``observe()`` metrics collected
+  during the good write (the reference ran >=12 actions per batch). The
+  batch's expressions are built once per stream, and the audit row is a
+  JVM-side local relation.
 - §4.3-6/7: typed empty frames, quarantine keyed by batch + source file
   column rather than comma-joined table names.
 - §4.3-8 at-least-once side effects: the good and quarantine sinks are
@@ -38,16 +41,16 @@ from __future__ import annotations
 from dataclasses import dataclass, field, replace
 from typing import Callable
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators.cleaning import clean
+from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators.cleaning import drop_all_null_rows, trim_exprs
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators.enrichment import row_hash_expr
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators.validation import (
     ERROR_COL,
     RuleSet,
-    validate,
 )
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.sinks.bootstrap import (
     bootstrap_ingest_dirs,
@@ -118,45 +121,64 @@ def move_files(spark: SparkSession, paths: list[str], dest_dir: str | None) -> N
             src_fs.rename(src, HPath(dest, src.getName()))
 
 
+def _listed_files(marked: DataFrame, cap: int | None) -> list[str]:
+    """The batch's files by a distinct over the persisted frame, for the
+    failure path when the good write's observation never arrived. Size
+    cap: one row per file, at most maxFilesPerTrigger rows. A listing
+    that fails in Spark itself (e.g. the source read is what broke)
+    moves nothing, so the batch's own error is the one re-raised."""
+    listing = marked.select("file_path").distinct()
+    if cap:
+        listing = listing.limit(cap)
+    try:
+        return [r[0] for r in listing.collect()]
+    except PySparkException:
+        return []
+
+
 def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
     """foreachBatch body: one persisted pass, good/bad split, both sinks
-    idempotent on replay, exact audit counts from observe() metrics."""
+    idempotent on replay, exact audit counts and the routed file list
+    from observe() metrics.
+
+    The batch's expressions are built once here, not per micro-batch:
+    the stream's schema is fixed at ``cfg.schema`` and Column objects
+    are reusable across frames, so a batch pays only for its writes."""
+    data_cols = cfg.schema.fieldNames()
+    trimmed = trim_exprs(cfg.schema)
+    # file_path is materialized INSIDE the persisted plan: evaluating
+    # input_file_name() above a cache returns '' on cache hits.
+    marks = (
+        cfg.rules.error_expr(data_cols).alias(ERROR_COL),
+        F.input_file_name().alias("file_path"),
+    )
+    is_good, is_bad = F.col(ERROR_COL).isNull(), F.col(ERROR_COL).isNotNull()
+    batch_metrics = (
+        F.count(F.lit(1)).alias("total"),
+        F.count(F.when(is_bad, F.lit(1))).alias("bad"),
+        # one entry per file, at most maxFilesPerTrigger of them
+        F.collect_set("file_path").alias("files"),
+    )
+    enrichment = (
+        F.current_timestamp().alias("ingestion_ts"),
+        # hash over the DATA columns only (reference recipe,
+        # code/helpers.py:208-215) so replays produce identical
+        # idempotency keys.
+        row_hash_expr(data_cols).alias("row_hash"),
+    )
+    quarantine_date = F.date_format(F.current_timestamp(), "yyyy-MM-dd")
 
     def _run(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.columns != data_cols:
+            raise ValueError(f"batch columns {batch_df.columns} != schema {data_cols}")
         spark = batch_df.sparkSession
-        data_cols = list(batch_df.columns)
-        # file_path is materialized INSIDE the persisted plan: evaluating
-        # input_file_name() above a cache returns '' on cache hits.
-        marked = (
-            validate(clean(batch_df), cfg.rules)
-            .withColumn("file_path", F.input_file_name())
-            .persist()
-        )
-        files: list[str] = []
+        # clean() (trim, then all-null drop) and validate(), prebuilt
+        marked = drop_all_null_rows(batch_df.select(*trimmed)).select("*", *marks).persist()
+        files: list[str] | None = None  # set once the observation arrives
         try:
-            # File list for lifecycle routing: prefer the driver-side
-            # FileIndex snapshot (no job); fall back to a distinct over
-            # the persisted frame (tiny: one row per file).
-            files = list(batch_df.inputFiles() or []) or [
-                r[0] for r in marked.select("file_path").distinct().collect()
-            ]
-
             obs = Observation()
-            observed = marked.observe(
-                obs,
-                F.count(F.lit(1)).alias("total"),
-                F.count(F.when(F.col(ERROR_COL).isNotNull(), F.lit(1))).alias("bad"),
-            )
-            good = observed.filter(F.col(ERROR_COL).isNull())
-            enriched = good.select(
-                *data_cols,
-                "file_path",
-                F.current_timestamp().alias("ingestion_ts"),
-                # hash over the DATA columns only (reference recipe,
-                # code/helpers.py:208-215) so replays produce identical
-                # idempotency keys.
-                row_hash_expr(data_cols).alias("row_hash"),
-            )
+            observed = marked.observe(obs, *batch_metrics)
+            enriched = observed.filter(is_good).drop(ERROR_COL).select("*", *enrichment)
             (
                 enriched.withColumn("batch_id", F.lit(batch_id))
                 .write.mode("overwrite")
@@ -164,8 +186,9 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
                 .partitionBy("batch_id")
                 .parquet(cfg.good_dir)
             )
-            metrics = obs.get  # filled by the write above — no count jobs
+            metrics = obs.get  # filled by the write above — no extra jobs
             total, bad_count = int(metrics["total"]), int(metrics["bad"])
+            files = list(metrics["files"])
 
             if cfg.on_good is not None:
                 # K1/K2 slot (e.g. staged JDBC MERGE): recomputes from
@@ -175,11 +198,8 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
 
             if bad_count:
                 (
-                    marked.filter(F.col(ERROR_COL).isNotNull())
-                    .withColumn(
-                        "quarantine_date",
-                        F.date_format(F.current_timestamp(), "yyyy-MM-dd"),
-                    )
+                    marked.filter(is_bad)
+                    .withColumn("quarantine_date", quarantine_date)
                     .withColumn("batch_id", F.lit(batch_id))
                     .write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
@@ -215,7 +235,9 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
                     message=str(exc)[:500],
                 ),
             )
-            move_files(spark, files, cfg.failed_dir)
+            if files is None and cfg.failed_dir:
+                files = _listed_files(marked, cfg.max_files_per_trigger)
+            move_files(spark, files or [], cfg.failed_dir)
             raise
         finally:
             marked.unpersist()

@@ -120,7 +120,8 @@ atexit.register(_sweep_scratch)
 def register_scratch_for_exit(path: str) -> str:
     """Mark a scratch dir for removal at interpreter exit (idempotent,
     missing dirs ignored). Returns the path for call-through use."""
-    _EXIT_SCRATCH.append(path)
+    if path not in _EXIT_SCRATCH:
+        _EXIT_SCRATCH.append(path)
     return path
 
 

@@ -357,9 +357,13 @@ def _single(name: str) -> None:
     med = sorted(reps)[len(reps) // 2] if len(reps) % 2 else round(
         (sorted(reps)[len(reps) // 2 - 1] + sorted(reps)[len(reps) // 2]) / 2, 3
     )
-    # same last-line contract as main(): stop first, artifact line last
-    spark.stop()
-    print(json.dumps({"name": name, "sec": med, "reps": reps}), flush=True)
+    payload = json.dumps({"name": name, "sec": med, "reps": reps})
+    # same last-line contract as main(): stop first, artifact line last,
+    # printed even if the teardown raises
+    try:
+        spark.stop()
+    finally:
+        print(payload, flush=True)
 
 
 def main() -> None:
@@ -449,9 +453,12 @@ def main() -> None:
     # stop BEFORE printing so no teardown noise can follow the artifact:
     # the driver parses the LAST stdout line (VERDICT r14 #2 — r13's
     # stored tail began mid-JSON and the round-over-round comparison was
-    # lost). Pinned by tests/test_bench_protocol.py.
-    spark.stop()
-    print(payload, flush=True)
+    # lost). A teardown that raises must not drop the built payload
+    # either. Both pinned by tests/test_bench_protocol.py.
+    try:
+        spark.stop()
+    finally:
+        print(payload, flush=True)
 
 
 if __name__ == "__main__":

@@ -158,6 +158,38 @@ def test_shared_bench_emits_json_as_final_stdout_line():
     assert all(v >= 0 for v in art["queries"].values())
 
 
+@pytest.mark.parametrize("mode", ["shared", "single"])
+def test_payload_survives_a_raising_spark_stop(tmp_path, monkeypatch, capsys, mode):
+    """The artifact is built before teardown; a spark.stop() that raises
+    must still leave it as the final stdout line (the error propagates
+    after it)."""
+    from unittest import mock
+
+    spark = mock.MagicMock()
+    spark.stop.side_effect = RuntimeError("teardown failed")
+    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(
+        bench.entrymod, "queries", lambda: {"qa": lambda s, d: mock.MagicMock()}
+    )
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path / "sf0.001"))
+    monkeypatch.setenv("SPARK_GRAFT_WARM_DIR", str(tmp_path / "absent"))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    monkeypatch.delenv("SPARK_GRAFT_QUERIES", raising=False)
+    monkeypatch.setattr(sys, "argv", ["bench.py"])
+
+    with pytest.raises(RuntimeError, match="teardown failed"):
+        if mode == "shared":
+            bench.main()
+        else:
+            bench._single("qa")
+    spark.stop.assert_called_once()
+    art = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    if mode == "shared":
+        assert art["mode"] == "shared" and set(art["queries"]) == {"qa"}
+    else:
+        assert art["name"] == "qa" and len(art["reps"]) == 1
+
+
 def test_prior_default_picks_newest_floor():
     got = bench._prior_floor_path()
     assert got is not None and got.endswith("_floor.json")

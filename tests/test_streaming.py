@@ -307,6 +307,20 @@ def test_scratch_root_skips_low_space_devshm(monkeypatch):
     assert stateful._scratch_root() == "/somewhere/else"
 
 
+def test_register_scratch_for_exit_is_idempotent(tmp_path, monkeypatch):
+    """Registering a scratch dir twice leaves one entry, so one
+    release_scratch() unregisters it for good."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import stateful
+
+    monkeypatch.setattr(stateful, "_EXIT_SCRATCH", [])
+    path = str(tmp_path / "sink")
+    assert stateful.register_scratch_for_exit(path) == path
+    assert stateful.register_scratch_for_exit(path) == path
+    assert stateful._EXIT_SCRATCH == [path]
+    stateful.release_scratch(path)
+    assert stateful._EXIT_SCRATCH == []
+
+
 def test_file_lifecycle_processed_routing(spark, dirs, tmp_path):
     """K5 (reference code/utils.py:48-78): after a successful batch the
     consumed source files — clean AND dirty, à la the reference's
@@ -375,6 +389,112 @@ def test_ingest_batch_replay_is_idempotent(spark, dirs):
     body(batch_df, 7)  # replay of the same micro-batch
     assert spark.read.parquet(dirs["good"]).count() == 3
     assert spark.read.parquet(dirs["quarantine"]).count() == 2
+
+
+def _spark_work(spark, fn) -> tuple[int, int, int]:
+    """(jobs, stages run, shuffle bytes written) of what ``fn`` fires,
+    read from the status store above a job-id watermark taken first."""
+    sc = spark.sparkContext._jsc.sc()
+    first = sc.dagScheduler().nextJobId()
+    fn()
+    sc.listenerBus().waitUntilEmpty()
+    store = sc.statusStore()
+    jobs = stages = shuffle = 0
+    for jid in range(first, sc.dagScheduler().nextJobId()):
+        jobs += 1
+        ids = store.job(jid).stageIds()
+        for k in range(ids.size()):
+            stage = store.lastStageAttempt(ids.apply(k))
+            if stage.status().toString() != "SKIPPED":
+                stages += 1
+                shuffle += stage.shuffleWriteBytes()
+    return jobs, stages, shuffle
+
+
+def test_process_batch_runs_only_its_sink_writes(spark, dirs, tmp_path, monkeypatch):
+    """§4.3-3: inside foreachBatch a micro-batch fires one single-stage
+    job per sink write — good, quarantine (only with bad rows), audit —
+    and nothing else: the counts and the routed file list ride the good
+    write's observe(). Its expressions are built once per stream, not
+    once per batch."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import ingest as ing
+
+    built = {"trim_exprs": 0, "error_expr": 0, "row_hash_expr": 0}
+
+    def counting(name, fn):
+        def wrapped(*args):
+            built[name] += 1
+            return fn(*args)
+
+        return wrapped
+
+    monkeypatch.setattr(ing, "trim_exprs", counting("trim_exprs", ing.trim_exprs))
+    monkeypatch.setattr(ing, "row_hash_expr", counting("row_hash_expr", ing.row_hash_expr))
+    monkeypatch.setattr(V.RuleSet, "error_expr", counting("error_expr", V.RuleSet.error_expr))
+
+    write_file(dirs, "mixed.csv", CSV_MIXED)
+    write_file(dirs, "clean.csv", CSV_GOOD)
+    later = os.path.getmtime(os.path.join(dirs["source"], "mixed.csv")) + 10
+    os.utime(os.path.join(dirs["source"], "clean.csv"), (later, later))  # second batch
+    processed = str(tmp_path / "processed")
+    cfg = make_cfg(dirs)
+    cfg.processed_dir = processed
+    cfg.max_files_per_trigger = 1
+    body = ing.process_batch(cfg)
+    work: list[tuple[int, int, int]] = []
+
+    def measured(batch_df, batch_id):
+        work.append(_spark_work(spark, lambda: body(batch_df, batch_id)))
+
+    (
+        ing.build_stream(spark, cfg)
+        .writeStream.foreachBatch(measured)
+        .option("checkpointLocation", cfg.checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+    assert work == [(3, 3, 0), (2, 2, 0)]
+    assert built == {"trim_exprs": 1, "error_expr": 1, "row_hash_expr": 1}
+    assert sorted(os.listdir(processed)) == ["clean.csv", "mixed.csv"]
+    assert spark.read.parquet(dirs["good"]).count() == 3
+    assert spark.read.parquet(dirs["quarantine"]).count() == 2
+    audit = {r["batch_id"]: r for r in spark.read.parquet(dirs["audit"]).collect()}
+    assert [(audit[b]["total_rows"], audit[b]["bad_rows"]) for b in (0, 1)] == [(3, 2), (2, 0)]
+
+
+def test_good_write_failure_routes_files_to_failed_dir(spark, dirs, tmp_path):
+    """When the good write itself raises, its observation never arrives:
+    the batch's files are still listed, moved to failed_dir, and a
+    FAILURE audit is written."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming.ingest import (
+        build_stream,
+        process_batch,
+    )
+
+    failed = str(tmp_path / "failed")
+    write_file(dirs, "a.csv", CSV_GOOD)
+    write_file(dirs, "b.csv", CSV_MIXED)
+    cfg = make_cfg(dirs)
+    cfg.failed_dir = failed
+    with open(cfg.good_dir, "w") as fh:  # a file where the sink dir should be
+        fh.write("not a directory")
+
+    query = (
+        build_stream(spark, cfg)
+        .writeStream.foreachBatch(process_batch(cfg))
+        .option("checkpointLocation", cfg.checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception):
+        query.awaitTermination()
+    assert sorted(os.listdir(failed)) == ["a.csv", "b.csv"]
+    assert os.listdir(dirs["source"]) == []
+    audit = spark.read.parquet(dirs["audit"]).collect()
+    assert [(r["batch_id"], r["status"]) for r in audit] == [(0, "FAILURE")]
+    assert not os.path.exists(dirs["quarantine"])
 
 
 def test_watermarked_streaming_dedup(spark, tmp_path):
