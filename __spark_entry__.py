@@ -2419,9 +2419,9 @@ def q_stateful_session_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.parquet as _pq
 
     path = _os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = catalog.parquet_schema(spark, path)
     max_ts = (
-        catalog.normalize_event_time(spark.read.parquet(path))
+        catalog.normalize_event_time(catalog.read_parquet(spark, path))
         .agg(F.max(F.unix_micros("ts")).alias("m"))
         .collect()[0]["m"]
     )
@@ -2722,7 +2722,7 @@ def q_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile as _tempfile
 
     path = _os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = catalog.parquet_schema(spark, path)
     stage_dir = _tempfile.mkdtemp(prefix="stream_enrich_")
     _os.symlink(_os.path.abspath(path), _os.path.join(stage_dir, "events.parquet"))
     stream = catalog.normalize_event_time(
@@ -3034,17 +3034,17 @@ def q_zorder_locality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming op (applyInPandasWithState): per-user
-    running (count, sum) maintained in the state store, drained with an
-    availableNow trigger. Final state per user equals the batch
-    aggregate, which is the oracle. max_by picks each key's latest
+    """Stateful streaming aggregate (Spark's native state-store
+    aggregate, update mode): per-user running (count, sum) maintained
+    in the state store, drained with an availableNow trigger. Final
+    state per user equals the batch aggregate, which is the oracle. max_by picks each key's latest
     update if the drain ran over multiple micro-batches."""
     import os as _os
     import shutil as _shutil
     import tempfile as _tempfile
 
     path = _os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = catalog.parquet_schema(spark, path)
     # The file stream source wants a directory to watch; stage the
     # (read-only) parquet file into one via symlink.
     stage_dir = _tempfile.mkdtemp(prefix="stream_events_")
@@ -3083,7 +3083,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import joins as _sjoins
 
     path = _os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = catalog.parquet_schema(spark, path)
     stage_dir = _tempfile.mkdtemp(prefix="stream_ss_join_")
     _os.symlink(_os.path.abspath(path), _os.path.join(stage_dir, "events.parquet"))
     raw = catalog.normalize_event_time(
@@ -3149,9 +3149,9 @@ def q_stream_outer_join_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import joins as _sjoins
 
     path = _os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = catalog.parquet_schema(spark, path)
     max_ts = (
-        catalog.normalize_event_time(spark.read.parquet(path))
+        catalog.normalize_event_time(catalog.read_parquet(spark, path))
         .agg(F.max(F.unix_micros("ts")).alias("m"))
         .collect()[0]["m"]
     )
@@ -3264,9 +3264,9 @@ def q_chained_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.parquet as _pq
 
     path = _os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = catalog.parquet_schema(spark, path)
     max_ts = (
-        catalog.normalize_event_time(spark.read.parquet(path))
+        catalog.normalize_event_time(catalog.read_parquet(spark, path))
         .agg(F.max(F.unix_micros("ts")).alias("m"))
         .collect()[0]["m"]
     )
@@ -4648,7 +4648,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile as _tempfile
 
     path = _os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = catalog.parquet_schema(spark, path)
     stage_dir = _tempfile.mkdtemp(prefix="stream_dedup_")
     _os.symlink(_os.path.abspath(path), _os.path.join(stage_dir, "a.parquet"))
     _os.symlink(_os.path.abspath(path), _os.path.join(stage_dir, "b.parquet"))

@@ -10,8 +10,10 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -45,8 +47,65 @@ def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+# Session confs that change what parquet schema inference returns for
+# the same file (timestamp and binary mapping, field-name matching).
+SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+)
+
+# (session, qualified path) -> (files stamp, conf values, schema). One
+# entry per table a session reads: a changed stamp or conf replaces it.
+# Process-wide like Spark's own caches; the key makes sharing safe.
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, tuple, StructType]] = {}
+
+
+def _files_stamp(spark: SparkSession, path: str) -> tuple[str, tuple]:
+    """Qualified path, and (path, length, modification time) of every
+    file under it (a Spark-written table is a directory), from Hadoop
+    FileStatus — no Spark job."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    st = fs.getFileStatus(hpath)
+    qualified = st.getPath().toString()
+    if not st.isDirectory():
+        return qualified, ((qualified, st.getLen(), st.getModificationTime()),)
+    files, it = [], fs.listFiles(hpath, True)
+    while it.hasNext():
+        f = it.next()
+        files.append((f.getPath().toString(), f.getLen(), f.getModificationTime()))
+    return qualified, tuple(sorted(files))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    session, file state and schema-relevant conf values. Inference is a
+    Spark job (a footer read); a warm lookup is a few FileStatus calls."""
+    try:
+        qualified, stamp = _files_stamp(spark, path)
+    except Py4JJavaError:  # a glob, or a missing path: Spark's own read decides
+        return spark.read.parquet(path).schema
+    key = (spark._jsparkSession.sessionUUID(), qualified)
+    confs = tuple(spark.conf.get(c, None) for c in SCHEMA_CONFS)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp and hit[1] == confs:
+        return hit[2]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[key] = (stamp, confs, schema)
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema from parquet_schema."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     # TIMESTAMP(NANOS) parquet columns arrive as bigint nanos (via
     # spark.sql.legacy.parquet.nanosAsLong); truncate to micros — the
     # same thing DuckDB's micros TIMESTAMP does on read.

@@ -1,10 +1,16 @@
-"""Custom stateful streaming operators (applyInPandasWithState).
+"""Stateful streaming operators and the bounded drain that runs them.
 
 The reference has no stateful event-time logic at all (SURVEY.md §2.9:
 processing-time micro-batches only, unbounded dropDuplicates state its
-lone stateful op). This module supplies the arbitrary-state surface a
-real pipeline needs: per-key running aggregates maintained across
-micro-batches with explicit state schemas.
+lone stateful op). This module supplies the per-key state a real
+pipeline needs, maintained across micro-batches:
+
+- ``running_user_stats``: per-key running count and sum, computed by
+  Spark's native streaming aggregate (state-store merge in the JVM, no
+  Python worker);
+- ``session_close_on_timeout``: custom sessionization with event-time
+  timeouts, which needs arbitrary state and timers, so it runs on
+  applyInPandasWithState with an explicit state schema.
 
 Scale notes: state lives in the state store partitioned by grouping
 key — the shuffle is on the key, state size is O(distinct keys), and
@@ -14,8 +20,8 @@ each micro-batch touches only keys present in the batch. Arrow batches
 Spark 4's successor API (transformWithStateInPandas: typed value/list/
 map state, timers, TTL) is the forward path for new code, but its
 Python runner needs google.protobuf, absent from this environment —
-verified to crash the streaming runner here — so this module stays on
-applyInPandasWithState, which covers the same arbitrary-state surface.
+verified to crash the streaming runner here — so the sessionizer stays
+on applyInPandasWithState, which covers the same arbitrary-state surface.
 """
 
 from __future__ import annotations
@@ -41,28 +47,19 @@ def running_user_stats(stream_df: DataFrame, key_col: str = "user_id") -> DataFr
     appears in, carrying the cumulative totals so far — the streaming
     generalization of the reference's per-batch aggregate table
     (code/helpers.py:148-204), which recomputed from scratch per batch.
+
+    A plain count and sum need no custom state: Spark's own streaming
+    aggregate keeps them in the state store and merges each batch's
+    partial aggregate JVM-side, with no rows sent to a Python worker.
+    A NaN or NULL value adds 0 (pandas ``fillna(0.0)`` semantics); a
+    NULL key is a group of its own. A total that is NaN (a key saw both
+    +inf and -inf) is emitted as NaN, as the fold computes it.
     """
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].fillna(0.0).sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {key_col: [key[0]], "n_events": [n], "sum_value": [total]}
-        )
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=f"{key_col} bigint, n_events bigint, sum_value double",
-        stateStructType="n_events bigint, sum_value double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    value = F.coalesce(F.nanvl(F.col("value").cast("double"), F.lit(0.0)), F.lit(0.0))
+    return (
+        stream_df.groupBy(key_col)
+        .agg(F.count(F.lit(1)).alias("n_events"), F.sum(value).alias("sum_value"))
+        .select(F.col(key_col).cast("bigint").alias(key_col), "n_events", "sum_value")
     )
 
 
@@ -166,8 +163,6 @@ def drain_to_parquet(
     call because the returned frame reads it lazily, but a long-lived
     engine must not accumulate sink parquet on the (possibly
     RAM-backed) scratch fs across drains."""
-    from pyspark.sql import functions as F
-
     name = f"drain_{uuid.uuid4().hex[:12]}"
     scratch = _scratch_root()
     out = out_dir or register_scratch_for_exit(
@@ -207,7 +202,10 @@ def drain_to_parquet(
         # lazily — but only if the caller didn't pick it explicitly.
         if checkpoint_dir is None:
             shutil.rmtree(checkpoint, ignore_errors=True)
-    return spark.read.parquet(out).drop("_batch_id")
+    # The sink holds exactly the stream's columns: read them back with
+    # the schema already known (no inference job); _batch_id comes from
+    # partition discovery.
+    return spark.read.schema(streamed.schema).parquet(out).drop("_batch_id")
 
 
 def drain_to_memory_table(

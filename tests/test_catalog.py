@@ -30,3 +30,56 @@ def test_ns_to_us_matches_pyarrow_truncation(spark):
     )
     got = {r["event_id"]: r["us"] for r in df.collect()}
     assert got == expected  # exact on every row, not just most
+
+
+def _jobs_run(spark, fn):
+    """Spark jobs ``fn`` fires, read above a job-id watermark."""
+    sc = spark.sparkContext._jsc.sc()
+    first = sc.dagScheduler().nextJobId()
+    out = fn()
+    return sc.dagScheduler().nextJobId() - first, out
+
+
+def test_load_table_infers_each_file_state_once(spark, tmp_path):
+    """The schema is inferred once per session, file state and
+    schema-relevant conf values: an unchanged file loads with no Spark
+    job, while a rewritten file or a flipped inference conf is inferred
+    afresh — a stale schema is never returned."""
+    import os
+
+    import pyarrow as pa
+    import pytest
+
+    path = str(tmp_path / "events.parquet")
+    ts = pa.array([1_700_000_000_123_456_789], pa.timestamp("ns"))
+
+    def write(cols):
+        pq.write_table(pa.table({"ts": ts, **cols}), path)
+
+    write({"value": [1.5], "tag": pa.array([b"x"], pa.binary())})
+    jobs, df = _jobs_run(spark, lambda: load_table(spark, str(tmp_path), "events"))
+    assert jobs == 1 and df.columns == ["ts", "value", "tag"]
+    jobs, df = _jobs_run(spark, lambda: load_table(spark, str(tmp_path), "events"))
+    assert jobs == 0 and dict(df.dtypes) == {"ts": "timestamp", "value": "double", "tag": "binary"}
+    assert df.collect()[0]["value"] == 1.5
+
+    # same length, new modification time: only the stamp tells them apart
+    size = os.path.getsize(path)
+    write({"valuf": [1.5], "tag": pa.array([b"x"], pa.binary())})
+    assert os.path.getsize(path) == size
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 2_000_000_000))
+    jobs, df = _jobs_run(spark, lambda: load_table(spark, str(tmp_path), "events"))
+    assert jobs == 1 and df.columns == ["ts", "valuf", "tag"]
+
+    try:
+        spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+        assert dict(load_table(spark, str(tmp_path), "events").dtypes)["tag"] == "string"
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+        # without nanosAsLong Spark cannot type a TIMESTAMP(NANOS) column
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            load_table(spark, str(tmp_path), "events")
+    finally:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert dict(load_table(spark, str(tmp_path), "events").dtypes)["tag"] == "binary"

@@ -36,3 +36,39 @@ def test_factories_agree_on_gate_confs(spark):
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
     ]:
         assert spark.conf.get(conf) == want, conf
+
+
+# The ten registry queries of the benchmark's analytics mix, and the
+# registry's running-stats drain in place of the mix's own drain.
+REPEATED_QUERIES = (
+    "flagship_event_stats",
+    "validation_split",
+    "row_hash_documents",
+    "q1_pricing_summary",
+    "q14_promo_revenue",
+    "exact_dedup_docs",
+    "count_min_frequencies",
+    "stopword_profile",
+    "events_table_profile",
+    "weekly_ohlc",
+    "stateful_running_counts",
+)
+
+
+def test_repeated_query_set_reuses_generated_classes(spark):
+    """A second pass over a repeated query set compiles almost nothing:
+    the generated-class cache holds the set's working set (~115 classes
+    for these queries; Spark's default cache of 100 entries recompiled
+    ~80 of them every pass). events_table_profile still compiles a few
+    classes of its own every pass."""
+    import __spark_entry__ as entry
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    queries = entry.queries()
+    per_pass = []
+    for _ in range(2):
+        before = compiles.getCount()
+        for name in REPEATED_QUERIES:
+            queries[name](spark, "/root/testdata/sf0.001").collect()
+        per_pass.append(compiles.getCount() - before)
+    assert per_pass[1] <= 8, per_pass

@@ -225,6 +225,64 @@ def test_stateful_running_counts_across_batches(spark, tmp_path, drain):
     assert rows == {1: (3, 17.0), 2: (1, 1.0), 3: (1, 7.0)}
 
 
+def test_running_user_stats_matches_fillna_fold_on_hostile_values(spark, tmp_path):
+    """The native running aggregate keeps the pandas operator's
+    contract: NaN and NULL values add 0 (``fillna(0.0)``), ±inf sums as
+    IEEE does (inf + -inf = NaN, and a NaN total stays NaN), a NULL key
+    is a group of its own, every batch emits its keys' cumulative
+    totals, and the output schema is the one the pandas operator
+    declared."""
+    import math
+
+    from pyspark.sql import types as T2
+
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import stateful
+
+    nan, inf = float("nan"), float("inf")
+    batches = [
+        [(1, 1.5), (1, nan), (2, inf), (None, None), (4, None)],
+        [(1, None), (1, 2.25), (2, -inf), (None, 4.0), (None, nan), (3, -inf), (3, 1.0)],
+    ]
+    src = tmp_path / "src"
+    for i, rows in enumerate(batches):
+        df = spark.createDataFrame(rows, "user_id bigint, value double")
+        df.coalesce(1).write.parquet(str(src / f"f{i}"))
+    stream = (
+        spark.readStream.schema("user_id bigint, value double")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src / "*"))
+    )
+    updates = stateful.running_user_stats(stream)
+    parent_schema = T2._parse_datatype_string("user_id bigint, n_events bigint, sum_value double")
+    assert [(f.name, f.dataType) for f in updates.schema] == [
+        (f.name, f.dataType) for f in parent_schema
+    ]
+    out = str(tmp_path / "out")
+    drained = stateful.drain_to_parquet(
+        spark, updates, out_dir=out, checkpoint_dir=str(tmp_path / "ckpt")
+    )
+    assert drained.schema == parent_schema
+
+    # the pandas operator's fold: per batch, per key present in it
+    want, state = {}, {}
+    for b, rows in enumerate(batches):
+        for key in {k for k, _ in rows}:
+            vals = [0.0 if v is None or math.isnan(v) else v for k, v in rows if k == key]
+            n, total = state.get(key, (0, 0.0))
+            state[key] = (n + len(vals), total + sum(vals))
+            want[(b, key)] = state[key]
+
+    def norm(n, total):
+        return n, "nan" if math.isnan(total) else total
+
+    got = {
+        (r["_batch_id"], r["user_id"]): norm(r["n_events"], r["sum_value"])
+        for r in spark.read.parquet(out).collect()
+    }
+    assert got == {k: norm(*v) for k, v in want.items()}
+    assert got[(1, 2)] == (2, "nan") and got[(1, None)] == (3, 4.0)
+
+
 def test_drain_scratch_lifecycle_and_exit_sweep(spark, tmp_path, monkeypatch):
     """r15 scratch GC: a DEFAULT drain sink lands on the scratch root,
     its checkpoint WAL is already gone when the drain returns, the sink

@@ -66,6 +66,8 @@ import __spark_entry__ as entrymod
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.catalog import TABLES
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.session import get_spark
 
+DUCKDB_MEMORY_LIMIT = "4GB"  # beyond it DuckDB spills to its temp_directory
+
 
 def norm_cell(v):
     if v is None:
@@ -112,6 +114,10 @@ def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     spill = tempfile.mkdtemp(prefix="duckspill-oracle-")
     atexit.register(shutil.rmtree, spill, ignore_errors=True)
     con.execute(f"SET temp_directory = '{spill}'")
+    # A fixed cap, not DuckDB's default of 80% of RAM: in a long run
+    # beside the Spark JVM the default never spills, and the host kills
+    # the process instead (sf1.0 on a 15 GB host).
+    con.execute(f"SET memory_limit = '{DUCKDB_MEMORY_LIMIT}'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con
