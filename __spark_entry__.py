@@ -9,7 +9,11 @@ name).
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -60,21 +64,14 @@ def _cents(col) -> F.Column:
     rounding-mode behavior for engine versions to disagree on (the
     driver-gate divergence class of rounds 2-4; round(double)'s
     tie-breaking is exactly what changed across engine versions). The
-    same derivation is mirrored verbatim in the DuckDB oracles
-    (_cents_sql). Chosen over DECIMAL(18,2) casts after measuring:
-    identical values on 2-decimal data, but decimal arithmetic is
+    same derivation is spelled out verbatim in the DuckDB oracles as
+    CAST(floor(x * 100 + 0.5) AS BIGINT). Chosen over DECIMAL(18,2)
+    casts after measuring: identical values on 2-decimal data, but decimal arithmetic is
     object-heavy in the JVM (q1 0.75 s -> 0.43 s at sf0.1 from this
     switch alone). Valid for |x| < 2^52/100 (~4.5e13) — far beyond any
-    money column. Used by every gated head query that emits money; see
-    docs/HEAD_AUDIT.md."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.floor(c * 100 + F.lit(0.5))
-
-
-def _pct2(col) -> F.Column:
-    """Exact bigint percent (x100) from a 2-decimal fraction column
-    (l_discount / l_tax style 0.00-0.10 values); same tie-free
-    floor derivation as _cents."""
+    money column. Used by every gated head query that emits money, and
+    for 2-decimal fractions (l_discount / l_tax as an exact bigint
+    percent); see docs/HEAD_AUDIT.md."""
     c = F.col(col) if isinstance(col, str) else col
     return F.floor(c * 100 + F.lit(0.5))
 
@@ -115,6 +112,83 @@ def _spread_for_fanout(
     if df.rdd.getNumPartitions() >= want:
         return df
     return df.repartition(want)
+
+
+class _EventStage:
+    """The events table staged as a file-stream source: a directory of
+    symlinks to the (read-only) fixture file, plus any tick files a
+    builder writes beside them to march the watermark."""
+
+    def __init__(self, spark: SparkSession, sf_dir: str, stage_dir: str, links):
+        self.spark = spark
+        self.path = os.path.join(sf_dir, "events.parquet")
+        self.dir = stage_dir
+        self.schema = catalog.parquet_schema(spark, self.path)
+        for name in links:
+            # abspath: a relative sf_dir would make the symlink target
+            # resolve relative to the stage dir (broken link -> silently
+            # empty batch 0)
+            os.symlink(os.path.abspath(self.path), os.path.join(stage_dir, name))
+
+    def max_event_us(self) -> int:
+        """The fixture's latest event time, in epoch microseconds."""
+        return (
+            catalog.normalize_event_time(catalog.read_parquet(self.spark, self.path))
+            .agg(F.max(F.unix_micros("ts")).alias("m"))
+            .collect()[0]["m"]
+        )
+
+    def write_tick(self, name: str, ts_us: int, **cols: list) -> None:
+        """Write ``{name}_tick.parquet``: one row per value in ``cols``,
+        every row at event time ``ts_us``, columns not given NULL.
+
+        The tick's ts goes in the fixture's own representation: a
+        timestamp field goes through a unit-converting timestamp[us]
+        cast (so a nanos fixture gets nanos), and a raw-int64 field is
+        the nanosAsLong format that normalize_event_time divides by
+        1000 — write ts_us*1000 there. A raw-us int64 would land ~1000x
+        in the past and the watermark would never advance."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        arrow_schema = pq.read_schema(self.path)
+        n = len(next(iter(cols.values())))
+        out = {}
+        for field in arrow_schema:
+            if field.name == "ts":
+                if pa.types.is_timestamp(field.type):
+                    ts = pa.array([ts_us] * n, type=pa.timestamp("us"))
+                else:
+                    ts = pa.array([ts_us * 1000] * n, type=pa.int64())
+                out["ts"] = ts.cast(field.type)
+            elif field.name in cols:
+                out[field.name] = pa.array(cols[field.name], type=field.type)
+            else:
+                out[field.name] = pa.nulls(n, type=field.type)
+        pq.write_table(
+            pa.table(out, schema=arrow_schema),
+            os.path.join(self.dir, f"{name}_tick.parquet"),
+        )
+
+    def read_stream(self, max_files_per_trigger: int | None = None) -> DataFrame:
+        """The staged directory as a file stream, event time normalized."""
+        reader = self.spark.readStream.schema(self.schema)
+        if max_files_per_trigger is not None:
+            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+        return catalog.normalize_event_time(reader.parquet(self.dir))
+
+
+@contextmanager
+def _staged_events(spark: SparkSession, sf_dir: str, links=("events.parquet",)):
+    """Stage sf_dir's events table for a bounded streaming drain (one
+    symlink per name in ``links``; two names deliver every event twice).
+    The stage dir is removed on exit, whether or not the drain ran to
+    completion — run the drain inside the ``with``."""
+    stage_dir = tempfile.mkdtemp(prefix="stream_stage_")
+    try:
+        yield _EventStage(spark, sf_dir, stage_dir, links)
+    finally:
+        shutil.rmtree(stage_dir, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -208,8 +282,8 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     qty = F.col("l_quantity").cast("bigint")
     pc = _cents("l_extendedprice")
-    dp = _pct2("l_discount")
-    tp = _pct2("l_tax")
+    dp = _cents("l_discount")
+    tp = _cents("l_tax")
     agg = (
         li.filter(F.col("l_shipdate") <= "1998-09-02")
         .groupBy("l_returnflag", "l_linestatus")
@@ -267,7 +341,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
-            F.sum(_cents("l_extendedprice") * (100 - _pct2("l_discount"))).alias(
+            F.sum(_cents("l_extendedprice") * (100 - _cents("l_discount"))).alias(
                 "revenue_e4"
             )
         )
@@ -297,7 +371,7 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(
-            F.sum(_cents("l_extendedprice") * (100 - _pct2("l_discount"))).alias(
+            F.sum(_cents("l_extendedprice") * (100 - _cents("l_discount"))).alias(
                 "revenue_e4"
             )
         )
@@ -688,8 +762,8 @@ def q_unpivot_lineitem_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     wide = li.groupBy("l_returnflag").agg(
         (F.sum(F.col("l_quantity").cast("bigint")) * 100).alias("quantity"),
-        F.sum(_pct2("l_discount")).alias("discount"),
-        F.sum(_pct2("l_tax")).alias("tax"),
+        F.sum(_cents("l_discount")).alias("discount"),
+        F.sum(_cents("l_tax")).alias("tax"),
     )
     return wide.unpivot(
         ["l_returnflag"], ["quantity", "discount", "tax"], "metric", "total_x100"
@@ -832,10 +906,9 @@ def q_vector_norms_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable (md5-hex-digit) 32-bit simhash per document — the
-    oracle-checkable variant of operators/dedup.simhash (the xxhash64
-    fast path has no cross-engine hash to compare against). Staged
-    projections: md5 array once, then 32 vote columns, then the
-    fingerprint."""
+    oracle-checkable fingerprint (xxhash64 has no cross-engine twin
+    to compare against). Staged projections: md5 array once, then the
+    32 votes in one fold, then the fingerprint."""
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
     return _portable_simhash(docs)
 
@@ -1271,7 +1344,7 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     return (
         li.filter(
-            # float range filter, NOT the integer _pct2 form: a
+            # float range filter, NOT the integer _cents form: a
             # comparison of stored doubles against literals is
             # deterministic in every engine (only OUTPUT values carry
             # the round/avg hazard), and this form reaches the parquet
@@ -1283,7 +1356,7 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            F.sum(_cents("l_extendedprice") * _pct2("l_discount")).alias(
+            F.sum(_cents("l_extendedprice") * _cents("l_discount")).alias(
                 "revenue_e4"
             ),
             F.count(F.lit(1)).alias("n_lineitems"),
@@ -1348,7 +1421,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "supp_nation", "cust_nation", F.year("l_shipdate").alias("ship_year")
         )
         .agg(
-            F.sum(_cents("l_extendedprice") * (100 - _pct2("l_discount"))).alias(
+            F.sum(_cents("l_extendedprice") * (100 - _cents("l_discount"))).alias(
                 "revenue_e4"
             )
         )
@@ -1371,7 +1444,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
-            F.sum(_cents("l_extendedprice") * (100 - _pct2("l_discount"))).alias(
+            F.sum(_cents("l_extendedprice") * (100 - _cents("l_discount"))).alias(
                 "revenue_e4"
             ),
             F.max(_cents("c_acctbal")).alias("acctbal_cents"),
@@ -1389,7 +1462,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= "1997-09-01") & (F.col("l_shipdate") < "1997-10-01")
     )
     part = _t(spark, sf_dir, "part")
-    disc_e4 = _cents("l_extendedprice") * (100 - _pct2("l_discount"))
+    disc_e4 = _cents("l_extendedprice") * (100 - _cents("l_discount"))
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .agg(
@@ -1417,7 +1490,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sup = _t(spark, sf_dir, "supplier")
     rev = li.groupBy("l_suppkey").agg(
-        F.sum(_cents("l_extendedprice") * (100 - _pct2("l_discount"))).alias("_rev")
+        F.sum(_cents("l_extendedprice") * (100 - _cents("l_discount"))).alias("_rev")
         # exact bigint revenue: the argmax equality filter below compares
         # integers, not order-dependent float sums
     )
@@ -2411,74 +2484,27 @@ def q_stateful_session_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch gap-island semantics EXACTLY (integer microseconds),
     which is what the DuckDB oracle computes — proving the streaming
     operator implements the batch definition, splits included."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    import pyarrow as _pa
-    import pyarrow.parquet as _pq
-
-    path = _os.path.join(sf_dir, "events.parquet")
-    schema = catalog.parquet_schema(spark, path)
-    max_ts = (
-        catalog.normalize_event_time(catalog.read_parquet(spark, path))
-        .agg(F.max(F.unix_micros("ts")).alias("m"))
-        .collect()[0]["m"]
-    )
     sentinel = -1
     gap_s = 1800
-    fut1 = max_ts + (gap_s + 3600) * 1_000_000
-    stage_dir = _tempfile.mkdtemp(prefix="stream_sess_")
-    # abspath: a relative sf_dir would make the symlink target resolve
-    # relative to the tempdir (broken link -> silently empty batch 0)
-    _os.symlink(_os.path.abspath(path), _os.path.join(stage_dir, "f1_events.parquet"))
-    arrow_schema = _pq.read_schema(path)
-    for name, ts_us in (("f2", fut1), ("f3", fut1 + 1_000_000)):
-        cols = {}
-        for field in arrow_schema:
-            if field.name == "ts":
-                # Write the tick in the fixture's own ts representation:
-                # a timestamp field goes through a unit-converting
-                # timestamp[us] cast (so a nanos fixture gets nanos), and
-                # a raw-int64 field is the nanosAsLong format that
-                # normalize_event_time divides by 1000 — write ts_us*1000
-                # there. A raw-us int64 would land ~1000x in the past and
-                # the watermark would never advance past the real
-                # sessions.
-                if _pa.types.is_timestamp(field.type):
-                    cols["ts"] = _pa.array(
-                        [ts_us], type=_pa.timestamp("us")
-                    ).cast(field.type)
-                else:
-                    cols["ts"] = _pa.array([ts_us * 1000], type=_pa.int64()).cast(
-                        field.type
-                    )
-            elif field.name == "user_id":
-                cols["user_id"] = _pa.array([sentinel], type=field.type)
-            elif field.name == "event_id":
-                cols["event_id"] = _pa.array([-1], type=field.type)
-            else:
-                cols[field.name] = _pa.nulls(1, type=field.type)
-        _pq.write_table(
-            _pa.table(cols, schema=arrow_schema),
-            _os.path.join(stage_dir, f"{name}_tick.parquet"),
+    with _staged_events(spark, sf_dir, links=("f1_events.parquet",)) as stage:
+        fut1 = stage.max_event_us() + (gap_s + 3600) * 1_000_000
+        for name, ts_us in (("f2", fut1), ("f3", fut1 + 1_000_000)):
+            stage.write_tick(name, ts_us, user_id=[sentinel], event_id=[-1])
+        stream = (
+            stage.read_stream(max_files_per_trigger=1)
+            .select("user_id", "ts")
+            .withWatermark("ts", "10 seconds")
         )
-    stream = catalog.normalize_event_time(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-    ).select("user_id", "ts").withWatermark("ts", "10 seconds")
-    closed = stateful.session_close_on_timeout(
-        stream, key_col="user_id", ts_col="ts", gap_seconds=gap_s
-    )
-    drained = stateful.drain_to_parquet(
-        # 8 state partitions — ADJUDICATED r10: 4 and 2 measured WORSE
-        # (7.3/9.4 s vs 6.1-6.9 @8; 16 no better). The bill here is the
-        # key-parallel pandas stateful operator over every event in
-        # batch 1, not store commits — see docs/BENCH_NOTES.md r10.
-        spark, closed, shuffle_partitions=8, output_mode="append"
-    )
-    _shutil.rmtree(stage_dir, ignore_errors=True)
+        closed = stateful.session_close_on_timeout(
+            stream, key_col="user_id", ts_col="ts", gap_seconds=gap_s
+        )
+        drained = stateful.drain_to_parquet(
+            # 8 state partitions — ADJUDICATED r10: 4 and 2 measured WORSE
+            # (7.3/9.4 s vs 6.1-6.9 @8; 16 no better). The bill here is the
+            # key-parallel pandas stateful operator over every event in
+            # batch 1, not store commits — see docs/BENCH_NOTES.md r10.
+            spark, closed, shuffle_partitions=8, output_mode="append"
+        )
     return drained.filter(F.col("user_id") != sentinel).select(
         "user_id", "session_start_us", "session_end_us", "n_events"
     )
@@ -2717,31 +2743,21 @@ def q_stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (segment, event_type). Value mass in integer cents so the
     aggregate is engine- and order-exact; the oracle runs the same
     join as plain batch SQL, proving streaming == batch semantics."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    path = _os.path.join(sf_dir, "events.parquet")
-    schema = catalog.parquet_schema(spark, path)
-    stage_dir = _tempfile.mkdtemp(prefix="stream_enrich_")
-    _os.symlink(_os.path.abspath(path), _os.path.join(stage_dir, "events.parquet"))
-    stream = catalog.normalize_event_time(
-        spark.readStream.schema(schema).parquet(stage_dir)
-    ).select("user_id", "event_type", "value")
-    cust = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    enriched = stream.join(F.broadcast(cust), "user_id").select(
-        "c_mktsegment",
-        "event_type",
-        F.coalesce(
-            F.round(F.col("value") * 100).cast("bigint"), F.lit(0)
-        ).alias("cents"),
-    )
-    drained = stateful.drain_to_parquet(
-        spark, enriched, shuffle_partitions=8, output_mode="append"
-    )
-    _shutil.rmtree(stage_dir, ignore_errors=True)
+    with _staged_events(spark, sf_dir) as stage:
+        stream = stage.read_stream().select("user_id", "event_type", "value")
+        cust = _t(spark, sf_dir, "customer").select(
+            F.col("c_custkey").alias("user_id"), "c_mktsegment"
+        )
+        enriched = stream.join(F.broadcast(cust), "user_id").select(
+            "c_mktsegment",
+            "event_type",
+            F.coalesce(
+                F.round(F.col("value") * 100).cast("bigint"), F.lit(0)
+            ).alias("cents"),
+        )
+        drained = stateful.drain_to_parquet(
+            spark, enriched, shuffle_partitions=8, output_mode="append"
+        )
     return drained.groupBy("c_mktsegment", "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("cents").alias("sum_value_cents"),
@@ -3039,28 +3055,14 @@ def q_stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the state store, drained with an availableNow trigger. Final
     state per user equals the batch aggregate, which is the oracle. max_by picks each key's latest
     update if the drain ran over multiple micro-batches."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    path = _os.path.join(sf_dir, "events.parquet")
-    schema = catalog.parquet_schema(spark, path)
-    # The file stream source wants a directory to watch; stage the
-    # (read-only) parquet file into one via symlink.
-    stage_dir = _tempfile.mkdtemp(prefix="stream_events_")
-    _os.symlink(_os.path.abspath(path), _os.path.join(stage_dir, "events.parquet"))
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(stage_dir)
-        .select("user_id", "value")
-    )
-    updates = stateful.running_user_stats(stream, key_col="user_id")
-    # Executor-side parquet drain — the memory sink would collect every
-    # update row into driver memory (VERDICT r1 "What's wrong" #1).
-    # 8 state partitions: sized to the 150-key state, not the session's
-    # 32-way scan parallelism (32 measured 3.4x slower here).
-    drained = stateful.drain_to_parquet(spark, updates, shuffle_partitions=8)
-    _shutil.rmtree(stage_dir, ignore_errors=True)  # stream is finished
+    with _staged_events(spark, sf_dir) as stage:
+        stream = stage.read_stream().select("user_id", "value")
+        updates = stateful.running_user_stats(stream, key_col="user_id")
+        # Executor-side parquet drain — the memory sink would collect every
+        # update row into driver memory (VERDICT r1 "What's wrong" #1).
+        # 8 state partitions: sized to the 150-key state, not the session's
+        # 32-way scan parallelism (32 measured 3.4x slower here).
+        drained = stateful.drain_to_parquet(spark, updates, shuffle_partitions=8)
     return drained.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.round(F.max_by("sum_value", "n_events"), 4).alias("sum_value"),
@@ -3076,47 +3078,37 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-order-proof) are value-checked against DuckDB's batch
     interval join, proving the streaming plan computes the batch
     semantics."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import joins as _sjoins
 
-    path = _os.path.join(sf_dir, "events.parquet")
-    schema = catalog.parquet_schema(spark, path)
-    stage_dir = _tempfile.mkdtemp(prefix="stream_ss_join_")
-    _os.symlink(_os.path.abspath(path), _os.path.join(stage_dir, "events.parquet"))
-    raw = catalog.normalize_event_time(
-        spark.readStream.schema(schema).parquet(stage_dir)
-    )
-    purchases = raw.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("p_ts")
-    )
-    clicks = raw.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("c_ts")
-    )
-    joined = _sjoins.stream_stream_interval_join(
-        purchases,
-        clicks,
-        on=["user_id"],
-        left_ts="p_ts",
-        right_ts="c_ts",
-        left_watermark="6 hours",
-        right_watermark="6 hours",
-        lower="0 seconds",
-        upper="6 hours",
-    ).toDF("user_id", "p_ts", "user_id_r", "c_ts")
-    pairs = joined.select(
-        "user_id",
-        (F.unix_micros("c_ts") - F.unix_micros("p_ts")).alias("gap_us"),
-    )
-    drained = stateful.drain_to_parquet(
-        # 4 state partitions (r10 A/B: 3.52 s @8 -> 2.80 @4): a
-        # stream-stream join commits FOUR state stores per partition
-        # per micro-batch, so the per-batch bill is 4*partitions.
-        spark, pairs, shuffle_partitions=4, output_mode="append"
-    )
-    _shutil.rmtree(stage_dir, ignore_errors=True)
+    with _staged_events(spark, sf_dir) as stage:
+        raw = stage.read_stream()
+        purchases = raw.filter(F.col("event_type") == "purchase").select(
+            "user_id", F.col("ts").alias("p_ts")
+        )
+        clicks = raw.filter(F.col("event_type") == "click").select(
+            "user_id", F.col("ts").alias("c_ts")
+        )
+        joined = _sjoins.stream_stream_interval_join(
+            purchases,
+            clicks,
+            on=["user_id"],
+            left_ts="p_ts",
+            right_ts="c_ts",
+            left_watermark="6 hours",
+            right_watermark="6 hours",
+            lower="0 seconds",
+            upper="6 hours",
+        ).toDF("user_id", "p_ts", "user_id_r", "c_ts")
+        pairs = joined.select(
+            "user_id",
+            (F.unix_micros("c_ts") - F.unix_micros("p_ts")).alias("gap_us"),
+        )
+        drained = stateful.drain_to_parquet(
+            # 4 state partitions (r10 A/B: 3.52 s @8 -> 2.80 @4): a
+            # stream-stream join commits FOUR state stores per partition
+            # per micro-batch, so the per-batch bill is 4*partitions.
+            spark, pairs, shuffle_partitions=4, output_mode="append"
+        )
     return (
         drained.groupBy("user_id")
         .agg(
@@ -3139,98 +3131,61 @@ def q_stream_outer_join_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase's window, so the drained result equals the batch LEFT
     JOIN, which is exactly what the oracle computes. Counts and exact
     integer-microsecond gap sums per user."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    import pyarrow as _pa
-    import pyarrow.parquet as _pq
-
     from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import joins as _sjoins
 
-    path = _os.path.join(sf_dir, "events.parquet")
-    schema = catalog.parquet_schema(spark, path)
-    max_ts = (
-        catalog.normalize_event_time(catalog.read_parquet(spark, path))
-        .agg(F.max(F.unix_micros("ts")).alias("m"))
-        .collect()[0]["m"]
-    )
     sentinel = -1
-    # tick1 must put the watermark (tick - 6h delay) past every real
-    # purchase's join window (p_ts + 6h): max_ts + 13h does; tick2
-    # (+7h more) triggers the eviction batch without matching anything.
-    tick1 = max_ts + 13 * 3600 * 1_000_000
-    tick2 = tick1 + 7 * 3600 * 1_000_000
-    stage_dir = _tempfile.mkdtemp(prefix="stream_louter_")
-    _os.symlink(_os.path.abspath(path), _os.path.join(stage_dir, "f1_events.parquet"))
-    arrow_schema = _pq.read_schema(path)
-    for name, ts_us in (("f2", tick1), ("f3", tick2)):
-        cols = {}
-        for field in arrow_schema:
-            if field.name == "ts":
-                if _pa.types.is_timestamp(field.type):
-                    cols["ts"] = _pa.array(
-                        [ts_us, ts_us], type=_pa.timestamp("us")
-                    ).cast(field.type)
-                else:
-                    cols["ts"] = _pa.array(
-                        [ts_us * 1000, ts_us * 1000], type=_pa.int64()
-                    ).cast(field.type)
-            elif field.name == "user_id":
-                cols["user_id"] = _pa.array([sentinel, sentinel], type=field.type)
-            elif field.name == "event_id":
-                cols["event_id"] = _pa.array([-1, -2], type=field.type)
-            elif field.name == "event_type":
-                cols["event_type"] = _pa.array(["purchase", "click"], type=field.type)
-            else:
-                cols[field.name] = _pa.nulls(2, type=field.type)
-        _pq.write_table(
-            _pa.table(cols, schema=arrow_schema),
-            _os.path.join(stage_dir, f"{name}_tick.parquet"),
+    with _staged_events(spark, sf_dir, links=("f1_events.parquet",)) as stage:
+        # tick1 must put the watermark (tick - 6h delay) past every real
+        # purchase's join window (p_ts + 6h): max_ts + 13h does; tick2
+        # (+7h more) triggers the eviction batch without matching anything.
+        tick1 = stage.max_event_us() + 13 * 3600 * 1_000_000
+        tick2 = tick1 + 7 * 3600 * 1_000_000
+        for name, ts_us in (("f2", tick1), ("f3", tick2)):
+            stage.write_tick(
+                name,
+                ts_us,
+                user_id=[sentinel, sentinel],
+                event_id=[-1, -2],
+                event_type=["purchase", "click"],
+            )
+        raw = stage.read_stream(max_files_per_trigger=1)
+        # NULL join keys / event times can neither pair nor advance a
+        # watermark; the batch oracle's LEFT JOIN would instead KEEP a
+        # NULL-ts purchase as an unmatched row — excluded identically on
+        # both sides (ticks carry non-null sentinels, so they always pass).
+        raw = raw.filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
+        purchases = raw.filter(F.col("event_type") == "purchase").select(
+            "user_id", F.col("ts").alias("p_ts")
         )
-    raw = catalog.normalize_event_time(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-    )
-    # NULL join keys / event times can neither pair nor advance a
-    # watermark; the batch oracle's LEFT JOIN would instead KEEP a
-    # NULL-ts purchase as an unmatched row — excluded identically on
-    # both sides (ticks carry non-null sentinels, so they always pass).
-    raw = raw.filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
-    purchases = raw.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("p_ts")
-    )
-    clicks = raw.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("c_ts")
-    )
-    joined = _sjoins.stream_stream_interval_join(
-        purchases,
-        clicks,
-        on=["user_id"],
-        left_ts="p_ts",
-        right_ts="c_ts",
-        left_watermark="6 hours",
-        right_watermark="6 hours",
-        lower="0 seconds",
-        upper="6 hours",
-        how="leftOuter",
-    ).toDF("user_id", "p_ts", "user_id_r", "c_ts")
-    rows = joined.select(
-        "user_id",
-        (F.unix_micros("c_ts") - F.unix_micros("p_ts")).alias("gap_us"),
-    )
-    drained = stateful.drain_to_parquet(
-        # 2 state partitions — r15 re-tune on the tmpfs scratch
-        # (VERDICT #9: the r10 value 4 was A/B'd against disk-backed
-        # checkpoints where per-partition delta fsync cost less).
-        # Calm solo medians of 3, two passes: @2 4.82/4.28 s,
-        # @4 5.31/4.42, @8 6.13, @1 4.12 (within noise of 2; 2 kept
-        # for data-batch parallelism). stateful_session_report re-A/B'd
-        # the same way: its 8 stays optimal (5.99 @8, 6.57 @4, 6.73 @16).
-        spark, rows, shuffle_partitions=2, output_mode="append"
-    )
-    _shutil.rmtree(stage_dir, ignore_errors=True)
+        clicks = raw.filter(F.col("event_type") == "click").select(
+            "user_id", F.col("ts").alias("c_ts")
+        )
+        joined = _sjoins.stream_stream_interval_join(
+            purchases,
+            clicks,
+            on=["user_id"],
+            left_ts="p_ts",
+            right_ts="c_ts",
+            left_watermark="6 hours",
+            right_watermark="6 hours",
+            lower="0 seconds",
+            upper="6 hours",
+            how="leftOuter",
+        ).toDF("user_id", "p_ts", "user_id_r", "c_ts")
+        rows = joined.select(
+            "user_id",
+            (F.unix_micros("c_ts") - F.unix_micros("p_ts")).alias("gap_us"),
+        )
+        drained = stateful.drain_to_parquet(
+            # 2 state partitions — r15 re-tune on the tmpfs scratch
+            # (VERDICT #9: the r10 value 4 was A/B'd against disk-backed
+            # checkpoints where per-partition delta fsync cost less).
+            # Calm solo medians of 3, two passes: @2 4.82/4.28 s,
+            # @4 5.31/4.42, @8 6.13, @1 4.12 (within noise of 2; 2 kept
+            # for data-batch parallelism). stateful_session_report re-A/B'd
+            # the same way: its 8 stays optimal (5.99 @8, 6.57 @4, 6.73 @16).
+            spark, rows, shuffle_partitions=2, output_mode="append"
+        )
     return (
         drained.filter(F.col("user_id") != sentinel)
         .groupBy("user_id")
@@ -3256,20 +3211,6 @@ def q_chained_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-mode drain emits the complete roll-up; the oracle replays
     the same double aggregation as batch SQL, proving streaming ==
     batch semantics. Integer ten-thousandth value sums throughout."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    import pyarrow as _pa
-    import pyarrow.parquet as _pq
-
-    path = _os.path.join(sf_dir, "events.parquet")
-    schema = catalog.parquet_schema(spark, path)
-    max_ts = (
-        catalog.normalize_event_time(catalog.read_parquet(spark, path))
-        .agg(F.max(F.unix_micros("ts")).alias("m"))
-        .collect()[0]["m"]
-    )
     sentinel = -1
     # Chained stateful ops flush in STAGES: the hourly state must emit
     # into the daily state while the day window can still accept rows,
@@ -3279,63 +3220,39 @@ def q_chained_window_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (pass every day end), then two more batches whose only job is to
     # run the downstream eviction/emission sweeps.
     hour_us = 3600 * 1_000_000
-    ticks = [
-        ("f2", max_ts + 2 * hour_us),
-        ("f3", max_ts + 26 * hour_us),
-        ("f4", max_ts + 27 * hour_us),
-        ("f5", max_ts + 28 * hour_us),
-    ]
-    stage_dir = _tempfile.mkdtemp(prefix="stream_chain_")
-    _os.symlink(_os.path.abspath(path), _os.path.join(stage_dir, "f1_events.parquet"))
-    arrow_schema = _pq.read_schema(path)
-    for name, ts_us in ticks:
-        cols = {}
-        for field in arrow_schema:
-            if field.name == "ts":
-                if _pa.types.is_timestamp(field.type):
-                    cols["ts"] = _pa.array([ts_us], type=_pa.timestamp("us")).cast(
-                        field.type
-                    )
-                else:
-                    cols["ts"] = _pa.array(
-                        [ts_us * 1000], type=_pa.int64()
-                    ).cast(field.type)
-            elif field.name == "user_id":
-                cols["user_id"] = _pa.array([sentinel], type=field.type)
-            elif field.name == "event_id":
-                cols["event_id"] = _pa.array([-1], type=field.type)
-            elif field.name == "event_type":
-                # ticks ride a sentinel GROUP KEY, not a pre-agg filter:
-                # a user_id filter before the aggregation gets pushed
-                # below the EventTimeWatermark node by Catalyst, so the
-                # tick rows would never reach it and the watermark would
-                # stall at the real data's max (measured: the last two
-                # hour windows never flush). As their own group, ticks
-                # advance the watermark, aggregate harmlessly into
-                # '__tick__' rows, and drop out AFTER the drain.
-                cols["event_type"] = _pa.array(["__tick__"], type=field.type)
-            else:
-                cols[field.name] = _pa.nulls(1, type=field.type)
-        _pq.write_table(
-            _pa.table(cols, schema=arrow_schema),
-            _os.path.join(stage_dir, f"{name}_tick.parquet"),
+    with _staged_events(spark, sf_dir, links=("f1_events.parquet",)) as stage:
+        max_ts = stage.max_event_us()
+        for name, hours in (("f2", 2), ("f3", 26), ("f4", 27), ("f5", 28)):
+            # ticks ride a sentinel GROUP KEY, not a pre-agg filter:
+            # a user_id filter before the aggregation gets pushed
+            # below the EventTimeWatermark node by Catalyst, so the
+            # tick rows would never reach it and the watermark would
+            # stall at the real data's max (measured: the last two
+            # hour windows never flush). As their own group, ticks
+            # advance the watermark, aggregate harmlessly into
+            # '__tick__' rows, and drop out AFTER the drain.
+            stage.write_tick(
+                name,
+                max_ts + hours * hour_us,
+                user_id=[sentinel],
+                event_id=[-1],
+                event_type=["__tick__"],
+            )
+        stream = (
+            stage.read_stream(max_files_per_trigger=1)
+            .withWatermark("ts", "1 hour")
+            .select("ts", "event_type", "value")
         )
-    stream = catalog.normalize_event_time(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-    ).withWatermark("ts", "1 hour").select("ts", "event_type", "value")
-    rolled = chained_tumbling_rollup(
-        stream, ts_col="ts", group_col="event_type", value_col="value",
-        small="1 hour", big="1 day", watermark=None,  # watermark already set
-    )
-    drained = stateful.drain_to_parquet(
-        # 2 state partitions (r10 A/B: 4.95 s @8 -> 4.27 @2): two
-        # chained windowed aggs = 2 store instances per partition over
-        # ~150 keys; tiny state, commit overhead dominates.
-        spark, rolled, shuffle_partitions=2, output_mode="append"
-    )
-    _shutil.rmtree(stage_dir, ignore_errors=True)
+        rolled = chained_tumbling_rollup(
+            stream, ts_col="ts", group_col="event_type", value_col="value",
+            small="1 hour", big="1 day", watermark=None,  # watermark already set
+        )
+        drained = stateful.drain_to_parquet(
+            # 2 state partitions (r10 A/B: 4.95 s @8 -> 4.27 @2): two
+            # chained windowed aggs = 2 store instances per partition over
+            # ~150 keys; tiny state, commit overhead dominates.
+            spark, rolled, shuffle_partitions=2, output_mode="append"
+        )
     # null-safe: a real NULL-event_type group must survive this filter
     # (NULL != '__tick__' is NULL, which a bare filter drops)
     return drained.filter(~F.col("event_type").eqNullSafe("__tick__")).select(
@@ -4643,25 +4560,14 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     so per-type counts equal the batch distinct counts (the oracle).
     Drained through the executor-side parquet sink, no driver
     collection."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    path = _os.path.join(sf_dir, "events.parquet")
-    schema = catalog.parquet_schema(spark, path)
-    stage_dir = _tempfile.mkdtemp(prefix="stream_dedup_")
-    _os.symlink(_os.path.abspath(path), _os.path.join(stage_dir, "a.parquet"))
-    _os.symlink(_os.path.abspath(path), _os.path.join(stage_dir, "b.parquet"))
-    stream = catalog.normalize_event_time(
-        spark.readStream.schema(schema).parquet(stage_dir)
-    ).select("event_id", "ts", "event_type")
-    deduped = streaming_dedup.dedup_within_watermark(
-        stream, keys=["event_id"], ts_col="ts", delay="10 minutes"
-    )
-    drained = stateful.drain_to_parquet(
-        spark, deduped, shuffle_partitions=8, output_mode="append"
-    )
-    _shutil.rmtree(stage_dir, ignore_errors=True)
+    with _staged_events(spark, sf_dir, links=("a.parquet", "b.parquet")) as stage:
+        stream = stage.read_stream().select("event_id", "ts", "event_type")
+        deduped = streaming_dedup.dedup_within_watermark(
+            stream, keys=["event_id"], ts_col="ts", delay="10 minutes"
+        )
+        drained = stateful.drain_to_parquet(
+            spark, deduped, shuffle_partitions=8, output_mode="append"
+        )
     return drained.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events")
     )
@@ -8298,15 +8204,6 @@ _PUNCT = (
     " / length(text) ELSE 0.0 END"
 )
 
-
-def _cents_sql(col: str) -> str:
-    """DuckDB mirror of _cents(): tie-free floor(x*100 + 0.5) cents."""
-    return f"CAST(floor({col} * 100 + 0.5) AS BIGINT)"
-
-
-def _pct2_sql(col: str) -> str:
-    """DuckDB mirror of _pct2(): exact bigint percent (x100)."""
-    return f"CAST(floor({col} * 100 + 0.5) AS BIGINT)"
 
 def _emb_ok(col: str = "embedding") -> str:
     """DuckDB mirror of similarity.indexable_vectors: keep only vectors

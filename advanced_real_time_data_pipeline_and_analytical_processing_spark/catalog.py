@@ -36,11 +36,13 @@ def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     fixture writer produced: TIMESTAMP(NANOS) read as bigint nanos
     (legacy nanosAsLong), or naive micros read as TIMESTAMP_NTZ.
     Session tz is pinned UTC, so the NTZ→LTZ cast is value-preserving.
-    Works on batch and streaming frames alike."""
+    Nanos are truncated to micros — the same thing DuckDB's micros
+    TIMESTAMP does on read. Works on batch and streaming frames alike."""
     dtype = dict(df.dtypes).get(col)
     if dtype == "bigint":
         # Integer division, NOT `/ 1000` + cast: int64 epoch-nanos
-        # exceed double's 53-bit exact range.
+        # (~1.7e18) exceed double's 53-bit exact range, so float division
+        # lands on the wrong microsecond for ~12% of real fixture rows.
         df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
     elif dtype == "timestamp_ntz":
         df = df.withColumn(col, F.col(col).cast("timestamp"))
@@ -106,22 +108,16 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
-    # TIMESTAMP(NANOS) parquet columns arrive as bigint nanos (via
-    # spark.sql.legacy.parquet.nanosAsLong); truncate to micros — the
-    # same thing DuckDB's micros TIMESTAMP does on read.
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # Integer division, NOT `/ 1000` + cast: int64 epoch-nanos
-        # (~1.7e18) exceed double's 53-bit exact range, so float division
-        # lands on the wrong microsecond for ~12% of real fixture rows.
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # Naive parquet timestamps (no isAdjustedToUTC) arrive as
-    # TIMESTAMP_NTZ, which event-time ops (watermarks, unix_micros,
-    # double casts) reject. Session tz is pinned UTC, so the NTZ→LTZ
-    # cast is value-preserving; normalize every such column here so all
-    # queries see plain TIMESTAMP regardless of the fixture's writer.
+    # events.ts is TIMESTAMP(NANOS), which arrives as bigint nanos (via
+    # spark.sql.legacy.parquet.nanosAsLong). Naive parquet timestamps (no
+    # isAdjustedToUTC) arrive as TIMESTAMP_NTZ, which event-time ops
+    # (watermarks, unix_micros, double casts) reject. Normalize both so
+    # all queries see plain TIMESTAMP regardless of the fixture's writer.
+    if name == "events":
+        df = normalize_event_time(df)
     for col, dtype in df.dtypes:
         if dtype == "timestamp_ntz":
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
+            df = normalize_event_time(df, col)
     return df
 
 

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
+# grouped_stats and its helpers are the reference's per-sensor
+# aggregate table, kept for ROADMAP item 8 to wire into the stream.
 GROUP_FALLBACK = "unknown"
 
 
@@ -54,25 +56,6 @@ def grouped_stats(
     if include_count:
         exprs.append(F.count(F.lit(1)).alias("n_rows"))
     return df.groupBy(group_col).agg(*exprs)
-
-
-def grouped_stats_with_metadata(
-    df: DataFrame,
-    group_col: str,
-    data_source: str,
-    table_name: str,
-    numeric_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """Reference A4 (``code/helpers.py:193-195``): the aggregate table
-    rows carry lineage literals — data_source, file_name (= the derived
-    table name) and ingestion_ts — added in the same projection as the
-    aggregate output, no extra pass."""
-    return grouped_stats(df, group_col, numeric_cols).select(
-        "*",
-        F.lit(data_source).alias("data_source"),
-        F.lit(table_name).alias("file_name"),
-        F.current_timestamp().alias("ingestion_ts"),
-    )
 
 
 def ewma_final(

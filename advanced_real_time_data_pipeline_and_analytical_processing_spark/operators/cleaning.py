@@ -24,15 +24,7 @@ def trim_exprs(schema: StructType) -> list[Column]:
     ]
 
 
-def trim_strings(df: DataFrame) -> DataFrame:
-    """Trim all string columns in ONE select (not N withColumns)."""
-    return df.select(*trim_exprs(df.schema))
-
-
 def drop_all_null_rows(df: DataFrame) -> DataFrame:
     """Drop rows where every column is null (reference P2)."""
     return df.na.drop(how="all")
 
-
-def clean(df: DataFrame) -> DataFrame:
-    return drop_all_null_rows(trim_strings(df))

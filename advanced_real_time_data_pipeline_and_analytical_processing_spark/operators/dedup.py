@@ -8,7 +8,8 @@ all-pairs comparison (candidate pairs only, post-LSH).
 - exact_dedup:        hash-groupBy on content hash, keep deterministic min-id
 - minhash_near_dup:   shingle → 64-perm minhash → banded LSH → candidate
                       pairs → exact-Jaccard verify (candidates only)
-- simhash:            64-bit simhash via per-token hash bit votes
+- simhash_votes_vector/simhash_from_votes_vector: portable 32-bit
+                      simhash from md5 hex-digit votes
 - ngram_jaccard_pairs: exact word-shingle Jaccard for candidate pairs
 """
 
@@ -111,22 +112,6 @@ def _spread(df: DataFrame, id_col: str, num_partitions: int | None) -> DataFrame
     self-join and the verify join read it instead of re-scanning."""
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, F.col(id_col))
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """(id, sig: array<int>) — per-row minhash signatures. A 100 TB
-    corpus gets its signatures in one map stage; the only shuffle is the
-    parallelism-spreading repartition of (id, text) pairs."""
-    base = _spread(df.select(F.col(id_col), F.col(text_col)), id_col, num_partitions)
-    shingled = _shingled(base, id_col, text_col, shingle_n, "_sh")
-    return shingled.select(id_col, _sig_from_shingles("_sh", num_hashes).alias("sig"))
 
 
 def minhash_candidate_pairs(
@@ -242,42 +227,9 @@ def minhash_near_dup(
     )
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 63) -> DataFrame:
-    """SimHash fingerprint: per-token xxhash64, signed bit votes summed
-    per document, sign of each vote = fingerprint bit. One explode + one
-    hash-aggregate with ``bits`` sum() partials (map-side combined).
-
-    63 bits so the fingerprint fits a non-negative bigint.
-    Returns (id, simhash: bigint).
-    """
-    toks = df.select(
-        F.col(id_col), F.explode(F.array_distinct(_tokens(F.col(text_col)))).alias("_t")
-    )
-    h = toks.select(id_col, F.xxhash64("_t").alias("_h"))
-    votes = h.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("_h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"_v{j}")
-            for j in range(bits)
-        ]
-    )
-    fingerprint = sum(
-        (F.when(F.col(f"_v{j}") > 0, F.lit(1)).otherwise(F.lit(0)).cast("bigint") * F.lit(1 << j))
-        for j in range(bits)
-    )
-    return votes.select(F.col(id_col), fingerprint.alias("simhash"))
-
-
-def simhash_hamming(a: Column, b: Column) -> Column:
-    """Hamming distance between two simhash bigints (bit_count of xor)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 # Portable (md5-hex-digit) simhash: bit j votes on the parity of hex
-# digit j of md5(token). Slower than the xxhash64 variant above but
-# reproducible in any engine with md5() — which makes it oracle-checkable
-# value-for-value against DuckDB.
+# digit j of md5(token). Reproducible in any engine with md5() — which
+# makes it oracle-checkable value-for-value against DuckDB.
 _ODD_HEX = ("1", "3", "5", "7", "9", "b", "d", "f")
 PORTABLE_SIMHASH_BITS = 32  # md5 hex has 32 digits → one vote per digit
 
@@ -287,25 +239,13 @@ def token_md5s(text_col: Column) -> Column:
     return F.transform(F.array_distinct(_tokens(text_col)), lambda t: F.md5(t))
 
 
-def simhash_vote(md5s_col: Column, bit: int) -> Column:
-    """Signed vote for one fingerprint bit: +1 per token whose md5 hex
-    digit ``bit`` is odd, -1 otherwise, summed over the token array —
-    per-row fold, no shuffle."""
-    return F.aggregate(
-        md5s_col,
-        F.lit(0),
-        lambda acc, m: acc
-        + F.when(F.substring(m, bit + 1, 1).isin(*_ODD_HEX), 1).otherwise(-1),
-    )
-
-
 def simhash_votes_vector(
     md5s_col: Column, bits: int = PORTABLE_SIMHASH_BITS
 ) -> Column:
     """All ``bits`` signed votes in ONE fold over the token-md5 array:
     accumulator = array<int> of vote sums, each step zip_adds the
     per-digit votes of one md5. Replaces ``bits`` independent
-    simhash_vote folds (each rescanning the array) with a single pass —
+    per-bit folds (each rescanning the array) with a single pass —
     ~bits× less expression work per row."""
     zeros = F.array_repeat(F.lit(0), bits)
     digits = F.sequence(F.lit(1), F.lit(bits))
@@ -318,14 +258,6 @@ def simhash_votes_vector(
         return F.zip_with(acc, digit_votes, lambda a, b: a + b)
 
     return F.aggregate(md5s_col, zeros, step)
-
-
-def simhash_from_votes(votes: list[Column]) -> Column:
-    """bigint fingerprint: bit j set iff votes[j] > 0."""
-    return sum(
-        (F.when(v > 0, F.lit(1)).otherwise(F.lit(0)).cast("bigint") * F.lit(1 << j))
-        for j, v in enumerate(votes)
-    )
 
 
 def simhash_from_votes_vector(
@@ -542,23 +474,6 @@ def _ngram_blocked_pairs(
     )
 
 
-def ngram_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    threshold: float = 0.8,
-    num_partitions: int | None = None,
-    length_bucketing: bool = True,
-    block_cap: int | None = None,
-) -> DataFrame:
-    """Candidate (id_a, id_b) pairs for exact-Jaccard scoring (see
-    _ngram_blocked_pairs for the blocking/skew-hardening scheme)."""
-    base = _spread(df.select(F.col(id_col), F.col(text_col)), id_col, num_partitions)
-    shingled = _shingled(base, id_col, text_col, shingle_n, "_shingles")
-    return _ngram_blocked_pairs(shingled, id_col, threshold, length_bucketing, block_cap)
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -620,7 +535,7 @@ def simhash_hamming_pairs(
     without an all-pairs product. Exact ``bit_count(xor)`` verify on
     the candidates only; multi-chunk agreements dedup via distinct.
 
-    This is the index-side complement of ``simhash``/``simhash_vote``:
+    This is the index-side complement of the simhash fingerprints:
     fingerprints compress each doc to one int64, the banded join is
     O(collisions), and the verify is two ints per candidate — the
     cheapest of the near-dup family at 100 TB (MinHash carries 64-int

@@ -1,16 +1,17 @@
 """Lineage / metadata enrichment (reference P8, ``code/helpers.py:208-215``).
 
-Adds ``file_path``, ``ingestion_ts`` and a deterministic ``row_hash`` =
-sha2-256 over all (or selected) columns, null-coalesced and joined with
-``||`` — byte-for-byte the reference's hash recipe, so downstream
-idempotent-upsert keys are compatible.
+The deterministic ``row_hash`` = sha2-256 over the selected columns,
+null-coalesced and joined with ``||`` — byte-for-byte the reference's
+hash recipe, so downstream idempotent-upsert keys are compatible. The
+ingest (``streaming/ingest.process_batch``) projects it beside
+``file_path`` and ``ingestion_ts``.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 HASH_SEP = "||"
@@ -28,22 +29,3 @@ def row_hash_expr(columns: Sequence[str]) -> Column:
     ]
     return F.sha2(F.concat_ws(HASH_SEP, *parts), 256)
 
-
-def add_metadata(
-    df: DataFrame,
-    file_path: str | None = None,
-    hash_columns: Sequence[str] | None = None,
-) -> DataFrame:
-    """Attach lineage columns in one projection.
-
-    ``file_path``: literal when known (batch path), else the per-row
-    ``input_file_name()`` metadata (reference S2, ``code/Main.py:48``).
-    """
-    cols = list(hash_columns or df.columns)
-    path_col = F.lit(file_path) if file_path is not None else F.input_file_name()
-    return df.select(
-        "*",
-        path_col.alias("file_path"),
-        F.current_timestamp().alias("ingestion_ts"),
-        row_hash_expr(cols).alias("row_hash"),
-    )

@@ -51,21 +51,6 @@ def zvalue(cols: list[Column], bits: int = 16) -> Column:
     return out
 
 
-def zorder_layout(
-    df: DataFrame, cols: list[str], bits: int = 16, num_files: int = 200
-) -> DataFrame:
-    """The write-side layout op: range-partition on the z-value and
-    sort within partitions, so each output file covers one contiguous
-    z-range = one small multi-dim rectangle. AQE-friendly: the range
-    exchange samples boundaries at runtime, no skew assumptions."""
-    z = zvalue([F.col(c) for c in cols], bits).alias("_z")
-    return (
-        df.withColumn("_z", z)
-        .repartitionByRange(num_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-    )
-
-
 def zorder_bucket_stats(
     df: DataFrame, cols: list[str], bits: int = 16, bucket_shift: int = 14
 ) -> DataFrame:

@@ -4,15 +4,6 @@ The reference pipeline (code/Main.py, code/utils.py) stops at
 "write the batch"; at 100 TB the write layout IS the query plan for
 every downstream job, so an engine needs first-class operators for:
 
-- **Bucketed tables** (`write_bucketed`): pre-shuffle a fact table once
-  on its join key so every later equi-join/aggregation on that key is
-  exchange-free (Spark reads bucket files as pre-partitioned input).
-  This is the batch analogue of co-partitioned stream-stream joins.
-- **Small-file compaction** (`compact_parquet`): streaming ingest
-  (foreachBatch appends, reference §4.3-8) accretes thousands of tiny
-  parquet files; scans then pay per-file open cost and lose row-group
-  pruning. Compaction rewrites a directory to ~target-sized files with
-  a single shuffle-free coalesce read.
 - **Deterministic sampling** (`hash_sample`): reproducible train/eval
   splits and down-samples keyed on a stable hash of an id column —
   never `rand()`, which breaks resume/retry idempotency and cannot be
@@ -25,63 +16,8 @@ every downstream job, so an engine needs first-class operators for:
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int,
-    sort_col: str | None = None,
-    path: str | None = None,
-) -> None:
-    """Persist `df` as a bucketed (and optionally sorted) managed table.
-
-    Joins/aggregations between two tables bucketed on the same key with
-    the same bucket count skip the exchange entirely — the decisive
-    layout choice for a fact table joined on the same key by many
-    downstream jobs. Sorting within buckets additionally enables
-    sort-merge joins without a per-task sort."""
-    writer = df.write.mode("overwrite").format("parquet")
-    if path is not None:
-        writer = writer.option("path", path)
-    writer = writer.bucketBy(n_buckets, bucket_col)
-    if sort_col is not None:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table_name)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src_dir: str,
-    dest_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Rewrite a parquet directory into ~target-sized files.
-
-    File count is planned from the directory's actual byte size (driver
-    fs metadata — no data scan), then a coalesce(n) write: coalesce is
-    shuffle-free, so compaction costs one read + one write. Returns the
-    number of output files planned. Parquet compresses ~2-4x over its
-    in-memory width, so target_file_bytes is measured against on-disk
-    bytes, matching how maxPartitionBytes sizes the later scans."""
-    total = 0
-    for root, _dirs, files in os.walk(src_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
-    n_files = max(1, (total + target_file_bytes - 1) // target_file_bytes)
-    (
-        spark.read.parquet(src_dir)
-        .coalesce(int(n_files))
-        .write.mode("overwrite")
-        .parquet(dest_dir)
-    )
-    return int(n_files)
 
 
 def hash_sample(
@@ -241,24 +177,6 @@ def latest_wins_merge_with_deletes(
     )
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> None:
-    """Hive-style partitioned parquet layout: one directory per
-    partition value, so any scan filtering on the partition columns is
-    pruned at PLANNING time (the plan's PartitionFilters — non-matching
-    directories are never listed, opened, or read). At 100 TB this is
-    the difference between a full-table scan and touching one day's
-    folder; pair with compact_parquet per partition to keep file
-    counts sane. Choose low-cardinality, always-filtered columns
-    (event date, tenant) — never high-cardinality keys, which explode
-    the directory tree."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
 def merge_agg_delta(
     state: DataFrame | None,
     delta: DataFrame,
@@ -275,9 +193,7 @@ def merge_agg_delta(
 
     Shape at 100 TB: the delta aggregates map-side first (tiny), then
     one full-outer merge on the group key against the state table —
-    the same join a MERGE INTO runs. With the state bucketed on the
-    key (write_bucketed above), the merge is shuffle-free on the
-    state side."""
+    the same join a MERGE INTO runs."""
     partial = delta.groupBy(*keys).agg(
         F.count(F.lit(1)).alias(count_col),
         *[F.sum(c).alias(f"sum_{c}") for c in sum_cols],

@@ -15,8 +15,6 @@ Design for 100 TB of media:
   the blob column at all.
 - feature extraction is mapInPandas (Arrow batches), so each task
   decodes a partition's worth of blobs without per-row Python overhead.
-- ``repartition_for_decode`` sizes partitions by estimated payload bytes,
-  not row count — decode cost follows bytes.
 """
 
 from __future__ import annotations
@@ -30,26 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType()),
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("duration_ms", T.IntegerType()),
-                    T.StructField("n_bytes", T.LongType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 FEATURE_DIM = 16
 
 FEATURES_SCHEMA = T.StructType(
@@ -59,36 +37,6 @@ FEATURES_SCHEMA = T.StructType(
         T.StructField("features", T.ArrayType(T.FloatType()), True),
     ]
 )
-
-
-def attach_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Backfill meta.n_bytes from the payload (metadata repair path)."""
-    return df.withColumn(
-        "meta",
-        F.struct(
-            F.col("meta.mime").alias("mime"),
-            F.col("meta.width").alias("width"),
-            F.col("meta.height").alias("height"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-            F.length(F.col(payload_col)).cast("long").alias("n_bytes"),
-        ),
-    )
-
-
-def repartition_for_decode(
-    df: DataFrame, target_bytes_per_partition: int = 256 * 1024 * 1024
-) -> DataFrame:
-    """Partition by payload VOLUME, not row count: decode cost follows
-    bytes. The sizing pass sums ``meta.n_bytes`` — typed-struct metadata
-    maintained by attach_meta/media_from_documents — so planning the
-    shuffle reads ONLY the metadata column, never the payload bytes
-    (summing length(payload) would scan all 100 TB of blobs before
-    deciding how to decode them)."""
-    total = (
-        df.select(F.sum(F.col("meta.n_bytes")).alias("b")).collect()[0]["b"] or 0
-    )
-    n = max(1, int(total / target_bytes_per_partition) + 1)
-    return df.repartition(n)
 
 
 def _fake_features(payload: bytes | None, dim: int = FEATURE_DIM) -> list[float] | None:

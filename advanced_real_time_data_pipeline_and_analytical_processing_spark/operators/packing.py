@@ -59,18 +59,3 @@ def pack_sequences(
         (start % capacity).cast("long").alias("start_offset"),
     )
 
-
-def chunk_stats(
-    packed: DataFrame, shard_col: str, tokens_col: str, capacity: int
-) -> DataFrame:
-    """Per-(shard, chunk) packing audit: documents starting in the
-    chunk, tokens they contribute, and how many straddle the boundary.
-    One hash aggregate over the packed frame."""
-    return packed.groupBy(shard_col, "chunk_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(tokens_col).alias("sum_tokens"),
-        F.sum(
-            F.when(F.col("start_offset") + F.col(tokens_col) > capacity, 1)
-            .otherwise(0)
-        ).alias("n_straddlers"),
-    )

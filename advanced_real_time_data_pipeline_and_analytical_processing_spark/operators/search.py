@@ -23,8 +23,8 @@ Shape, and why it scales:
 
 At 100 TB: scan-heavy, shuffle-light (the only exchange carries
 (doc_id, term, tf) for matched terms). For interactive workloads you
-would materialize the (term, doc_id, tf, dl) inverted index once with
-write_bucketed(term) and reuse it across queries — the scoring
+would materialize the (term, doc_id, tf, dl) inverted index once as a
+table bucketed on term and reuse it across queries — the scoring
 pipeline below is unchanged.
 """
 

@@ -52,13 +52,6 @@ def punct_ratio(text: Column) -> Column:
     return F.when(total > 0, (total - clean_len).cast("double") / total).otherwise(0.0)
 
 
-def stopword_ratio(text: Column) -> Column:
-    toks = tokens(text)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
-    return F.when(F.size(toks) > 0, n_stop.cast("double") / F.size(toks)).otherwise(0.0)
-
-
 def _ppm(numer: Column, denom: Column) -> Column:
     """floor(numer * 1e6 / denom) as bigint — exact integer ppm.
 
@@ -262,12 +255,6 @@ def duplicate_bigram_fraction_from_bigrams(bgs: Column) -> Column:
     ).otherwise(0.0)
 
 
-def duplicate_bigram_fraction(text: Column) -> Column:
-    """Convenience single-expression form (inline tokenize+bigram;
-    see bigrams_from_tokens for the hot-path variant)."""
-    return duplicate_bigram_fraction_from_bigrams(bigrams(text))
-
-
 def fingerprint(text: Column) -> Column:
     """Normalization fingerprint: lowercase, collapse whitespace, sha2.
     Two documents with the same fingerprint are exact dups modulo
@@ -275,18 +262,3 @@ def fingerprint(text: Column) -> Column:
     normalized = F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
     return F.sha2(normalized, 256)
 
-
-def text_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """One-pass per-document profile with all text metrics."""
-    t = F.col(text_col)
-    return df.select(
-        F.col(id_col),
-        token_count(t).alias("n_tokens"),
-        bpe_ish_token_count(t).alias("n_subtokens"),
-        F.length(t).alias("n_chars"),
-        F.round(punct_ratio(t), 6).alias("punct_ratio"),
-        F.round(stopword_ratio(t), 6).alias("stopword_ratio"),
-        quality_score(t).alias("quality"),
-        lang_id(t).alias("lang_pred"),
-        fingerprint(t).alias("fp"),
-    )

@@ -1,1 +1,1 @@
-"""Plan-level helpers: naming, rule specs, explain utilities."""
+"""Plan-level helpers: explain and materialize utilities."""

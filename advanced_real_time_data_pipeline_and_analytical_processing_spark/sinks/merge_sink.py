@@ -98,106 +98,38 @@ def start_merge_stream(
     return writer.start()
 
 
-# ---------------------------------------------------------------------------
-# Bucketed variant: bounded write amplification
-# ---------------------------------------------------------------------------
-# merge_batch above rewrites the WHOLE table every micro-batch — fine
-# for compact state, O(table) write amplification at scale. The
-# bucketed variant hash-partitions the table into fixed key buckets,
-# each with its own snapshot + manifest: a batch rewrites only the
-# buckets its keys land in, so write cost tracks the BATCH size (x
-# bucket granularity), not the table size. This is precisely the
-# copy-on-write bucket/file-group design Hudi industrializes.
-
-
-def _bucket_dir(table_dir: str, bucket: int) -> str:
-    return os.path.join(table_dir, f"bucket={bucket}")
-
-
-def read_bucketed_table(
-    spark: SparkSession, table_dir: str, num_buckets: int
-) -> DataFrame | None:
-    snaps = [
-        s
-        for b in range(num_buckets)
-        if (s := current_snapshot_dir(_bucket_dir(table_dir, b))) is not None
-    ]
-    return spark.read.parquet(*snaps) if snaps else None
-
-
-def merge_batch_bucketed(
-    spark: SparkSession,
-    batch: DataFrame,
-    table_dir: str,
-    key_cols: list[str],
-    version_col: str,
-    batch_id: int,
-    num_buckets: int = 16,
-) -> list[int]:
-    """Merge ``batch`` into a bucketed table; only buckets containing
-    batch keys are read and rewritten. Returns the touched bucket ids
-    (the write-amplification audit trail). The touched-bucket list is
-    the ONLY driver-side materialization — bounded by num_buckets, not
-    by data size."""
-    from pyspark.sql import functions as F
-
-    bkt = F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(num_buckets))
-    tagged = batch.withColumn("_bkt", bkt)
-    tagged.cache()
-    touched = sorted(r._bkt for r in tagged.select("_bkt").distinct().collect())
-    for b in touched:
-        bdir = _bucket_dir(table_dir, b)
-        os.makedirs(bdir, exist_ok=True)
-        part = tagged.filter(F.col("_bkt") == b).drop("_bkt")
-        current_snap = current_snapshot_dir(bdir)
-        current = spark.read.parquet(current_snap) if current_snap else part.limit(0)
-        merged = latest_wins_merge(current, part, key_cols, version_col)
-        new_dir = os.path.join(bdir, f"snap_{batch_id}")
-        merged.write.mode("overwrite").parquet(new_dir)
-        tmp = os.path.join(bdir, _MANIFEST + ".tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(f"snap_{batch_id}")
-        os.replace(tmp, os.path.join(bdir, _MANIFEST))
-    tagged.unpersist()
-    return touched
-
-
 def vacuum(table_dir: str, keep_latest: int = 1) -> list[str]:
     """Remove snapshot directories superseded by the manifest (keeping
     the current one plus ``keep_latest - 1`` most recent others for
-    time-travel/debug reads). Without this, every merge batch leaks
+    debug reads). Without this, every merge batch leaks
     its predecessor's full snapshot — at table size S and B batches,
     O(S*B) dead storage. Safe order: the manifest always points at a
     kept snapshot, and removal never touches it, so concurrent readers
     of the CURRENT snapshot are unaffected (readers of already-
     superseded snapshots race with vacuum by design, as in every
-    snapshot-table format). Works on both flat and bucketed layouts.
-    Returns the removed paths."""
+    snapshot-table format). Returns the removed paths.
+
+    No production caller yet: whether the serving-table stage keeps it
+    is ROADMAP item 8's decision."""
     import shutil
 
+    manifest = os.path.join(table_dir, _MANIFEST)
+    if not os.path.exists(manifest):
+        return []
+    with open(manifest, encoding="utf-8") as fh:
+        current = fh.read().strip()
+    snaps = sorted(
+        (d for d in os.listdir(table_dir) if d.startswith("snap_")),
+        key=lambda d: int(d.split("_", 1)[1]),
+        reverse=True,
+    )
+    keep = {current, *snaps[: max(keep_latest - 1, 0)]}
     removed: list[str] = []
-    roots = [table_dir] + [
-        os.path.join(table_dir, d)
-        for d in sorted(os.listdir(table_dir))
-        if d.startswith("bucket=")
-    ]
-    for root in roots:
-        manifest = os.path.join(root, _MANIFEST)
-        if not os.path.exists(manifest):
-            continue
-        with open(manifest, encoding="utf-8") as fh:
-            current = fh.read().strip()
-        snaps = sorted(
-            (d for d in os.listdir(root) if d.startswith("snap_")),
-            key=lambda d: int(d.split("_", 1)[1]),
-            reverse=True,
-        )
-        keep = {current, *snaps[: max(keep_latest - 1, 0)]}
-        for d in snaps:
-            if d not in keep:
-                path = os.path.join(root, d)
-                shutil.rmtree(path, ignore_errors=True)
-                removed.append(path)
+    for d in snaps:
+        if d not in keep:
+            path = os.path.join(table_dir, d)
+            shutil.rmtree(path, ignore_errors=True)
+            removed.append(path)
     return removed
 
 
@@ -210,59 +142,3 @@ def vacuum(table_dir: str, keep_latest: int = 1) -> list[str]:
 # snapshot layout. Bucketed tables rewrite only touched buckets, so
 # "as of batch B" per bucket means its newest snapshot with id <= B.
 
-
-def list_snapshot_ids(table_dir: str) -> list[int]:
-    """Batch ids with a readable snapshot (flat layout: this root;
-    bucketed layout: union over buckets)."""
-    ids: set[int] = set()
-    roots = [table_dir] + [
-        os.path.join(table_dir, d)
-        for d in sorted(os.listdir(table_dir))
-        if d.startswith("bucket=")
-    ]
-    for root in roots:
-        if not os.path.isdir(root):
-            continue
-        for d in os.listdir(root):
-            if d.startswith("snap_"):
-                ids.add(int(d.split("_", 1)[1]))
-    return sorted(ids)
-
-
-def _snap_as_of(root: str, batch_id: int) -> str | None:
-    if not os.path.isdir(root):
-        return None
-    best = None
-    for d in os.listdir(root):
-        if d.startswith("snap_"):
-            sid = int(d.split("_", 1)[1])
-            if sid <= batch_id and (best is None or sid > best):
-                best = sid
-    return os.path.join(root, f"snap_{best}") if best is not None else None
-
-
-def read_table_as_of(
-    spark: SparkSession, table_dir: str, batch_id: int
-) -> DataFrame | None:
-    """Point-in-time read: the table state right after ``batch_id``
-    was merged. Flat tables read one snapshot; bucketed tables read,
-    per bucket, the newest snapshot at or before ``batch_id`` (buckets
-    untouched by later batches already ARE the as-of state; a bucket
-    whose earliest snapshot is newer than ``batch_id`` did not exist
-    yet and contributes nothing). Returns None when nothing that old
-    exists anywhere.
-
-    Caveat shared with every snapshot-table format: an as-of read is
-    only faithful while vacuum() has not trimmed the snapshots that
-    id needs — size ``vacuum(keep_latest=...)`` to the history window
-    you intend to query."""
-    buckets = [
-        os.path.join(table_dir, d)
-        for d in sorted(os.listdir(table_dir))
-        if d.startswith("bucket=")
-    ]
-    if not buckets:
-        snap = _snap_as_of(table_dir, batch_id)
-        return spark.read.parquet(snap) if snap else None
-    dirs = [s for b in buckets if (s := _snap_as_of(b, batch_id))]
-    return spark.read.parquet(*dirs) if dirs else None

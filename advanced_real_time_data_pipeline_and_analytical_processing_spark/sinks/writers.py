@@ -7,8 +7,8 @@
 - audit: explicit-schema one-row-per-batch table partitioned by
   audit_date (fixes reference anti-pattern §4.3-10: inferred audit
   schema), counts sourced from ``observe()`` metrics, not extra actions.
-- jdbc: append with batching; retry with exponential backoff (reference
-  R1, ``code/helpers.py:14-44``). Gated behind driver availability.
+- retry: exponential backoff around the audit append (reference R1,
+  ``code/helpers.py:14-44``). The JDBC sink is ``jdbc_upsert.py``.
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ import time
 from dataclasses import asdict, dataclass
 from typing import Callable, TypeVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 T_ = TypeVar("T_")
@@ -99,22 +99,4 @@ def write_audit(spark: SparkSession, out_dir: str, rec: AuditRecord) -> None:
         .partitionBy("audit_date")
         .parquet(out_dir)
     )
-
-
-@retry()
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    properties: dict[str, str] | None = None,
-    mode: str = "append",
-) -> None:
-    """JDBC append with batched inserts (reference K1/K2,
-    ``code/utils.py:203-205``). Plain at-least-once append — for
-    exactly-once-per-key replays use
-    ``sinks.jdbc_upsert.upsert_jdbc`` (staging table + row_hash-keyed
-    MERGE, tested against embedded Derby)."""
-    props = {"batchsize": "5000", "rewriteBatchedStatements": "true"}
-    props.update(properties or {})
-    df.write.jdbc(url=url, table=table, mode=mode, properties=props)
 

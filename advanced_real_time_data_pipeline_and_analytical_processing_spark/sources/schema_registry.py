@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 
 from pyspark.sql.types import StructType
 
@@ -43,14 +42,6 @@ def load_schema(schema_dir: str, data_file: str) -> StructType | None:
     with open(path) as fh:
         doc = json.load(fh)
     return StructType.fromJson(normalize_struct_json(doc))
-
-
-def save_schema(schema: StructType, schema_dir: str, dataset_name: str) -> str:
-    os.makedirs(schema_dir, exist_ok=True)
-    path = os.path.join(schema_dir, f"{dataset_name}.json")
-    with open(path, "w") as fh:
-        json.dump(schema.jsonValue(), fh, indent=2)
-    return path
 
 
 def load_schema_any(spark, schema_dir: str, data_file: str) -> StructType | None:

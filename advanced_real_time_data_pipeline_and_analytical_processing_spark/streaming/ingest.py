@@ -172,7 +172,7 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
         if batch_df.columns != data_cols:
             raise ValueError(f"batch columns {batch_df.columns} != schema {data_cols}")
         spark = batch_df.sparkSession
-        # clean() (trim, then all-null drop) and validate(), prebuilt
+        # trim, then all-null drop, and validate(), prebuilt
         marked = drop_all_null_rows(batch_df.select(*trimmed)).select("*", *marks).persist()
         files: list[str] | None = None  # set once the observation arrives
         try:
@@ -262,26 +262,8 @@ def start_ingest(spark: SparkSession, cfg: IngestConfig):
 
 
 def run_ingest_once(spark: SparkSession, cfg: IngestConfig) -> None:
-    """Synchronous availableNow drain (used by tests/backfills). The
-    caller's config is left as it is."""
+    """Synchronous availableNow drain. Kept as the backfill entry point;
+    the ingest tests run the pipeline through it. The caller's config is
+    left as it is."""
     start_ingest(spark, replace(cfg, trigger={"availableNow": True})).awaitTermination()
 
-
-def start_multi_format_ingest(
-    spark: SparkSession, cfgs: list[IngestConfig]
-) -> list:
-    """Reference S7 (format dispatch, ``code/Main.py:76-80``) done the
-    Spark way: the reference collected each batch's file paths to the
-    driver and grouped them by extension with RDD ops; here each format
-    is its own streaming query over the same directory (pathGlobFilter
-    separates them at the source), so schemas are fixed at plan time and
-    nothing moves driver-side. Queries run concurrently and share
-    nothing but the directory."""
-    return [start_ingest(spark, cfg) for cfg in cfgs]
-
-
-def run_multi_format_once(spark: SparkSession, cfgs: list[IngestConfig]) -> None:
-    """availableNow drain of every per-format stream (test/backfill)."""
-    drains = [replace(cfg, trigger={"availableNow": True}) for cfg in cfgs]
-    for q in start_multi_format_ingest(spark, drains):
-        q.awaitTermination()

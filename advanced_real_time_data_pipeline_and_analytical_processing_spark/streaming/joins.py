@@ -3,10 +3,9 @@ are absent from the reference — its `timestamp` column never drives any
 event-time logic — but are must-have engine surface).
 
 Scale notes:
-- stream-static: the static side is broadcast per micro-batch, so the
-  stream never shuffles for the join. Right for dimension tables that
-  fit the broadcast threshold; bigger dims should be pre-bucketed
-  storage joined shuffle-side instead.
+- stream-static: a plain ``stream.join(F.broadcast(dim), keys)``; the
+  static side is broadcast per micro-batch, so the stream never
+  shuffles for the join (the stream_static_enrichment query).
 - stream-stream: BOTH sides buffer in the state store until the
   watermark passes, so the join is only bounded if (a) both inputs have
   watermarks and (b) the join condition constrains event time (range or
@@ -19,19 +18,8 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def stream_static_enrich(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: Sequence[str] | Column,
-    how: str = "left",
-) -> DataFrame:
-    """Enrich a stream with a static dimension table: broadcast hash
-    join per micro-batch, no stream-side shuffle, no state."""
-    return stream.join(F.broadcast(dim), on, how)
 
 
 def stream_stream_interval_join(

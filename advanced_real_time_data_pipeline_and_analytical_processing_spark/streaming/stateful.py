@@ -124,7 +124,9 @@ def register_scratch_for_exit(path: str) -> str:
 
 def release_scratch(path: str) -> None:
     """Remove a registered scratch dir NOW — only valid once every
-    consumer of the frame that reads it has been fully materialized."""
+    consumer of the frame that reads it has been fully materialized.
+    Kept for ROADMAP item 5, which calls it where drains are fully
+    consumed."""
     if path in _EXIT_SCRATCH:
         _EXIT_SCRATCH.remove(path)
     shutil.rmtree(path, ignore_errors=True)
@@ -133,8 +135,6 @@ def release_scratch(path: str) -> None:
 def drain_to_parquet(
     spark: SparkSession,
     streamed: DataFrame,
-    out_dir: str | None = None,
-    checkpoint_dir: str | None = None,
     shuffle_partitions: int | None = None,
     output_mode: str = "update",
 ) -> DataFrame:
@@ -142,9 +142,9 @@ def drain_to_parquet(
     availableNow trigger, landing each micro-batch's update rows in an
     executor-side parquet sink, then read the result back.
 
-    This is the production drain: rows never funnel through the driver
-    (the memory sink below materializes every update row in driver
-    memory — fine for a 150-key test, a scale-killer at 100 TB). The
+    Rows never funnel through the driver (Spark's memory sink would
+    hold every update row in driver memory — a scale-killer at
+    100 TB). The
     per-batch write is dynamic-partition-overwrite keyed on batch id, so
     a replayed micro-batch is idempotent. output_mode defaults to
     "update" (stateful running aggregates); pass "append" for
@@ -157,18 +157,16 @@ def drain_to_parquet(
     session's scan parallelism — 32 partitions for 150 keys measured
     3.4× slower than 8.
 
-    Scratch lifecycle (r15): the checkpoint is deleted as soon as the
-    drain completes; a DEFAULT sink dir (caller passed no out_dir) is
-    registered for removal at interpreter exit — it must outlive this
-    call because the returned frame reads it lazily, but a long-lived
-    engine must not accumulate sink parquet on the (possibly
+    Scratch lifecycle (r15): both dirs live under _scratch_root(). The
+    checkpoint is deleted as soon as the drain completes; the sink dir
+    is registered for removal at interpreter exit — it must outlive
+    this call because the returned frame reads it lazily, but a
+    long-lived engine must not accumulate sink parquet on the (possibly
     RAM-backed) scratch fs across drains."""
     name = f"drain_{uuid.uuid4().hex[:12]}"
     scratch = _scratch_root()
-    out = out_dir or register_scratch_for_exit(
-        os.path.join(scratch, f"out_{name}")
-    )
-    checkpoint = checkpoint_dir or os.path.join(scratch, f"ckpt_{name}")
+    out = register_scratch_for_exit(os.path.join(scratch, f"out_{name}"))
+    checkpoint = os.path.join(scratch, f"ckpt_{name}")
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
         (
@@ -198,38 +196,12 @@ def drain_to_parquet(
         # state store) has served its purpose and would otherwise
         # accumulate on the scratch filesystem across a long-lived
         # engine's many drains (r14: scratch defaults to tmpfs). The
-        # SINK dir must outlive us — the returned frame reads it
-        # lazily — but only if the caller didn't pick it explicitly.
-        if checkpoint_dir is None:
-            shutil.rmtree(checkpoint, ignore_errors=True)
+        # SINK dir must outlive us — the returned frame reads it lazily.
+        shutil.rmtree(checkpoint, ignore_errors=True)
     # The sink holds exactly the stream's columns: read them back with
     # the schema already known (no inference job); _batch_id comes from
     # partition discovery.
     return spark.read.schema(streamed.schema).parquet(out).drop("_batch_id")
-
-
-def drain_to_memory_table(
-    spark: SparkSession,
-    streamed: DataFrame,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """TEST-ONLY drain: availableNow into the in-memory sink, which
-    collects every update row into DRIVER memory. Use drain_to_parquet
-    for anything beyond toy cardinalities."""
-    name = f"drain_{uuid.uuid4().hex[:12]}"
-    checkpoint = checkpoint_dir or os.path.join(
-        tempfile.gettempdir(), f"ckpt_{name}"
-    )
-    q = (
-        streamed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def session_close_on_timeout(

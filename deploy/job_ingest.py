@@ -125,8 +125,8 @@ def main() -> None:
     # T5/T6: each format's query runs under its own supervision loop
     # (run_supervised restarts from the checkpoint with bounded
     # backoff), one thread per format since the queries are concurrent
-    # — the S7 dispatch shape of start_multi_format_ingest, made
-    # individually restartable. A loop that exhausts its restart
+    # — the S7 dispatch: one ingest stream per format over the same
+    # directory, each individually restartable. A loop that exhausts its restart
     # budget FAILS THE WHOLE JOB (ADVICE r10: previously the exception
     # died with its thread and the driver kept running half-degraded
     # with exit code 0; the reference's supervision loop fails the

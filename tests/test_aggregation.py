@@ -36,24 +36,6 @@ def test_missing_group_col_fallback(spark):
     assert len(out) == 1 and out[0]["sensor_id"] == "unknown"
 
 
-def test_grouped_stats_with_metadata(spark):
-    # reference A4 (code/helpers.py:193-195): lineage lits on the agg rows
-    from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators.aggregation import (
-        grouped_stats_with_metadata,
-    )
-
-    df = spark.createDataFrame(
-        [("a", 1.0), ("b", 2.0)], "sensor_id string, v double"
-    )
-    out = grouped_stats_with_metadata(
-        df, "sensor_id", data_source="local_dir", table_name="public.sensors_agg"
-    )
-    rows = out.collect()
-    assert {"data_source", "file_name", "ingestion_ts"} <= set(out.columns)
-    assert all(r["data_source"] == "local_dir" for r in rows)
-    assert all(r["file_name"] == "public.sensors_agg" for r in rows)
-
-
 def test_mad_outliers_resist_masking(spark):
     """The property z-scores lack: a huge outlier inflates stddev and
     can mask itself, but leaves the medians untouched — MAD still

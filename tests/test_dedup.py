@@ -42,21 +42,29 @@ def test_minhash_finds_planted_dups(spark):
 
 
 def test_minhash_signature_shape(spark):
-    sigs = dedup.minhash_signatures(docs_df(spark), "doc_id", "text", num_hashes=8)
+    shingled = dedup._shingled(docs_df(spark), "doc_id", "text", 3, "_sh")
+    sigs = shingled.select("doc_id", dedup._sig_from_shingles("_sh", 8).alias("sig"))
     rows = sigs.collect()
     assert all(len(r["sig"]) == 8 for r in rows)
     by_id = {r["doc_id"]: r["sig"] for r in rows}
     assert by_id[1] == by_id[2]  # identical text -> identical signature
 
 
+def _simhash(df):
+    """(doc_id, simhash) through the portable vector path the registry
+    queries use."""
+    votes = dedup.simhash_votes_vector(dedup.token_md5s(F.col("text")))
+    return df.select("doc_id", dedup.simhash_from_votes_vector(votes).alias("simhash"))
+
+
 def test_simhash_identical_and_different(spark):
-    out = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs_df(spark), "doc_id", "text").collect()}
+    out = {r["doc_id"]: r["simhash"] for r in _simhash(docs_df(spark)).collect()}
     assert out[1] == out[2]  # identical text
     df = spark.createDataFrame(
         [(1, out[1]), (4, out[4])], "id bigint, h bigint"
     )
     ham = df.select(
-        dedup.simhash_hamming(F.lit(out[1]), F.col("h")).alias("d")
+        F.bit_count(F.lit(out[1]).bitwiseXOR(F.col("h"))).alias("d")
     ).collect()
     assert ham[0]["d"] == 0
     assert ham[1]["d"] > 10  # unrelated text far away
@@ -98,12 +106,13 @@ def test_ngram_length_bucketing_bounds_skewed_blocks(spark):
     rows.append((101, "common header words " + " ".join(f"x{j}" for j in range(19))))
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
 
-    n_cand_skewed = dedup.ngram_candidates(
-        df, "doc_id", "text", threshold=0.8, length_bucketing=False
-    ).count()
-    n_cand_bucketed = dedup.ngram_candidates(
-        df, "doc_id", "text", threshold=0.8, length_bucketing=True
-    ).count()
+    shingled = dedup._shingled(df, "doc_id", "text", 3, "_shingles")
+
+    def n_candidates(bucketing):
+        return dedup._ngram_blocked_pairs(shingled, "doc_id", 0.8, bucketing, None).count()
+
+    n_cand_skewed = n_candidates(False)
+    n_cand_bucketed = n_candidates(True)
     assert n_cand_skewed == 26 * 25 // 2  # the quadratic block
     assert n_cand_bucketed < n_cand_skewed / 2  # bounded neighborhoods
 
@@ -124,18 +133,8 @@ def test_portable_simhash_matches_and_differs(spark):
         [(1, "the quick brown fox"), (2, "the quick brown fox"), (3, "entirely unrelated words list")],
         "doc_id bigint, text string",
     )
-    md5s = df.select("doc_id", dedup.token_md5s(F.col("text")).alias("m"))
     bits = dedup.PORTABLE_SIMHASH_BITS
-    voted = md5s.select(
-        "doc_id", *[dedup.simhash_vote(F.col("m"), j).alias(f"v{j}") for j in range(bits)]
-    )
-    out = {
-        r["doc_id"]: r["sh"]
-        for r in voted.select(
-            "doc_id",
-            dedup.simhash_from_votes([F.col(f"v{j}") for j in range(bits)]).alias("sh"),
-        ).collect()
-    }
+    out = {r["doc_id"]: r["simhash"] for r in _simhash(df).collect()}
     assert out[1] == out[2]          # identical text -> identical fingerprint
     assert out[1] != out[3]          # different text -> different fingerprint
     assert 0 <= out[1] < (1 << bits)
@@ -316,11 +315,8 @@ def test_minhash_bucket_cap_bounds_duplicate_set_blowup(spark):
 
     # uncapped default: the full quadratic pair set (current gate
     # semantics, oracle-mirrored)
-    uncapped = dedup.minhash_candidate_pairs(
-        dedup.minhash_signatures(df, "doc_id", "text", num_hashes=16),
-        "doc_id",
-        num_hashes=16,
-        bands=4,
+    uncapped = dedup.minhash_near_dup(
+        df, "doc_id", "text", num_hashes=16, bands=4, threshold=0.8
     ).count()
     assert uncapped >= 60 * 59 // 2
 

@@ -195,9 +195,8 @@ def test_job_modules_import_cleanly():
 def test_job_build_configs_composes_real_ingest_configs(spark, tmp_path):
     import importlib.util
 
-    from advanced_real_time_data_pipeline_and_analytical_processing_spark.sources.schema_registry import (
-        save_schema,
-    )
+    import json
+
     from pyspark.sql.types import StringType, StructField, StructType
 
     spec = importlib.util.spec_from_file_location(
@@ -209,7 +208,8 @@ def test_job_build_configs_composes_real_ingest_configs(spark, tmp_path):
     base = str(tmp_path / "bucket")
     schema = StructType([StructField("sensor_id", StringType())])
     os.makedirs(os.path.join(base, "schema"), exist_ok=True)
-    save_schema(schema, os.path.join(base, "schema"), "sensors")
+    with open(os.path.join(base, "schema", "sensors.json"), "w") as fh:
+        json.dump(schema.jsonValue(), fh)
 
     cfgs = job.build_configs(spark, base, trigger_s=30)
     assert len(cfgs) == 2  # csv + json over the same registered schema

@@ -136,7 +136,7 @@ def test_mutant_dropped_filter_q5(spark, oracle_con):
         .groupBy("n_name")
         .agg(
             F.sum(
-                em._cents("l_extendedprice") * (100 - em._pct2("l_discount"))
+                em._cents("l_extendedprice") * (100 - em._cents("l_discount"))
             ).alias("revenue_e4")
         )
     )
@@ -241,7 +241,7 @@ def test_mutant_wrong_join_key_q5(spark, oracle_con):
         .groupBy("n_name")
         .agg(
             F.sum(
-                em._cents("l_extendedprice") * (100 - em._pct2("l_discount"))
+                em._cents("l_extendedprice") * (100 - em._cents("l_discount"))
             ).alias("revenue_e4")
         )
     )

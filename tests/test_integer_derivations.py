@@ -1,7 +1,7 @@
 """Property tests for the comparator-proof integer derivations.
 
 The gated head emits money/ratios as exact integers via
-`__spark_entry__._cents` / `_pct2` (floor(x*100+0.5)) and
+`__spark_entry__._cents` (floor(x*100+0.5)) and
 `text._ppm` (floor(n*1e6/d)). These tests pin the two claims the
 whole doctrine rests on (docs/HEAD_AUDIT.md):
 
@@ -73,12 +73,10 @@ def test_spark_expressions_match_host_math(spark):
     df = spark.createDataFrame(rows, "x double, k long")
     got = df.select(
         em._cents(F.col("x")).alias("c"),
-        em._pct2(F.col("x")).alias("p"),
         "k",
     ).collect()
     for r in got:
         assert r.c == r.k, (r.c, r.k)
-        assert r.p == r.k, (r.p, r.k)
 
 
 def test_spark_ppm_matches_host_math(spark):

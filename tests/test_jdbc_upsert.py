@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators.enrichment import add_metadata
+from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators.enrichment import row_hash_expr
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.sinks.jdbc_upsert import (
     merge_sql,
     upsert_jdbc,
@@ -35,7 +35,7 @@ def test_upsert_replay_is_idempotent(spark, derby_url):
     df = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0)], "id bigint, name string, v double"
     )
-    batch = add_metadata(df, file_path="batch1.csv")  # adds row_hash
+    batch = df.select("*", row_hash_expr(df.columns).alias("row_hash"))
     types = {"row_hash": "VARCHAR(64)"}  # Derby CLOBs can't be MERGE keys
     upsert_jdbc(batch, derby_url, "tgt", key_cols=["row_hash"], column_types=types)
     upsert_jdbc(batch, derby_url, "tgt", key_cols=["row_hash"], column_types=types)  # replay

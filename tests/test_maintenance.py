@@ -1,83 +1,11 @@
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators import maintenance
 
 SF = "/root/testdata/sf0.001"
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the join key with the same bucket count
-    must join without any shuffle exchange."""
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    li = spark.read.parquet(f"{SF}/lineitem.parquet")
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    maintenance.write_bucketed(
-        orders, "b_orders", "o_orderkey", 8, path=str(tmp_path / "b_orders")
-    )
-    maintenance.write_bucketed(
-        li, "b_lineitem", "l_orderkey", 8, path=str(tmp_path / "b_lineitem")
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = (
-            spark.table("b_lineitem")
-            .join(
-                spark.table("b_orders"),
-                F.col("l_orderkey") == F.col("o_orderkey"),
-            )
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        # run it (also resolves AQE) and check correctness vs plain join
-        got = {r["o_orderpriority"]: r["n"] for r in joined.collect()}
-        want = {
-            r["o_orderpriority"]: r["n"]
-            for r in li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        assert got == want
-        plan = _plan(joined)
-        # bucketed scans feed a sort-merge join with ZERO exchange on
-        # the join keys — the whole point of the bucketed layout
-        assert "Bucketed: true" in plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert "Exchange hashpartitioning(l_orderkey" not in plan
-        assert "Exchange hashpartitioning(o_orderkey" not in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_compact_parquet(spark, tmp_path):
-    src = str(tmp_path / "fragmented")
-    dest = str(tmp_path / "compacted")
-    df = spark.range(0, 10000).withColumn("v", F.col("id") * 2)
-    df.repartition(50).write.parquet(src)  # 50 tiny files
-    n_src = sum(f.endswith(".parquet") for f in os.listdir(src))
-    assert n_src == 50
-    planned = maintenance.compact_parquet(
-        spark, src, dest, target_file_bytes=10 * 1024 * 1024
-    )
-    n_dest = sum(f.endswith(".parquet") for f in os.listdir(dest))
-    assert planned == 1 and n_dest == 1
-    # content preserved
-    assert spark.read.parquet(dest).agg(F.sum("v")).collect()[0][0] == df.agg(
-        F.sum("v")
-    ).collect()[0][0]
 
 
 def test_hash_sample_deterministic_and_sized(spark):
@@ -169,25 +97,6 @@ def test_zorder_bucket_rectangle_bound(spark):
     for r in rows:
         assert r.max_x - r.min_x <= 127
         assert r.max_y - r.min_y <= 127
-
-
-def test_zorder_layout_files_cover_disjoint_ranges(spark):
-    """zorder_layout's range partitioning gives files non-overlapping
-    z-ranges — the precondition for file skipping."""
-    from pyspark.sql import functions as F
-
-    from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators import layout
-
-    df = spark.range(5000).select(
-        (F.col("id") % 512).alias("x"), ((F.col("id") * 7) % 512).alias("y")
-    )
-    laid = layout.zorder_layout(df, ["x", "y"], bits=9, num_files=8)
-    per_part = laid.select(
-        F.spark_partition_id().alias("pid"), "_z"
-    ).groupBy("pid").agg(F.min("_z").alias("lo"), F.max("_z").alias("hi"))
-    ranges = sorted((r.lo, r.hi) for r in per_part.collect())
-    for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
-        assert hi_prev <= lo_next
 
 
 def test_merge_agg_delta_handles_new_and_missing_keys(spark):

@@ -7,10 +7,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.sinks import merge_sink
-from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators import skew
 
 
 def test_merge_batch_upserts_and_replays_idempotently(spark, tmp_path):
@@ -66,99 +64,42 @@ def test_streaming_merge_sink_end_to_end(spark, tmp_path):
     assert got == {1: ("a", 0), 2: ("b2", 1)}
 
 
-# ------------------------------------------------------- salted join
+# ------------------------------------------------------ skewed join
 
 
 def test_salted_join_matches_plain_join_under_skew(spark):
-    # 90% of probe rows share one key — the salted plan must return
-    # exactly the plain join's result
-    probe = spark.createDataFrame(
-        [Row(key=1 if i % 10 else i, payload=i) for i in range(1000)]
-    )
-    build = spark.createDataFrame(
-        [Row(key=k, attr=f"attr{k}") for k in range(0, 1000, 10)] + [Row(key=1, attr="hot")]
-    )
-    plain = probe.join(build, ["key"]).select("key", "payload", "attr")
-    salted = skew.salted_equi_join(probe, build, ["key"], num_salts=8).select(
-        "key", "payload", "attr"
-    )
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_salted_left_join_preserves_unmatched_probe_rows(spark):
-    probe = spark.createDataFrame([Row(key=1, p="x"), Row(key=2, p="y")])
-    build = spark.createDataFrame([Row(key=1, attr="a")])
-    out = skew.salted_equi_join(probe, build, ["key"], num_salts=4, how="left")
-    got = {(r.key, r.p, r.attr) for r in out.collect()}
-    assert got == {(1, "x", "a"), (2, "y", None)}
-
-
-def test_salted_join_rejects_semantics_breaking_how(spark):
-    df = spark.createDataFrame([Row(key=1)])
+    """90% of probe rows share one key. AQE's skew-join handling (which
+    replaced a hand-salted join) must split the hot partition and still
+    return exactly the rows a nested-loop join over the inputs gives."""
+    probe_rows = [(1 if i % 10 else i, i) for i in range(1000)]
+    build_rows = [(k, f"attr{k}") for k in range(0, 1000, 10)] + [(1, "hot")]
+    probe = spark.createDataFrame(probe_rows, "key long, payload long").repartition(4)
+    build = spark.createDataFrame(build_rows, "key long, attr string")
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1KB",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
     try:
-        skew.salted_equi_join(df, df, ["key"], how="full")
-        raise AssertionError("expected ValueError")
-    except ValueError:
-        pass
-
-
-# -------------------------------------------------- bucketed variant
-
-
-def test_bucketed_merge_touches_only_batch_buckets(spark, tmp_path):
-    table = str(tmp_path / "btbl")
-    b0 = spark.createDataFrame(
-        [Row(k=i, v=f"v{i}", ver=0) for i in range(20)]
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        joined = probe.join(build, ["key"]).select("key", "payload", "attr")
+        got = sorted(map(tuple, joined.collect()))
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert "skew=true" in plan
+    expected = sorted(
+        (pk, payload, attr)
+        for pk, payload in probe_rows
+        for bk, attr in build_rows
+        if pk == bk
     )
-    t0 = merge_sink.merge_batch_bucketed(
-        spark, b0, table, ["k"], "ver", batch_id=0, num_buckets=8
-    )
-    assert len(t0) >= 1
-    # record each bucket's current snapshot
-    import os
-
-    def snaps():
-        out = {}
-        for b in range(8):
-            s = merge_sink.current_snapshot_dir(
-                merge_sink._bucket_dir(table, b)
-            )
-            out[b] = s
-        return out
-
-    before = snaps()
-    # a one-key update touches exactly one bucket
-    b1 = spark.createDataFrame([Row(k=3, v="updated", ver=1)])
-    t1 = merge_sink.merge_batch_bucketed(
-        spark, b1, table, ["k"], "ver", batch_id=1, num_buckets=8
-    )
-    assert len(t1) == 1
-    after = snaps()
-    changed = [b for b in range(8) if before[b] != after[b]]
-    assert changed == t1  # only the touched bucket's manifest flipped
-
-    final = merge_sink.read_bucketed_table(spark, table, 8)
-    got = {r.k: (r.v, r.ver) for r in final.collect()}
-    assert got[3] == ("updated", 1)
-    assert len(got) == 20
-    assert got[0] == ("v0", 0)
-
-
-def test_bucketed_merge_replay_is_idempotent(spark, tmp_path):
-    table = str(tmp_path / "btbl2")
-    b0 = spark.createDataFrame([Row(k=1, v="a", ver=0), Row(k=9, v="b", ver=0)])
-    merge_sink.merge_batch_bucketed(spark, b0, table, ["k"], "ver", 0, 4)
-    b1 = spark.createDataFrame([Row(k=1, v="a2", ver=1)])
-    merge_sink.merge_batch_bucketed(spark, b1, table, ["k"], "ver", 1, 4)
-    once = sorted(
-        map(tuple, merge_sink.read_bucketed_table(spark, table, 4).collect())
-    )
-    merge_sink.merge_batch_bucketed(spark, b1, table, ["k"], "ver", 1, 4)
-    again = sorted(
-        map(tuple, merge_sink.read_bucketed_table(spark, table, 4).collect())
-    )
-    assert once == again
-    assert dict((k, v) for k, v, _ in once)[1] == "a2"
+    assert got == expected
 
 
 def test_vacuum_removes_superseded_snapshots_only(spark, tmp_path):
@@ -173,57 +114,3 @@ def test_vacuum_removes_superseded_snapshots_only(spark, tmp_path):
     # table still reads the current state
     assert merge_sink.read_table(spark, table).first().v == "v3"
 
-
-def test_vacuum_bucketed_layout(spark, tmp_path):
-    table = str(tmp_path / "vbtbl")
-    for i in range(3):
-        b = spark.createDataFrame([Row(k=5, v=f"v{i}", ver=i)])
-        merge_sink.merge_batch_bucketed(spark, b, table, ["k"], "ver", i, 4)
-    removed = merge_sink.vacuum(table, keep_latest=1)
-    assert len(removed) == 2
-    got = merge_sink.read_bucketed_table(spark, table, 4).first()
-    assert got.v == "v2"
-
-
-def test_time_travel_flat_table(spark, tmp_path):
-    """Every merged batch stays readable AS OF its id until vacuumed;
-    the as-of state must equal what read_table returned at that point
-    in history."""
-    from advanced_real_time_data_pipeline_and_analytical_processing_spark.sinks import merge_sink
-
-    tdir = str(tmp_path / "t")
-    b0 = spark.createDataFrame([(1, "a", 0), (2, "b", 0)], "k long, v string, ver long")
-    b1 = spark.createDataFrame([(2, "b2", 1), (3, "c", 1)], "k long, v string, ver long")
-    merge_sink.merge_batch(spark, b0, tdir, ["k"], "ver", batch_id=0)
-    merge_sink.merge_batch(spark, b1, tdir, ["k"], "ver", batch_id=1)
-    assert merge_sink.list_snapshot_ids(tdir) == [0, 1]
-    asof0 = {(r.k, r.v) for r in merge_sink.read_table_as_of(spark, tdir, 0).collect()}
-    asof1 = {(r.k, r.v) for r in merge_sink.read_table_as_of(spark, tdir, 1).collect()}
-    assert asof0 == {(1, "a"), (2, "b")}
-    assert asof1 == {(1, "a"), (2, "b2"), (3, "c")}
-    assert merge_sink.read_table_as_of(spark, tdir, -1) is None
-    # current read and the newest as-of agree
-    cur = {(r.k, r.v) for r in merge_sink.read_table(spark, tdir).collect()}
-    assert cur == asof1
-
-
-def test_time_travel_bucketed_untouched_buckets(spark, tmp_path):
-    """Bucketed as-of: a bucket untouched by later batches serves its
-    older snapshot — the union reconstructs the exact historical
-    table."""
-    from advanced_real_time_data_pipeline_and_analytical_processing_spark.sinks import merge_sink
-
-    tdir = str(tmp_path / "tb")
-    b0 = spark.createDataFrame(
-        [(k, f"v{k}", 0) for k in range(8)], "k long, v string, ver long"
-    )
-    b1 = spark.createDataFrame([(3, "v3x", 1)], "k long, v string, ver long")
-    merge_sink.merge_batch_bucketed(spark, b0, tdir, ["k"], "ver", 0, num_buckets=4)
-    touched = merge_sink.merge_batch_bucketed(
-        spark, b1, tdir, ["k"], "ver", 1, num_buckets=4
-    )
-    assert len(touched) == 1  # one key -> one rewritten bucket
-    asof0 = {(r.k, r.v) for r in merge_sink.read_table_as_of(spark, tdir, 0).collect()}
-    asof1 = {(r.k, r.v) for r in merge_sink.read_table_as_of(spark, tdir, 1).collect()}
-    assert asof0 == {(k, f"v{k}") for k in range(8)}
-    assert asof1 == {(k, f"v{k}") for k in range(8) if k != 3} | {(3, "v3x")}

@@ -16,16 +16,3 @@ def test_pack_sequences_layout(spark):
     }
     assert out == {1: (0, 0), 2: (0, 300), 3: (1, 88), 9: (0, 0)}
 
-
-def test_chunk_stats_straddlers(spark):
-    rows = [(1, "A", 300), (2, "A", 300), (3, "A", 500)]
-    df = spark.createDataFrame(rows, "doc_id bigint, shard string, n_tokens bigint")
-    packed = packing.pack_sequences(df, "doc_id", "n_tokens", "shard", 512)
-    stats = {
-        r["chunk_id"]: (r["n_docs"], r["sum_tokens"], r["n_straddlers"])
-        for r in packing.chunk_stats(packed, "shard", "n_tokens", 512).collect()
-    }
-    # chunk 0: docs 1,2 start there; doc2 straddles (300+300 > 512)
-    assert stats[0] == (2, 600, 1)
-    # chunk 1: doc3 starts at offset 88, 88+500 > 512 -> straddles
-    assert stats[1] == (1, 500, 1)

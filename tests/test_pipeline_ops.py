@@ -275,13 +275,11 @@ def test_bm25_corpus_side_not_shuffled_for_df_join(spark):
 
 
 def test_write_partitioned_prunes_at_planning_time(spark, tmp_path):
-    from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators import maintenance
-
     df = spark.range(100).select(
         F.col("id"), (F.col("id") % 4).cast("string").alias("shard")
     )
     path = str(tmp_path / "parts")
-    maintenance.write_partitioned(df, path, ["shard"])
+    df.write.partitionBy("shard").mode("overwrite").parquet(path)
     scan = spark.read.parquet(path).filter(F.col("shard") == "2")
     plan = scan._jdf.queryExecution().executedPlan().toString()
     # pruning shows up as a PartitionFilters entry on the scan...
@@ -390,40 +388,72 @@ def test_count_min_never_underestimates_and_collides_as_expected(spark):
 
 
 # ------------------------------------------------------------- bloom
+# Spark's runtime bloom filter pre-filters the probe side of a
+# selective shuffle join; these pin that it drops no true match.
 
 
-def test_bloom_prefilter_has_no_false_negatives(spark):
-    from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators import bloom
+def _runtime_bloom_join(spark, tmp_path, probe, build, build_filter):
+    """Join parquet copies of probe and build (filtered) with runtime
+    bloom filters on and broadcast off; return (rows, bloom_injected)."""
+    confs = {
+        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1KB",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "50MB",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    pdir, bdir = str(tmp_path / "probe"), str(tmp_path / "build")
+    probe.write.mode("overwrite").parquet(pdir)
+    build.write.mode("overwrite").parquet(bdir)
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        j = spark.read.parquet(pdir).join(
+            spark.read.parquet(bdir).filter(build_filter), "k"
+        )
+        rows = j.collect()
+        plan = j._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    return rows, "bloomfilter" in plan.lower().replace(" ", "")
 
+
+def test_bloom_prefilter_has_no_false_negatives(spark, tmp_path):
     probe = spark.createDataFrame([(k, f"p{k}") for k in range(500)], "k long, p string")
-    build = spark.createDataFrame([(k,) for k in range(0, 500, 7)], "bk long")
-    kept = bloom.bloom_prefilter(probe, build, "k", "bk", k=3, m_bits=4096)
-    kept_keys = {r.k for r in kept.collect()}
-    true_keys = set(range(0, 500, 7))
-    # every true match survives
-    assert true_keys <= kept_keys
-    # the pre-filter actually prunes (false positives are bounded, not total)
-    assert len(kept_keys) < 500
+    build = spark.createDataFrame([(k,) for k in range(0, 500, 7)], "k long")
+    rows, injected = _runtime_bloom_join(
+        spark, tmp_path, probe, build, F.col("k") % 2 == 0
+    )
+    assert injected
+    # every true match survives the pre-filter
+    assert {r.k for r in rows} == set(range(0, 500, 14))
 
 
-def test_bloom_prefilter_keeps_duplicate_probe_rows(spark):
-    from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators import bloom
-
+def test_bloom_prefilter_keeps_duplicate_probe_rows(spark, tmp_path):
     probe = spark.createDataFrame([(1, "a"), (1, "a"), (2, "b")], "k long, p string")
-    build = spark.createDataFrame([(1,)], "bk long")
-    kept = bloom.bloom_prefilter(probe, build, "k", "bk", k=4, m_bits=1024)
-    assert sorted((r.k, r.p) for r in kept.collect()).count((1, "a")) == 2
+    build = spark.createDataFrame([(1,), (2,)], "k long")
+    rows, injected = _runtime_bloom_join(spark, tmp_path, probe, build, F.col("k") == 1)
+    assert injected
+    assert sorted((r.k, r.p) for r in rows) == [(1, "a"), (1, "a")]
 
 
-def test_bloom_prefilter_join_equals_plain_join(spark):
-    from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators import bloom
-
-    probe = spark.createDataFrame([(k, k * 10) for k in range(200)], "k long, v long")
-    build = spark.createDataFrame([(k, f"x{k}") for k in range(0, 200, 11)], "k long, attr string")
-    plain = probe.join(build, "k").select("k", "v", "attr")
-    pre = bloom.bloom_prefilter(probe, build, "k", "k", k=3, m_bits=2048)
-    filtered = pre.join(build, "k").select("k", "v", "attr")
-    assert sorted(map(tuple, filtered.collect())) == sorted(map(tuple, plain.collect()))
+def test_bloom_prefilter_join_equals_plain_join(spark, tmp_path):
+    probe_rows = [(k, k * 10) for k in range(200)]
+    build_rows = [(k, f"x{k}") for k in range(0, 200, 11)]
+    probe = spark.createDataFrame(probe_rows, "k long, v long")
+    build = spark.createDataFrame(build_rows, "k long, attr string")
+    rows, injected = _runtime_bloom_join(
+        spark, tmp_path, probe, build, F.col("attr") != "x0"
+    )
+    assert injected
+    expected = sorted(
+        (pk, v, attr)
+        for pk, v in probe_rows
+        for bk, attr in build_rows
+        if pk == bk and attr != "x0"
+    )
+    assert sorted((r.k, r.v, r.attr) for r in rows) == expected
 
 
 def test_hll_registers_merge_by_max(spark):

@@ -5,24 +5,18 @@ import os
 
 from pyspark.sql import types as T
 
-from advanced_real_time_data_pipeline_and_analytical_processing_spark.plans.naming import (
-    agg_table,
-    derive_table_name,
-    transformed_table,
-)
-from advanced_real_time_data_pipeline_and_analytical_processing_spark.sources.readers import read_batch_files
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.sources.schema_registry import (
     derive_schema_filename,
     load_schema,
-    save_schema,
+    load_schema_any,
 )
 
 
-def test_table_name_derivation():
-    # reference N1 (code/helpers.py:218-221): basename, -/space -> _
-    assert derive_table_name("data/My File-1.csv") == "public.my_file_1"
-    assert transformed_table("X.json") == "public.x_transformed"
-    assert agg_table("s3a://b/data/T.csv") == "public.t_agg"
+def write_schema(schema: T.StructType, schema_dir: str, dataset: str) -> None:
+    """A schema document as the registry stores it: StructType JSON in
+    ``{dataset}.json``."""
+    with open(os.path.join(schema_dir, f"{dataset}.json"), "w") as fh:
+        json.dump(schema.jsonValue(), fh)
 
 
 def test_schema_filename():
@@ -32,7 +26,7 @@ def test_schema_filename():
 
 def test_schema_roundtrip_and_fallback(tmp_path):
     schema = T.StructType([T.StructField("a", T.IntegerType())])
-    save_schema(schema, str(tmp_path), "ds1")
+    write_schema(schema, str(tmp_path), "ds1")
     loaded = load_schema(str(tmp_path), "data/ds1.csv")
     assert loaded == schema
     assert load_schema(str(tmp_path), "data/absent.csv") is None
@@ -46,44 +40,6 @@ def test_schema_metadata_backfill(tmp_path):
     loaded = load_schema(str(tmp_path), "raw.csv")
     assert loaded.fields[0].metadata == {}
     assert loaded.fields[0].nullable is True
-
-
-def test_csv_reader_with_schema(spark, tmp_path):
-    p = os.path.join(tmp_path, "t.csv")
-    with open(p, "w") as fh:
-        fh.write("a,b\n1,x\n2,y\n")
-    schema = T.StructType(
-        [T.StructField("a", T.IntegerType()), T.StructField("b", T.StringType())]
-    )
-    df = read_batch_files(spark, p, "csv", schema)
-    assert df.schema == schema
-    assert df.count() == 2
-
-
-def test_json_reader_inference(spark, tmp_path):
-    p = os.path.join(tmp_path, "t.json")
-    with open(p, "w") as fh:
-        fh.write('{"a": 1}\n{"a": 2}\n')
-    assert read_batch_files(spark, p, "json").count() == 2
-
-
-def test_orc_reader_roundtrip_and_pushdown(spark, tmp_path):
-    """ORC is the built-in columnar alternative to parquet (orc-core
-    ships inside Spark): round-trip values exactly and confirm the
-    filter reaches the ORC scan as a pushed filter."""
-    import os
-
-    d = os.path.join(tmp_path, "t_orc")
-    src = spark.createDataFrame(
-        [(i, f"s{i}", i * 1.5) for i in range(100)], "a long, b string, v double"
-    )
-    src.write.orc(d)
-    df = read_batch_files(spark, d, "orc")
-    assert sorted(r.a for r in df.collect()) == list(range(100))
-    plan = (
-        df.filter(df.a > 90).select("a")._jdf.queryExecution().toString()
-    )
-    assert "PushedFilters" in plan and "GreaterThan(a,90)" in plan
 
 
 def test_eventgen_partition_independence(spark):
@@ -121,16 +77,11 @@ def test_eventgen_partition_independence(spark):
 def test_load_schema_any_via_hadoop_uri(spark, tmp_path):
     # the cluster job's path: schema prefix addressed as a URI, read
     # through Hadoop FileSystem.open (works unchanged against s3a://)
-    from advanced_real_time_data_pipeline_and_analytical_processing_spark.sources.schema_registry import (
-        load_schema_any,
-        save_schema,
-    )
-
     schema = T.StructType([
         T.StructField("sensor_id", T.StringType()),
         T.StructField("temperature_C", T.DoubleType()),
     ])
-    save_schema(schema, str(tmp_path), "sensors")
+    write_schema(schema, str(tmp_path), "sensors")
 
     via_uri = load_schema_any(spark, f"file://{tmp_path}", "data/sensors.csv")
     assert via_uri == schema

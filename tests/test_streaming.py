@@ -105,13 +105,9 @@ def test_ingest_exactly_once_on_rerun(spark, dirs):
 
 
 def test_drain_helpers_leave_caller_trigger(spark, dirs):
-    """run_ingest_once / run_multi_format_once drain with availableNow on
-    a copy: a config reused for start_ingest afterwards keeps its own
-    trigger."""
-    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming.ingest import (
-        run_multi_format_once,
-    )
-
+    """run_ingest_once drains with availableNow on a copy: a config
+    reused for start_ingest afterwards keeps its own trigger, also
+    across a second drain."""
     write_file(dirs, "a.csv", CSV_GOOD)
     cfg = make_cfg(dirs)
     cfg.trigger = {"processingTime": "10 seconds"}
@@ -119,7 +115,7 @@ def test_drain_helpers_leave_caller_trigger(spark, dirs):
     assert cfg.trigger == {"processingTime": "10 seconds"}
     assert spark.read.parquet(dirs["good"]).count() == 2
 
-    run_multi_format_once(spark, [cfg])
+    run_ingest_once(spark, cfg)
     assert cfg.trigger == {"processingTime": "10 seconds"}
 
 
@@ -183,8 +179,9 @@ def test_streaming_tumbling_with_watermark(spark, tmp_path):
 @pytest.mark.parametrize("drain", ["parquet", "memory"])
 def test_stateful_running_counts_across_batches(spark, tmp_path, drain):
     """State must accumulate across micro-batches: two files drained one
-    per trigger; the final per-key totals cover both. Runs through both
-    the production parquet drain and the test-only memory drain."""
+    per trigger; the final per-key totals cover both. Runs through the
+    parquet drain and through Spark's memory sink, which keeps every
+    update row."""
     from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import stateful
 
     src = tmp_path / "src"
@@ -201,16 +198,18 @@ def test_stateful_running_counts_across_batches(spark, tmp_path, drain):
     )
     updates = stateful.running_user_stats(stream)
     if drain == "parquet":
-        final = stateful.drain_to_parquet(
-            spark,
-            updates,
-            out_dir=str(tmp_path / "out"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-        )
+        final = stateful.drain_to_parquet(spark, updates)
     else:
-        final = stateful.drain_to_memory_table(
-            spark, updates, checkpoint_dir=str(tmp_path / "ckpt")
+        (
+            updates.writeStream.format("memory")
+            .queryName("running_counts_out")
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
         )
+        final = spark.table("running_counts_out")
     from pyspark.sql import functions as F2
 
     rows = {
@@ -225,7 +224,7 @@ def test_stateful_running_counts_across_batches(spark, tmp_path, drain):
     assert rows == {1: (3, 17.0), 2: (1, 1.0), 3: (1, 7.0)}
 
 
-def test_running_user_stats_matches_fillna_fold_on_hostile_values(spark, tmp_path):
+def test_running_user_stats_matches_fillna_fold_on_hostile_values(spark, tmp_path, monkeypatch):
     """The native running aggregate keeps the pandas operator's
     contract: NaN and NULL values add 0 (``fillna(0.0)``), ±inf sums as
     IEEE does (inf + -inf = NaN, and a NaN total stays NaN), a NULL key
@@ -257,11 +256,13 @@ def test_running_user_stats_matches_fillna_fold_on_hostile_values(spark, tmp_pat
     assert [(f.name, f.dataType) for f in updates.schema] == [
         (f.name, f.dataType) for f in parent_schema
     ]
-    out = str(tmp_path / "out")
-    drained = stateful.drain_to_parquet(
-        spark, updates, out_dir=out, checkpoint_dir=str(tmp_path / "ckpt")
-    )
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(scratch))
+    drained = stateful.drain_to_parquet(spark, updates)
     assert drained.schema == parent_schema
+    # the sink keeps each batch's rows under its _batch_id partition
+    (out,) = [str(p) for p in scratch.iterdir() if p.name.startswith("out_drain_")]
 
     # the pandas operator's fold: per batch, per key present in it
     want, state = {}, {}
@@ -287,8 +288,7 @@ def test_drain_scratch_lifecycle_and_exit_sweep(spark, tmp_path, monkeypatch):
     """r15 scratch GC: a DEFAULT drain sink lands on the scratch root,
     its checkpoint WAL is already gone when the drain returns, the sink
     is registered for the exit sweep (it must outlive the call — the
-    returned frame reads it lazily), and the sweep removes it. An
-    explicit out_dir is the caller's own and must NOT be registered."""
+    returned frame reads it lazily), and the sweep removes it."""
     from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import stateful
 
     scratch = tmp_path / "scratch"
@@ -318,21 +318,6 @@ def test_drain_scratch_lifecycle_and_exit_sweep(spark, tmp_path, monkeypatch):
     stateful._sweep_scratch()  # what atexit runs
     assert not os.path.exists(sink_path)
     assert stateful._EXIT_SCRATCH == []
-
-    # caller-owned sink: not registered, not swept
-    stream2 = (
-        spark.readStream.schema("user_id bigint, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "*"))
-    )
-    mine = tmp_path / "mine"
-    final2 = stateful.drain_to_parquet(
-        spark, stateful.running_user_stats(stream2), out_dir=str(mine)
-    )
-    assert final2.count() == 2
-    assert str(mine) not in stateful._EXIT_SCRATCH
-    stateful._sweep_scratch()
-    assert os.path.exists(str(mine))
 
 
 def test_scratch_root_skips_low_space_devshm(monkeypatch):
@@ -596,12 +581,8 @@ def test_watermarked_streaming_dedup(spark, tmp_path):
 def test_multi_format_dispatch(spark, dirs, tmp_path):
     """S7: one csv + one json file in the same source dir, one stream
     per format (pathGlobFilter split at the source, schemas fixed at
-    plan time) — both land in their own good sinks."""
-    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming.ingest import (
-        IngestConfig,
-        run_multi_format_once,
-    )
-
+    plan time) — both land in their own good sinks. deploy/job_ingest.py
+    runs the same dispatch, one ingest config per format."""
     write_file(dirs, "a.csv", CSV_GOOD)
     write_file(dirs, "b.json", '{"sensor_id": "j1", "temperature_C": 7.5, "humidity": 11.0}\n')
     base = make_cfg(dirs)
@@ -619,18 +600,16 @@ def test_multi_format_dispatch(spark, dirs, tmp_path):
             checkpoint_dir=json_dirs["checkpoint"],
         ),
     ]
-    run_multi_format_once(spark, cfgs)
+    for cfg in cfgs:
+        run_ingest_once(spark, cfg)
     assert spark.read.parquet(dirs["good"]).count() == 2  # csv rows only
     jrows = spark.read.parquet(json_dirs["good"]).collect()
     assert [r["sensor_id"] for r in jrows] == ["j1"]
 
 
 def test_stream_static_enrich(spark, tmp_path):
-    """Stream × static dim: broadcast join per micro-batch, no state."""
-    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming.joins import (
-        stream_static_enrich,
-    )
-
+    """Stream × static dim: broadcast join per micro-batch, no state —
+    the plan the stream_static_enrichment query drains."""
     src = tmp_path / "src"
     src.mkdir()
     _events(spark).write.parquet(str(src / "b1"))
@@ -640,7 +619,7 @@ def test_stream_static_enrich(spark, tmp_path):
     stream = spark.readStream.schema(
         "ts timestamp, user_id string, event_type string, value double"
     ).parquet(str(src / "*"))
-    enriched = stream_static_enrich(stream, dim, ["event_type"])
+    enriched = stream.join(F.broadcast(dim), ["event_type"], "left")
     q = (
         enriched.writeStream.format("memory")
         .queryName("enrich_out")
@@ -807,13 +786,7 @@ def test_session_close_on_event_time_timeout(spark, tmp_path):
     closed = stateful.session_close_on_timeout(
         stream, key_col="user_id", ts_col="ts", gap_seconds=100
     )
-    final = stateful.drain_to_parquet(
-        spark,
-        closed,
-        out_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        output_mode="append",
-    )
+    final = stateful.drain_to_parquet(spark, closed, output_mode="append")
     rows = {r.user_id: r for r in final.collect()}
     # users 1 and 2 timed out and emitted exactly one session each;
     # user 3's session is still live (never emitted)

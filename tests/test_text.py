@@ -53,14 +53,6 @@ def test_quality_score_bounds(spark):
     assert 0.0 <= vals[1] < 0.5  # punctuation soup penalized
 
 
-def test_text_profile_schema(spark):
-    df = spark.createDataFrame([(1, "the quick fox")], "doc_id bigint, text string")
-    row = text.text_profile(df, "doc_id", "text").collect()[0]
-    assert row["n_tokens"] == 3
-    assert row["lang_pred"] == "en"
-    assert len(row["fp"]) == 64
-
-
 def test_gopher_flags_each_rule(spark):
     good = "the cat and the dog have been to all of the parks with many friends " * 3
     rows = [
@@ -85,11 +77,14 @@ def test_gopher_flags_each_rule(spark):
 
 def test_duplicate_bigram_fraction(spark):
     # "x y x y x y": bigrams = [x y, y x, x y, y x, x y] -> 5 total, 2 distinct
-    v = one(spark, "x y x y x y", text.duplicate_bigram_fraction)
+    def frac(t):
+        return text.duplicate_bigram_fraction_from_bigrams(text.bigrams(t))
+
+    v = one(spark, "x y x y x y", frac)
     assert abs(v - (1.0 - 2.0 / 5.0)) < 1e-9
-    assert one(spark, "unique words only here", text.duplicate_bigram_fraction) == 0.0
-    assert one(spark, "single", text.duplicate_bigram_fraction) == 0.0
-    assert one(spark, "", text.duplicate_bigram_fraction) == 0.0
+    assert one(spark, "unique words only here", frac) == 0.0
+    assert one(spark, "single", frac) == 0.0
+    assert one(spark, "", frac) == 0.0
 
 
 def test_bigrams_guard_short_docs(spark):
