@@ -1,10 +1,12 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest lives in, whatever its path
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.session import get_spark
 

@@ -5,6 +5,7 @@ code/audit/audit_date=2025-08-19/part-00011-*.json)."""
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 import pytest
@@ -456,10 +457,10 @@ def _spark_work(spark, fn) -> tuple[int, int, int]:
 
 def test_process_batch_runs_only_its_sink_writes(spark, dirs, tmp_path, monkeypatch):
     """§4.3-3: inside foreachBatch a micro-batch fires one single-stage
-    job per sink write — good, quarantine (only with bad rows), audit —
-    and nothing else: the counts and the routed file list ride the good
-    write's observe(). Its expressions are built once per stream, not
-    once per batch."""
+    job per Spark sink write — good, and quarantine only with bad rows;
+    the audit record is written from the driver — and nothing else: the
+    counts and the routed file list ride the good write's observe(). Its
+    expressions are built once per stream, not once per batch."""
     from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import ingest as ing
 
     built = {"trim_exprs": 0, "error_expr": 0, "row_hash_expr": 0}
@@ -498,13 +499,66 @@ def test_process_batch_runs_only_its_sink_writes(spark, dirs, tmp_path, monkeypa
         .awaitTermination()
     )
 
-    assert work == [(3, 3, 0), (2, 2, 0)]
+    assert work == [(2, 2, 0), (1, 1, 0)]
     assert built == {"trim_exprs": 1, "error_expr": 1, "row_hash_expr": 1}
     assert sorted(os.listdir(processed)) == ["clean.csv", "mixed.csv"]
     assert spark.read.parquet(dirs["good"]).count() == 3
     assert spark.read.parquet(dirs["quarantine"]).count() == 2
     audit = {r["batch_id"]: r for r in spark.read.parquet(dirs["audit"]).collect()}
     assert [(audit[b]["total_rows"], audit[b]["bad_rows"]) for b in (0, 1)] == [(3, 2), (2, 0)]
+
+
+def test_warm_micro_batches_compile_no_new_classes(spark, dirs):
+    """ROADMAP item 6, ingest half: the batch id and the ingestion time
+    reach generated code as referenced objects, not inlined literals, so
+    from the 2nd micro-batch on a batch reuses the cached classes. The
+    batch_id=N directories, one ingestion instant per batch and the
+    quarantine date in the session time zone are kept."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import ingest as ing
+
+    for i in range(4):
+        name = f"m{i}.csv"
+        write_file(dirs, name, CSV_MIXED)
+        t = os.path.getmtime(os.path.join(dirs["source"], name)) + 10 * i
+        os.utime(os.path.join(dirs["source"], name), (t, t))  # one batch each, in order
+    cfg = make_cfg(dirs)
+    cfg.max_files_per_trigger = 1
+    body = ing.process_batch(cfg)
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles: list[int] = []
+
+    def measured(batch_df, batch_id):
+        body(batch_df, batch_id)
+        compiles.append(codegen.METRIC_COMPILATION_TIME().getCount())
+
+    # a session time zone whose date is not UTC's for most of the day
+    zone = dt.timezone(dt.timedelta(hours=14))
+    days = {dt.datetime.now(zone).strftime("%Y-%m-%d")}
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "+14:00")
+    try:
+        (
+            ing.build_stream(spark, cfg)
+            .writeStream.foreachBatch(measured)
+            .option("checkpointLocation", cfg.checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    days.add(dt.datetime.now(zone).strftime("%Y-%m-%d"))
+
+    assert len(compiles) == 4
+    assert compiles[3] == compiles[1], compiles
+    assert sorted(f for f in os.listdir(dirs["good"]) if not f.startswith((".", "_"))) == [f"batch_id={b}" for b in range(4)]
+    good = spark.read.parquet(dirs["good"])
+    assert dict(good.dtypes)["ingestion_ts"] == "timestamp"
+    per_batch = good.groupBy("batch_id").agg(F.countDistinct("ingestion_ts").alias("n"))
+    assert {r["batch_id"]: r["n"] for r in per_batch.collect()} == {b: 1 for b in range(4)}
+    bad = spark.read.parquet(dirs["quarantine"])
+    assert bad.count() == 8
+    assert {r["quarantine_date"] for r in bad.select("quarantine_date").distinct().collect()} <= days
 
 
 def test_good_write_failure_routes_files_to_failed_dir(spark, dirs, tmp_path):

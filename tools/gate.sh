@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # One-command replica of every local gate, in the order that fails
-# fastest: registry pins (1 s), full pytest (~4 min), the oracle gate
+# fastest: registry pins (1 s), full pytest (~13 min on 4 vCPU), the oracle gate
 # at sf0.01 (~4 min), the independent from-scratch comparator, the
 # oracle gate at sf0.1, bench.
 #
