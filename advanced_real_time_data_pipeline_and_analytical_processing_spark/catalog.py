@@ -69,8 +69,8 @@ def _files_stamp(spark: SparkSession, path: str) -> tuple[str, tuple]:
     """Qualified path, and (path, length, modification time) of every
     file under it (a Spark-written table is a directory), from Hadoop
     FileStatus — no Spark job."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    # by full name: one py4j round trip, not one per package segment
+    hpath = getattr(spark.sparkContext._jvm, "org.apache.hadoop.fs.Path")(path)
     fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     st = fs.getFileStatus(hpath)
     qualified = st.getPath().toString()

@@ -1,5 +1,9 @@
 """Sinks (reference K1-K4).
 
+- partitioned parquet: ``write_partitions`` is the one
+  dynamic-partition-overwrite write that the ingest's good and
+  quarantine sinks and the drains' sink share, so a replayed batch
+  overwrites exactly its own partition.
 - quarantine: written by ``streaming/ingest.process_batch`` — bad rows
   + error_reason, parquet partitioned by batch_id so a replayed batch
   overwrites its own partition (reference K3 used date-partitioned
@@ -23,7 +27,7 @@ import uuid
 from dataclasses import asdict, dataclass
 from typing import Callable, TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 T_ = TypeVar("T_")
@@ -66,6 +70,24 @@ def retry(attempts: int = 3, delay_s: float = 5.0, backoff: float = 2.0):
     return deco
 
 
+def write_partitions(df: DataFrame, path: str, partition_col: str) -> None:
+    """Parquet write that replaces only the ``partition_col`` values
+    present in ``df`` (dynamic partition overwrite) and leaves every
+    other partition under ``path`` as it is.
+
+    No ``_SUCCESS`` marker: under dynamic overwrite the committer writes
+    it (and its ``.crc``) into the job's ``.spark-staging-<id>/`` dir,
+    which ``commitJob`` deletes straight away, so nothing reads it and
+    skipping it saves its local-file-system child processes."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
+
+
 @dataclass
 class AuditRecord:
     batch_id: int | None
@@ -97,27 +119,32 @@ _EPOCH = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
 class _ParquetRowWriter:
     """Writes one row as a Parquet file with parquet-hadoop's example
     writer, in the driver's JVM. The JVM handles are resolved once per
-    gateway: each class lookup through py4j's package view costs ~2 ms."""
+    gateway, each by its full class name: one py4j round trip. Walking
+    py4j's package view instead (``jvm.org.apache...``) costs a round
+    trip per name segment, and each segment that is not a class is a
+    ``Class.forName`` miss that scans the whole classpath (3.5 ms per
+    walk against 0.1 ms by full name, measured on a local session)."""
 
     def __init__(self, gateway):
         jvm = gateway.jvm
         self.gateway = gateway
-        self.Path = jvm.org.apache.hadoop.fs.Path
-        self.schema = jvm.org.apache.parquet.schema.MessageTypeParser.parseMessageType(_AUDIT_MESSAGE)
-        self.Group = jvm.org.apache.parquet.example.data.simple.SimpleGroup
-        self.OutputFile = jvm.org.apache.parquet.hadoop.util.HadoopOutputFile
-        self.Writer = jvm.org.apache.parquet.hadoop.example.ExampleParquetWriter
+        self.Path = getattr(jvm, "org.apache.hadoop.fs.Path")
+        self.schema = getattr(jvm, "org.apache.parquet.schema.MessageTypeParser").parseMessageType(_AUDIT_MESSAGE)
+        self.Group = getattr(jvm, "org.apache.parquet.example.data.simple.SimpleGroup")
+        self.OutputFile = getattr(jvm, "org.apache.parquet.hadoop.util.HadoopOutputFile")
+        self.Writer = getattr(jvm, "org.apache.parquet.hadoop.example.ExampleParquetWriter")
+        self.Object = getattr(jvm, "java.lang.Object")
         # py4j passes a Python int in int32 range as a Java int, and
         # overload resolution would then pick add(String, int), which an
         # int64 column rejects; reflection widens it to long.
-        signature = gateway.new_array(jvm.java.lang.Class, 2)
-        signature[0] = jvm.java.lang.String._java_lang_class
-        signature[1] = jvm.java.lang.Long.TYPE
+        signature = gateway.new_array(getattr(jvm, "java.lang.Class"), 2)
+        signature[0] = getattr(jvm, "java.lang.String")._java_lang_class
+        signature[1] = getattr(jvm, "java.lang.Long").TYPE
         self.add_long = self.Group._java_lang_class.getMethod("add", signature)
 
     def write(self, hconf, path, row: dict) -> None:
         group = self.Group(self.schema)
-        args = self.gateway.new_array(self.gateway.jvm.java.lang.Object, 2)
+        args = self.gateway.new_array(self.Object, 2)
         for name, value in row.items():
             if isinstance(value, str):
                 group.add(name, value)

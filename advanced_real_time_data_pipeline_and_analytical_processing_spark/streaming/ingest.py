@@ -20,7 +20,13 @@ Fixes applied vs the reference (SURVEY.md §4.3):
   batch's expressions are built once per stream, and its two per-batch
   values (batch id, ingestion time) reach the generated code as
   referenced objects, not inlined literals, so a warm batch compiles no
-  new classes.
+  new classes. The storage protocol's own fixed cost is cut as well:
+  both sink writes go through ``sinks.writers.write_partitions``, which
+  skips the ``_SUCCESS`` marker that dynamic overwrite deletes with its
+  staging dir, and ``session.get_spark`` sessions commit the stream's
+  checkpoint logs through the FileSystem API. Without a native Hadoop
+  library each local link check or permission set is a child process:
+  a warm batch starts 24 of them (none a ``readlink``), against 52 before.
 - §4.3-6/7: typed empty frames, quarantine keyed by batch + source file
   column rather than comma-joined table names.
 - §4.3-8 at-least-once side effects: the good and quarantine sinks are
@@ -62,6 +68,7 @@ from advanced_real_time_data_pipeline_and_analytical_processing_spark.sinks.boot
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.sinks.writers import (
     AuditRecord,
     write_audit,
+    write_partitions,
 )
 
 
@@ -112,9 +119,9 @@ def move_files(spark: SparkSession, paths: list[str], dest_dir: str | None) -> N
     is bounded by maxFilesPerTrigger, never row data."""
     if not dest_dir or not paths:
         return
-    jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
+    # by full name: one py4j round trip, not one per package segment
+    HPath = getattr(spark._jvm, "org.apache.hadoop.fs.Path")
     dest = HPath(dest_dir)
     fs = dest.getFileSystem(hconf)
     fs.mkdirs(dest)
@@ -189,13 +196,7 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
             obs = Observation()
             observed = marked.observe(obs, *batch_metrics)
             enriched = observed.filter(is_good).drop(ERROR_COL).select("*", ingestion_ts, row_hash)
-            (
-                enriched.withColumn("batch_id", batch_key)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(cfg.good_dir)
-            )
+            write_partitions(enriched.withColumn("batch_id", batch_key), cfg.good_dir, "batch_id")
             metrics = obs.get  # filled by the write above — no extra jobs
             total, bad_count = int(metrics["total"]), int(metrics["bad"])
             files = list(metrics["files"])
@@ -207,14 +208,10 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
                 cfg.on_good(enriched, batch_id)
 
             if bad_count:
-                (
-                    marked.filter(is_bad)
-                    .withColumn("quarantine_date", quarantine_date)
-                    .withColumn("batch_id", batch_key)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(cfg.quarantine_dir)
+                write_partitions(
+                    marked.filter(is_bad).withColumn("quarantine_date", quarantine_date).withColumn("batch_id", batch_key),
+                    cfg.quarantine_dir,
+                    "batch_id",
                 )
             write_audit(
                 spark,

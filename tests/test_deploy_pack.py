@@ -38,6 +38,9 @@ LOCAL_ONLY = {
     "spark.sql.shuffle.partitions",   # cores-sized locally, 10000 on cluster
     "spark.driver.memory",            # submit-time on a cluster
     "spark.ui.enabled",               # local test hygiene only
+    # FileSystem-API checkpoint commits: saves local child processes;
+    # on HDFS the default FileContext manager's rename is atomic
+    "spark.sql.streaming.checkpointFileManagerClass",
 }
 
 

@@ -38,6 +38,18 @@ def test_factories_agree_on_gate_confs(spark):
         assert spark.conf.get(conf) == want, conf
 
 
+def test_configure_session_leaves_checkpoint_manager_unset(spark):
+    """Only get_spark's local sessions commit checkpoints through the
+    FileSystem manager; a cluster session keeps Spark's default, whose
+    no-overwrite rename is atomic on HDFS."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert spark.conf.get(key).endswith(".FileSystemBasedCheckpointFileManager")
+    session = spark.newSession()
+    session.conf.unset(key)
+    configure_session(session)
+    assert session.conf.get(key, None) is None
+
+
 # The ten registry queries of the benchmark's analytics mix, and the
 # registry's running-stats drain in place of the mix's own drain.
 REPEATED_QUERIES = (
