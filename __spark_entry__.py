@@ -2475,15 +2475,18 @@ def q_eventgen_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stateful_session_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful sessionization END TO END, value-checked:
-    session_close_on_timeout (applyInPandasWithState +
-    EventTimeTimeout) over the real events table, staged as three
-    micro-batches — the two tiny synthetic batches exist only to march
-    the watermark past every real session's gap so the timeout sweep
-    closes them all. The emitted (start, end, count) rows must equal
-    the batch gap-island semantics EXACTLY (integer microseconds),
-    which is what the DuckDB oracle computes — proving the streaming
-    operator implements the batch definition, splits included."""
+    """Streaming sessionization END TO END, value-checked: Spark's
+    native session window (streaming/windows.session_windows, state in
+    the JVM state store) over the real events table, staged as three
+    micro-batches, drained in append mode. The two tiny synthetic
+    batches exist only to march the watermark past every real
+    session's last event + gap, which is when append mode emits a
+    session, exactly once. The emitted (start, last event, count) rows
+    must equal the batch gap-island semantics EXACTLY (integer
+    microseconds; a gap of exactly 30 min stays in the session), which
+    is what the DuckDB oracle computes — proving the streaming operator
+    implements the batch definition, splits included. NULL user ids are
+    dropped here and NULL event times by session_window itself."""
     sentinel = -1
     gap_s = 1800
     with _staged_events(spark, sf_dir, links=("f1_events.parquet",)) as stage:
@@ -2493,21 +2496,31 @@ def q_stateful_session_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = (
             stage.read_stream(max_files_per_trigger=1)
             .select("user_id", "ts")
-            .withWatermark("ts", "10 seconds")
+            .filter(F.col("user_id").isNotNull())
         )
-        closed = stateful.session_close_on_timeout(
-            stream, key_col="user_id", ts_col="ts", gap_seconds=gap_s
+        sessions = session_windows(
+            stream, gap=f"{gap_s} seconds", watermark="10 seconds"
+        ).select(
+            "user_id",
+            F.unix_micros("session_start").alias("session_start_us"),
+            # session_window's end is last event + gap
+            (F.unix_micros("session_end") - gap_s * 1_000_000).alias("session_end_us"),
+            "n_events",
         )
         drained = stateful.drain_to_parquet(
-            # 8 state partitions — ADJUDICATED r10: 4 and 2 measured WORSE
-            # (7.3/9.4 s vs 6.1-6.9 @8; 16 no better). The bill here is the
-            # key-parallel pandas stateful operator over every event in
-            # batch 1, not store commits — see docs/BENCH_NOTES.md r10.
-            spark, closed, shuffle_partitions=8, output_mode="append"
+            # 2 state partitions: every micro-batch opens and commits each
+            # state partition, and the session-window state is small. Warm
+            # A/B, one get_spark session (local[4], 4 vCPU host), medians
+            # of 6 interleaved runs, wall / JVM CPU seconds:
+            #   sf0.1:  @2 1.99/2.66 and 2.29/3.20; @4 1.86/3.05 and
+            #           2.29/4.02; @8 2.19/4.17 and 2.68/4.89; @16
+            #           2.96/6.12 and 3.55/7.36
+            #   sf0.01: @2 1.39/2.35; @4 1.40/2.59; @8 1.76/3.50; @16
+            #           2.42/5.67
+            # 2 and 4 tie on wall time; 2 spends the least CPU.
+            spark, sessions, shuffle_partitions=2, output_mode="append"
         )
-    return drained.filter(F.col("user_id") != sentinel).select(
-        "user_id", "session_start_us", "session_end_us", "n_events"
-    )
+    return drained.filter(F.col("user_id") != sentinel)
 
 
 def q_variant_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3182,8 +3195,8 @@ def q_stream_outer_join_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             # checkpoints where per-partition delta fsync cost less).
             # Calm solo medians of 3, two passes: @2 4.82/4.28 s,
             # @4 5.31/4.42, @8 6.13, @1 4.12 (within noise of 2; 2 kept
-            # for data-batch parallelism). stateful_session_report re-A/B'd
-            # the same way: its 8 stays optimal (5.99 @8, 6.57 @4, 6.73 @16).
+            # for data-batch parallelism). stateful_session_report, on
+            # Spark's session window, is also at 2 (its A/B is beside it).
             spark, rows, shuffle_partitions=2, output_mode="append"
         )
     return (
@@ -9737,7 +9750,7 @@ def oracle_sql() -> dict[str, str]:
             flagged AS (
                 SELECT user_id, us,
                        CASE WHEN lag(us) OVER w IS NULL
-                             OR us - lag(us) OVER w >= 1800000000
+                             OR us - lag(us) OVER w > 1800000000
                             THEN 1 ELSE 0 END AS new_s
                 FROM us
                 WINDOW w AS (PARTITION BY user_id ORDER BY us)

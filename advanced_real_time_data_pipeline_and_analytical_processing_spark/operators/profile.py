@@ -84,7 +84,14 @@ def table_profile(
     aggregate (Expand over JUST the profiled columns) crossJoined with
     a plain one-pass aggregate (no Expand) emits byte-identical rows
     for ~half the time; at scale it trades one extra columnar scan for
-    a 6×-row reduction through the wide hash aggregate."""
+    a 6×-row reduction through the wide hash aggregate.
+
+    Snapshot caveat: the two aggregates scan ``df`` independently. Over
+    static files they see the same rows; over an input that changes
+    between the scans (a table being appended to, a non-deterministic
+    source) they may not, and a row can then report n_distinct >
+    n_rows. Persist or checkpoint ``df`` first when a consistent
+    profile of such an input matters."""
     dtypes = dict(df.dtypes)
     cols = cols or list(df.columns)
     dist_aggs = [F.count_distinct(F.col(c)).alias(f"_dist_{c}") for c in cols]

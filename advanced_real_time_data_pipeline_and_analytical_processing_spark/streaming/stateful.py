@@ -8,20 +8,14 @@ pipeline needs, maintained across micro-batches:
 - ``running_user_stats``: per-key running count and sum, computed by
   Spark's native streaming aggregate (state-store merge in the JVM, no
   Python worker);
-- ``session_close_on_timeout``: custom sessionization with event-time
-  timeouts, which needs arbitrary state and timers, so it runs on
-  applyInPandasWithState with an explicit state schema.
+- ``drain_to_parquet``: runs a bounded stateful stream to completion
+  with an availableNow trigger. Event-time sessions are
+  ``windows.session_windows`` (Spark's session window) drained here in
+  append mode.
 
 Scale notes: state lives in the state store partitioned by grouping
 key — the shuffle is on the key, state size is O(distinct keys), and
-each micro-batch touches only keys present in the batch. Arrow batches
-(applyInPandas*) keep the per-key Python work vectorized.
-
-Spark 4's successor API (transformWithStateInPandas: typed value/list/
-map state, timers, TTL) is the forward path for new code, but its
-Python runner needs google.protobuf, absent from this environment —
-verified to crash the streaming runner here — so the sessionizer stays
-on applyInPandasWithState, which covers the same arbitrary-state surface.
+each micro-batch touches only keys present in the batch.
 """
 
 from __future__ import annotations
@@ -31,13 +25,9 @@ import os
 import shutil
 import tempfile
 import uuid
-from typing import Any, Iterator, Tuple
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.sinks.writers import write_partitions
 
@@ -202,92 +192,3 @@ def drain_to_parquet(
     # the schema already known (no inference job); _batch_id comes from
     # partition discovery.
     return spark.read.schema(streamed.schema).parquet(out).drop("_batch_id")
-
-
-def session_close_on_timeout(
-    stream_df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: int = 1800,
-) -> DataFrame:
-    """Custom sessionization with EVENT-TIME TIMEOUT — the arbitrary-
-    stateful shape native session_window cannot generalize: sessions
-    close (and emit EXACTLY ONE row) when the watermark passes
-    last_event + gap, regardless of whether the key ever appears
-    again. State per key is three numbers; memory is bounded by live
-    keys, and the timeout sweep — not data arrival — drives emission.
-
-    The input must already be watermarked on ``ts_col`` (the timeout
-    clock IS the watermark). Output mode 'append': closed sessions
-    only — the contract downstream dedup-free sinks need."""
-
-    gap_us = gap_seconds * 1_000_000
-
-    # A NULL key or NULL event time is unsessionizable: the state key
-    # would be None (crashes the int64 emit frame) and a NULL timestamp
-    # can neither extend a session nor advance the timeout clock. Drop
-    # both up front — Catalyst places the filter below the watermark
-    # node, which is exactly right here (unlike tick rows, these can
-    # never carry watermark signal).
-    stream_df = stream_df.filter(
-        F.col(key_col).isNotNull() & F.col(ts_col).isNotNull()
-    )
-
-    def _emit(rows: list) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                key_col: pd.Series([r[0] for r in rows], dtype="int64"),
-                "session_start_us": pd.Series([r[1] for r in rows], dtype="int64"),
-                "session_end_us": pd.Series([r[2] for r in rows], dtype="int64"),
-                "n_events": pd.Series([r[3] for r in rows], dtype="int64"),
-            }
-        )
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            start_us, end_us, n = state.get
-            state.remove()
-            yield _emit([(key[0], start_us, end_us, n)])
-            return
-        # gather this batch's event times (integer us, sorted)
-        parts = []
-        for pdf in pdfs:
-            if len(pdf):
-                parts.append(pdf[ts_col].astype("int64") // 1000)  # ns -> us
-        closed: list = []
-        start_us, end_us, n = state.get if state.exists else (None, None, 0)
-        if parts:
-            us = pd.concat(parts).sort_values().to_numpy()
-            # batch arrivals can span MULTIPLE sessions: split into
-            # gap-separated islands here, not just at timeout sweeps —
-            # otherwise two bursts landing in one micro-batch would
-            # merge and batch/streaming semantics would diverge
-            for t in us:
-                t = int(t)
-                if start_us is None:
-                    start_us, end_us, n = t, t, 1
-                elif t - end_us > gap_us:
-                    closed.append((key[0], start_us, end_us, n))
-                    start_us, end_us, n = t, t, 1
-                else:
-                    end_us = max(end_us, t)
-                    n += 1
-        state.update((start_us, end_us, n))
-        # wake up when the watermark passes the session gap
-        state.setTimeoutTimestamp(end_us // 1000 + gap_seconds * 1000)
-        yield _emit(closed)
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=(
-            f"{key_col} bigint, session_start_us bigint, "
-            "session_end_us bigint, n_events bigint"
-        ),
-        stateStructType="session_start_us bigint, session_end_us bigint, n_events bigint",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )

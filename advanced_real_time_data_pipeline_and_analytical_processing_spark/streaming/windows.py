@@ -87,7 +87,23 @@ def session_windows(
     key_col: str = "user_id",
     watermark: str | None = None,
 ) -> DataFrame:
-    """Session windows keyed by user with an inactivity gap."""
+    """Session windows keyed by user with an inactivity gap (Spark's
+    native ``session_window``; in streaming its state lives in the JVM
+    state store).
+
+    - Boundary: two consecutive events of a key share a session when
+      their gap is at most ``gap``; a gap of exactly ``gap`` merges,
+      ``gap`` plus one microsecond splits. ``session_end`` is the last
+      event + ``gap``.
+    - NULLs: a NULL event time gets no window and is dropped; a NULL
+      key is a group of its own (filter it out first if unwanted).
+    - Append mode emits each session once, when the watermark passes
+      its ``session_end``; a session still open at the end of a drain
+      is not emitted.
+    - Late rows: a micro-batch drops only rows older than the
+      watermark the micro-batch before it ran with, so a row behind the
+      current watermark but not behind that one still merges into its
+      key's open session."""
     src = df.withWatermark(ts_col, watermark) if watermark else df
     return (
         src.groupBy(F.session_window(ts_col, gap).alias("s"), key_col)

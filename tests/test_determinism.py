@@ -30,8 +30,9 @@ QUERIES = [
     "json_props_stats",
     "hll_cardinality_profile",
     "trimmed_mean_by_type",
-    # full compositions: the streaming sessionizer (state + timeout
-    # sweep) and the curation funnel must also be fan-out-proof
+    # full compositions: the streaming sessionizer (session-window
+    # state + watermark eviction) and the curation funnel must also be
+    # fan-out-proof
     "stateful_session_report",
     "curation_funnel",
     # round-4 additions: integer moment sums, struct-ordered

@@ -805,14 +805,10 @@ def test_sliding_avg_exact_integer_contract(spark):
 
 
 def test_session_close_on_event_time_timeout(spark, tmp_path):
-    """Sessions must close via the TIMEOUT sweep, not data arrival: a
-    key that never reappears still emits exactly one closed session
-    once the watermark passes last_event + gap. Three single-file
-    micro-batches advance the watermark past the gap."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F2
-
+    """Sessions must close via the watermark, not data arrival: a key
+    that never reappears still emits exactly one closed session once
+    the watermark passes last_event + gap (append mode). Three
+    single-file micro-batches advance the watermark past the gap."""
     from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import stateful
 
     def ts(sec):
@@ -835,10 +831,13 @@ def test_session_close_on_event_time_timeout(spark, tmp_path):
         spark.readStream.schema("user_id bigint, ts timestamp")
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src / "*"))
-        .withWatermark("ts", "10 seconds")
     )
-    closed = stateful.session_close_on_timeout(
-        stream, key_col="user_id", ts_col="ts", gap_seconds=100
+    closed = session_windows(stream, gap="100 seconds", watermark="10 seconds").select(
+        "user_id",
+        F.unix_micros("session_start").alias("session_start_us"),
+        # session_end is the last event + gap
+        (F.unix_micros("session_end") - 100 * 10**6).alias("session_end_us"),
+        "n_events",
     )
     final = stateful.drain_to_parquet(spark, closed, output_mode="append")
     rows = {r.user_id: r for r in final.collect()}
