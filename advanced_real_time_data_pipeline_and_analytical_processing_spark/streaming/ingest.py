@@ -12,11 +12,21 @@ Fixes applied vs the reference (SURVEY.md §4.3):
 - §4.3-2 unbounded dedup state: the file source's checkpointed
   exactly-once file tracking replaces ``dropDuplicates(file_path)``.
 - §4.3-3 action storm: the success path runs the sink writes and
-  nothing else — one job each for the good and the quarantine (only
-  when there are bad rows) writes, no shuffle; the one-row audit record
-  is written from the driver without a job. The good/bad/total counts
-  and the batch's file list come from ``observe()`` metrics collected
-  during the good write (the reference ran >=12 actions per batch). The
+  nothing else — one job each for the good and the quarantine writes,
+  no shuffle; the one-row audit record is written from the driver
+  without a job. The two writes run at the same time over the batch's
+  one cached frame, the quarantine write on a helper thread that lives
+  for the batch. Every batch writes both sinks: a batch without bad
+  rows runs an empty quarantine write, which adds no partition. On
+  clean traffic (the reference's own file has no bad row) that is one
+  more job per batch: a warm clean 500-row batch at ``local[2]`` took
+  wall 348 ms, JVM CPU 585 ms and 2 jobs, against 394 ms, 440 ms and
+  1 job when the good write ran alone (medians of three processes a
+  side, 20 warm batches each, on a shared 4 vCPU host). On a batch
+  with bad rows the overlap cut perfbench ``ingest_trickle``'s
+  ``op_p50_s`` by 31%. The good/bad/total counts and the batch's file
+  list come from ``observe()`` metrics collected during the good write
+  (the reference ran >=12 actions per batch). The
   batch's expressions are built once per stream, and its two per-batch
   values (batch id, ingestion time) reach the generated code as
   referenced objects, not inlined literals, so a warm batch compiles no
@@ -48,6 +58,7 @@ Fixes applied vs the reference (SURVEY.md §4.3):
 from __future__ import annotations
 
 import datetime as dt
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field, replace
 from typing import Callable
 
@@ -55,6 +66,7 @@ from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators.cleaning import drop_all_null_rows, trim_exprs
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators.enrichment import row_hash_expr
@@ -152,6 +164,14 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
     idempotent on replay, exact audit counts and the routed file list
     from observe() metrics.
 
+    The quarantine write does not wait for the good one: it starts on a
+    one-worker pool made for the batch, and the good write, its
+    observation and ``on_good`` run on the stream thread meanwhile. The
+    audit record, the file move and the unpersist come after both
+    writes have ended. If either write fails the batch writes a FAILURE
+    audit, moves its files to ``failed_dir`` and re-raises: the good
+    write's error if it failed, else the quarantine write's.
+
     The batch's expressions are built once here, not per micro-batch:
     the stream's schema is fixed at ``cfg.schema`` and Column objects
     are reusable across frames, so a batch pays only for its writes."""
@@ -193,26 +213,32 @@ def process_batch(cfg: IngestConfig) -> Callable[[DataFrame, int], None]:
         marked = drop_all_null_rows(batch_df.select(*trimmed)).select("*", *marks).persist()
         files: list[str] | None = None  # set once the observation arrives
         try:
-            obs = Observation()
-            observed = marked.observe(obs, *batch_metrics)
-            enriched = observed.filter(is_good).drop(ERROR_COL).select("*", ingestion_ts, row_hash)
-            write_partitions(enriched.withColumn("batch_id", batch_key), cfg.good_dir, "batch_id")
-            metrics = obs.get  # filled by the write above — no extra jobs
-            total, bad_count = int(metrics["total"]), int(metrics["bad"])
-            files = list(metrics["files"])
+            quarantined = marked.filter(is_bad).withColumn("quarantine_date", quarantine_date).withColumn("batch_id", batch_key)
+            # The helper thread carries the stream thread's job group and
+            # tags, so stopping the query cancels the quarantine job too.
+            # Outside pyspark's pinned-thread mode (PYSPARK_PIN_THREAD=false)
+            # there is no JVM thread state to carry, and pyspark returns
+            # the session instead of a wrapper. Leaving the `with` block
+            # joins the helper; if both writes fail, the good write's
+            # error is the one that propagates.
+            carry = inheritable_thread_target(spark)
+            write_quarantine = carry(write_partitions) if callable(carry) else write_partitions
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                quarantine_write = pool.submit(write_quarantine, quarantined, cfg.quarantine_dir, "batch_id")
+                obs = Observation()
+                observed = marked.observe(obs, *batch_metrics)
+                enriched = observed.filter(is_good).drop(ERROR_COL).select("*", ingestion_ts, row_hash)
+                write_partitions(enriched.withColumn("batch_id", batch_key), cfg.good_dir, "batch_id")
+                metrics = obs.get  # filled by the write above — no extra jobs
+                total, bad_count = int(metrics["total"]), int(metrics["bad"])
+                files = list(metrics["files"])
 
-            if cfg.on_good is not None:
-                # K1/K2 slot (e.g. staged JDBC MERGE): recomputes from
-                # the persisted `marked`, so no second source scan; the
-                # Observation already captured its metrics above.
-                cfg.on_good(enriched, batch_id)
-
-            if bad_count:
-                write_partitions(
-                    marked.filter(is_bad).withColumn("quarantine_date", quarantine_date).withColumn("batch_id", batch_key),
-                    cfg.quarantine_dir,
-                    "batch_id",
-                )
+                if cfg.on_good is not None:
+                    # K1/K2 slot (e.g. staged JDBC MERGE): recomputes from
+                    # the persisted `marked`, so no second source scan; the
+                    # Observation already captured its metrics above.
+                    cfg.on_good(enriched, batch_id)
+            quarantine_write.result()  # re-raises the quarantine write's error
             write_audit(
                 spark,
                 cfg.audit_dir,

@@ -4,11 +4,7 @@ Hadoop-FS re-expression — see sinks/bootstrap.py)."""
 from __future__ import annotations
 
 import os
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.sinks import (
     bootstrap,

@@ -196,9 +196,6 @@ def test_simhash_hamming_pairs_equals_brute_force(spark):
 def test_leakage_safe_split_cotravel(spark):
     """Near-identical docs (same normalization fingerprint) must land
     in the SAME split — the property doc_id-keyed splitting violates."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
 
     out = entrymod.queries()["leakage_safe_split"](

@@ -10,10 +10,6 @@ the driver's DuckDB gate — would go red intermittently.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 
 import __spark_entry__ as entrymod

@@ -27,14 +27,10 @@ fails loudly.
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as em
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.catalog import TABLES

@@ -18,10 +18,11 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 SCRIPT = r"""
 import sys, math
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])  # the checkout under test
 from pyspark.sql import SparkSession
 import duckdb
 
@@ -65,7 +66,7 @@ print("FAILURES:" + ",".join(failures))
 
 def test_queries_survive_hostile_driver_session():
     out = subprocess.run(
-        [sys.executable, "-c", SCRIPT],
+        [sys.executable, "-c", SCRIPT, str(Path(__file__).resolve().parents[1])],
         capture_output=True,
         text=True,
         timeout=420,

@@ -17,13 +17,10 @@ out explicitly via `_java_ws`. These tests pin:
 from __future__ import annotations
 
 import shutil
-import sys
 
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
-
-sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as em
 

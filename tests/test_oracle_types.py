@@ -19,11 +19,7 @@ enough to run over all ~220 registry entries every pytest run.
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
-
-sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as em
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.catalog import TABLES

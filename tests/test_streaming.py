@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -48,6 +49,11 @@ def dirs(tmp_path):
 def write_file(dirs, name, content):
     with open(os.path.join(dirs["source"], name), "w") as fh:
         fh.write(content)
+
+
+def read_batch(spark, dirs):
+    """The source dir's files as one static micro-batch frame."""
+    return spark.read.option("header", "true").schema(SCHEMA).csv(dirs["source"])
 
 
 def make_cfg(dirs):
@@ -425,9 +431,7 @@ def test_ingest_batch_replay_is_idempotent(spark, dirs):
     write_file(dirs, "a.csv", CSV_GOOD)
     write_file(dirs, "b.csv", CSV_MIXED)
     cfg = make_cfg(dirs)
-    batch_df = (
-        spark.read.option("header", "true").schema(SCHEMA).csv(dirs["source"])
-    )
+    batch_df = read_batch(spark, dirs)
     body = process_batch(cfg)
     body(batch_df, 7)
     body(batch_df, 7)  # replay of the same micro-batch
@@ -457,10 +461,11 @@ def _spark_work(spark, fn) -> tuple[int, int, int]:
 
 def test_process_batch_runs_only_its_sink_writes(spark, dirs, tmp_path, monkeypatch):
     """§4.3-3: inside foreachBatch a micro-batch fires one single-stage
-    job per Spark sink write — good, and quarantine only with bad rows;
-    the audit record is written from the driver — and nothing else: the
-    counts and the routed file list ride the good write's observe(). Its
-    expressions are built once per stream, not once per batch."""
+    job per Spark sink write — good and quarantine, the latter empty for
+    a clean batch; the audit record is written from the driver — and
+    nothing else: the counts and the routed file list ride the good
+    write's observe(). Its expressions are built once per stream, not
+    once per batch."""
     from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import ingest as ing
 
     built = {"trim_exprs": 0, "error_expr": 0, "row_hash_expr": 0}
@@ -499,7 +504,7 @@ def test_process_batch_runs_only_its_sink_writes(spark, dirs, tmp_path, monkeypa
         .awaitTermination()
     )
 
-    assert work == [(2, 2, 0), (1, 1, 0)]
+    assert work == [(2, 2, 0), (2, 2, 0)]
     assert built == {"trim_exprs": 1, "error_expr": 1, "row_hash_expr": 1}
     assert sorted(os.listdir(processed)) == ["clean.csv", "mixed.csv"]
     assert spark.read.parquet(dirs["good"]).count() == 3
@@ -564,7 +569,8 @@ def test_warm_micro_batches_compile_no_new_classes(spark, dirs):
 def test_good_write_failure_routes_files_to_failed_dir(spark, dirs, tmp_path):
     """When the good write itself raises, its observation never arrives:
     the batch's files are still listed, moved to failed_dir, and a
-    FAILURE audit is written."""
+    FAILURE audit is written. The quarantine write does not depend on
+    the good one (the reference writes it first), so it still lands."""
     from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming.ingest import (
         build_stream,
         process_batch,
@@ -591,7 +597,145 @@ def test_good_write_failure_routes_files_to_failed_dir(spark, dirs, tmp_path):
     assert os.listdir(dirs["source"]) == []
     audit = spark.read.parquet(dirs["audit"]).collect()
     assert [(r["batch_id"], r["status"]) for r in audit] == [(0, "FAILURE")]
-    assert not os.path.exists(dirs["quarantine"])
+    bad = spark.read.parquet(dirs["quarantine"]).collect()
+    assert sorted((r["batch_id"], r["error_reason"]) for r in bad) == [
+        (0, "null_key:sensor_id"),
+        (0, "out_of_range:temperature_C"),
+    ]
+
+
+def test_sink_writes_run_at_the_same_time(spark, dirs, monkeypatch):
+    """The good and quarantine writes of one micro-batch are in flight
+    together: each meets the other at a two-party barrier before it
+    writes, so a batch that ran them one after the other times out."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import ingest as ing
+
+    barrier = threading.Barrier(2, timeout=30)
+    real = ing.write_partitions
+
+    def meet(df, path, partition_col):
+        barrier.wait()
+        real(df, path, partition_col)
+
+    monkeypatch.setattr(ing, "write_partitions", meet)
+    write_file(dirs, "b.csv", CSV_MIXED)
+    ing.process_batch(make_cfg(dirs))(read_batch(spark, dirs), 0)
+    assert spark.read.parquet(dirs["good"]).count() == 1
+    assert spark.read.parquet(dirs["quarantine"]).count() == 2
+
+
+def test_every_batch_job_runs_in_the_query_job_group(spark, dirs):
+    """Stopping a query cancels its job group, the query's run id. The
+    quarantine write's helper thread inherits that group, so every job a
+    micro-batch runs is in it."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import ingest as ing
+
+    write_file(dirs, "mixed.csv", CSV_MIXED)
+    write_file(dirs, "clean.csv", CSV_GOOD)
+    cfg = make_cfg(dirs)
+    cfg.max_files_per_trigger = 1
+    body = ing.process_batch(cfg)
+    sc = spark.sparkContext._jsc.sc()
+    jobs: list[int] = []
+
+    def measured(batch_df, batch_id):
+        first = sc.dagScheduler().nextJobId()
+        body(batch_df, batch_id)
+        jobs.extend(range(first, sc.dagScheduler().nextJobId()))
+
+    query = (
+        ing.build_stream(spark, cfg)
+        .writeStream.foreachBatch(measured)
+        .option("checkpointLocation", cfg.checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    sc.listenerBus().waitUntilEmpty()
+    group = set(spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId)))
+    assert jobs and set(jobs) <= group, (jobs, group)
+
+
+def test_sink_writes_run_outside_pinned_thread_mode(spark, dirs, monkeypatch):
+    """With PYSPARK_PIN_THREAD=false pyspark's inheritable_thread_target
+    returns the session it was given, not a wrapper; the batch still
+    writes both sinks."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import ingest as ing
+
+    monkeypatch.setattr(ing, "inheritable_thread_target", lambda session: session)
+    write_file(dirs, "b.csv", CSV_MIXED)
+    ing.process_batch(make_cfg(dirs))(read_batch(spark, dirs), 0)
+    assert spark.read.parquet(dirs["good"]).count() == 1
+    assert spark.read.parquet(dirs["quarantine"]).count() == 2
+
+
+def test_clean_batch_leaves_no_quarantine_partition(spark, dirs):
+    """A batch without bad rows still runs the quarantine write, with no
+    rows: it adds no batch_id=N dir, no staging dir and no _SUCCESS, and
+    the partitions of earlier batches stay as they were."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming.ingest import process_batch
+
+    body = process_batch(make_cfg(dirs))
+    write_file(dirs, "b.csv", CSV_MIXED)
+    body(read_batch(spark, dirs), 2)
+    os.remove(os.path.join(dirs["source"], "b.csv"))
+    write_file(dirs, "a.csv", CSV_GOOD)
+    body(read_batch(spark, dirs), 3)
+
+    assert sorted(os.listdir(dirs["quarantine"])) == ["batch_id=2"]
+    assert {r["batch_id"] for r in spark.read.parquet(dirs["quarantine"]).collect()} == {2}
+    assert spark.read.parquet(dirs["quarantine"]).count() == 2
+    audit = {r["batch_id"]: (r["status"], r["bad_rows"]) for r in spark.read.parquet(dirs["audit"]).collect()}
+    assert audit == {2: ("SUCCESS", 2), 3: ("SUCCESS", 0)}
+
+
+def test_quarantine_write_failure_fails_the_batch(spark, dirs, tmp_path):
+    """A quarantine write that raises fails the batch after the good
+    write has landed: its error is re-raised, a FAILURE audit is written
+    and the files go to failed_dir. When the body returns, no job of the
+    batch is still running and its helper thread has ended."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming.ingest import process_batch
+
+    failed = str(tmp_path / "failed")
+    write_file(dirs, "b.csv", CSV_MIXED)
+    cfg = make_cfg(dirs)
+    cfg.failed_dir = failed
+    with open(cfg.quarantine_dir, "w") as fh:  # a file where the sink dir should be
+        fh.write("not a directory")
+    threads = set(threading.enumerate())
+
+    with pytest.raises(Exception, match="ParentNotDirectoryException") as err:
+        process_batch(cfg)(read_batch(spark, dirs), 0)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert set(threading.enumerate()) <= threads
+    assert cfg.quarantine_dir in str(err.value)
+    audit = spark.read.parquet(dirs["audit"]).collect()
+    assert [(r["batch_id"], r["status"]) for r in audit] == [(0, "FAILURE")]
+    assert os.listdir(failed) == ["b.csv"]
+    assert os.listdir(dirs["good"]) == ["batch_id=0"]
+    assert spark.read.parquet(dirs["good"]).count() == 1
+
+
+def test_good_write_error_wins_when_both_writes_fail(spark, dirs, monkeypatch):
+    """If both sink writes raise, the batch re-raises the good write's
+    error, even when the quarantine write failed first."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import ingest as ing
+
+    quarantine_failed = threading.Event()
+
+    def broken(df, path, partition_col):
+        if path == dirs["quarantine"]:
+            quarantine_failed.set()
+        else:
+            quarantine_failed.wait(10)
+        raise RuntimeError(f"cannot write {path}")
+
+    monkeypatch.setattr(ing, "write_partitions", broken)
+    write_file(dirs, "b.csv", CSV_MIXED)
+    with pytest.raises(RuntimeError) as err:
+        ing.process_batch(make_cfg(dirs))(read_batch(spark, dirs), 0)
+    assert str(err.value) == f"cannot write {dirs['good']}"
 
 
 def test_watermarked_streaming_dedup(spark, tmp_path):

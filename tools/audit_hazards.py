@@ -34,10 +34,12 @@ Writes docs/HAZARD_AUDIT.md and prints the summary counts.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 NONNULL_FUNCS = re.compile(
     r"\b(row_number|rank|dense_rank|ntile|count)\s*\(|generate_series|"
@@ -354,7 +356,7 @@ def main() -> int:
         " column and int64-edge magnitudes, so every live site above"
         " diverges there if actually unsafe."
     )
-    with open("/root/repo/docs/HAZARD_AUDIT.md", "w") as f:
+    with open(os.path.join(REPO, "docs", "HAZARD_AUDIT.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"window keys: {counts}")
     print(f"unguarded: {len(unguarded_sites)}, unwidened: {len(unwidened_sites)}")

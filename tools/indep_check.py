@@ -33,12 +33,13 @@ Usage: python tools/indep_check.py [sf_dir] [query ...] [--strict-order]
 """
 import atexit
 import math
+import os
 import shutil
 import sys
 import tempfile
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as em

@@ -37,7 +37,7 @@ Two tiers are generated so NaN cast errors cannot MASK other channels:
                           the chaos tier for cast-guard hardening.
 
 Usage: python tools/make_hostile_data.py [base_sf_dir] [out_root]
-Defaults: /root/testdata/sf0.001 -> /root/repo/testdata_hostile{,_nonan}
+Defaults: the sf0.001 test data -> testdata_hostile{,_nonan} in this checkout
 """
 
 from __future__ import annotations
@@ -51,7 +51,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 BASE = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-OUT = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/testdata_hostile"
+OUT = sys.argv[2] if len(sys.argv) > 2 else os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "testdata_hostile")
 
 NAN = float("nan")
 INF = float("inf")
