@@ -14,6 +14,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def put_checkout_on_worker_path() -> None:
+    """Prepend the checkout holding this package to PYTHONPATH, which
+    the JVM launched next (and so every Python worker it starts)
+    inherits. Python workers (pandas UDFs, mapInPandas, Python data
+    sources) import the package too, but they start from the JVM's
+    environment, not from the driver's sys.path: without this they find
+    the package only when the working directory is the checkout."""
+    checkout = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if checkout not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([checkout, *paths])
+
+
 def get_spark(
     app_name: str = "artdpap-spark",
     cpus: int | str | None = None,
@@ -26,6 +39,7 @@ def get_spark(
     everything set here is master-agnostic except ``local[N]``.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    put_checkout_on_worker_path()
     # `spark.driver.memory` set through builder.config is SILENTLY
     # IGNORED when the JVM is launched from a plain Python process (the
     # gateway starts before the conf applies). To actually size the

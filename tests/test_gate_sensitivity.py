@@ -18,60 +18,60 @@ builders get one seeded bug each — the classic classes —
                              to it, which is why gate.sh runs the
                              typed replica at all)
 
-and the replica's comparator (same norm/table_hash code the standing
-gate imports) must flag every one, while the unmutated builders stay
-green on the same fixture. If someone weakens the comparator (e.g.
-reverts norm() to str()), mutant 5 goes silently green and this file
-fails loudly.
+and the gate must flag every one, while the unmutated builders stay
+green on the same fixture. Every control and mutant is judged by the
+gate's own code — tools/check_oracle.py's connection, fetch paths and
+verdicts (``judge``) — so a change to the gate's fetch path reaches the
+mutants too. If someone weakens the comparator (e.g. reverts norm() to
+str()), mutant 5 goes silently green and this file fails loudly.
+
+Later sections add three more builder mutants, one order-only mutant
+(Q3's rows reversed: C1 and C2 sort rows, so only C3's ordered compare
+is red) and four oracle-side mutants — 13 in all.
 """
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 import __spark_entry__ as em
-from advanced_real_time_data_pipeline_and_analytical_processing_spark.catalog import TABLES
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators import topk
-from tools.check_oracle import table_hash
+from tools import check_oracle as gate
 
 SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
 def oracle_con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    return con
+    con = gate.oracle_connection(SF)
+    yield con
+    con.close()
+
+
+def gate_verdicts(s_cols, s_rows, con, oracle_sql) -> dict:
+    """The gate's three verdicts on one Spark result. A raising oracle
+    says nothing about the comparators, so it fails the test."""
+    v = gate.judge(s_cols, s_rows, con, oracle_sql)
+    assert v["c1"]["status"] != "oracle-err" and v["c2"]["err"] is None, v
+    return v
 
 
 def replica_verdict(sdf, con, oracle_sql):
-    """The driver-gate replica's comparison, verbatim semantics:
-    Spark collect() vs DuckDB Arrow fetch, type-sensitive hash."""
+    """C2's record (the driver-gate model: Arrow fetch, type-sensitive
+    hash) for a builder's result."""
     return replica_verdict_rows(
         sdf.columns, [tuple(r) for r in sdf.collect()], con, oracle_sql
     )
 
 
 def replica_verdict_rows(s_cols, s_rows, con, oracle_sql):
-    o_tbl = con.execute(oracle_sql).arrow()
-    o_cols = o_tbl.column_names
-    cols_py = [o_tbl.column(c).to_pylist() for c in o_cols]
-    o_rows = list(zip(*cols_py)) if o_cols else []
-    if not any(cols_py):
-        o_rows = []
-    return {
-        "rows_match": len(s_rows) == len(o_rows),
-        "schema_match": sorted(s_cols) == sorted(o_cols),
-        "hash_match": table_hash(s_cols, s_rows) == table_hash(o_cols, o_rows),
-    }
+    return gate_verdicts(s_cols, s_rows, con, oracle_sql)["c2"]
 
 
 def is_green(v: dict) -> bool:
-    return v["rows_match"] and v["schema_match"] and v["hash_match"]
+    return gate.c2_status(v) == "PASS"
 
 
 MUTATED = [
@@ -88,8 +88,10 @@ def test_control_unmutated_builders_are_green(spark, oracle_con):
     queries = em.queries()
     reds = []
     for name in MUTATED:
-        v = replica_verdict(queries[name](spark, SF), oracle_con, oracles[name])
-        if not is_green(v):
+        sdf = queries[name](spark, SF)
+        rows = [tuple(r) for r in sdf.collect()]
+        v = gate_verdicts(sdf.columns, rows, oracle_con, oracles[name])
+        if not v["pass"]:
             reds.append((name, v))
     assert not reds, f"controls must be green before mutants mean anything: {reds}"
 
@@ -279,6 +281,20 @@ def test_mutant_sort_direction_topk(spark, oracle_con):
     assert not v["hash_match"], "replica failed to flag a sort-direction flip"
 
 
+def test_mutant_reversed_rows_q3_order_only(spark, oracle_con):
+    # seeded bug: Q3's top-10 comes back in reverse — the right rows in
+    # the wrong order. C1 and C2 sort rows before comparing, so only
+    # C3's ordered compare (Q3's oracle declares a top-level ORDER BY)
+    # can see it.
+    sdf = em.queries()["q3_shipping_priority"](spark, SF)
+    rows = [tuple(r) for r in sdf.collect()][::-1]  # <- mutation
+    v = gate_verdicts(sdf.columns, rows, oracle_con, em.oracle_sql()["q3_shipping_priority"])
+    assert v["c1"]["status"] == "PASS"
+    assert is_green(v["c2"])
+    assert v["c3"]["status"] == "order", "C3 failed to flag a reversed row order"
+    assert not v["pass"]
+
+
 # --- r12 extension (VERDICT r11 #2): ORACLE-side mutants ------------------
 # All 8 classes above mutate the SPARK builder; the symmetric claim —
 # a wrong ORACLE (bad SQL constant, lossy candidate filter, broken
@@ -324,8 +340,8 @@ def test_oracle_control_pair_queries_green(
         (minhash_spark_result, "minhash_near_dup"),
         (ngram_spark_result, "ngram_jaccard_pairs"),
     ]:
-        v = replica_verdict_rows(cols, rows, oracle_con, em.oracle_sql()[name])
-        assert is_green(v), f"control {name} must be green: {v}"
+        v = gate_verdicts(cols, rows, oracle_con, em.oracle_sql()[name])
+        assert v["pass"], f"control {name} must be green: {v}"
 
 
 def test_oracle_mutant_prefix_filter_off_by_one(oracle_con, minhash_spark_result):

@@ -1,10 +1,10 @@
-"""Pins for the standing independent comparator (VERDICT r11 #1).
+"""Pins for the independent comparator C3 (VERDICT r11 #1).
 
-The whole value of tools/indep_check.py is that it shares NO code with
-the gate-replica/check_oracle comparator family — two independent
-implementations agreeing 220/220 is the repo's strongest correctness
-argument. These tests make that independence, and the comparator's
-strictness, survive refactors:
+The whole value of tools/indep_check.py is that it shares NO comparison
+code with C1/C2 in tools/check_oracle.py — independent implementations
+agreeing 220/220 on the same execution is the repo's strongest
+correctness argument. These tests make that independence, and the
+comparator's strictness, survive refactors:
 
   1. the module must not import tools/driver_gate_replica.py or
      tools/check_oracle.py (AST-level check, so a docstring mention
@@ -12,15 +12,14 @@ strictness, survive refactors:
   2. its type-tagging must keep the r7 Decimal-vs-int discrimination
      (the historic str()-compare blind spot),
   3. the top-level-ORDER-BY detector must not be fooled by window or
-     subquery sorts,
-  4. end-to-end smoke: the CLI agrees with a couple of registry
-     queries at sf0.001 and exits 0.
+     subquery sorts.
+
+tests/test_check_oracle.py runs C3 end to end inside the oracle gate.
 """
 
 from __future__ import annotations
 
 import ast
-import subprocess
 import sys
 from decimal import Decimal
 from pathlib import Path
@@ -89,24 +88,3 @@ def test_order_by_detector():
     )
     # identifier suffix must not match (reORDER BY is not ORDER BY)
     assert not has_top_level_order_by("SELECT * FROM reorder_tbl")
-
-
-def test_cli_smoke_sf0001():
-    proc = subprocess.run(
-        [
-            sys.executable,
-            str(SRC),
-            "/root/testdata/sf0.001",
-            "q1_pricing_summary",
-            "q3_shipping_priority",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=600,
-        cwd=REPO,
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-    assert "independent sweep: 2/2 agree" in proc.stdout
-    # q3 declares a top-level ORDER BY -> the ordered tier must engage
-    assert "ok   q3_shipping_priority" in proc.stdout
-    assert "+order" in proc.stdout

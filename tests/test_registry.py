@@ -127,7 +127,7 @@ def _top_level_order_by(sql: str) -> str | None:
 def test_nullable_order_keys_pin_null_placement():
     """Every declared-ORDER-BY oracle whose sort key can be NULL (per
     the hostile-fixture NULL census) spells NULLS FIRST/LAST out, so
-    the C3 ordered compare (tools/indep_check.py --strict-order) stays
+    the C3 ordered compare (tools/indep_check.c3_verdict) stays
     exact on NULL-bearing fixtures instead of tying on the engines'
     opposite placement defaults.
 

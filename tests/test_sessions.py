@@ -63,12 +63,10 @@ def test_gap_boundary_matches_oracle(spark, tmp_path, name):
     rows = sdf.collect()
     sql = em.oracle_sql()[name]
     try:
-        c1 = runner.c1_verdict(sdf.columns, [tuple(r) for r in rows], con, sql)
-        c2 = runner.c2_verdict(sdf.columns, [tuple(r) for r in rows], con, sql)
+        v = runner.judge(sdf.columns, [tuple(r) for r in rows], con, sql)
     finally:
         con.close()
-    assert c1["status"] == "PASS", c1
-    assert runner.c2_status(c2) == "PASS", c2
+    assert v["pass"], v
     assert Counter(r.user_id for r in rows) == SESSIONS
 
 

@@ -1,13 +1,14 @@
 """The oracle gate: every registry query against its DuckDB oracle,
-judged by two comparators on ONE Spark execution.
+judged by three comparators on ONE execution.
 
 Per query the Spark builder runs once and its rows are collected once
-(``[tuple(r) for r in sdf.collect()]``); the oracle SQL is fetched once
-per comparator, each on its own fetch path:
+(``[tuple(r) for r in sdf.collect()]``). The oracle SQL runs once
+through DuckDB's ``fetchall()``, whose rows C1 and C3 share, and once
+more through C2's own Arrow fetch:
 
-  C1 (str)    DuckDB ``fetchall()``; cells normalised by ``norm_cell``
-              (str, exact float repr), columns sorted by name, rows
-              sorted. A failure is classified:
+  C1 (str)    cells normalised by ``norm_cell`` (str, exact float
+              repr), columns sorted by name, rows sorted. A failure is
+              classified:
                 spark-err   Spark raised
                 oracle-err  DuckDB raised (e.g. the error-vs-NULL cast
                             asymmetry on hostile data)
@@ -23,9 +24,14 @@ per comparator, each on its own fetch path:
               An Arrow fetch plus a type-sensitive normalisation is the
               one model consistent with both; C1 alone is blind to the
               second class (tests/test_gate_sensitivity.py pins it).
+  C3 (indep)  ``indep_check.c3_verdict``: (value, type-tag) multisets,
+              plus an ordered compare when the oracle declares a
+              top-level ORDER BY. It shares no comparison code with C1
+              or C2 (tests/test_indep_check.py pins that).
 
-A query prints ``PASS`` only when both comparators are green, else
-``FAIL`` with both verdicts. Exit 1 on any FAIL.
+A query prints ``PASS`` only when all three comparators are green, else
+``FAIL`` with the three verdicts. Exit 1 on any FAIL, 2 on a query name
+the registry does not declare.
 
 Usage: python tools/check_oracle.py [--hostile-session] [sf_dir] [query ...]
 
@@ -38,7 +44,7 @@ Usage: python tools/check_oracle.py [--hostile-session] [sf_dir] [query ...]
 
 A run over the whole registry (no query names) writes
 docs/ORACLE_CHECK_<sf_dir name>[_hostile_session].json: run provenance
-(tools/run_meta.py), per-query C1/C2 verdicts and counts.
+(tools/run_meta.py), per-query C1/C2/C3 verdicts and counts.
 """
 
 from __future__ import annotations
@@ -61,10 +67,14 @@ import duckdb
 from pyspark.sql import SparkSession
 
 import run_meta
+from indep_check import c3_verdict
 
 import __spark_entry__ as entrymod
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.catalog import TABLES
-from advanced_real_time_data_pipeline_and_analytical_processing_spark.session import get_spark
+from advanced_real_time_data_pipeline_and_analytical_processing_spark.session import (
+    get_spark,
+    put_checkout_on_worker_path,
+)
 
 DUCKDB_MEMORY_LIMIT = "4GB"  # beyond it DuckDB spills to its temp_directory
 
@@ -123,14 +133,8 @@ def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def c1_verdict(s_cols, s_rows, con, sql) -> dict:
-    """The str comparator over DuckDB's fetchall()."""
-    try:
-        res = con.execute(sql)
-        d_cols = [d[0] for d in res.description]
-        d_rows = res.fetchall()
-    except Exception as e:
-        return {"status": "oracle-err", "detail": str(e)[:400]}
+def c1_verdict(s_cols, s_rows, d_cols, d_rows) -> dict:
+    """The str comparator over DuckDB's fetchall() rows."""
     sc, sr = norm_rows(s_cols, s_rows)
     dc, dr = norm_rows(d_cols, d_rows)
     if sc != dc:
@@ -178,23 +182,40 @@ def c2_status(rec: dict) -> str:
     return "PASS"
 
 
+def judge(s_cols, s_rows, con, sql) -> dict:
+    """All three verdicts on one collected Spark result. The oracle SQL
+    runs once through fetchall(), for C1 and C3, and once through C2's
+    Arrow fetch."""
+    try:
+        res = con.execute(sql)
+        d_cols = [d[0] for d in res.description]
+        d_rows = res.fetchall()
+    except Exception as e:
+        c1 = c3 = {"status": "oracle-err", "detail": str(e)[:400]}
+    else:
+        c1 = c1_verdict(s_cols, s_rows, d_cols, d_rows)
+        c3 = c3_verdict(s_cols, s_rows, d_cols, d_rows, sql)
+    v = {"c1": c1, "c2": c2_verdict(s_cols, s_rows, con, sql), "c3": c3}
+    v["pass"] = c1["status"] == c2_status(v["c2"]) == c3["status"] == "PASS"
+    return v
+
+
 def check(spark, con, sf_dir: str, build, sql) -> dict:
-    """Both verdicts for one query from a single Spark execution."""
+    """The three verdicts for one query from a single Spark execution."""
     try:
         sdf = build(spark, sf_dir)
         s_rows = [tuple(r) for r in sdf.collect()]
         s_cols = sdf.columns
     except Exception as e:
-        return {"c1": {"status": "spark-err", "detail": str(e)[:400]}, "c2": c2_error(e)}
-    return {
-        "c1": c1_verdict(s_cols, s_rows, con, sql),
-        "c2": c2_verdict(s_cols, s_rows, con, sql),
-    }
+        err = {"status": "spark-err", "detail": str(e)[:400]}
+        return {"c1": err, "c2": c2_error(e), "c3": err, "pass": False}
+    return judge(s_cols, s_rows, con, sql)
 
 
 def run(spark, sf_dir: str, only=()) -> dict:
     """Check every registry query (or only the named ones), print one
-    line per query, and return {name: {"c1": ..., "c2": ..., "pass": ...}}."""
+    line per query, and return {name: {"c1": ..., "c2": ..., "c3": ...,
+    "pass": ...}}."""
     con = oracle_connection(sf_dir)
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -203,17 +224,18 @@ def run(spark, sf_dir: str, only=()) -> dict:
         if only and name not in only:
             continue
         v = report[name] = check(spark, con, sf_dir, build, oracles[name])
-        c1, c2 = v["c1"]["status"], c2_status(v["c2"])
-        v["pass"] = c1 == c2 == "PASS"
         if v["pass"]:
-            print(f"PASS {name}: {v['c1']['n']} rows", flush=True)
+            order = " +order" if v["c3"]["ordered"] else ""
+            print(f"PASS {name}: {v['c1']['n']} rows{order}", flush=True)
         else:
-            print(f"FAIL {name}: C1 {c1}, C2 {c2}: {json.dumps(v)[:300]}", flush=True)
+            print(f"FAIL {name}: C1 {v['c1']['status']}, C2 {c2_status(v['c2'])}, "
+                  f"C3 {v['c3']['status']}: {json.dumps(v)[:300]}", flush=True)
     con.close()
     return report
 
 
 def hostile_session() -> SparkSession:
+    put_checkout_on_worker_path()
     return (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.session.timeZone", "America/New_York")
@@ -231,21 +253,29 @@ def main() -> int:
         sys.argv.remove("--hostile-session")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
+    unknown = sorted(only - entrymod.queries().keys())
+    if unknown:
+        print(f"oracle check: unknown query names: {' '.join(unknown)}")
+        return 2
     spark = hostile_session() if hostile else get_spark("oracle-check", cpus=8, shuffle_partitions=8)
     report = run(spark, sf_dir, only)
     spark.stop()
     counts = dict(sorted(Counter(v["c1"]["status"] for v in report.values()).items()))
     c2_green = sum(c2_status(v["c2"]) == "PASS" for v in report.values())
+    c3_green = sum(v["c3"]["status"] == "PASS" for v in report.values())
+    ordered = sum(v["c3"]["status"] == "PASS" and v["c3"]["ordered"] for v in report.values())
     passed = sum(v["pass"] for v in report.values())
     if not only:
         tag = os.path.basename(sf_dir.rstrip("/")) + ("_hostile_session" if hostile else "")
         out = os.path.join(REPO, "docs", f"ORACLE_CHECK_{tag}.json")
         summary = {"_meta": run_meta.meta(), "fixture": sf_dir, "hostile_session": hostile,
-                   "c1_counts": counts, "c2_green": c2_green, "queries": report}
+                   "c1_counts": counts, "c2_green": c2_green, "c3_green": c3_green,
+                   "queries": report}
         with open(out, "w") as f:
             json.dump(summary, f, indent=1, sort_keys=True)
     print(f"oracle check: {passed}/{len(report)} PASS; C1 {json.dumps(counts)}; "
-          f"C2 {c2_green}/{len(report)} green")
+          f"C2 {c2_green}/{len(report)} green; C3 {c3_green}/{len(report)} green "
+          f"({ordered} ordered)")
     return 0 if passed == len(report) else 1
 
 

@@ -9,17 +9,13 @@ ancestor commit and `diff_sha256` is the empty-diff hash, the snapshot
 came from exactly that committed tree — a byte-identical rename of a
 stale working copy can no longer masquerade as a fresh re-run.
 
-Library use: `from run_meta import meta` -> dict (embedded as the
-"_meta" key of the replica JSON reports). CLI use: prints the record
-as one JSON line (gate.sh prepends it to the tee'd sweep .txt files;
-kept out of tools/indep_check.py itself so the C3 comparator keeps
-sharing zero code with the rest of the gate family).
+Use: `from run_meta import meta` -> dict, embedded as the "_meta" key
+of the oracle gate's JSON reports and of bench.py / perfbench results.
 """
 
 from __future__ import annotations
 
 import hashlib
-import json
 import subprocess
 import time
 
@@ -41,6 +37,3 @@ def meta() -> dict:
         "generated_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
 
-
-if __name__ == "__main__":
-    print("run_meta: " + json.dumps(meta(), sort_keys=True))
