@@ -832,19 +832,9 @@ def q_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-gram frequency top-k: explode word bigrams, hash-agg count,
     TakeOrderedAndProject top 20 (per-partition heap, no global sort)."""
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    # Guard <2 tokens: sequence(1, 0) yields the DESCENDING [1, 0] and
-    # element_at(toks, 0) raises INVALID_INDEX_OF_ZERO (the oracle's
-    # generate_series(1, 0) is empty) — same guard as dedup.word_shingles.
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.concat_ws(" ", F.element_at(toks, i), F.element_at(toks, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return (
-        docs.select(F.explode(bigrams).alias("bigram"))
+        docs.select(text.tokens(F.col("text")).alias("_toks"))
+        .select(F.explode(text.ngrams_from_tokens(F.col("_toks"), 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("bigram").asc())
@@ -988,9 +978,8 @@ def q_quote_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     provably drops only non-qualifying candidates, so the verified
     outputs are identical (value-checked at sf0.01 and sf0.1)."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     snippets = (
-        docs.select("doc_id", toks.alias("_toks"))
+        docs.select("doc_id", text.tokens(F.col("text")).alias("_toks"))
         .filter(F.size("_toks") >= 15)
         .select(
             (F.col("doc_id") + 200000).alias("doc_id"),
@@ -1166,10 +1155,11 @@ def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded as h = (h*31 + v) mod (2^31 - 1). One Catalyst fold per row
     in the scan stage — no shuffle, no UDF — and portable: DuckDB
     recomputes it exactly (md5 + hex parse + list_reduce)."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    docs = _t(spark, sf_dir, "documents").select(
+        "doc_id", text.tokens(F.col("text")).alias("_toks")
+    )
     vals = F.transform(
-        toks,
+        F.col("_toks"),
         lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint"),
     )
     fp = F.aggregate(
@@ -1931,11 +1921,9 @@ def q_doc_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     per document — a per-row array expression, no explode/shuffle; the
     500-row output is value-checked against DuckDB's list algebra."""
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
-    # tokens materialized in their own projection: closed-over inline
-    # splits re-evaluate per bigram (see text.bigrams_from_tokens)
     with_bgs = docs.select(
         "doc_id", text.tokens(F.col("text")).alias("_toks")
-    ).select("doc_id", text.bigrams_from_tokens(F.col("_toks")).alias("_bgs"))
+    ).select("doc_id", text.ngrams_from_tokens(F.col("_toks"), 2).alias("_bgs"))
     return with_bgs.select(
         "doc_id",
         F.size("_bgs").alias("n_bigrams"),
@@ -4649,16 +4637,13 @@ def q_corpus_health_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst expressions), then one tiny per-source aggregate."""
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
     t = F.col("text")
-    # bigrams staged via a materialized token projection — the inline
-    # form re-tokenizes per bigram inside the lambda (see
-    # text.bigrams_from_tokens)
     staged = docs.select(
         "source", "lang", "text", text.tokens(t).alias("_toks")
     ).select(
         "source",
         "lang",
         "text",
-        text.bigrams_from_tokens(F.col("_toks")).alias("_bgs"),
+        text.ngrams_from_tokens(F.col("_toks"), 2).alias("_bgs"),
     )
     scored = staged.select(
         "source",
@@ -5030,18 +5015,8 @@ def q_repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     one exemplar string via min). Downstream, these spans are the
     removal list for memorization-risk scrubbing."""
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
-    toks = F.split(F.trim(F.lower("text")), r"\s+")
-    grams = docs.select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size(toks) >= 8,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(toks) - 7),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i, 8)),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("gram"),
+    grams = docs.select("doc_id", text.tokens(F.col("text")).alias("_toks")).select(
+        "doc_id", F.explode(text.ngrams_from_tokens(F.col("_toks"), 8)).alias("gram")
     )
     return grams.groupBy("gram").agg(
         F.countDistinct("doc_id").alias("n_docs"),
@@ -5488,29 +5463,25 @@ def q_bigram_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     extreme vocabularies drop the hint and shuffle-join on the word
     key). Floor c_ab ≥ 5 (PMI is noise at tiny counts) and PMI > 0."""
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.struct(
-                F.element_at(toks, i).alias("w1"),
-                F.element_at(toks, i + 1).alias("w2"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-    pairs = docs.select(F.explode(bigrams).alias("bg")).select(
-        F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2")
+    pairs = docs.select(text.tokens(F.col("text")).alias("_toks")).select(
+        F.explode(text.ngrams_from_tokens(F.col("_toks"), 2)).alias("bigram")
     )
     # One explode+shuffle builds the bigram counts; marginals and N are
     # aggregates OF those counts (sum of c_ab grouped by slot), so the
     # corpus-sized explode lineage runs ONCE. materialize() pins the
     # bigram-grain frame — four downstream consumers would otherwise
     # each replay the full scan+explode (the materialize-once rule;
-    # measured 6.9 s -> ~2 s at sf0.1).
+    # measured 6.9 s -> ~2 s at sf0.1). A token never holds a space,
+    # so each bigram splits back into exactly its two words.
     cab = (
-        pairs.groupBy("w1", "w2")
+        pairs.groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("c_ab"))
+        .select(
+            "bigram",
+            F.split_part("bigram", F.lit(" "), F.lit(1)).alias("w1"),
+            F.split_part("bigram", F.lit(" "), F.lit(2)).alias("w2"),
+            "c_ab",
+        )
         .transform(materialize)
     )
     ca = cab.groupBy("w1").agg(F.sum("c_ab").alias("c_a"))
@@ -5533,7 +5504,7 @@ def q_bigram_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cb), "w2")
         .crossJoin(F.broadcast(n))
         .select(
-            F.concat_ws(" ", "w1", "w2").alias("bigram"),
+            "bigram",
             "c_ab",
             "c_a",
             "c_b",
@@ -7819,9 +7790,8 @@ def q_zipf_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition heaps); the pair fan-out is
     the bounded 200-term grain."""
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     freq = (
-        docs.select(F.explode(toks).alias("tok"))
+        docs.select(F.explode(text.tokens(F.col("text"))).alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("f"))

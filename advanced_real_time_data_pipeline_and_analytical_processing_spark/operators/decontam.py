@@ -10,8 +10,9 @@ this is a required capability for an LLM-data engine.
 Shape, and why it scales:
 
 - Each side is reduced to DISTINCT per-doc n-grams with a per-row
-  array expression (`dedup.word_shingles` — no explode until after
-  distinct-ing, so the explode carries no within-doc duplicates).
+  array expression over the projected tokens
+  (`dedup.shingles_from_tokens` — no explode until after distinct-ing,
+  so the explode carries no within-doc duplicates).
 - The eval side is tiny relative to the corpus (benchmarks are
   millions of n-grams; the corpus is 100 TB), so the join is an
   explicit ``broadcast`` hash join on the n-gram string: the corpus
@@ -30,14 +31,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import word_shingles
+from .dedup import shingles_from_tokens
+from .text import tokens
 
 
 def doc_ngrams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(id, ngram) pairs, one row per DISTINCT n-gram per document."""
-    return df.select(
+    return df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks")).select(
         F.col(id_col),
-        F.explode(word_shingles(F.col(text_col), n)).alias("ngram"),
+        F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("ngram"),
     )
 
 

@@ -25,21 +25,14 @@ from advanced_real_time_data_pipeline_and_analytical_processing_spark.plans.mate
     release,
 )
 
-TOKEN_SPLIT = r"\s+"
-
-
-def _tokens(text_col: Column) -> Column:
-    return F.split(F.trim(F.lower(text_col)), TOKEN_SPLIT)
+from .text import tokens
 
 
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-grams from a MATERIALIZED token-array column.
-
-    Built with sequence+transform (native, codegen'd) — no UDF.
-    ``toks`` must be a column reference: a subexpression referenced
-    inside a per-element lambda re-evaluates for EVERY element, so an
-    inline split() re-tokenizes the whole document once per shingle
-    (measured 6x slower over the sf0.1 corpus)."""
+    """Distinct word n-grams of a projected token-array column (see
+    text.tokens), built with sequence+transform (native, codegen'd) —
+    no UDF. A document shorter than ``n`` tokens is ONE shingle (its
+    whole token list), a rule the SQL mirrors share."""
     starts = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
     grams = F.transform(starts, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
     return F.array_distinct(grams)
@@ -49,28 +42,19 @@ def _shingled(
     df: DataFrame, id_col: str, text_col: str, n: int, out_col: str
 ) -> DataFrame:
     """(id, out_col: array<string>) — tokenize in its OWN projection,
-    then shingle from the materialized array (see shingles_from_tokens
-    for why the split must not sit inside the lambda)."""
+    then shingle from the projected array."""
     # NULL text has no shingle set and is invisible to every SQL
     # mirror (NULL never equality-joins) — drop it BEFORE tokenizing
     # (filtering on the token array would re-run the split per row
     # just for the null probe once Catalyst collapses the projections).
     return (
         df.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col), _tokens(F.col(text_col)).alias("_toks"))
+        .select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
         .select(
             F.col(id_col),
             shingles_from_tokens(F.col("_toks"), n).alias(out_col),
         )
     )
-
-
-def word_shingles(text_col: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of the lowercased text, as array<string>.
-    Convenience single-expression form — fine for small frames and
-    per-row probes; hot corpus paths use _shingled/shingles_from_tokens
-    to keep tokenization out of the lambda."""
-    return shingles_from_tokens(_tokens(text_col), n)
 
 
 def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFrame:
@@ -236,7 +220,7 @@ PORTABLE_SIMHASH_BITS = 32  # md5 hex has 32 digits → one vote per digit
 
 def token_md5s(text_col: Column) -> Column:
     """array<string>: md5 hex digest of each distinct token."""
-    return F.transform(F.array_distinct(_tokens(text_col)), lambda t: F.md5(t))
+    return F.transform(F.array_distinct(tokens(text_col)), lambda t: F.md5(t))
 
 
 def simhash_votes_vector(

@@ -24,39 +24,12 @@ any fact-dimension join (broadcast when small, shuffle when not).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.plans.materialize import materialize
 
-TOKEN_SPLIT = r"\s+"
-
-
-def _tokens(text_col: Column) -> Column:
-    return F.split(F.trim(F.lower(text_col)), TOKEN_SPLIT)
-
-
-def _bigrams_from_tokens(toks: Column) -> Column:
-    """array<string> of space-joined adjacent token pairs, WITH
-    multiplicity (unlike shingles-for-dedup, counts matter here).
-    Guarded for <2 tokens: Spark's sequence(1, 0) would count DOWN,
-    fabricating a bogus pair, so short docs get an explicit empty
-    array (matching DuckDB's end-exclusive range).
-
-    ``toks`` MUST be a materialized column reference, not an inline
-    split expression: a subexpression inside the per-element lambda is
-    re-evaluated per element, so an inline tokenization re-splits the
-    whole document for every bigram (measured 10x slower on the
-    corpus explode)."""
-    pairs = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 1),
-        lambda i: F.concat_ws(
-            " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-        ),
-    )
-    return F.when(F.size(toks) >= 2, pairs).otherwise(
-        F.array().cast("array<string>")
-    )
+from .text import ngrams_from_tokens, tokens
 
 
 def bigram_model(
@@ -68,8 +41,8 @@ def bigram_model(
     Pass a pre-materialized exploded ``bg`` frame (any frame with a
     ``bg`` column) to share the explode with other consumers."""
     if bg is None:
-        bg = docs.select(_tokens(F.col(text_col)).alias("_t")).select(
-            F.explode(_bigrams_from_tokens(F.col("_t"))).alias("bg")
+        bg = docs.select(tokens(F.col(text_col)).alias("_t")).select(
+            F.explode(ngrams_from_tokens(F.col("_t"), 2)).alias("bg")
         )
     c2 = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
     c1 = (
@@ -78,7 +51,7 @@ def bigram_model(
         .agg(F.sum("c2").alias("c1"))
     )
     vocab = (
-        docs.select(F.explode(_tokens(F.col(text_col))).alias("w"))
+        docs.select(F.explode(tokens(F.col(text_col))).alias("w"))
         .agg(F.count_distinct("w").alias("v"))
         .collect()[0]["v"]
     )
@@ -98,8 +71,8 @@ def doc_perplexity(
     # each consumer re-runs the shingle explode over the corpus
     # (measured 5x slower at sf0.1)
     bgid = (
-        docs.select(F.col(id_col), _tokens(F.col(text_col)).alias("_t"))
-        .select(F.col(id_col), F.explode(_bigrams_from_tokens(F.col("_t"))).alias("bg"))
+        docs.select(F.col(id_col), tokens(F.col(text_col)).alias("_t"))
+        .select(F.col(id_col), F.explode(ngrams_from_tokens(F.col("_t"), 2)).alias("bg"))
         .transform(materialize)
     )
     c2, c1, v = bigram_model(docs, text_col, bg=bgid)

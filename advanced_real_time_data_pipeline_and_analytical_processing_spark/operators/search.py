@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.plans.materialize import materialize
 
-from .text import tokens
+from .text import ngrams_from_tokens, tokens
 
 
 def bm25_topk(
@@ -140,13 +140,11 @@ def sparse_tfidf_cosine_pairs(
 
     Returns (id_a, id_b, cos_sim) with id_a < id_b.
     """
-    from .text import bigrams_from_tokens, tokens
-
     toked = docs.select(
         F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_toks")
     )
     tf = (
-        toked.select("_id", F.explode(bigrams_from_tokens(F.col("_toks"))).alias("term"))
+        toked.select("_id", F.explode(ngrams_from_tokens(F.col("_toks"), 2)).alias("term"))
         .groupBy("_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )

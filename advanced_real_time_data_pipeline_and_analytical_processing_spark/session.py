@@ -13,6 +13,33 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The engine's SQL semantics, all runtime-settable: both factories apply
+# them, and deploy/spark-submit.conf.template must carry the same values.
+SESSION_CONF = {
+    # DuckDB-oracle comparability: timestamps render and bucket in UTC
+    "spark.sql.session.timeZone": "UTC",
+    # Spark 4 defaults ANSI mode ON; under ANSI a no-match
+    # regexp_extract '' -> CAST(... AS BIGINT) raises instead of
+    # yielding NULL, and integer overflow errors instead of wrapping.
+    # The engine's semantics (and every oracle comparison) are defined
+    # with ANSI off (VERDICT r6 #2).
+    "spark.sql.ansi.enabled": "false",
+    # size(NULL) = NULL (SQL / DuckDB len() semantics), not the legacy
+    # -1 the non-ANSI default resurrects — a NULL text row must profile
+    # as NULL tokens, not -1 tokens
+    "spark.sql.legacy.sizeOfNull": "false",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # testdata events.parquet stores ts as TIMESTAMP(NANOS); Spark has no
+    # nanos timestamp type — read as long and convert at the catalog layer.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+# get_spark pins these again after getOrCreate, which may hand back a
+# pre-existing session whose builder configs never applied
+_REPINNED = ("spark.sql.ansi.enabled", "spark.sql.legacy.sizeOfNull")
+
 
 def put_checkout_on_worker_path() -> None:
     """Prepend the checkout holding this package to PYTHONPATH, which
@@ -58,26 +85,11 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
+        .config(map=SESSION_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # Spark 4 defaults ANSI ON; the engine's semantics (and every
-        # oracle comparison) are defined with ANSI off. configure_session
-        # pins this for driver-provided sessions — pin it here too so
-        # local pytest / direct-operator sessions run under the SAME
-        # overflow/cast semantics as the gate (VERDICT r6 #2).
-        .config("spark.sql.ansi.enabled", "false")
-        # size(NULL) = NULL (SQL / DuckDB len() semantics), not the
-        # legacy -1 the non-ANSI default resurrects — a NULL text row
-        # must profile as NULL tokens, not -1 tokens
-        .config("spark.sql.legacy.sizeOfNull", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", mem or "8g")  # cluster-submit path only
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Generated-class cache (JVM-wide, static: builder time only).
         # Spark's default of 100 entries thrashes on a repeated query
         # set. Measured on perfbench's analytics_mix (10 registry
@@ -116,7 +128,7 @@ def get_spark(
     # key collision (deployment beats code — by design); values cannot
     # contain ';'; and like extra_conf they are builder-time configs, so
     # a pre-existing session returned by getOrCreate() ignores them
-    # (only the runtime-settable ANSI/sizeOfNull pins below re-apply).
+    # (only the _REPINNED semantics re-apply).
     env_conf = os.environ.get("SPARK_GRAFT_CONF", "")
     pairs = dict(
         p.split("=", 1) for p in env_conf.split(";") if "=" in p
@@ -124,11 +136,8 @@ def get_spark(
     for k, v in {**(extra_conf or {}), **pairs}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # getOrCreate may hand back a pre-existing session whose builder
-    # configs never applied; ANSI is runtime-settable, so pin it
-    # unconditionally — both factory paths must agree with the gate.
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.legacy.sizeOfNull", "false")
+    for k in _REPINNED:
+        spark.conf.set(k, SESSION_CONF[k])
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
@@ -136,24 +145,6 @@ def get_spark(
 def configure_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine configs to an externally provided
     session (the driver hands us one; master/memory are fixed by then)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Spark 4 defaults ANSI mode ON; under ANSI a no-match
-    # regexp_extract '' -> CAST(... AS BIGINT) raises instead of
-    # yielding NULL, and integer overflow errors instead of wrapping.
-    # The engine's semantics (and every oracle comparison) are defined
-    # with ANSI off; the conf is runtime-settable, so pin it here to
-    # neutralize whatever session the driver hands us.
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    # size(NULL) = NULL, matching DuckDB len(NULL) — see get_spark
-    spark.conf.set("spark.sql.legacy.sizeOfNull", "false")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    # testdata events.parquet stores ts as TIMESTAMP(NANOS); Spark has no
-    # nanos timestamp type — read as long and convert at the catalog layer.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    except Exception:
-        pass
+    for k, v in SESSION_CONF.items():
+        spark.conf.set(k, v)
     return spark

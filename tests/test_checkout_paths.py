@@ -28,3 +28,18 @@ def test_no_module_puts_a_fixed_path_on_sys_path():
 def test_no_module_names_its_own_checkout():
     hits = [str(p.relative_to(REPO)) for p in _sources() if str(REPO) in p.read_text()]
     assert hits == []
+
+
+def test_run_meta_stamps_its_checkout_from_any_working_directory(tmp_path, monkeypatch):
+    """A gate artifact written from outside the checkout must still name
+    the checkout's HEAD, not the empty stamp of a non-repository cwd."""
+    import subprocess
+
+    from tools import run_meta
+
+    head = subprocess.run(
+        ["git", "rev-parse", "HEAD"], capture_output=True, text=True, cwd=REPO
+    ).stdout.strip()
+    assert head, "the checkout must be a git work tree"
+    monkeypatch.chdir(tmp_path)
+    assert run_meta.meta()["head"] == head

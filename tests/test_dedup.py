@@ -25,8 +25,8 @@ def test_exact_dedup_keeps_min_id(spark):
 
 
 def test_word_shingles(spark):
-    df = spark.createDataFrame([("a b c d",)], "text string")
-    out = df.select(dedup.word_shingles(F.col("text"), 3).alias("sh")).collect()[0]
+    df = spark.createDataFrame([(1, "a b c d")], "doc_id bigint, text string")
+    out = dedup._shingled(df, "doc_id", "text", 3, "sh").collect()[0]
     assert sorted(out["sh"]) == ["a b c", "b c d"]
 
 

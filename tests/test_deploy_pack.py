@@ -6,7 +6,7 @@ The reference ships its run story as docker-compose.yml + start.sh
 + deploy/submit.sh + deploy/job_ingest.py + deploy/upload_data.py.
 These tests pin: (1) the template is syntactically a valid properties
 file whose engine-semantics keys agree VALUE-FOR-VALUE with
-session.py (a drift means the cluster would run under different SQL
+session.SESSION_CONF (a drift means the cluster would run under different SQL
 semantics than every local gate verified); (2) the docs/CLUSTER.md
 claims (RocksDB provider, checkpoint cleanup, s3a wiring) are really
 in the template; (3) submit.sh refuses to run without a filled conf;
@@ -26,22 +26,10 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)  # ADVICE r10: was a hardcoded absolute path
 TEMPLATE = os.path.join(REPO, "deploy", "spark-submit.conf.template")
-SESSION_PY = os.path.join(
-    REPO,
-    "advanced_real_time_data_pipeline_and_analytical_processing_spark",
-    "session.py",
-)
 
-# session.py keys that are local-mode-only or sized differently on a
-# cluster (docs/CLUSTER.md gives the cluster numbers + rationale)
-LOCAL_ONLY = {
-    "spark.sql.shuffle.partitions",   # cores-sized locally, 10000 on cluster
-    "spark.driver.memory",            # submit-time on a cluster
-    "spark.ui.enabled",               # local test hygiene only
-    # FileSystem-API checkpoint commits: saves local child processes;
-    # on HDFS the default FileContext manager's rename is atomic
-    "spark.sql.streaming.checkpointFileManagerClass",
-}
+from advanced_real_time_data_pipeline_and_analytical_processing_spark.session import (  # noqa: E402
+    SESSION_CONF,
+)
 
 
 def _template_conf() -> dict[str, str]:
@@ -55,16 +43,6 @@ def _template_conf() -> dict[str, str]:
     return conf
 
 
-def _session_literal_confs() -> dict[str, str]:
-    """Every literal ("spark.x", "value") pair session.py sets, via
-    builder.config or conf.set."""
-    src = open(SESSION_PY).read()
-    pairs = re.findall(
-        r'(?:\.config|conf\.set)\(\s*"(spark\.[^"]+)"\s*,\s*"([^"]*)"\s*\)', src
-    )
-    return dict(pairs)
-
-
 def test_template_is_valid_properties_file():
     conf = _template_conf()
     assert len(conf) > 20
@@ -74,22 +52,27 @@ def test_template_is_valid_properties_file():
 
 
 def test_template_matches_session_semantics():
-    # every literal config session.py pins (minus local-only sizing)
-    # must appear in the template with the SAME value — the cluster
-    # must run under the semantics the oracle gate verified
+    # every SQL-semantics conf both session factories apply must appear
+    # in the template with the SAME value — the cluster must run under
+    # the semantics the oracle gate verified. get_spark's local-only
+    # sizing (shuffle partitions, driver memory, UI, codegen cache,
+    # checkpoint manager) is not in the table.
     conf = _template_conf()
-    for k, v in _session_literal_confs().items():
-        if k in LOCAL_ONLY:
-            continue
+    assert len(SESSION_CONF) >= 8
+    for k, v in SESSION_CONF.items():
         assert k in conf, f"session.py pins {k} but template omits it"
         assert conf[k] == v, f"{k}: template={conf[k]!r} session.py={v!r}"
 
 
-def test_template_numeric_confs_match_session_values():
+def test_template_numeric_confs_match_session_values(spark):
     # autoBroadcastJoinThreshold is built from an int expression in
     # session.py — compare against the module constant, not a regex
     conf = _template_conf()
     assert conf["spark.sql.autoBroadcastJoinThreshold"] == str(64 * 1024 * 1024)
+    # the codegen cache is a static builder conf of get_spark, outside
+    # the semantics table: compare against the live session's value
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert conf[key] == spark.conf.get(key)
 
 
 def test_template_carries_cluster_md_claims():

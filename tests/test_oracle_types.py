@@ -13,6 +13,9 @@ class extinct:
 2. every `queries()` entry's Spark schema must carry no DecimalType
    anywhere (top level or nested) — the mirror-image hazard.
 
+The same registry build also feeds a plan lint: no query's optimized
+plan may split text inside a lambda body (see text.tokens).
+
 DESCRIBE is static typing (no execution), so both lints are cheap
 enough to run over all ~220 registry entries every pytest run.
 """
@@ -20,6 +23,7 @@ enough to run over all ~220 registry entries every pytest run.
 from __future__ import annotations
 
 import duckdb
+import pytest
 
 import __spark_entry__ as em
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.catalog import TABLES
@@ -119,17 +123,61 @@ def _no_decimal(dt) -> list:
     return []
 
 
-def test_every_spark_query_schema_is_decimal_free(spark):
-    # constructing the DataFrame is enough — schema comes from plan
-    # analysis (streaming-drain builders do execute, so this test
-    # carries most of the file's runtime)
+@pytest.fixture(scope="module")
+def registry_frames(spark):
+    """Every registry query built once. Constructing the DataFrame is
+    enough for the lints below — schema and plans come from analysis
+    (streaming-drain builders do execute, so this build carries most
+    of the file's runtime)."""
+    return {name: fn(spark, SF) for name, fn in em.queries().items()}
+
+
+def test_every_spark_query_schema_is_decimal_free(registry_frames):
     bad = []
-    for name, fn in em.queries().items():
-        df = fn(spark, SF)
+    for name, df in registry_frames.items():
         for field in df.schema.fields:
             for b in _no_decimal(field.dataType):
                 bad.append(f"{name}.{field.name}: {b}")
     assert not bad, f"Spark DecimalType emitters: {bad}"
+
+
+def _lambda_bodies(plan: str):
+    """The text of every ``lambdafunction(...)`` in a plan string."""
+    key = "lambdafunction("
+    start = plan.find(key)
+    while start >= 0:
+        depth = 0
+        for end in range(start + len(key) - 1, len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        yield plan[start : end + 1]
+        start = plan.find(key, start + 1)
+
+
+def test_no_query_splits_inside_a_lambda(spark, registry_frames):
+    """An expression closed over by a lambda runs once per ELEMENT, so a
+    split inside a transform/filter/aggregate body re-tokenizes the
+    document once per n-gram. Text paths project text.tokens into a
+    column first; Catalyst keeps that projection, and the lambda then
+    reads a column reference."""
+    key = "spark.sql.debug.maxToStringFields"
+    was = spark.conf.get(key)
+    spark.conf.set(key, "1000000")  # no projection list elided
+    try:
+        bad = [
+            name
+            for name, df in registry_frames.items()
+            if any(
+                "split(" in body
+                for body in _lambda_bodies(
+                    df._jdf.queryExecution().optimizedPlan().toString()
+                )
+            )
+        ]
+    finally:
+        spark.conf.set(key, was)
+    assert not bad, f"split() inside a lambda body: {bad}"
 
 
 # ---- r11: int64-headroom lint (VERDICT r10 #4) --------------------

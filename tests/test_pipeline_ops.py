@@ -85,6 +85,22 @@ def test_contamination_broadcasts_eval_side(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_doc_ngrams_edge_rows(spark):
+    """One row per distinct n-gram per document. A document shorter than
+    n is one n-gram, its whole token list, so blank text gives the empty
+    n-gram "" as in the decontamination oracle. NULL text gives "" too,
+    where the oracle gives no n-gram."""
+    docs = spark.createDataFrame(
+        [(1, None), (2, "   "), (3, ""), (4, "a b"), (5, "a b c d"), (6, "\ta b"), (7, "x y x y")],
+        "doc_id bigint, text string",
+    )
+    got = sorted(tuple(r) for r in decontam.doc_ngrams(docs, "doc_id", "text", 3).collect())
+    assert got == [
+        (1, ""), (2, ""), (3, ""), (4, "a b"), (5, "a b c"), (5, "b c d"),
+        (6, " a b"), (7, "x y x"), (7, "y x y"),
+    ]
+
+
 # ------------------------------------------------------------ merge
 
 

@@ -38,6 +38,50 @@ def test_factories_agree_on_gate_confs(spark):
         assert spark.conf.get(conf) == want, conf
 
 
+# Each factory's effective confs. A change here changes the engine's
+# semantics or sizing, not just how session.py spells them.
+SEMANTICS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.ansi.enabled": "false",
+    "spark.sql.legacy.sizeOfNull": "false",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+# get_spark's builder-only confs
+BUILDER_ONLY = {
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
+    "spark.ui.enabled": "false",
+    "spark.sql.codegen.cache.maxEntries": "512",
+}
+
+
+def test_factories_effective_confs(spark):
+    for k, v in {**SEMANTICS, **BUILDER_ONLY}.items():
+        assert spark.conf.get(k) == v, k
+    # configure_session sets the semantics on a session that lacks them
+    # and leaves get_spark's builder confs alone (the static ones cannot
+    # be unset per session)
+    session = spark.newSession()
+    runtime_builder = [
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.streaming.checkpointFileManagerClass",
+    ]
+    for k in [*SEMANTICS, *runtime_builder]:
+        session.conf.unset(k)
+    configure_session(session)
+    for k, v in SEMANTICS.items():
+        assert session.conf.get(k) == v, k
+    for k in runtime_builder:
+        assert session.conf.get(k, None) != BUILDER_ONLY[k], k
+
+
 def test_configure_session_leaves_checkpoint_manager_unset(spark):
     """Only get_spark's local sessions commit checkpoints through the
     FileSystem manager; a cluster session keeps Spark's default, whose

@@ -10,6 +10,19 @@ def one(spark, t, col):
     return df.select(col(F.col("text")).alias("v")).collect()[0]["v"]
 
 
+def on_tokens(spark, texts, col):
+    """``col`` of each text's token column, projected first the way the
+    engine's text paths do; one value per text, in order."""
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    toks = df.select("i", text.tokens(F.col("text")).alias("_toks"))
+    rows = toks.select("i", col(F.col("_toks")).alias("v")).collect()
+    return [r["v"] for r in sorted(rows)]
+
+
+def bigrams(toks):
+    return text.ngrams_from_tokens(toks, 2)
+
+
 def test_token_count(spark):
     assert one(spark, "a b  c", text.token_count) == 3
     assert one(spark, "", text.token_count) == 0
@@ -77,20 +90,43 @@ def test_gopher_flags_each_rule(spark):
 
 def test_duplicate_bigram_fraction(spark):
     # "x y x y x y": bigrams = [x y, y x, x y, y x, x y] -> 5 total, 2 distinct
-    def frac(t):
-        return text.duplicate_bigram_fraction_from_bigrams(text.bigrams(t))
+    def frac(toks):
+        return text.duplicate_bigram_fraction_from_bigrams(bigrams(toks))
 
-    v = one(spark, "x y x y x y", frac)
+    v, unique, single, empty = on_tokens(
+        spark, ["x y x y x y", "unique words only here", "single", ""], frac
+    )
     assert abs(v - (1.0 - 2.0 / 5.0)) < 1e-9
-    assert one(spark, "unique words only here", frac) == 0.0
-    assert one(spark, "single", frac) == 0.0
-    assert one(spark, "", frac) == 0.0
+    assert unique == 0.0
+    assert single == 0.0
+    assert empty == 0.0
 
 
 def test_bigrams_guard_short_docs(spark):
-    assert one(spark, "", text.bigrams) == []
-    assert one(spark, "one", text.bigrams) == []
-    assert one(spark, "one two", text.bigrams) == ["one two"]
+    assert on_tokens(spark, ["", "one", "one two"], bigrams) == [
+        [],
+        [],
+        ["one two"],
+    ]
+
+
+def test_ngrams_from_tokens_edge_rows(spark):
+    """NULL text and documents shorter than n tokens give no n-grams;
+    blank text is one empty token, and a leading non-space whitespace
+    char tokenizes to a leading empty token (trim strips spaces only)."""
+    texts = [None, "   ", "", "a b", "a b c d", "\ta b", "x y x y"]
+    assert on_tokens(spark, texts, lambda t: text.ngrams_from_tokens(t, 1)) == [
+        [], [""], [""], ["a", "b"], ["a", "b", "c", "d"], ["", "a", "b"],
+        ["x", "y", "x", "y"],
+    ]
+    assert on_tokens(spark, texts, bigrams) == [
+        [], [], [], ["a b"], ["a b", "b c", "c d"], [" a", "a b"],
+        ["x y", "y x", "x y"],
+    ]
+    assert on_tokens(spark, texts, lambda t: text.ngrams_from_tokens(t, 3)) == [
+        [], [], [], [], ["a b c", "b c d"], [" a b"], ["x y x", "y x y"],
+    ]
+    assert on_tokens(spark, texts, lambda t: text.ngrams_from_tokens(t, 8)) == [[]] * 7
 
 
 def test_doc_perplexity_ranks_formulaic_below_novel(spark):

@@ -16,13 +16,17 @@ of the oracle gate's JSON reports and of bench.py / perfbench results.
 from __future__ import annotations
 
 import hashlib
+import os
 import subprocess
 import time
+
+# the checkout this module lives in, whatever the caller's working directory
+CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _git(*args: str) -> str:
     return subprocess.run(
-        ["git", *args], capture_output=True, text=True, cwd=None
+        ["git", *args], capture_output=True, text=True, cwd=CHECKOUT
     ).stdout
 
 
