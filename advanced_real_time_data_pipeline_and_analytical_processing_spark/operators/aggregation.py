@@ -63,11 +63,10 @@ def ewma_final(
     key_col: str,
     order_cols: list[str],
     value_col: str,
-    alpha: float = 0.2,
 ):
     """Per-key exponentially-weighted moving average (final value):
-    y_0 = x_0; y_t = (1-alpha)*y_{t-1} + alpha*x_t over rows ordered
-    by ``order_cols``.
+    y_0 = x_0; y_t = (1-alpha)*y_{t-1} + alpha*x_t with alpha = 0.2,
+    over rows ordered by ``order_cols``.
 
     This is a SEQUENTIAL RECURRENCE — the one aggregate shape window
     frames can't express (the closed form needs (1-alpha)^(-i) terms
@@ -85,6 +84,7 @@ def ewma_final(
 
     Returns (key, ewma) with one row per key.
     """
+    alpha = 0.2
     one_minus = 1.0 - alpha  # same Python-double constant the loop used
     order_struct = F.struct(
         *[F.col(c) for c in order_cols], F.col(value_col).cast("double").alias("_x")
@@ -104,11 +104,9 @@ def holt_final(
     key_col: str,
     order_cols: list[str],
     value_col: str,
-    alpha: float = 0.3,
-    beta: float = 0.1,
 ):
     """Per-key Holt double-exponential smoothing (level + trend),
-    final state: l_1 = x_1, b_1 = 0; then
+    alpha = 0.3 and beta = 0.1, final state: l_1 = x_1, b_1 = 0; then
         l_t = alpha*x_t + (1-alpha)*(l_{t-1} + b_{t-1})
         b_t = beta*(l_t - l_{t-1}) + (1-beta)*b_{t-1}.
 
@@ -123,8 +121,8 @@ def holt_final(
     Returns (key, n_points, level, trend) — one row per key; the
     one-step-ahead forecast is level + trend.
     """
-    a, oma = alpha, 1.0 - alpha
-    be, omb = beta, 1.0 - beta
+    a, oma = 0.3, 1.0 - 0.3
+    be, omb = 0.1, 1.0 - 0.1
     order_struct = F.struct(
         *[F.col(c) for c in order_cols],
         F.col(value_col).cast("double").alias("_x"),
@@ -161,13 +159,11 @@ def holt_final(
     )
 
 
-def mad_outlier_stats(
-    df: DataFrame, group_col: str, value_col: str, k: float = 4.4478
-) -> DataFrame:
+def mad_outlier_stats(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Robust outlier audit per group via Median Absolute Deviation —
     the heavy-tail-safe alternative to z-scores (one wild value drags
     mean AND stddev, masking itself; the median pair doesn't budge).
-    k = 3 * 1.4826 makes the cut equivalent to 3 sigma under normality.
+    k = 3 * 1.4826 = 4.4478 makes the cut equivalent to 3 sigma under normality.
 
     Two grouped exact medians + one counting pass, each a single
     shuffle on the group key; the per-group stats (a few rows) come
@@ -191,7 +187,7 @@ def mad_outlier_stats(
             F.max("med").alias("med"),
             F.max("mad").alias("mad"),
             F.count(
-                F.when(F.col("adev") > F.lit(k) * F.col("mad"), 1)
+                F.when(F.col("adev") > F.lit(4.4478) * F.col("mad"), 1)
             ).alias("n_outliers"),
         )
     )
@@ -202,10 +198,9 @@ def capped_running_final(
     key_col: str,
     order_cols: list[str],
     delta_col: str,
-    floor: int = 0,
 ):
-    """Per-key floor-capped running balance (final value):
-    b_t = max(b_{t-1} + delta_t, floor) over rows ordered by
+    """Per-key zero-floored running balance (final value):
+    b_t = max(b_{t-1} + delta_t, 0) over rows ordered by
     ``order_cols`` — the inventory/credit-balance recurrence. Like
     ewma_final this is a sequential fold no window frame can express
     (the cap makes it non-linear), but the state is INTEGER, so the
@@ -213,7 +208,7 @@ def capped_running_final(
     float discipline needed at all.
 
     JVM-side rewrite of the recurrence via the prefix-sum identity
-        b_n = max(S_n, floor + S_n - min_{1<=k<=n} S_k)
+        b_n = max(S_n, S_n - min_{1<=k<=n} S_k)
     (S_k = sum of the first k deltas; property-verified against the
     step-by-step loop over 300 random sequences): one collect_list +
     array_sort per key, then a single F.aggregate fold carrying
@@ -235,6 +230,6 @@ def capped_running_final(
         ),
     )
     balance = F.greatest(
-        folded["rs"], F.lit(int(floor)) + folded["rs"] - folded["mn"]
+        folded["rs"], folded["rs"] - folded["mn"]
     ).cast("bigint")
     return df.groupBy(key_col).agg(balance.alias("balance"))

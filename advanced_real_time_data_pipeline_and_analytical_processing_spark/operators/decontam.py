@@ -35,11 +35,18 @@ from .dedup import shingles_from_tokens
 from .text import tokens
 
 
-def doc_ngrams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(id, ngram) pairs, one row per DISTINCT n-gram per document."""
-    return df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks")).select(
-        F.col(id_col),
-        F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("ngram"),
+def doc_ngrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, ngram) pairs, one row per DISTINCT word trigram per
+    document. NULL text has no n-gram, as in the SQL mirror (NULL never
+    equality-joins): it is dropped BEFORE tokenizing, as in
+    dedup._shingled."""
+    return (
+        df.filter(F.col(text_col).isNotNull())
+        .select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
+        .select(
+            F.col(id_col),
+            F.explode(shingles_from_tokens(F.col("_toks"), 3)).alias("ngram"),
+        )
     )
 
 
@@ -48,19 +55,18 @@ def contamination_report(
     eval_set: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
 ) -> DataFrame:
-    """Per-eval-doc contamination: how many train docs share an n-gram
-    with it, and how many distinct n-grams leak. Eval docs with no
-    overlap still appear (zero counts) so the report is a complete
-    audit, not just a hit list.
+    """Per-eval-doc contamination: how many train docs share a word
+    trigram with it, and how many distinct trigrams leak. Eval docs
+    with no overlap still appear (zero counts) so the report is a
+    complete audit, not just a hit list.
 
     Returns (eval_id, n_contaminated_train_docs, n_leaked_ngrams).
     """
-    train_grams = doc_ngrams(train, id_col, text_col, n).withColumnRenamed(
+    train_grams = doc_ngrams(train, id_col, text_col).withColumnRenamed(
         id_col, "_train_id"
     )
-    eval_grams = doc_ngrams(eval_set, id_col, text_col, n).withColumnRenamed(
+    eval_grams = doc_ngrams(eval_set, id_col, text_col).withColumnRenamed(
         id_col, "_eval_id"
     )
     # Broadcast the eval side: the corpus never shuffles.

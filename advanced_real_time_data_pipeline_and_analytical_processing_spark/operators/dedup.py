@@ -27,6 +27,10 @@ from advanced_real_time_data_pipeline_and_analytical_processing_spark.plans.mate
 
 from .text import tokens
 
+# minhash_near_dup's LSH shape: 16 bands of 4 signature rows
+NUM_HASHES = 64
+BANDS = 16
+
 
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     """Distinct word n-grams of a projected token-array column (see
@@ -88,25 +92,23 @@ def _sig_from_shingles(shingle_col: str, num_hashes: int) -> Column:
     return F.array(*[_min_hash(j) for j in range(num_hashes)])
 
 
-def _spread(df: DataFrame, id_col: str, num_partitions: int | None) -> DataFrame:
+def _spread(df: DataFrame, id_col: str) -> DataFrame:
     """Hash-repartition on id so per-row signature work uses the whole
     cluster even when the source has few splits (one small parquet file
     locally; at 100 TB the scan already yields thousands of splits). The
     exchange is also reused by every consumer of the lineage — the LSH
     self-join and the verify join read it instead of re-scanning."""
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, F.col(id_col))
 
 
 def minhash_candidate_pairs(
     signatures: DataFrame,
     id_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
     bucket_cap: int | None = None,
 ) -> DataFrame:
-    """LSH banding: split each signature into ``bands`` bands of
-    ``num_hashes/bands`` rows, hash each band, self-join per
+    """LSH banding: split each NUM_HASHES signature into BANDS bands of
+    NUM_HASHES/BANDS rows, hash each band, self-join per
     (band_idx, band_hash) bucket. Returns distinct (id_a < id_b) pairs.
 
     HASH collisions between distinct contents are rare and bounded —
@@ -128,14 +130,14 @@ def minhash_candidate_pairs(
        bound pattern as graph.cooccurrence_edges. Default ``None``
        preserves exact candidate semantics for oracle-mirrored use.
     """
-    rows = num_hashes // bands
+    rows = NUM_HASHES // BANDS
     band_entries = signatures.select(
         F.col(id_col),
         F.posexplode(
             F.array(
                 *[
                     F.hash(F.concat_ws(",", *[F.col("sig")[b * rows + r].cast("string") for r in range(rows)]))
-                    for b in range(bands)
+                    for b in range(BANDS)
                 ]
             )
         ).alias("band_idx", "band_hash"),
@@ -175,15 +177,11 @@ def minhash_near_dup(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    threshold: float = 0.7,
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates verified with exact
-    shingle Jaccard (computed only for candidate pairs). Returns
-    (id_a, id_b, jaccard_sim) with jaccard_sim >= threshold.
+    word-trigram Jaccard (computed only for candidate pairs). Returns
+    (id_a, id_b, jaccard_sim) with jaccard_sim >= 0.9.
 
     The (id, shingles) frame feeds three consumers (signature build,
     verify join id_a side, verify join id_b side); materialize()
@@ -193,12 +191,12 @@ def minhash_near_dup(
     duplicate_clusters: blocks are freed when the driver GCs the
     plan; on a fault-tolerant cluster run, swap for persist(DISK) if
     executor loss must be survivable mid-query."""
-    base = _spread(df.select(F.col(id_col), F.col(text_col)), id_col, None)
-    shingled = _shingled(base, id_col, text_col, shingle_n, "_shingles").transform(materialize)
+    base = _spread(df.select(F.col(id_col), F.col(text_col)), id_col)
+    shingled = _shingled(base, id_col, text_col, 3, "_shingles").transform(materialize)
     sigs = shingled.select(
-        id_col, _sig_from_shingles("_shingles", num_hashes).alias("sig")
+        id_col, _sig_from_shingles("_shingles", NUM_HASHES).alias("sig")
     )
-    pairs = minhash_candidate_pairs(sigs, id_col, num_hashes, bands, bucket_cap)
+    pairs = minhash_candidate_pairs(sigs, id_col, bucket_cap)
     return (
         pairs.join(shingled.withColumnRenamed(id_col, "id_a").withColumnRenamed("_shingles", "_sa"), "id_a")
         .join(shingled.withColumnRenamed(id_col, "id_b").withColumnRenamed("_shingles", "_sb"), "id_b")
@@ -207,7 +205,7 @@ def minhash_near_dup(
             "id_b",
             F.round(jaccard(F.col("_sa"), F.col("_sb")), 6).alias("jaccard_sim"),
         )
-        .filter(F.col("jaccard_sim") >= threshold)
+        .filter(F.col("jaccard_sim") >= 0.9)
     )
 
 
@@ -223,16 +221,14 @@ def token_md5s(text_col: Column) -> Column:
     return F.transform(F.array_distinct(tokens(text_col)), lambda t: F.md5(t))
 
 
-def simhash_votes_vector(
-    md5s_col: Column, bits: int = PORTABLE_SIMHASH_BITS
-) -> Column:
-    """All ``bits`` signed votes in ONE fold over the token-md5 array:
+def simhash_votes_vector(md5s_col: Column) -> Column:
+    """All 32 signed votes in ONE fold over the token-md5 array:
     accumulator = array<int> of vote sums, each step zip_adds the
-    per-digit votes of one md5. Replaces ``bits`` independent
-    per-bit folds (each rescanning the array) with a single pass —
-    ~bits× less expression work per row."""
-    zeros = F.array_repeat(F.lit(0), bits)
-    digits = F.sequence(F.lit(1), F.lit(bits))
+    per-digit votes of one md5. Replaces 32 independent per-bit
+    folds (each rescanning the array) with a single pass — ~32× less
+    expression work per row."""
+    zeros = F.array_repeat(F.lit(0), PORTABLE_SIMHASH_BITS)
+    digits = F.sequence(F.lit(1), F.lit(PORTABLE_SIMHASH_BITS))
 
     def step(acc: Column, m: Column) -> Column:
         digit_votes = F.transform(
@@ -244,14 +240,14 @@ def simhash_votes_vector(
     return F.aggregate(md5s_col, zeros, step)
 
 
-def simhash_from_votes_vector(
-    votes_col: Column, bits: int = PORTABLE_SIMHASH_BITS
-) -> Column:
+def simhash_from_votes_vector(votes_col: Column) -> Column:
     """bigint fingerprint straight from the votes ARRAY: one
-    zip-with-powers fold instead of ``bits`` extracted columns + a
-    ``bits``-term sum — a far smaller expression tree (2x faster warm,
-    and cheaper to codegen-compile, than the column-wise form)."""
-    powers = F.array(*[F.lit(1 << j).cast("bigint") for j in range(bits)])
+    zip-with-powers fold instead of 32 extracted columns + a 32-term
+    sum — a far smaller expression tree (2x faster warm, and cheaper
+    to codegen-compile, than the column-wise form)."""
+    powers = F.array(
+        *[F.lit(1 << j).cast("bigint") for j in range(PORTABLE_SIMHASH_BITS)]
+    )
     return F.aggregate(
         F.zip_with(
             votes_col,
@@ -267,7 +263,6 @@ def duplicate_clusters(
     pairs: DataFrame,
     vertices: DataFrame,
     id_col: str,
-    max_iter: int = 20,
 ) -> DataFrame:
     """Connected components over near-dup pairs: every id gets
     ``cluster_id`` = the minimum id reachable through the pair graph —
@@ -281,11 +276,11 @@ def duplicate_clusters(
     labels, the label OF its label node). The neighbor step alone
     converges in O(diameter) rounds, which is NOT scale-safe: the r6
     full-registry sf1.0 sweep caught a 60-member identical-text group
-    whose lead()-chained edges form a 60-node path — diameter 60 >
-    max_iter, so the loop returned unconverged labels (10x the true
+    whose lead()-chained edges form a 60-node path — diameter 60 > the
+    20-round cap, so the loop returned unconverged labels (10x the true
     cluster count). The label-of-label shortcut halves remaining path
-    length per round, so convergence is O(log diameter) — max_iter=20
-    covers diameters up to ~2^20 at two shuffles per round instead of
+    length per round, so convergence is O(log diameter) — 20 rounds
+    cover diameters up to ~2^20 at two shuffles per round instead of
     one. Each round ends with a materialize_round() lineage cut —
     without it the plan doubles per iteration and the 100 TB run dies
     in the optimizer long before the executors. The convergence probe
@@ -313,7 +308,7 @@ def duplicate_clusters(
     ).transform(materialize)
     labels0 = labels  # handle to the initial frame for end-of-loop release
     prev = None  # previous round's eager frame, released once superseded
-    for _ in range(max_iter):
+    for _ in range(20):
         nbr_min = (
             edges.join(labels, edges._src == labels._vid)
             .select(F.col("_dst").alias("_vid"), "_label")
@@ -462,25 +457,20 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_n: int = 3,
-    threshold: float = 0.8,
-    num_partitions: int | None = None,
     length_bucketing: bool = True,
     block_cap: int | None = None,
 ) -> DataFrame:
-    """Exact word-shingle Jaccard near-dup pairs over blocked
+    """Exact word-trigram Jaccard near-dup pairs over blocked
     candidates (see _ngram_blocked_pairs for the skew-hardening
-    scheme). Returns (id_a, id_b, jaccard_sim) >= threshold.
+    scheme). Returns (id_a, id_b, jaccard_sim) >= 0.8.
 
     Same fetch-payload-late shape as minhash_near_dup: the shingled
     frame is materialized once (materialize(): persist), the blocked
     self-join shuffles only light (id, block, bucket, tag) rows, and
     the shingle arrays come back via id joins for the verify only."""
-    base = _spread(df.select(F.col(id_col), F.col(text_col)), id_col, num_partitions)
-    shingled = _shingled(base, id_col, text_col, shingle_n, "_shingles").transform(materialize)
-    cand = _ngram_blocked_pairs(
-        shingled, id_col, threshold, length_bucketing, block_cap
-    )
+    base = _spread(df.select(F.col(id_col), F.col(text_col)), id_col)
+    shingled = _shingled(base, id_col, text_col, 3, "_shingles").transform(materialize)
+    cand = _ngram_blocked_pairs(shingled, id_col, 0.8, length_bucketing, block_cap)
     return (
         cand.join(
             shingled.withColumnRenamed(id_col, "id_a").withColumnRenamed(
@@ -499,7 +489,7 @@ def ngram_jaccard_pairs(
             "id_b",
             F.round(jaccard(F.col("_sa"), F.col("_sb")), 6).alias("jaccard_sim"),
         )
-        .filter(F.col("jaccard_sim") >= threshold)
+        .filter(F.col("jaccard_sim") >= 0.8)
     )
 
 
@@ -577,22 +567,18 @@ def overlap_coefficient_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_n: int = 3,
-    threshold: float = 0.9,
-    df_cap: int = 50,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Containment / overlap-coefficient near-dup pairs:
-    |A∩B| / min(|A|,|B|) over distinct word shingles — the ASYMMETRIC
+    |A∩B| / min(|A|,|B|) over distinct word trigrams — the ASYMMETRIC
     complement to Jaccard: a 12-token quote inside a 500-token document
     scores 1.0 here but near 0 on Jaccard, so this is the detector for
     quotes, excerpts, and boilerplate embedded in longer documents
     (where jaccard-style length bucketing is exactly wrong).
 
     Candidates = pairs sharing at least one RARE shingle (document
-    frequency <= the ABSOLUTE ``df_cap``) from an inverted-index
+    frequency <= the ABSOLUTE cap of 20) from an inverted-index
     equi-join — the sparse-cosine play: the absolute cap bounds the
-    join fan-out to sum(df^2) <= df_cap * postings, LINEAR in corpus
+    join fan-out to sum(df^2) <= 20 * postings, LINEAR in corpus
     size (a fractional cap grows with N and goes quadratic at scale),
     and a pair whose overlap consists ONLY of corpus-common shingles
     carries no containment specificity to begin with.
@@ -600,7 +586,7 @@ def overlap_coefficient_pairs(
     On top of the rare-shingle index sits PREFIX FILTERING (the
     set-similarity-join standard, Vernica et al.): one side of the
     candidate join posts only each document's first
-    floor((1-t)*n)+2 rare shingles in rarest-first (df, shingle)
+    floor((1-t)*n)+2 rare shingles (t = 0.9) in rarest-first (df, shingle)
     canonical order (n = the doc's distinct-shingle count; the +2
     covers float-floor ulp error). A pair reaching overlap >= t on
     its smaller side can miss at most floor((1-t)*n_small) of the
@@ -615,10 +601,10 @@ def overlap_coefficient_pairs(
 
     Exact |A∩B| verify runs on candidates only, fetch-payload-late
     (the shingle arrays never enter the candidate shuffle). Returns
-    (id_a, id_b, overlap_coef) >= threshold.
+    (id_a, id_b, overlap_coef) >= 0.9.
     """
-    base = _spread(df.select(F.col(id_col), F.col(text_col)), id_col, num_partitions)
-    sh = _shingled(base, id_col, text_col, shingle_n, "_shingles").transform(materialize)
+    base = _spread(df.select(F.col(id_col), F.col(text_col)), id_col)
+    sh = _shingled(base, id_col, text_col, 3, "_shingles").transform(materialize)
     postings = sh.select(
         F.col(id_col), F.size("_shingles").alias("_n"), F.explode("_shingles").alias("_s")
     )
@@ -633,14 +619,14 @@ def overlap_coefficient_pairs(
     # shuffle (the per-shingle df aggregate), same §2.4 rule as every
     # other dedup barrier.
     rare = postings.join(
-        dfreq.filter(F.col("_df") <= F.lit(int(df_cap))), "_s"
+        dfreq.filter(F.col("_df") <= F.lit(20)), "_s"
     ).transform(materialize)
     w = Window.partitionBy(id_col).orderBy(F.col("_df").asc(), F.col("_s").asc())
     prefix = (
         rare.withColumn("_rn", F.row_number().over(w))
         .filter(
             F.col("_rn")
-            <= F.floor((1.0 - float(threshold)) * F.col("_n")).cast("int") + 2
+            <= F.floor((1.0 - 0.9) * F.col("_n")).cast("int") + 2
         )
         .select(F.col(id_col).alias("id_a"), "_s")
     )
@@ -670,5 +656,5 @@ def overlap_coefficient_pairs(
             "id_b",
         )
         .select("id_a", "id_b", score.alias("overlap_coef"))
-        .filter(F.col("overlap_coef") >= threshold)
+        .filter(F.col("overlap_coef") >= 0.9)
     )

@@ -12,52 +12,31 @@ in exactly the block keyed by the left side's length.
 
 Cost shape at 100 TB: constant (2d+1) fan-out map + one shuffle on the
 length key + per-block equi-joined candidate verify (levenshtein runs
-JVM-side, codegen'd, only on candidates). Length blocks can be large;
-``extra_block`` tightens them with any additional EXACT-match key the
-domain guarantees (e.g. country code) without breaking completeness.
+JVM-side, codegen'd, only on candidates).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def fuzzy_self_pairs(
-    df: DataFrame,
-    col: str,
-    max_dist: int = 2,
-    extra_block: Column | None = None,
-) -> DataFrame:
+def fuzzy_self_pairs(df: DataFrame, col: str) -> DataFrame:
     """(val_a, val_b, dist): all UNORDERED pairs of distinct values of
-    ``col`` with levenshtein(val_a, val_b) <= max_dist, val_a < val_b.
-    Lossless by the length-band argument above — the oracle checks this
-    against a brute-force cross join."""
+    ``col`` with levenshtein(val_a, val_b) <= 3, val_a < val_b.
+    Lossless by the length-band argument above (d = 3) — the oracle
+    checks this against a brute-force cross join."""
     vals = df.select(F.col(col).alias("val")).filter(F.col("val").isNotNull()).distinct()
-    if extra_block is not None:
-        vals = vals.withColumn("_xb", extra_block)
-    left = vals.select(
-        F.col("val").alias("val_a"),
-        F.length("val").alias("_blk"),
-        *([F.col("_xb").alias("_xba")] if extra_block is not None else []),
-    )
+    left = vals.select(F.col("val").alias("val_a"), F.length("val").alias("_blk"))
     right = vals.select(
         F.col("val").alias("val_b"),
-        F.explode(
-            F.sequence(
-                F.length("val") - max_dist, F.length("val") + max_dist
-            )
-        ).alias("_blk"),
-        *([F.col("_xb").alias("_xbb")] if extra_block is not None else []),
+        F.explode(F.sequence(F.length("val") - 3, F.length("val") + 3)).alias("_blk"),
     )
-    cond = [left["_blk"] == right["_blk"]]
-    if extra_block is not None:
-        cond.append(F.col("_xba") == F.col("_xbb"))
     return (
-        left.join(right, cond[0] if len(cond) == 1 else cond[0] & cond[1])
+        left.join(right, left["_blk"] == right["_blk"])
         .filter(F.col("val_a") < F.col("val_b"))
         .withColumn("dist", F.levenshtein("val_a", "val_b"))
-        .filter(F.col("dist") <= max_dist)
+        .filter(F.col("dist") <= 3)
         .select("val_a", "val_b", "dist")
         .distinct()
     )

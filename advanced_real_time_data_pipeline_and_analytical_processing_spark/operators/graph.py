@@ -33,56 +33,53 @@ from advanced_real_time_data_pipeline_and_analytical_processing_spark.plans.mate
     release,
 )
 
+# PageRank in micro-probability mass, shared by the driver loop and its
+# SQL mirror: ITERS rounds from INIT, each v gets BASE plus
+# (pr(u) * DAMP_NUM) div (deg(u) * DAMP_DEN) from every in-neighbor
+ITERS = 5
+BASE = 150_000
+DAMP_NUM = 85
+DAMP_DEN = 100
+INIT = 1_000_000
+# BFS rounds, shared by bfs_min_dist and bfs_oracle_sql
+MAX_DEPTH = 3
 
-def cooccurrence_edges(
-    cells: DataFrame,
-    id_col: str = "user_id",
-    cell_col: str = "_cell",
-    cap_per_cell: int | None = 64,
-) -> DataFrame:
+
+def cooccurrence_edges(cells: DataFrame) -> DataFrame:
     """Undirected co-occurrence edge list (u, v with u < v) from
-    (id, cell) membership rows: one edge per id pair sharing a cell.
+    (user_id, _cell) membership rows: one edge per user pair sharing a
+    cell.
 
     The naive self-join is |cell|² per cell — at 100 TB one viral cell
-    with 10⁵ members is 10¹⁰ pairs from a single key. ``cap_per_cell``
-    bounds that: each cell keeps only its ``cap`` smallest ids
-    (deterministic row_number, so any oracle can mirror the exact
-    construction), giving a worst-case fan-out of cap·(cap−1)/2 pairs
-    per cell — 2016 pairs at the default cap=64 — independent of how
-    hot the cell is. The row_number ranking is one window sort
-    partitioned by cell (same shuffle key the join needs anyway).
-    Pass ``cap_per_cell=None`` for the uncapped join when cells are
-    known-bounded by construction.
+    with 10⁵ members is 10¹⁰ pairs from a single key. A cap bounds
+    that: each cell keeps only its 64 smallest ids (deterministic
+    row_number, so any oracle can mirror the exact construction),
+    giving a worst-case fan-out of 64·63/2 = 2016 pairs per cell,
+    independent of how hot the cell is. The row_number ranking is one
+    window sort partitioned by cell (same shuffle key the join needs
+    anyway).
     """
-    cells = cells.select(id_col, cell_col).distinct()
-    if cap_per_cell is not None:
-        w = Window.partitionBy(cell_col).orderBy(F.col(id_col).asc())
-        cells = (
-            cells.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= cap_per_cell)
-            .drop("_rn")
-        )
+    cells = cells.select("user_id", "_cell").distinct()
+    w = Window.partitionBy("_cell").orderBy(F.col("user_id").asc())
+    cells = (
+        cells.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= 64)
+        .drop("_rn")
+    )
     a, b = cells.alias("a"), cells.alias("b")
     return (
         a.join(
             b,
-            (F.col(f"a.{cell_col}") == F.col(f"b.{cell_col}"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            (F.col("a._cell") == F.col("b._cell"))
+            & (F.col("a.user_id") < F.col("b.user_id")),
         )
-        .select(F.col(f"a.{id_col}").alias("u"), F.col(f"b.{id_col}").alias("v"))
+        .select(F.col("a.user_id").alias("u"), F.col("b.user_id").alias("v"))
         .distinct()
     )
 
 
-def pagerank_micro(
-    edges: DataFrame,
-    iters: int = 5,
-    base: int = 150_000,
-    damp_num: int = 85,
-    damp_den: int = 100,
-    init: int = 1_000_000,
-) -> DataFrame:
-    """(node, pr_micro) after ``iters`` rounds over an UNDIRECTED edge
+def pagerank_micro(edges: DataFrame) -> DataFrame:
+    """(node, pr_micro) after ITERS rounds over an UNDIRECTED edge
     list (u, v) — each edge contributes in both directions. Nodes are
     those incident to an edge (an isolated node never exchanges mass).
     """
@@ -98,32 +95,32 @@ def pagerank_micro(
     # the |V|-row rank side. Locally AQE broadcasts the small rank
     # table either way (A/B at sf1.0: identical checksums, equal time);
     # at cluster scale where ranks exceed the broadcast threshold this
-    # removes iters× full-edge shuffles. persist keeps lineage, so a
+    # removes ITERS× full-edge shuffles. persist keeps lineage, so a
     # lost executor recomputes the shallow join instead of failing.
     ed = persist_on_key(dir_edges.join(deg, "u"), "u")
-    ranks = deg.select("u", F.lit(init).cast("bigint").alias("pr"))
+    ranks = deg.select("u", F.lit(INIT).cast("bigint").alias("pr"))
     prev = None  # previous round's materialized frame, released per round
-    for i in range(iters):
+    for i in range(ITERS):
         contrib = (
             ed.join(ranks, "u")
             .select(
                 F.col("v").alias("u"),
-                F.expr(f"(pr * {damp_num}) div (_d * {damp_den})").alias("_c"),
+                F.expr(f"(pr * {DAMP_NUM}) div (_d * {DAMP_DEN})").alias("_c"),
             )
             .groupBy("u")
             .agg(F.sum("_c").alias("_in"))
         )
         ranks = contrib.select(
-            "u", (F.lit(base).cast("bigint") + F.col("_in")).alias("pr")
+            "u", (F.lit(BASE).cast("bigint") + F.col("_in")).alias("pr")
         )
         # r14 OPTIMIZATION: unlike the label-propagation loop (previous
         # round on BOTH sides of its join -> plan doubles per round),
         # ranks appears exactly ONCE per round, so the un-materialized
-        # plan is a LINEAR chain of depth iters — no blow-up to cut. In
+        # plan is a LINEAR chain of depth ITERS — no blow-up to cut. In
         # non-durable mode let the whole chain run as ONE job (all
         # rounds pipeline through AQE; no per-round barrier job, no
         # per-round RDD scan with unknown stats); a barrier every 8
-        # rounds still bounds optimizer/codegen depth for large iters.
+        # rounds still bounds optimizer/codegen depth for more rounds.
         # Durable mode keeps the per-round reliable checkpoint —
         # executor churn there must not replay the whole chain.
         # Measured (sf0.1 solo medians of 5): user_pagerank 4.27 ->
@@ -140,15 +137,8 @@ def pagerank_micro(
     return ranks.select(F.col("u").alias("node"), F.col("pr").alias("pr_micro"))
 
 
-def pagerank_oracle_sql(
-    edges_sql: str,
-    iters: int = 5,
-    base: int = 150_000,
-    damp_num: int = 85,
-    damp_den: int = 100,
-    init: int = 1_000_000,
-) -> str:
-    """The identical computation as ``iters`` chained CTE rounds (no
+def pagerank_oracle_sql(edges_sql: str) -> str:
+    """The identical computation as ITERS chained CTE rounds (no
     recursive CTE needed — unrolled, like the engine's driver loop).
     ``edges_sql`` must yield columns (u, v), one row per undirected
     edge."""
@@ -156,13 +146,13 @@ def pagerank_oracle_sql(
         f"WITH edges AS ({edges_sql})",
         "dir_e AS (SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges)",
         "deg AS (SELECT u, count(*) AS d FROM dir_e GROUP BY u)",
-        f"pr0 AS (SELECT u, CAST({init} AS BIGINT) AS pr FROM deg)",
+        f"pr0 AS (SELECT u, CAST({INIT} AS BIGINT) AS pr FROM deg)",
     ]
-    for i in range(iters):
+    for i in range(ITERS):
         parts.append(
             f"""pr{i + 1} AS (
                 SELECT e.v AS u,
-                       {base} + sum((p.pr * {damp_num}) // (d.d * {damp_den})) AS pr
+                       {BASE} + sum((p.pr * {DAMP_NUM}) // (d.d * {DAMP_DEN})) AS pr
                 FROM pr{i} p
                 JOIN dir_e e ON p.u = e.u
                 JOIN deg d ON p.u = d.u
@@ -171,14 +161,14 @@ def pagerank_oracle_sql(
         )
     return (
         ", ".join(parts)
-        + f" SELECT u AS node, pr AS pr_micro FROM pr{iters}"
+        + f" SELECT u AS node, pr AS pr_micro FROM pr{ITERS}"
     )
 
 
-def bfs_min_dist(edges: DataFrame, max_depth: int = 3) -> DataFrame:
+def bfs_min_dist(edges: DataFrame) -> DataFrame:
     """(node, dist) — minimum hop distance from the seed node (the
     globally smallest node id, which always appears in column u of the
-    u<v edge list) over the UNDIRECTED edges, up to ``max_depth`` hops.
+    u<v edge list) over the UNDIRECTED edges, up to MAX_DEPTH hops.
 
     Same driver-loop shape as :func:`pagerank_micro`: each round is one
     frontier-expand join + an anti-join against the visited set (both
@@ -199,7 +189,7 @@ def bfs_min_dist(edges: DataFrame, max_depth: int = 3) -> DataFrame:
     frontier = visited.select("node")
     prev_visited = None  # released once the round's successors are durable
     prev_nxt = None
-    for d in range(1, max_depth + 1):
+    for d in range(1, MAX_DEPTH + 1):
         nxt = (
             frontier.join(dir_e, frontier.node == dir_e.u)
             .select(F.col("v").alias("node"))
@@ -235,7 +225,7 @@ def bfs_min_dist(edges: DataFrame, max_depth: int = 3) -> DataFrame:
     return visited
 
 
-def bfs_oracle_sql(edges_sql: str, max_depth: int = 3) -> str:
+def bfs_oracle_sql(edges_sql: str) -> str:
     """The identical BFS as unrolled CTE rounds (mirrors the driver
     loop exactly — one frontier CTE and one visited CTE per depth).
     ``edges_sql`` must yield (u, v) undirected edges with u < v."""
@@ -246,7 +236,7 @@ def bfs_oracle_sql(edges_sql: str, max_depth: int = 3) -> str:
         "f0 AS (SELECT min(u) AS node FROM dir_e)",
         "v0 AS (SELECT node, CAST(0 AS BIGINT) AS dist FROM f0)",
     ]
-    for d in range(1, max_depth + 1):
+    for d in range(1, MAX_DEPTH + 1):
         parts.append(
             f"""f{d} AS (
                 SELECT DISTINCT e.v AS node
@@ -258,4 +248,4 @@ def bfs_oracle_sql(edges_sql: str, max_depth: int = 3) -> str:
             f"v{d} AS (SELECT node, dist FROM v{d - 1} "
             f"UNION ALL SELECT node, CAST({d} AS BIGINT) AS dist FROM f{d})"
         )
-    return ", ".join(parts) + f" SELECT node, dist FROM v{max_depth}"
+    return ", ".join(parts) + f" SELECT node, dist FROM v{MAX_DEPTH}"

@@ -33,17 +33,13 @@ from .text import ngrams_from_tokens, tokens
 
 
 def bigram_model(
-    docs: DataFrame, text_col: str, bg: DataFrame | None = None
+    docs: DataFrame, text_col: str, bg: DataFrame
 ) -> tuple[DataFrame, DataFrame, int]:
     """(c2, c1, V): bigram counts, left-context counts, vocab size.
     c1(w1) = sum_w2 c2(w1, w2) is derived FROM c2 so numerator and
     denominator stay consistent; V counts the full corpus vocabulary.
-    Pass a pre-materialized exploded ``bg`` frame (any frame with a
-    ``bg`` column) to share the explode with other consumers."""
-    if bg is None:
-        bg = docs.select(tokens(F.col(text_col)).alias("_t")).select(
-            F.explode(ngrams_from_tokens(F.col("_t"), 2)).alias("bg")
-        )
+    ``bg`` is the pre-materialized exploded bigram frame (any frame
+    with a ``bg`` column), shared with the other consumers."""
     c2 = bg.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
     c1 = (
         c2.select(F.split_part(F.col("bg"), F.lit(" "), F.lit(1)).alias("w1"), "c2")
@@ -75,7 +71,7 @@ def doc_perplexity(
         .select(F.col(id_col), F.explode(ngrams_from_tokens(F.col("_t"), 2)).alias("bg"))
         .transform(materialize)
     )
-    c2, c1, v = bigram_model(docs, text_col, bg=bgid)
+    c2, c1, v = bigram_model(docs, text_col, bgid)
     per_doc = bgid.select(
         id_col, "bg", F.split_part(F.col("bg"), F.lit(" "), F.lit(1)).alias("w1")
     )
@@ -114,9 +110,7 @@ def doc_perplexity(
     )
 
 
-def perplexity_oracle_sql(
-    docs_table: str, id_expr: str, text_expr: str, id_alias: str = "doc_id"
-) -> str:
+def perplexity_oracle_sql(docs_table: str, id_expr: str, text_expr: str) -> str:
     """DuckDB replay: same tokenization, same smoothing, same integer
     micro-nat floor-sum, same final exp nesting."""
     toks = f"regexp_split_to_array(trim(lower({text_expr})), '\\s+')"
@@ -148,7 +142,7 @@ def perplexity_oracle_sql(
             SELECT id, count(*) AS n_bigrams, -sum(lp_micro) AS nll_micro
             FROM scored GROUP BY id
         )
-        SELECT id AS {id_alias}, n_bigrams, nll_micro,
+        SELECT id AS doc_id, n_bigrams, nll_micro,
                round(exp(CAST(nll_micro AS DOUBLE) / n_bigrams / 1000000.0), 4)
                  AS ppl
         FROM agg

@@ -7,8 +7,8 @@ every downstream job, so an engine needs first-class operators for:
 - **Deterministic sampling** (`hash_sample`): reproducible train/eval
   splits and down-samples keyed on a stable hash of an id column —
   never `rand()`, which breaks resume/retry idempotency and cannot be
-  oracle-checked. The md5-based variant is engine-portable (same rows
-  selected by Spark and DuckDB).
+  oracle-checked. The bucket comes from md5, so it is engine-portable
+  (same rows selected by Spark and DuckDB).
 - **Skew profiling** (`skew_profile`): before salting/AQE-tuning a
   join, measure it: per-key counts, share of total, and a skew ratio
   against the mean — the empirical input to choosing salt fan-out.
@@ -20,67 +20,42 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def hash_sample(
-    df: DataFrame, key_col: str, pct: int, buckets: int = 100, portable: bool = True
-) -> DataFrame:
+def _md5_bucket(key_col: str):
+    """0..99 from the first two md5 hex digits of the key (0..255, then
+    mod 100) — exactly reproducible in any engine."""
+    key = F.col(key_col).cast("string")
+    return F.conv(F.substring(F.md5(key), 1, 2), 16, 10).cast("int") % 100
+
+
+def hash_sample(df: DataFrame, key_col: str, pct: int) -> DataFrame:
     """Deterministic `pct`% sample: keep rows whose key hashes into the
-    first `pct` of `buckets` buckets.
-
-    portable=True derives the bucket from two md5 hex digits (exactly
-    reproducible in any engine — this is the oracle-checked path);
-    portable=False uses xxhash64 (one JVM hash call, the production
-    path at scale). Same key always lands in the same bucket, so the
-    sample is stable across runs, retries, and engines — the property
-    `rand()`-based sampling cannot give."""
-    if not 0 <= pct <= buckets:
-        raise ValueError(f"pct must be in [0, {buckets}]")
-    key = F.col(key_col).cast("string")
-    if portable:
-        # first two hex digits of md5 -> 0..255, then mod `buckets`
-        bucket = (
-            F.conv(F.substring(F.md5(key), 1, 2), 16, 10).cast("int") % buckets
-        )
-    else:
-        bucket = F.pmod(F.xxhash64(key), F.lit(buckets)).cast("int")
-    return df.filter(bucket < pct)
+    first `pct` of 100 buckets. Same key always lands in the same
+    bucket, so the sample is stable across runs, retries, and engines —
+    the property `rand()`-based sampling cannot give."""
+    if not 0 <= pct <= 100:
+        raise ValueError("pct must be in [0, 100]")
+    return df.filter(_md5_bucket(key_col) < pct)
 
 
-def stratified_split(
-    df: DataFrame,
-    key_col: str,
-    val_pct: int = 5,
-    test_pct: int = 5,
-    buckets: int = 100,
-    portable: bool = True,
-) -> DataFrame:
-    """Deterministic train/val/test assignment from the same md5 (or
-    xxhash64) bucket hash_sample uses: the last ``test_pct`` buckets are
-    test, the ``val_pct`` before them are val, the rest train. Adds a
-    ``split`` column; no shuffle, no rand() — the same key always gets
-    the same split across runs, retries, engines, and data refreshes,
-    which is the property training pipelines need (a re-run must never
-    leak yesterday's train docs into today's eval set)."""
-    if val_pct + test_pct >= buckets:
-        raise ValueError("val_pct + test_pct must leave room for train")
-    key = F.col(key_col).cast("string")
-    if portable:
-        bucket = (
-            F.conv(F.substring(F.md5(key), 1, 2), 16, 10).cast("int") % buckets
-        )
-    else:
-        bucket = F.pmod(F.xxhash64(key), F.lit(buckets)).cast("int")
+def stratified_split(df: DataFrame, key_col: str) -> DataFrame:
+    """Deterministic train/val/test assignment from the same md5
+    bucket hash_sample uses: the last 5 of 100 buckets are test, the 5
+    before them are val, the rest train. Adds a ``split`` column; no
+    shuffle, no rand() — the same key always gets the same split across
+    runs, retries, engines, and data refreshes, which is the property
+    training pipelines need (a re-run must never leak yesterday's train
+    docs into today's eval set)."""
+    bucket = _md5_bucket(key_col)
     split = (
-        F.when(bucket < buckets - val_pct - test_pct, F.lit("train"))
-        .when(bucket < buckets - test_pct, F.lit("val"))
+        F.when(bucket < 90, F.lit("train"))
+        .when(bucket < 95, F.lit("val"))
         .otherwise(F.lit("test"))
     )
     return df.withColumn("split", split)
 
 
-def skew_profile(
-    df: DataFrame, key_col: str, top_n: int = 10
-) -> DataFrame:
-    """Top-`top_n` heaviest keys with count, share of total rows, and
+def skew_profile(df: DataFrame, key_col: str) -> DataFrame:
+    """Top-10 heaviest keys with count, share of total rows, and
     skew ratio vs the mean key load. One partial+final aggregate over
     the keys, then the (tiny) per-key frame is windowed against its own
     global sums — no second scan of the input. The skew ratio is the
@@ -100,7 +75,7 @@ def skew_profile(
     )
     return (
         enriched.orderBy(F.col("n_rows").desc(), F.col("key").asc())
-        .limit(top_n)
+        .limit(10)
     )
 
 
@@ -145,10 +120,9 @@ def latest_wins_merge_with_deletes(
     updates: DataFrame,
     key_cols: list[str],
     version_col: str,
-    delete_col: str = "_deleted",
 ) -> DataFrame:
     """CDC compaction with DELETE tombstones — the full
-    insert/update/delete merge. ``updates`` rows where ``delete_col``
+    insert/update/delete merge. ``updates`` rows where ``_deleted``
     is true are tombstones: if the tombstone is the newest version of
     its key, the key disappears from the compacted output (a LATER
     re-insert resurrects it, standard CDC semantics). Same
@@ -159,8 +133,8 @@ def latest_wins_merge_with_deletes(
     marker column are treated as live."""
     from pyspark.sql import Window
 
-    if delete_col not in base.columns:
-        base = base.withColumn(delete_col, F.lit(False))
+    if "_deleted" not in base.columns:
+        base = base.withColumn("_deleted", F.lit(False))
     tagged = base.withColumn("_src", F.lit(0)).unionByName(
         updates.withColumn("_src", F.lit(1))
     )
@@ -171,9 +145,9 @@ def latest_wins_merge_with_deletes(
         tagged.withColumn("_rn", F.row_number().over(w))
         .filter(
             (F.col("_rn") == 1)
-            & ~F.coalesce(F.col(delete_col), F.lit(False))
+            & ~F.coalesce(F.col("_deleted"), F.lit(False))
         )
-        .drop("_rn", "_src", delete_col)
+        .drop("_rn", "_src", "_deleted")
     )
 
 
@@ -182,7 +156,6 @@ def merge_agg_delta(
     delta: DataFrame,
     keys: list[str],
     sum_cols: list[str],
-    count_col: str = "n_rows",
 ) -> DataFrame:
     """Incremental materialized-aggregate maintenance: fold a delta
     batch's partial SUM/COUNT aggregates into the maintained state
@@ -195,12 +168,12 @@ def merge_agg_delta(
     one full-outer merge on the group key against the state table —
     the same join a MERGE INTO runs."""
     partial = delta.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias(count_col),
+        F.count(F.lit(1)).alias("n_rows"),
         *[F.sum(c).alias(f"sum_{c}") for c in sum_cols],
     )
     if state is None:
         return partial
-    val_cols = [count_col] + [f"sum_{c}" for c in sum_cols]
+    val_cols = ["n_rows"] + [f"sum_{c}" for c in sum_cols]
     # Explicit aliases: state and delta often share lineage (slices of
     # the same source frame), so s[k]/d[k] attribute references would
     # be ambiguous self-join references.
@@ -238,11 +211,10 @@ def weighted_sample(
     id_col: str,
     weight_col: str,
     k: int,
-    strata_col: str | None = None,
 ) -> DataFrame:
     """Deterministic weighted sampling without replacement
     (Efraimidis-Spirakis A-ES): key = ln(u)/w with u an md5-derived
-    uniform per row, keep the top-k keys (per stratum if given).
+    uniform per row, keep the top-k keys per ``lang`` stratum.
     Higher weight -> higher inclusion probability, exactly the
     w_i/sum(w) first-draw law of weighted sampling.
 
@@ -263,8 +235,7 @@ def weighted_sample(
     keyed = df.filter(F.col(weight_col) > 0).select(
         "*", (F.log(u) / F.col(weight_col)).alias("_es_key")
     )
-    part = [strata_col] if strata_col else [F.lit(1)]
-    w = Window.partitionBy(*part).orderBy(
+    w = Window.partitionBy("lang").orderBy(
         F.col("_es_key").desc(), F.col(id_col).asc()
     )
     return (

@@ -140,16 +140,16 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def resize_plan(df: DataFrame, target: int = 224) -> DataFrame:
-    """Image resize *plan*: fit-within-target output dims preserving
+def resize_plan(df: DataFrame) -> DataFrame:
+    """Image resize *plan*: fit-within-224px output dims preserving
     aspect ratio, never upscaling — computed from meta.width/height
     ONLY (no payload read; the pixel work is the stubbed decode step).
-    scale = min(1, target/w, target/h); out dims = floor(dim * scale).
+    scale = min(1, 224/w, 224/h); out dims = floor(dim * scale).
     Same discipline as frame_sample_plan: plan on metadata, touch
     bytes late."""
     w = F.col("meta.width").cast("double")
     h = F.col("meta.height").cast("double")
-    scale = F.least(F.lit(1.0), F.lit(float(target)) / w, F.lit(float(target)) / h)
+    scale = F.least(F.lit(1.0), F.lit(224.0) / w, F.lit(224.0) / h)
     return df.filter(
         (F.col("kind") == "image") & F.col("meta.width").isNotNull()
     ).select(
@@ -161,47 +161,42 @@ def resize_plan(df: DataFrame, target: int = 224) -> DataFrame:
     )
 
 
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
+def frame_sample_plan(df: DataFrame) -> DataFrame:
     """Video frame-sampling *plan*: computes per-row frame timestamps to
-    decode (metadata-only — no payload read; the decode itself is the
+    decode, one a second (metadata-only — no payload read; the decode itself is the
     stubbed step). Shows the pruning discipline: plan on metadata,
     touch bytes late."""
-    n_frames = (F.col("meta.duration_ms") / every_ms).cast("int")
+    n_frames = (F.col("meta.duration_ms") / 1000).cast("int")
     return df.filter(F.col("kind") == "video").select(
         "media_id",
         F.transform(
             F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0))),
-            lambda i: i * every_ms,
+            lambda i: i * 1000,
         ).alias("frame_ts_ms"),
     )
 
 
-def audio_segment_plan(
-    df: DataFrame, sample_rate: int = 16000, window_samples: int = 80000
-) -> DataFrame:
-    """Audio segmentation *plan*: per audio row, how many fixed-size
-    sample windows the (stubbed) decoder would emit, from
+def audio_segment_plan(df: DataFrame) -> DataFrame:
+    """Audio segmentation *plan*: per audio row, how many 5 s windows
+    (80000 samples at 16 kHz) the (stubbed) decoder would emit, from
     meta.duration_ms alone — pure int64 arithmetic, payload never
     read (the same metadata-first discipline as frame_sample_plan /
     resize_plan, completing the image/video/audio planning triple)."""
-    n_samples = F.expr(
-        f"meta.duration_ms * {sample_rate} div 1000"
-    ).cast("bigint")
+    n_samples = F.expr("meta.duration_ms * 16000 div 1000").cast("bigint")
     n_segments = F.expr(
-        f"(meta.duration_ms * {sample_rate} div 1000 + {window_samples - 1})"
-        f" div {window_samples}"
+        "(meta.duration_ms * 16000 div 1000 + 79999) div 80000"
     ).cast("bigint")
     return df.filter(F.col("kind") == "audio").select(
         "media_id",
         n_samples.alias("n_samples"),
         n_segments.alias("n_segments"),
-        (n_samples - (n_segments - 1) * window_samples).alias(
+        (n_samples - (n_segments - 1) * 80000).alias(
             "last_segment_samples"
         ),
     )
 
 
-def phash63(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def phash63(df: DataFrame) -> DataFrame:
     """(media_id, phash): a 63-bit average-hash over the decoded
     payload — the perceptual-hash SHAPE (decode -> fixed grid of
     intensities -> mean-threshold -> bit fingerprint) with the decode
@@ -223,7 +218,7 @@ def phash63(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     # lambda it would re-hash the payload once per pixel (63x)
     with_px = df.select(
         F.col("media_id"),
-        F.sha2(F.decode(F.col(payload_col), "UTF-8"), 256).alias("_hex"),
+        F.sha2(F.decode(F.col("payload"), "UTF-8"), 256).alias("_hex"),
     ).select(
         F.col("media_id"),
         pixels.alias("_px"),

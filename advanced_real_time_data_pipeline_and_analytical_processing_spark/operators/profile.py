@@ -18,8 +18,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# decimals of a double's min/max, shared by the Spark side and its SQL mirror
+FLOAT_PREC = 4
 
-def _fmt(col: Column, dtype: str, float_prec: int) -> Column:
+
+def _fmt(col: Column, dtype: str) -> Column:
     if dtype in ("double", "float"):
         # NOT %.Nf: Java's Formatter renders the SHORTEST-decimal repr
         # of a double while C printf renders the exact binary value, so
@@ -28,7 +31,7 @@ def _fmt(col: Column, dtype: str, float_prec: int) -> Column:
         # '...0938', hostile-data sweep). Quantize to an exact integer
         # first (tie-free floor(x*scale + 0.5), the _cents primitive)
         # and typeset div/mod — bit-identical on any engine.
-        scale = 10 ** float_prec
+        scale = 10 ** FLOAT_PREC
         q = F.floor(col * scale + F.lit(0.5)).cast("bigint")
         aq = F.abs(q)
         # integer part via EXACT decimal division (aq can exceed 2^53,
@@ -59,16 +62,14 @@ def _fmt(col: Column, dtype: str, float_prec: int) -> Column:
                     F.when(q < 0, F.lit("-")).otherwise(F.lit("")),
                     int_part,
                     F.lit("."),
-                    F.lpad((aq % scale).cast("string"), float_prec, "0"),
+                    F.lpad((aq % scale).cast("string"), FLOAT_PREC, "0"),
                 )
             )
         )
     return col.cast("string")
 
 
-def table_profile(
-    df: DataFrame, cols: list[str] | None = None, float_prec: int = 4
-) -> DataFrame:
+def table_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """(col_name, n_rows, n_nulls, n_distinct, min_val, max_val) —
     one row per profiled column, TWO aggregate passes total.
 
@@ -100,8 +101,8 @@ def table_profile(
         plain_aggs.append(
             F.count(F.when(F.col(c).isNull(), 1)).alias(f"_nulls_{c}")
         )
-        plain_aggs.append(_fmt(F.min(c), dtypes[c], float_prec).alias(f"_min_{c}"))
-        plain_aggs.append(_fmt(F.max(c), dtypes[c], float_prec).alias(f"_max_{c}"))
+        plain_aggs.append(_fmt(F.min(c), dtypes[c]).alias(f"_min_{c}"))
+        plain_aggs.append(_fmt(F.max(c), dtypes[c]).alias(f"_max_{c}"))
     wide = df.agg(*plain_aggs).crossJoin(df.agg(*dist_aggs))
     entries = F.array(
         *[
@@ -119,9 +120,7 @@ def table_profile(
     return wide.select(F.explode(entries).alias("e")).select("e.*")
 
 
-def profile_oracle_sql(
-    table: str, cols: list[str], dtypes: dict[str, str], float_prec: int = 4
-) -> str:
+def profile_oracle_sql(table: str, cols: list[str], dtypes: dict[str, str]) -> str:
     """DuckDB replay: same single-aggregate + per-column projection,
     same printf formatting."""
 
@@ -130,7 +129,7 @@ def profile_oracle_sql(
             # mirror of _fmt's exact-integer typesetting (see there),
             # including the r8 non-finite/overflow sentinels — DuckDB's
             # CAST would raise where Spark's non-ANSI cast nulls/zeros
-            scale = 10**float_prec
+            scale = 10**FLOAT_PREC
             q = f"CAST(floor(({expr}) * {scale} + 0.5) AS BIGINT)"
             return (
                 f"(CASE WHEN isnan({expr}) THEN 'nan'"
@@ -142,7 +141,7 @@ def profile_oracle_sql(
                 f" || CAST(abs({q}) // {scale} AS VARCHAR)"
                 f" || '.'"
                 f" || lpad(CAST(abs({q}) % {scale} AS VARCHAR),"
-                f" {float_prec}, '0') END)"
+                f" {FLOAT_PREC}, '0') END)"
             )
         return f"CAST({expr} AS VARCHAR)"
 

@@ -39,40 +39,39 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _bucket(key: Column, row: int, width: int) -> Column:
+# the sketch matrix: CM_DEPTH hash rows of CM_WIDTH counters
+CM_DEPTH = 4
+CM_WIDTH = 64
+
+
+def _bucket(key: Column, row: int) -> Column:
     """Deterministic bucket of ``key`` for hash row ``row``: portable
-    md5 prefix as int64, mod width."""
+    md5 prefix as int64, mod CM_WIDTH."""
     h = F.md5(F.concat(F.lit(f"{row}:"), key.cast("string")))
-    return (F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % width).cast(
+    return (F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % CM_WIDTH).cast(
         "int"
     )
 
 
-def count_min_counters(
-    df: DataFrame, key_col: str, depth: int = 4, width: int = 64
-) -> DataFrame:
+def count_min_counters(df: DataFrame, key_col: str) -> DataFrame:
     """(row, bucket, cnt): the sketch matrix. One explode (fan-out
-    ``depth``) + one hash aggregate with map-side combine into at most
-    depth*width rows."""
+    CM_DEPTH) + one hash aggregate with map-side combine into at most
+    CM_DEPTH*CM_WIDTH rows."""
     entries = df.select(
         F.posexplode(
-            F.array(
-                *[_bucket(F.col(key_col), r, width) for r in range(depth)]
-            )
+            F.array(*[_bucket(F.col(key_col), r) for r in range(CM_DEPTH)])
         ).alias("row", "bucket")
     )
     return entries.groupBy("row", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def count_min_estimates(
-    df: DataFrame, key_col: str, depth: int = 4, width: int = 64
-) -> DataFrame:
+def count_min_estimates(df: DataFrame, key_col: str) -> DataFrame:
     """Per-distinct-key CM estimate next to the exact count:
     (key, exact_n, cm_est). cm_est >= exact_n always (the CM
     guarantee); equality whenever none of the key's buckets collide.
     The counter matrix is broadcast — the probe side never shuffles
     for the join."""
-    counters = count_min_counters(df, key_col, depth, width)
+    counters = count_min_counters(df, key_col)
     keys = df.groupBy(F.col(key_col).alias("key")).agg(
         F.count(F.lit(1)).alias("exact_n")
     )
@@ -80,7 +79,7 @@ def count_min_estimates(
         "key",
         "exact_n",
         F.posexplode(
-            F.array(*[_bucket(F.col("key"), r, width) for r in range(depth)])
+            F.array(*[_bucket(F.col("key"), r) for r in range(CM_DEPTH)])
         ).alias("row", "bucket"),
     )
     est = (

@@ -188,17 +188,12 @@ def gopher_quality_flags(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    min_words: int = 30,
-    max_words: int = 100_000,
-    min_mean_wl: float = 3.0,
-    max_mean_wl: float = 10.0,
-    min_alpha_frac: float = 0.8,
-    min_stop_hits: int = 2,
 ) -> DataFrame:
     """Gopher-style heuristic quality rules as per-document boolean
     flags plus the conjunctive ``passes`` verdict — the standard
-    pre-training corpus filter chain (word-count bounds, mean word
-    length band, alphabetic-word fraction, stopword presence).
+    pre-training corpus filter chain (30 to 100,000 words, mean word
+    length 3 to 10, alphabetic-word fraction at least 0.8, at least two
+    stopwords).
 
     One projection over the scan: every rule is a Catalyst expression
     on the same tokenization, so the filter costs a single codegen'd
@@ -216,10 +211,10 @@ def gopher_quality_flags(
     )
     flags = measured.select(
         "*",
-        F.col("_n_words").between(min_words, max_words).alias("ok_words"),
-        F.col("_mean_wl").between(min_mean_wl, max_mean_wl).alias("ok_mean_wl"),
-        (F.col("_alpha_frac") >= min_alpha_frac).alias("ok_alpha"),
-        (F.col("_stop_hits") >= min_stop_hits).alias("ok_stopwords"),
+        F.col("_n_words").between(30, 100_000).alias("ok_words"),
+        F.col("_mean_wl").between(3.0, 10.0).alias("ok_mean_wl"),
+        (F.col("_alpha_frac") >= 0.8).alias("ok_alpha"),
+        (F.col("_stop_hits") >= 2).alias("ok_stopwords"),
     )
     return flags.select(
         "*",

@@ -31,10 +31,9 @@ def resample_ffill(
     key_col: str,
     period_col: str,
     value_cols: list[str],
-    step: str = "1 day",
 ) -> DataFrame:
     """Dense per-key series from ``df``'s sparse (key, period, values)
-    rows: every step between each key's min and max period appears
+    rows: every day between each key's min and max period appears
     exactly once, missing values forward-filled from the latest
     earlier observation. Adds ``is_filled`` marking synthesized rows.
 
@@ -46,7 +45,7 @@ def resample_ffill(
     spine = bounds.select(
         key_col,
         F.explode(
-            F.sequence(F.col("_lo"), F.col("_hi"), F.expr(f"interval {step}"))
+            F.sequence(F.col("_lo"), F.col("_hi"), F.expr("interval 1 day"))
         ).alias(period_col),
     )
     joined = spine.join(df, [key_col, period_col], "left")
@@ -76,7 +75,6 @@ def interval_overlap_join(
     right_start: str,
     right_end: str,
     bin_width: int,
-    keys: list[str] | None = None,
 ) -> DataFrame:
     """Interval overlap join: all (left_id, right_id) pairs whose CLOSED
     integer intervals [start, end] intersect (overlap iff
@@ -86,7 +84,7 @@ def interval_overlap_join(
 
     Scale path — epoch binning: each interval explodes into the
     ``bin_width``-sized bins it covers; candidates come from an
-    EQUI-join on (bin [, keys...]), then the exact overlap predicate
+    EQUI-join on the bin, then the exact overlap predicate
     prunes same-bin-but-disjoint false positives and a distinct
     collapses pairs that co-occupy several bins. Overlapping intervals
     always share the bin containing their intersection point, so the
@@ -97,11 +95,9 @@ def interval_overlap_join(
     bin key, never all-to-all.
 
     Start/end columns must be integers on a shared axis (epoch seconds,
-    epoch days, ...). Returns distinct (left_id, right_id [, keys...]).
+    epoch days, ...). Returns distinct (left_id, right_id).
     """
-    keys = list(keys or [])
     lb = left.select(
-        *keys,
         F.col(left_id).alias("_lid"),
         F.col(left_start).alias("_ls"),
         F.col(left_end).alias("_le"),
@@ -113,7 +109,6 @@ def interval_overlap_join(
         ).alias("_bin"),
     )
     rb = right.select(
-        *keys,
         F.col(right_id).alias("_rid"),
         F.col(right_start).alias("_rs"),
         F.col(right_end).alias("_re"),
@@ -125,11 +120,9 @@ def interval_overlap_join(
         ).alias("_bin"),
     )
     return (
-        lb.join(rb, ["_bin", *keys])
+        lb.join(rb, ["_bin"])
         .filter((F.col("_ls") <= F.col("_re")) & (F.col("_rs") <= F.col("_le")))
-        .select(
-            *keys, F.col("_lid").alias(left_id), F.col("_rid").alias(right_id)
-        )
+        .select(F.col("_lid").alias(left_id), F.col("_rid").alias(right_id))
         .distinct()
     )
 

@@ -20,13 +20,9 @@ def topk_per_group(
     group_cols: Sequence[str],
     order_cols: Sequence[Column],
     k: int,
-    rank_col: str = "rank",
 ) -> DataFrame:
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
-    )
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def skyline_2d(

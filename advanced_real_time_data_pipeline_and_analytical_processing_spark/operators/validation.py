@@ -126,20 +126,18 @@ def reference_ruleset() -> RuleSet:
     )
 
 
-def validate(df: DataFrame, rules: RuleSet, error_col: str = ERROR_COL) -> DataFrame:
+def validate(df: DataFrame, rules: RuleSet) -> DataFrame:
     """Attach the error column in one projection; null = good row."""
-    return df.withColumn(error_col, rules.error_expr(df.columns))
+    return df.withColumn(ERROR_COL, rules.error_expr(df.columns))
 
 
-def split(
-    validated: DataFrame, error_col: str = ERROR_COL
-) -> tuple[DataFrame, DataFrame]:
+def split(validated: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(good, bad). Good rows drop the error column; bad rows keep it.
 
     Callers that consume both halves should ``persist()`` `validated`
     first (single scan), unlike the reference's re-computed lineage
     (SURVEY.md §4.3-3).
     """
-    good = validated.filter(F.col(error_col).isNull()).drop(error_col)
-    bad = validated.filter(F.col(error_col).isNotNull())
+    good = validated.filter(F.col(ERROR_COL).isNull()).drop(ERROR_COL)
+    bad = validated.filter(F.col(ERROR_COL).isNotNull())
     return good, bad

@@ -32,11 +32,10 @@ def durable_mode() -> bool:
     return os.environ.get("SPARK_GRAFT_DURABLE", "") not in ("", "0", "false")
 
 
-def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+def materialize(df: DataFrame) -> DataFrame:
     """Compute-once barrier for a multi-consumer frame: persist
-    (MEMORY_AND_DISK locally, DISK_ONLY under SPARK_GRAFT_DURABLE=1).
-    ``eager=True`` forces computation now (persist is lazy, so eager
-    runs a count()).
+    (MEMORY_AND_DISK locally, DISK_ONLY under SPARK_GRAFT_DURABLE=1),
+    lazily — the first consumer computes it.
 
     r14 OPTIMIZATION: this was ``localCheckpoint`` in non-durable mode.
     localCheckpoint compiles the subtree to an RDD and rescans it as
@@ -57,12 +56,9 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     Every materialize() call site is single-pass multi-consumer, and
     every upstream is deterministic (md5-derived keys, no rand()), so
     a recompute-on-eviction yields identical rows."""
-    out = df.persist(
+    return df.persist(
         StorageLevel.DISK_ONLY if durable_mode() else StorageLevel.MEMORY_AND_DISK
     )
-    if eager:
-        out.count()
-    return out
 
 
 def materialize_round(df: DataFrame, eager: bool = False) -> DataFrame:

@@ -30,7 +30,7 @@ from .writers import retry
 DEFAULT_FOLDERS = ("data", "processed", "audit", "quarantine", "schema")
 
 
-@retry(attempts=3, delay_s=5.0, backoff=2.0)
+@retry
 def initialize_layout(
     spark: SparkSession,
     base: str,

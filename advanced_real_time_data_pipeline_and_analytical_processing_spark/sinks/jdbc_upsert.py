@@ -57,30 +57,25 @@ def upsert_jdbc(
     table: str,
     key_cols: list[str],
     properties: dict[str, str] | None = None,
-    staging_table: str | None = None,
-    column_types: dict[str, str] | None = None,
 ) -> None:
-    """Exactly-once-per-key JDBC write: stage the batch, MERGE on
-    `key_cols`, drop staging. Safe to replay — a second run with the
-    same rows matches on the keys and leaves the target unchanged.
+    """Exactly-once-per-key JDBC write: stage the batch in
+    ``{table}_stage``, MERGE on `key_cols`, drop staging. Safe to
+    replay — a second run with the same rows matches on the keys and
+    leaves the target unchanged.
 
-    `column_types` pins SQL types per column for table creation (Spark's
-    createTableColumnTypes). String MERGE keys need it on backends whose
-    default string mapping is non-comparable LOB (Derby: string→CLOB,
-    and CLOBs can't appear in a MERGE ON) — e.g.
-    ``{"row_hash": "VARCHAR(64)"}``. Indexable key types are the right
-    call on any backend."""
+    A ``row_hash`` column is created as VARCHAR(64) (Spark's
+    createTableColumnTypes): a string MERGE key needs it on backends
+    whose default string mapping is a non-comparable LOB (Derby:
+    string→CLOB, and CLOBs can't appear in a MERGE ON). Indexable key
+    types are the right call on any backend."""
     props = {"batchsize": "5000", "rewriteBatchedStatements": "true"}
     props.update(properties or {})
-    staging = staging_table or f"{table}_stage"
+    staging = f"{table}_stage"
 
     # 1. parallel executor-side stage write (replay-safe: overwrite)
     writer = df.write
-    if column_types:
-        writer = writer.option(
-            "createTableColumnTypes",
-            ", ".join(f"{c} {t}" for c, t in column_types.items()),
-        )
+    if "row_hash" in df.columns:
+        writer = writer.option("createTableColumnTypes", "row_hash VARCHAR(64)")
     writer.jdbc(url=url, table=staging, mode="overwrite", properties=props)
 
     # 2-3. driver-side MERGE + cleanup, one connection, one transaction

@@ -79,23 +79,21 @@ def start_merge_stream(
     checkpoint_dir: str,
     key_cols: list[str],
     version_col: str,
-    available_now: bool = True,
 ):
-    """Wire a streaming source into the merge sink. availableNow=True
-    drains the backlog and stops (the batch-test mode); False runs
-    continuously."""
+    """Wire a streaming source into the merge sink under an
+    availableNow trigger: drain the backlog, then stop."""
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         merge_batch(
             batch.sparkSession, batch, table_dir, key_cols, version_col, batch_id
         )
 
-    writer = source.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        source.writeStream.foreachBatch(_sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def vacuum(table_dir: str, keep_latest: int = 1) -> list[str]:

@@ -48,26 +48,24 @@ AUDIT_SCHEMA = T.StructType(
 )
 
 
-def retry(attempts: int = 3, delay_s: float = 5.0, backoff: float = 2.0):
-    """Reference R1 semantics (``code/helpers.py:14-44``)."""
+def retry(fn: Callable[..., T_]) -> Callable[..., T_]:
+    """Reference R1 semantics (``code/helpers.py:14-44``): three
+    attempts, 5 s apart and doubling."""
 
-    def deco(fn: Callable[..., T_]) -> Callable[..., T_]:
-        def wrapped(*args, **kwargs) -> T_:
-            wait = delay_s
-            for attempt in range(1, attempts + 1):
-                try:
-                    return fn(*args, **kwargs)
-                except Exception:
-                    if attempt == attempts:
-                        raise
-                    time.sleep(wait)
-                    wait *= backoff
-            raise RuntimeError("unreachable")
+    def wrapped(*args, **kwargs) -> T_:
+        wait = 5.0
+        for attempt in range(1, 4):
+            try:
+                return fn(*args, **kwargs)
+            except Exception:
+                if attempt == 3:
+                    raise
+                time.sleep(wait)
+                wait *= 2.0
+        raise RuntimeError("unreachable")
 
-        wrapped.__name__ = getattr(fn, "__name__", "retried")
-        return wrapped
-
-    return deco
+    wrapped.__name__ = getattr(fn, "__name__", "retried")
+    return wrapped
 
 
 def write_partitions(df: DataFrame, path: str, partition_col: str) -> None:
@@ -161,7 +159,7 @@ class _ParquetRowWriter:
 _row_writer = functools.cache(_ParquetRowWriter)
 
 
-@retry()
+@retry
 def write_audit(spark: SparkSession, out_dir: str, rec: AuditRecord) -> None:
     """One-row explicit-schema audit append (reference K4), written from
     the driver without a Spark job. The file is written under a hidden

@@ -25,10 +25,9 @@ def dedup_within_watermark(
     stream: DataFrame,
     keys: Sequence[str],
     ts_col: str,
-    delay: str = "10 minutes",
 ) -> DataFrame:
-    """Drop rows duplicating (`keys`) within `delay` of event time
+    """Drop rows duplicating (`keys`) within 10 minutes of event time
     `ts_col`. State per key is evicted once the watermark passes it."""
-    return stream.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(
+    return stream.withWatermark(ts_col, "10 minutes").dropDuplicatesWithinWatermark(
         list(keys)
     )

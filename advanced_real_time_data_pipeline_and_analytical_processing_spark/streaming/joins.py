@@ -30,12 +30,10 @@ def stream_stream_interval_join(
     right_ts: str,
     left_watermark: str,
     right_watermark: str,
-    lower: str = "0 seconds",
-    upper: str = "10 minutes",
     how: str = "inner",
 ) -> DataFrame:
     """Stream-stream join on equality keys plus the event-time interval
-    ``left_ts <= right_ts <= left_ts + upper`` (shifted by `lower`).
+    ``left_ts <= right_ts <= left_ts + 6 hours``.
     Watermarks on BOTH sides + the interval bound make the buffered
     state finite: rows are dropped from state once the other side's
     watermark passes their join window.
@@ -57,7 +55,7 @@ def stream_stream_interval_join(
     for k in on:
         c = l[k] == r[k]
         cond = c if cond is None else (cond & c)
-    time_lo = r[right_ts] >= l[left_ts] + F.expr(f"INTERVAL {lower}")
-    time_hi = r[right_ts] <= l[left_ts] + F.expr(f"INTERVAL {upper}")
+    time_lo = r[right_ts] >= l[left_ts] + F.expr("INTERVAL 0 seconds")
+    time_hi = r[right_ts] <= l[left_ts] + F.expr("INTERVAL 6 hours")
     cond = (cond & time_lo & time_hi) if cond is not None else (time_lo & time_hi)
     return l.join(r, cond, how)

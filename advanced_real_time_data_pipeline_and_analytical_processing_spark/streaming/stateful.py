@@ -32,8 +32,8 @@ from pyspark.sql import functions as F
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.sinks.writers import write_partitions
 
 
-def running_user_stats(stream_df: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """Per-key running (count, sum(value)) maintained in the state store.
+def running_user_stats(stream_df: DataFrame) -> DataFrame:
+    """Per-user_id running (count, sum(value)) maintained in the state store.
 
     Output mode 'update': one row per key per micro-batch the key
     appears in, carrying the cumulative totals so far — the streaming
@@ -49,9 +49,9 @@ def running_user_stats(stream_df: DataFrame, key_col: str = "user_id") -> DataFr
     """
     value = F.coalesce(F.nanvl(F.col("value").cast("double"), F.lit(0.0)), F.lit(0.0))
     return (
-        stream_df.groupBy(key_col)
+        stream_df.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum(value).alias("sum_value"))
-        .select(F.col(key_col).cast("bigint").alias(key_col), "n_events", "sum_value")
+        .select(F.col("user_id").cast("bigint").alias("user_id"), "n_events", "sum_value")
     )
 
 

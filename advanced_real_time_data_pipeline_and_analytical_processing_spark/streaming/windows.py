@@ -2,8 +2,10 @@
 reference lacks — SURVEY.md §2.9 'absent streaming semantics').
 
 Each builder works on both a batch and a streaming DataFrame (Spark's
-unified API); in streaming mode add ``withWatermark`` so state is
-bounded and late data has a defined discard point.
+unified API) of events with ``ts``, ``event_type``, ``value`` and
+``user_id`` columns; in streaming mode the input carries a
+``withWatermark`` (session_windows can add it) so state is bounded and
+late data has a defined discard point.
 """
 
 from __future__ import annotations
@@ -12,57 +14,42 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def tumbling_counts(
-    df: DataFrame,
-    ts_col: str = "ts",
-    width: str = "1 hour",
-    group_col: str = "event_type",
-    value_col: str = "value",
-    watermark: str | None = None,
-) -> DataFrame:
-    """Tumbling-window count/sum per group. Streaming state per
-    (window × group) only — bounded by the watermark."""
-    src = df.withWatermark(ts_col, watermark) if watermark else df
+def tumbling_counts(df: DataFrame) -> DataFrame:
+    """Hourly tumbling-window count/sum per event_type. Streaming state
+    per (window × group) only — bounded by the watermark."""
     return (
-        src.groupBy(F.window(ts_col, width).alias("w"), group_col)
+        df.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(value_col), 4).alias("sum_value"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
-            group_col,
+            "event_type",
             "n_events",
             "sum_value",
         )
     )
 
 
-def sliding_avg(
-    df: DataFrame,
-    ts_col: str = "ts",
-    width: str = "1 hour",
-    slide: str = "15 minutes",
-    group_col: str = "event_type",
-    value_col: str = "value",
-    watermark: str | None = None,
-) -> DataFrame:
-    src = df.withWatermark(ts_col, watermark) if watermark else df
+def sliding_avg(df: DataFrame) -> DataFrame:
+    """Average value per event_type over 1-hour windows sliding by
+    30 minutes."""
     # avg in EXACT integer arithmetic end to end: float sums drift
     # with partition order, and even exact ratios can land on
     # 6th-decimal halves that engines round differently (half-up vs
     # half-even) — so sum integer ten-thousandths and FLOOR-divide to
     # micro-units; no floating sum, no round() anywhere
-    scaled = F.round(F.col(value_col) * 10000).cast("bigint")
+    scaled = F.round(F.col("value") * 10000).cast("bigint")
     return (
-        src.groupBy(F.window(ts_col, width, slide).alias("w"), group_col)
+        df.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(
             F.sum(scaled).alias("_ssum"),
-            F.count(value_col).alias("_n"),
+            F.count("value").alias("_n"),
         )
         .select(
             F.col("w.start").alias("window_start"),
-            group_col,
+            "event_type",
             (
                 # DECIMAL(38,0) end to end: a bigint quanta sum near
                 # 1e17 wraps at the *100 under non-ANSI Spark, and even
@@ -82,12 +69,10 @@ def sliding_avg(
 
 def session_windows(
     df: DataFrame,
-    ts_col: str = "ts",
     gap: str = "30 minutes",
-    key_col: str = "user_id",
     watermark: str | None = None,
 ) -> DataFrame:
-    """Session windows keyed by user with an inactivity gap (Spark's
+    """Session windows keyed by user_id with an inactivity gap (Spark's
     native ``session_window``; in streaming its state lives in the JVM
     state store).
 
@@ -104,28 +89,20 @@ def session_windows(
       watermark the micro-batch before it ran with, so a row behind the
       current watermark but not behind that one still merges into its
       key's open session."""
-    src = df.withWatermark(ts_col, watermark) if watermark else df
+    src = df.withWatermark("ts", watermark) if watermark else df
     return (
-        src.groupBy(F.session_window(ts_col, gap).alias("s"), key_col)
+        src.groupBy(F.session_window("ts", gap).alias("s"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("s.start").alias("session_start"),
             F.col("s.end").alias("session_end"),
-            key_col,
+            "user_id",
             "n_events",
         )
     )
 
 
-def chained_tumbling_rollup(
-    df: DataFrame,
-    ts_col: str = "ts",
-    group_col: str = "event_type",
-    value_col: str = "value",
-    small: str = "1 hour",
-    big: str = "1 day",
-    watermark: str | None = None,
-) -> DataFrame:
+def chained_tumbling_rollup(df: DataFrame) -> DataFrame:
     """CHAINED stateful windowed aggregations in one query (Spark 3.4+
     multiple-stateful-operator support): small tumbling windows roll up
     into big ones — hourly partials feeding a daily total — without
@@ -136,17 +113,14 @@ def chained_tumbling_rollup(
     ten-thousandths at the source, so both stages' sums are exact
     bigints (engine- and partition-order-proof).
 
-    Returns (day_start, group, n_events, n_hours, sum_value_q4)."""
-    src = df.withWatermark(ts_col, watermark) if watermark else df
-    vq = F.round(F.col(value_col) * 10000).cast("bigint")
-    small_agg = src.groupBy(
-        F.window(ts_col, small).alias("_w1"), group_col
-    ).agg(
+    Returns (day_start, event_type, n_events, n_hours, sum_value_q4)."""
+    vq = F.round(F.col("value") * 10000).cast("bigint")
+    small_agg = df.groupBy(F.window("ts", "1 hour").alias("_w1"), "event_type").agg(
         F.count(F.lit(1)).alias("_n"),
         F.sum(vq).alias("_s"),
     )
     big_agg = small_agg.groupBy(
-        F.window(F.col("_w1"), big).alias("_w2"), group_col
+        F.window(F.col("_w1"), "1 day").alias("_w2"), "event_type"
     ).agg(
         F.sum("_n").alias("n_events"),
         F.count(F.lit(1)).alias("n_hours"),
@@ -154,7 +128,7 @@ def chained_tumbling_rollup(
     )
     return big_agg.select(
         F.col("_w2.start").alias("day_start"),
-        group_col,
+        "event_type",
         "n_events",
         "n_hours",
         "sum_value_q4",

@@ -78,7 +78,6 @@ def jdbc_good_sink(fmt: str) -> Callable[[DataFrame, int], None] | None:
             table=f"good_{fmt}",
             key_cols=["row_hash"],
             properties=props,
-            column_types={"row_hash": "VARCHAR(64)"},
         )
 
     return _sink

@@ -67,7 +67,7 @@ def test_capped_running_balance_floor_semantics(spark):
     out = {
         r.k: r.balance
         for r in aggregation.capped_running_final(
-            df, "k", ["seq"], "d", floor=0
+            df, "k", ["seq"], "d"
         ).collect()
     }
     assert out == {1: 30, 2: 5}
@@ -75,9 +75,9 @@ def test_capped_running_balance_floor_semantics(spark):
 
 def test_capped_running_closed_form_equals_step_loop_property(spark):
     """Property pin for the round-4 JVM rewrite: the prefix-sum closed
-    form b_n = max(S_n, floor + S_n - min_k S_k) must equal the
-    step-by-step recurrence max(b+d, floor) on randomized sequences,
-    including negative floors and all-negative runs."""
+    form b_n = max(S_n, S_n - min_k S_k) must equal the step-by-step
+    recurrence max(b+d, 0) on randomized sequences, including
+    all-negative runs."""
     import random
 
     from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators import aggregation
@@ -85,23 +85,18 @@ def test_capped_running_closed_form_equals_step_loop_property(spark):
     rng = random.Random(11)
     rows, want = [], {}
     for k in range(30):
-        floor = rng.choice([0, 0, -50, 10])
         n = rng.randrange(1, 40)
         acc = 0
         for seq in range(n):
             d = rng.randrange(-100, 101)
-            rows.append((k, floor, seq, d))
-            acc = max(acc + d, floor)
+            rows.append((k, seq, d))
+            acc = max(acc + d, 0)
         want[k] = acc
-    # one operator call per floor value (floor is an operator param)
-    got = {}
-    df = spark.createDataFrame(rows, "k long, floor long, seq long, d long")
-    for floor in {r[1] for r in rows}:
-        sub = df.filter(df.floor == floor)
-        for r in aggregation.capped_running_final(
-            sub, "k", ["seq"], "d", floor=floor
-        ).collect():
-            got[r.k] = r.balance
+    df = spark.createDataFrame(rows, "k long, seq long, d long")
+    got = {
+        r.k: r.balance
+        for r in aggregation.capped_running_final(df, "k", ["seq"], "d").collect()
+    }
     assert got == want
 
 
@@ -129,7 +124,7 @@ def test_ewma_jvm_fold_bit_identical_to_python_loop(spark):
     df = spark.createDataFrame(rows, "k long, seq long, v double")
     got = {
         r.k: r.ewma
-        for r in aggregation.ewma_final(df, "k", ["seq"], "v", alpha=alpha).collect()
+        for r in aggregation.ewma_final(df, "k", ["seq"], "v").collect()
     }
     assert set(got) == set(want)
     for k in want:

@@ -31,12 +31,10 @@ def test_word_shingles(spark):
 
 
 def test_minhash_finds_planted_dups(spark):
-    pairs = dedup.minhash_near_dup(
-        docs_df(spark), "doc_id", "text", num_hashes=64, bands=16, threshold=0.5
-    ).collect()
+    pairs = dedup.minhash_near_dup(docs_df(spark), "doc_id", "text").collect()
     found = {(r["id_a"], r["id_b"]): r["jaccard_sim"] for r in pairs}
     assert found[(1, 2)] == 1.0  # exact dup always collides in every band
-    assert (1, 3) in found and found[(1, 3)] > 0.5  # near dup
+    assert (1, 3) not in found  # near dup at jaccard 10/12, below the 0.9 cut
     assert (4, 5) not in found  # unrelated docs don't pair
     assert all(a < b for a, b in found)  # canonical pair order
 
@@ -80,7 +78,7 @@ def test_ngram_jaccard_planted_copies(spark):
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard_sim"]
-        for r in dedup.ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.8).collect()
+        for r in dedup.ngram_jaccard_pairs(df, "doc_id", "text").collect()
     }
     assert pairs == {(1, 2): 1.0}
 
@@ -120,7 +118,7 @@ def test_ngram_length_bucketing_bounds_skewed_blocks(spark):
         return {
             (r["id_a"], r["id_b"], r["jaccard_sim"])
             for r in dedup.ngram_jaccard_pairs(
-                df, "doc_id", "text", threshold=0.8, length_bucketing=bucketing
+                df, "doc_id", "text", length_bucketing=bucketing
             ).collect()
         }
 
@@ -154,17 +152,6 @@ def test_duplicate_clusters_chain_and_isolated(spark):
         for r in dedup.duplicate_clusters(pairs, vertices, "doc_id").collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 20: 20}
-
-
-def test_duplicate_clusters_respects_max_iter(spark):
-    # with max_iter=1 the far end of the chain cannot reach the min yet
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "id_a bigint, id_b bigint")
-    vertices = spark.createDataFrame([(i,) for i in [1, 2, 3, 4]], "doc_id bigint")
-    out = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.duplicate_clusters(pairs, vertices, "doc_id", max_iter=1).collect()
-    }
-    assert out[2] == 1 and out[4] == 3  # one hop done, fixpoint not reached
 
 
 def test_simhash_hamming_pairs_equals_brute_force(spark):
@@ -224,26 +211,24 @@ def test_overlap_coefficient_catches_quote_jaccard_misses(spark):
     common = "the cat sat on the mat again and again"   # shared by many
     rows = (
         [Row(doc_id=1, text=long_words), Row(doc_id=2, text=quote)]
-        + [Row(doc_id=100 + i, text=common) for i in range(20)]
+        + [Row(doc_id=100 + i, text=common) for i in range(21)]  # df 21 > cap 20
     )
     df = spark.createDataFrame(rows)
-    out = dedup.overlap_coefficient_pairs(
-        df, "doc_id", "text", shingle_n=3, threshold=0.9, df_cap=4
-    ).collect()
+    out = dedup.overlap_coefficient_pairs(df, "doc_id", "text").collect()
     pairs = {(r.id_a, r.id_b): r.overlap_coef for r in out}
     assert pairs.get((1, 2)) == 1.0          # quote fully contained
     assert all(a < 100 for (a, b) in pairs)  # common-only docs: no pairs
     # contrast: the same pair's Jaccard is far below any useful threshold
-    jac = dedup.ngram_jaccard_pairs(
-        df.filter(df.doc_id < 100), "doc_id", "text", threshold=0.0
-    ).collect()
-    j = {(r.id_a, r.id_b): r.jaccard_sim for r in jac}
-    assert j.get((1, 2), 0.0) < 0.1
+    sh = {
+        r.doc_id: set(r.s)
+        for r in dedup._shingled(df.filter(df.doc_id < 100), "doc_id", "text", 3, "s").collect()
+    }
+    assert len(sh[1] & sh[2]) / len(sh[1] | sh[2]) < 0.1
 
 
 def test_overlap_prefix_filter_loses_no_qualifying_pair(spark):
     """Prefix filtering must be output-identical to brute force when
-    every shingle is rare (df_cap high): the guarantee is that a pair
+    every shingle is rare (df within the cap): the guarantee is that a pair
     reaching overlap >= t on its smaller side always shares a shingle
     inside the smaller side's rarest-first prefix. Corpus: overlapping
     sliding excerpts of one long doc at varied lengths, so many pairs
@@ -262,9 +247,7 @@ def test_overlap_prefix_filter_loses_no_qualifying_pair(spark):
     df = spark.createDataFrame(rows)
     got = {
         (r.id_a, r.id_b): r.overlap_coef
-        for r in dedup.overlap_coefficient_pairs(
-            df, "doc_id", "text", shingle_n=3, threshold=0.8, df_cap=10**6
-        ).collect()
+        for r in dedup.overlap_coefficient_pairs(df, "doc_id", "text").collect()
     }
     # brute force over the same shingle sets
     sh = {
@@ -278,7 +261,7 @@ def test_overlap_prefix_filter_loses_no_qualifying_pair(spark):
             if i < j:
                 inter = len(sh[i] & sh[j])
                 coef = round(inter / min(len(sh[i]), len(sh[j])), 6)
-                if coef >= 0.8:
+                if coef >= 0.9:
                     want[(i, j)] = coef
     assert got == want
 
@@ -298,9 +281,7 @@ def test_minhash_bucket_cap_bounds_duplicate_set_blowup(spark):
     rows += [Row(doc_id=1000, text=distinct_a), Row(doc_id=1001, text=distinct_b)]
     df = spark.createDataFrame(rows)
 
-    capped = dedup.minhash_near_dup(
-        df, "doc_id", "text", num_hashes=16, bands=4, threshold=0.8, bucket_cap=8
-    ).collect()
+    capped = dedup.minhash_near_dup(df, "doc_id", "text", bucket_cap=8).collect()
     pairs = {(r.id_a, r.id_b) for r in capped}
     # the near-dup pair of distinct contents survives the cap
     assert (1000, 1001) in pairs
@@ -312,9 +293,7 @@ def test_minhash_bucket_cap_bounds_duplicate_set_blowup(spark):
 
     # uncapped default: the full quadratic pair set (current gate
     # semantics, oracle-mirrored)
-    uncapped = dedup.minhash_near_dup(
-        df, "doc_id", "text", num_hashes=16, bands=4, threshold=0.8
-    ).count()
+    uncapped = dedup.minhash_near_dup(df, "doc_id", "text").count()
     assert uncapped >= 60 * 59 // 2
 
 
@@ -350,9 +329,7 @@ def test_ngram_block_cap_bounds_duplicate_blocks(spark):
     rows = [Row(doc_id=i, text=boiler) for i in range(40)]
     rows += [Row(doc_id=500, text=da), Row(doc_id=501, text=db)]
     df = spark.createDataFrame(rows)
-    out = dedup.ngram_jaccard_pairs(
-        df, "doc_id", "text", threshold=0.8, block_cap=5
-    ).collect()
+    out = dedup.ngram_jaccard_pairs(df, "doc_id", "text", block_cap=5).collect()
     pairs = {(r.id_a, r.id_b) for r in out}
     assert (500, 501) in pairs
     dup_pairs = {(a, b) for (a, b) in pairs if a < 100 and b < 100}

@@ -2,8 +2,9 @@
 Arrow-fetch gate replica would CATCH a real bug, permanently.
 
 The r9 negative control (the r7 tree reproducing the historic
-hash-fail under tools/driver_gate_replica.py,
-docs/GATE_REPLICA_r07tree.json) was a one-off. This is the standing
+hash-fail under tools/driver_gate_replica.py; its report
+docs/GATE_REPLICA_r07tree.json is in git history, last at 5a10ad6)
+was a one-off. This is the standing
 harness analog of mutation testing: five representative query
 builders get one seeded bug each — the classic classes —
 

@@ -2,8 +2,8 @@
 
 The naive (id, cell) self-join is |cell|^2 per cell — the one
 confirmed 100 TB scale-killer in the co-purchase graph family
-(VERDICT r4 #4). cooccurrence_edges caps each cell at its
-``cap_per_cell`` smallest ids before pairing, so a planted viral cell
+(VERDICT r4 #4). cooccurrence_edges caps each cell at its 64
+smallest ids before pairing, so a planted viral cell
 contributes at most cap*(cap-1)/2 pairs no matter how hot it is.
 """
 
@@ -23,12 +23,12 @@ def test_hot_cell_fanout_is_capped(spark):
     rows = [(u, 1) for u in range(500)]
     rows += [(u, 2) for u in (1000, 1001, 1002)]
     rows += [(u, 3) for u in (2000, 2001, 2002)]
-    edges = graph.cooccurrence_edges(_cells(spark, rows), cap_per_cell=32)
-    per_cell_max = 32 * 31 // 2
+    edges = graph.cooccurrence_edges(_cells(spark, rows))
+    per_cell_max = 64 * 63 // 2
     got = edges.count()
     # hot cell contributes exactly cap*(cap-1)/2, normal cells 3 each
     assert got == per_cell_max + 3 + 3
-    # and the survivors of the hot cell are its 32 SMALLEST ids
+    # and the survivors of the hot cell are its 64 SMALLEST ids
     # (deterministic construction an oracle can mirror)
     max_node = edges.agg(F.max(F.greatest("u", "v"))).collect()[0][0]
     assert max_node == 2002
@@ -38,21 +38,12 @@ def test_hot_cell_fanout_is_capped(spark):
         .agg(F.max("n"))
         .collect()[0][0]
     )
-    assert hot_nodes == 31
-
-
-def test_uncapped_matches_capped_when_cells_are_small(spark):
-    rows = [(u, c) for c in range(10) for u in range(c, c + 5)]
-    capped = graph.cooccurrence_edges(_cells(spark, rows), cap_per_cell=64)
-    uncapped = graph.cooccurrence_edges(_cells(spark, rows), cap_per_cell=None)
-    assert sorted(map(tuple, capped.collect())) == sorted(
-        map(tuple, uncapped.collect())
-    )
+    assert hot_nodes == 63
 
 
 def test_edges_are_canonical_and_distinct(spark):
     # duplicate membership rows must not produce duplicate edges
     rows = [(1, 7), (2, 7), (1, 7), (2, 7), (2, 8), (1, 8)]
-    edges = graph.cooccurrence_edges(_cells(spark, rows), cap_per_cell=8)
+    edges = graph.cooccurrence_edges(_cells(spark, rows))
     got = sorted(map(tuple, edges.collect()))
     assert got == [(1, 2)]

@@ -36,9 +36,9 @@ def test_upsert_replay_is_idempotent(spark, derby_url):
         [(1, "a", 10.0), (2, "b", 20.0)], "id bigint, name string, v double"
     )
     batch = df.select("*", row_hash_expr(df.columns).alias("row_hash"))
-    types = {"row_hash": "VARCHAR(64)"}  # Derby CLOBs can't be MERGE keys
-    upsert_jdbc(batch, derby_url, "tgt", key_cols=["row_hash"], column_types=types)
-    upsert_jdbc(batch, derby_url, "tgt", key_cols=["row_hash"], column_types=types)  # replay
+    # row_hash is created as VARCHAR(64): Derby CLOBs can't be MERGE keys
+    upsert_jdbc(batch, derby_url, "tgt", key_cols=["row_hash"])
+    upsert_jdbc(batch, derby_url, "tgt", key_cols=["row_hash"])  # replay
 
     out = read_table(spark, derby_url, "tgt")
     assert out.count() == 2  # no duplicates from the replay

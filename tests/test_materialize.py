@@ -47,21 +47,6 @@ def test_durable_mode_persists_disk_only(spark, monkeypatch):
         df.unpersist()
 
 
-def test_durable_eager_materializes_now(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_DURABLE", "1")
-    df = materialize(spark.range(100), eager=True)
-    try:
-        # eager persist must have computed the cache already
-        info = [
-            r
-            for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-            if r.numCachedPartitions() > 0
-        ]
-        assert info, "eager durable materialize left nothing cached"
-    finally:
-        df.unpersist()
-
-
 def test_same_values_both_modes(spark, monkeypatch):
     base = spark.range(50).withColumn("g", F.col("id") % 5)
     monkeypatch.delenv("SPARK_GRAFT_DURABLE", raising=False)
@@ -88,9 +73,7 @@ def test_operators_run_durable_end_to_end(spark, monkeypatch):
     df = spark.createDataFrame(rows)
 
     def run():
-        pairs = dedup.minhash_near_dup(
-            df, "doc_id", "text", num_hashes=16, bands=4, threshold=0.9
-        )
+        pairs = dedup.minhash_near_dup(df, "doc_id", "text")
         edges = pairs.select("id_a", "id_b")
         clusters = dedup.duplicate_clusters(
             edges, df.select("doc_id"), "doc_id"
@@ -143,8 +126,7 @@ def test_durable_iterative_loops_release_old_rounds(spark, monkeypatch):
 
         before = n_cached()
         pr = graph.pagerank_micro(
-            spark.createDataFrame([Row(u=i, v=i + 1) for i in range(20)]),
-            iters=6,
+            spark.createDataFrame([Row(u=i, v=i + 1) for i in range(20)])
         )
         assert pr.count() > 0
         assert n_cached() - before <= 2

@@ -97,7 +97,7 @@ def test_metadata_only_query_does_not_read_payload(spark, tmp_path):
 
 
 def test_frame_sample_plan(spark):
-    out = M.frame_sample_plan(media_df(spark), every_ms=1000).collect()
+    out = M.frame_sample_plan(media_df(spark)).collect()
     assert len(out) == 1  # only the video row
     assert out[0]["frame_ts_ms"] == [0, 1000, 2000]  # 3500ms -> 3 frames
 
@@ -124,7 +124,7 @@ def test_resize_plan_fit_within_and_no_upscale(spark):
         "doc_id bigint, text string, lang string, source string, n_chars bigint",
     )
     media = M.media_from_documents(docs)
-    out = {r["media_id"]: r for r in M.resize_plan(media, target=224).collect()}
+    out = {r["media_id"]: r for r in M.resize_plan(media).collect()}
     assert set(out) == {0, 3}  # only image rows (doc_id % 3 == 0)
     for r in out.values():
         assert max(r["out_width"], r["out_height"]) <= 224

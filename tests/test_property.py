@@ -132,9 +132,8 @@ def test_latest_wins_merge_semantics_random(spark, base, upd):
         max_size=10,
         unique=True,
     ),
-    d=st.integers(min_value=1, max_value=2),
 )
-def test_fuzzy_pairs_match_bruteforce(spark, words, d):
+def test_fuzzy_pairs_match_bruteforce(spark, words):
     """Blocked fuzzy join == brute force on random short strings over a
     tiny alphabet (dense edit-distance neighborhoods stress the
     length-band completeness argument hardest)."""
@@ -143,7 +142,7 @@ def test_fuzzy_pairs_match_bruteforce(spark, words, d):
     df = spark.createDataFrame([(w,) for w in words], "w string")
     got = {
         (r.val_a, r.val_b, r.dist)
-        for r in fuzzy.fuzzy_self_pairs(df, "w", max_dist=d).collect()
+        for r in fuzzy.fuzzy_self_pairs(df, "w").collect()
     }
 
     def lev(a, b):
@@ -158,7 +157,7 @@ def test_fuzzy_pairs_match_bruteforce(spark, words, d):
         (min(a, b), max(a, b), lev(a, b))
         for i, a in enumerate(words)
         for b in words[i + 1:]
-        if lev(a, b) <= d
+        if lev(a, b) <= 3
     }
     assert got == want
 
@@ -183,11 +182,11 @@ def test_zvalue_interleave_roundtrip(spark, xs):
 
     df = spark.createDataFrame(xs, "x long, y long")
     rows = df.select(
-        "x", "y", layout.zvalue([F.col("x"), F.col("y")], bits=8).alias("z")
+        "x", "y", layout.zvalue([F.col("x"), F.col("y")]).alias("z")
     ).collect()
     for r in rows:
-        x = sum(((r.z >> (2 * i)) & 1) << i for i in range(8))
-        y = sum(((r.z >> (2 * i + 1)) & 1) << i for i in range(8))
+        x = sum(((r.z >> (2 * i)) & 1) << i for i in range(layout.BITS))
+        y = sum(((r.z >> (2 * i + 1)) & 1) << i for i in range(layout.BITS))
         assert (x, y) == (r.x, r.y)
 
 
@@ -272,7 +271,7 @@ def test_holt_final_matches_reference_fold(spark, ys):
         [(1, i, int(y)) for i, y in enumerate(ys)], "g long, t long, v long"
     )
     row = aggregation.holt_final(
-        df, "g", ["t"], "v", alpha=0.3, beta=0.1
+        df, "g", ["t"], "v"
     ).collect()[0]
     l, b = float(ys[0]), 0.0
     for x in ys[1:]:

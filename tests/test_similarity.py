@@ -30,7 +30,7 @@ def test_dot_and_norm(spark):
 def test_cosine_topk_ranking(spark):
     emb = vec_df(spark)
     out = similarity.cosine_topk(
-        emb.filter(F.col("vec_id") == 0), emb, "vec_id", "vec_id", k=3
+        emb.filter(F.col("vec_id") == 0), emb, "vec_id", "vec_id"
     ).collect()
     ranked = [(r["neighbor_id"], r["rank"]) for r in sorted(out, key=lambda r: r["rank"])]
     assert ranked[0][0] == 1  # most similar
@@ -58,7 +58,7 @@ def test_lsh_topk_finds_identical(spark):
     )
     planes = [[0.3, -0.5, 0.8], [-0.2, 0.9, 0.1]]
     out = similarity.lsh_cosine_topk(
-        df.filter(F.col("vec_id") == 0), df, "vec_id", "vec_id", planes, k=5
+        df.filter(F.col("vec_id") == 0), df, "vec_id", "vec_id", planes
     ).collect()
     neighbors = {r["neighbor_id"]: r["score"] for r in out}
     assert neighbors.get(1) == 1.0  # identical vector found in same bucket
@@ -75,7 +75,7 @@ def test_cosine_near_dup_planted(spark):
     pairs = {
         (r["id_a"], r["id_b"]): r["cos_sim"]
         for r in similarity.cosine_near_dup(
-            df, "vec_id", "embedding", "label", threshold=0.999
+            df, "vec_id", "embedding", "label"
         ).collect()
     }
     assert pairs == {(0, 100): 1.0}

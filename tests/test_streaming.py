@@ -141,7 +141,7 @@ def _events(spark):
 def test_tumbling_counts_batch(spark):
     out = {
         (str(r["window_start"]), r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in tumbling_counts(_events(spark), width="1 hour").collect()
+        for r in tumbling_counts(_events(spark)).collect()
     }
     assert out[("2024-01-01 00:00:00", "click")] == (2, 3.0)
     assert out[("2024-01-01 01:00:00", "view")] == (1, 3.0)
@@ -168,7 +168,7 @@ def test_streaming_tumbling_with_watermark(spark, tmp_path):
         )
         .parquet(src + "/*.parquet")
     )
-    agg = tumbling_counts(stream, width="1 hour", watermark="2 hours")
+    agg = tumbling_counts(stream.withWatermark("ts", "2 hours"))
     q = (
         agg.writeStream.outputMode("append")
         .format("memory")
@@ -761,7 +761,7 @@ def test_watermarked_streaming_dedup(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src / "*"))
     )
-    deduped = dedup_within_watermark(stream, ["k"], "ts", delay="10 minutes")
+    deduped = dedup_within_watermark(stream, ["k"], "ts")
     q = (
         deduped.writeStream.format("memory")
         .queryName("dedup_out")
@@ -835,7 +835,7 @@ def test_stream_static_enrich(spark, tmp_path):
 
 def test_stream_stream_interval_join(spark, tmp_path):
     """Two watermarked streams, interval-bounded join: clicks within
-    30 minutes after an impression match; later clicks don't."""
+    6 hours after an impression match; later clicks don't."""
     from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming.joins import (
         stream_stream_interval_join,
     )
@@ -844,8 +844,8 @@ def test_stream_stream_interval_join(spark, tmp_path):
     imp_dir.mkdir(), clk_dir.mkdir()
     imps = [("u1", "2024-01-01 00:00:00"), ("u2", "2024-01-01 01:00:00")]
     clks = [
-        ("u1", "2024-01-01 00:10:00"),  # within 30m of u1 impression -> match
-        ("u2", "2024-01-01 02:00:00"),  # 60m after u2 impression -> no match
+        ("u1", "2024-01-01 00:10:00"),  # within 6 h of u1 impression -> match
+        ("u2", "2024-01-01 08:00:00"),  # 7 h after u2 impression -> no match
     ]
     (
         spark.createDataFrame(imps, "user_id string, ts_s string")
@@ -871,8 +871,6 @@ def test_stream_stream_interval_join(spark, tmp_path):
         right_ts="clk_ts",
         left_watermark="2 hours",
         right_watermark="2 hours",
-        lower="0 seconds",
-        upper="30 minutes",
     )
     q = (
         joined.writeStream.format("memory")
@@ -930,6 +928,70 @@ def test_supervised_restart_recovers_from_checkpoint(spark, dirs):
     assert spark.read.parquet(dirs["quarantine"]).count() == 2
 
 
+def test_supervised_restart_after_file_move_replays_nothing(spark, dirs, tmp_path):
+    """The same crash with file routing on: batch 0 raises after its
+    whole body (sinks, audit, move to processed/) and before its commit.
+    The restart replays batch 0 over a file already moved away: it reads
+    no rows, moves nothing and writes a second SUCCESS audit for batch 0
+    with zero counts. Good and quarantine rows land exactly once, both
+    files end in processed/ and none in failed/."""
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming.ingest import (
+        process_batch,
+    )
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming.supervision import (
+        run_supervised,
+    )
+
+    processed, failed = str(tmp_path / "processed"), str(tmp_path / "failed")
+    write_file(dirs, "a.csv", CSV_GOOD)
+    write_file(dirs, "b.csv", CSV_MIXED)
+    cfg = make_cfg(dirs)
+    cfg.max_files_per_trigger = 1  # two micro-batches
+    cfg.processed_dir = processed
+    cfg.failed_dir = failed
+
+    state = {"failed": False}
+    inner = process_batch(cfg)
+
+    def flaky_body(batch_df, batch_id):
+        inner(batch_df, batch_id)
+        if not state["failed"]:
+            state["failed"] = True
+            raise RuntimeError("transient crash after the move, before the commit")
+
+    def start():
+        stream = spark.readStream.format("csv").schema(cfg.schema).option(
+            "header", "true"
+        ).option("maxFilesPerTrigger", "1").load(cfg.source_dir)
+        return (
+            stream.writeStream.foreachBatch(flaky_body)
+            .option("checkpointLocation", cfg.checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    run_supervised(start, max_restarts=2, backoff_s=0.1)
+    assert state["failed"] is True  # the crash really happened
+    good = sorted(r.sensor_id for r in spark.read.parquet(dirs["good"]).collect())
+    assert good == ["s1", "s2", "s4"]
+    bad = spark.read.parquet(dirs["quarantine"]).collect()
+    assert sorted(r.error_reason for r in bad) == [
+        "null_key:sensor_id", "out_of_range:temperature_C",
+    ]
+    assert sorted(os.listdir(processed)) == ["a.csv", "b.csv"]
+    assert not os.path.exists(failed) or os.listdir(failed) == []
+    assert os.listdir(dirs["source"]) == []
+    audit = sorted(
+        (r.batch_id, r.total_rows, r.good_rows, r.bad_rows, r.status)
+        for r in spark.read.parquet(dirs["audit"]).collect()
+    )
+    assert audit == [
+        (0, 0, 0, 0, "SUCCESS"),  # the replay over the moved-away file
+        (0, 2, 2, 0, "SUCCESS"),
+        (1, 3, 1, 2, "SUCCESS"),
+    ]
+
+
 def test_sliding_avg_exact_integer_contract(spark):
     """avg_value = floor(sum(round(v*1e4)) * 100 / n) / 1e6 — exact
     integer arithmetic, no float summation (the sf0.1 drift fix)."""
@@ -940,7 +1002,7 @@ def test_sliding_avg_exact_integer_contract(spark):
         ("a", dt.datetime(2024, 1, 1, 0, 20), 2.0),      # scaled 20000
     ]
     df = spark.createDataFrame(rows, "event_type string, ts timestamp, value double")
-    out = sliding_avg(df, ts_col="ts", width="1 hour", slide="30 minutes")
+    out = sliding_avg(df)
     got = {(str(r.window_start), r.event_type): r.avg_value for r in out.collect()}
     # both events land in the 00:00 window and the 23:30 window
     # sum_scaled = 30001; floor(30001 * 100 / 2) = 1500050 -> 1.50005
