@@ -4261,14 +4261,6 @@ def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("price_cents", F.col("price_cents") + 1000)
         .withColumn("_version", F.lit(1).cast("long"))
     )
-    feed = _tempfile.mkdtemp(prefix="cdc_feed_")
-    for i, part in enumerate((base, updates)):
-        tmp = _os.path.join(feed, f"_w{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = _glob.glob(_os.path.join(tmp, "part-*.parquet"))[0]
-        _os.rename(src, _os.path.join(feed, f"{i:02d}_feed.parquet"))
-        _shutil.rmtree(tmp)
-
     run = _uuid.uuid4().hex[:12]
     # r14: snapshot table + checkpoint WAL on the fast ephemeral
     # scratch (same contract as drain_to_parquet: bounded run, replay
@@ -4280,19 +4272,29 @@ def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         _os.path.join(scratch, f"cdc_table_{run}")
     )
     ckpt = _os.path.join(scratch, f"cdc_ckpt_{run}")
-    stream = (
-        spark.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
-    q = merge_sink.start_merge_stream(
-        stream, table, ckpt, ["o_orderkey"], "_version"
-    )
-    q.awaitTermination()
-    _shutil.rmtree(feed, ignore_errors=True)
-    # drained: the checkpoint WAL is dead weight on the scratch fs
-    # (the snapshot table below is all the final read needs)
-    _shutil.rmtree(ckpt, ignore_errors=True)
+    feed = _tempfile.mkdtemp(prefix="cdc_feed_")
+    # the feed and the checkpoint WAL are dead weight once the stream
+    # has drained (the snapshot table is all the final read needs) and
+    # are removed whether or not the drain completed
+    try:
+        for i, part in enumerate((base, updates)):
+            tmp = _os.path.join(feed, f"_w{i}")
+            part.coalesce(1).write.mode("overwrite").parquet(tmp)
+            src = _glob.glob(_os.path.join(tmp, "part-*.parquet"))[0]
+            _os.rename(src, _os.path.join(feed, f"{i:02d}_feed.parquet"))
+            _shutil.rmtree(tmp)
+        stream = (
+            spark.readStream.schema(base.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
+        )
+        q = merge_sink.start_merge_stream(
+            stream, table, ckpt, ["o_orderkey"], "_version"
+        )
+        q.awaitTermination()
+    finally:
+        _shutil.rmtree(feed, ignore_errors=True)
+        _shutil.rmtree(ckpt, ignore_errors=True)
 
     final = merge_sink.read_table(spark, table)
     return final.groupBy("o_orderstatus").agg(

@@ -9,8 +9,8 @@ a guarded ``when`` cascade at ``code/helpers.py:97,108,119,129``).
 Design notes for scale:
 - The whole rule set is a single narrow projection — no UDF, no extra
   pass; whole-stage codegen compiles it into the scan stage.
-- ``split`` marks rows instead of double-filtering lineage twice; callers
-  that need both halves can reuse one cached/persisted marked frame.
+- ``validate`` marks rows instead of double-filtering lineage twice; the
+  ingest path splits good and bad rows from one persisted marked frame.
 - Rules silently skip absent columns, matching reference semantics
   (``code/helpers.py:94,105,117``).
 """
@@ -129,15 +129,3 @@ def reference_ruleset() -> RuleSet:
 def validate(df: DataFrame, rules: RuleSet) -> DataFrame:
     """Attach the error column in one projection; null = good row."""
     return df.withColumn(ERROR_COL, rules.error_expr(df.columns))
-
-
-def split(validated: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(good, bad). Good rows drop the error column; bad rows keep it.
-
-    Callers that consume both halves should ``persist()`` `validated`
-    first (single scan), unlike the reference's re-computed lineage
-    (SURVEY.md §4.3-3).
-    """
-    good = validated.filter(F.col(ERROR_COL).isNull()).drop(ERROR_COL)
-    bad = validated.filter(F.col(ERROR_COL).isNotNull())
-    return good, bad

@@ -1,22 +1,18 @@
-"""Noisy-window discard protocol in bench.py --isolate (r14, VERDICT
-r13 order #2 — the r12/r13 manual rule, machine-run).
+"""bench.py's contract: the last stdout line is the artifact (shared
+mode, end to end and under a raising teardown), isolate mode accounts
+for a failed child, and unknown flags or query names exit 2 before any
+Spark session starts.
 
-These tests drive `bench._isolate` with `_run_window`/`_spawn_single`
-monkeypatched (no Spark, no subprocesses) and assert the three
-adjudication paths land the right verdict and artifact fields:
-
-1. calm window      -> kept, no probes;
-2. high window whose top movers COLLAPSE on solo median-of-5 probes
-                    -> window discarded whole, re-run once, both
-                       windows and probe numbers in the artifact;
-3. high window whose movers do NOT collapse -> kept_high_investigate
-                       (a real regression is never averaged away).
+Every test but the end-to-end one is Spark-free: `get_spark`, the
+registry or `subprocess.run` is monkeypatched.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
+import subprocess
 import sys
 
 import pytest
@@ -25,100 +21,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 
-NAMES = ["qa", "qb", "qc"]
-PRIOR = {"qa": 1.0, "qb": 2.0, "qc": 3.0}
 
-
-@pytest.fixture
-def rig(tmp_path, monkeypatch, capsys):
-    """Common harness: 3-query registry subset, a prior floor file,
-    and a hook for scripting window/probe timings."""
-    prior_path = tmp_path / "BENCH_ISOLATE_r99_floor.json"
-    prior_path.write_text(json.dumps({"queries": PRIOR}))
-    monkeypatch.setenv("SPARK_GRAFT_QUERIES", ",".join(NAMES))
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    monkeypatch.setattr(
-        sys, "argv", ["bench.py", "--isolate", "--prior", str(prior_path)]
-    )
-
-    state = {"windows": [], "probes": {}}
-
-    def fake_run_window(names, n_reps):
-        t = state["windows"].pop(0)
-        return dict(t), {k: [v] for k, v in t.items()}
-
-    def fake_spawn_single(name, n_reps):
-        assert n_reps == bench.NOISE_PROBE_REPS
-        sec = state["probes"][name]
-        return {"name": name, "sec": sec, "reps": [sec] * n_reps}
-
-    monkeypatch.setattr(bench, "_run_window", fake_run_window)
-    monkeypatch.setattr(bench, "_spawn_single", fake_spawn_single)
-
-    def run():
-        bench._isolate()
-        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-
-    return state, run
-
-
-def test_calm_window_is_kept_without_probes(rig):
-    state, run = rig
-    state["windows"] = [{"qa": 1.1, "qb": 1.9, "qc": 3.1}]  # +1.7%
-    art = run()
-    proto = art["noise_protocol"]
-    assert proto["verdict"] == "kept"
-    assert len(proto["windows"]) == 1
-    assert "probes" not in proto["windows"][0]
-    assert art["value"] == pytest.approx(6.1)
-
-
-def test_high_window_with_collapsing_probes_is_discarded_and_rerun(rig):
-    state, run = rig
-    # +50% over the 6.0 prior, spread over all three queries (diffuse);
-    # solo probes land at/below the prior values -> r12/r13 discard rule
-    state["windows"] = [
-        {"qa": 2.0, "qb": 3.5, "qc": 3.5},
-        {"qa": 1.0, "qb": 2.1, "qc": 2.9},  # calm re-run
-    ]
-    state["probes"] = {"qa": 0.9, "qb": 2.0, "qc": 2.8}
-    art = run()
-    proto = art["noise_protocol"]
-    assert proto["verdict"] == "window1_discarded_kept"
-    assert [w["verdict"] for w in proto["windows"]] == ["discarded", "kept"]
-    w1 = proto["windows"][0]
-    assert w1["queries"] == {"qa": 2.0, "qb": 3.5, "qc": 3.5}
-    probed = {p["query"]: p for p in w1["probes"]}
-    assert set(probed) == set(NAMES)  # top-3 movers = all three here
-    assert all(p["collapsed_to_prior"] for p in w1["probes"])
-    assert probed["qa"]["probe_reps"] == [0.9] * bench.NOISE_PROBE_REPS
-    # final artifact carries the CALM window's timings
-    assert art["queries"] == {"qa": 1.0, "qb": 2.1, "qc": 2.9}
-
-
-def test_high_window_with_sticky_mover_is_kept_for_investigation(rig):
-    state, run = rig
-    # qb's probe stays 2x its prior -> NOT noise; never discard
-    state["windows"] = [{"qa": 2.0, "qb": 4.0, "qc": 3.5}]
-    state["probes"] = {"qa": 0.9, "qb": 4.0, "qc": 2.8}
-    art = run()
-    proto = art["noise_protocol"]
-    assert proto["verdict"] == "kept_high_investigate"
-    assert len(proto["windows"]) == 1  # no silent re-run
-    probed = {p["query"]: p for p in proto["windows"][0]["probes"]}
-    assert probed["qb"]["collapsed_to_prior"] is False
-    assert art["queries"] == {"qa": 2.0, "qb": 4.0, "qc": 3.5}
-
-
-def test_no_prior_disables_protocol(rig, monkeypatch):
-    state, run = rig
-    monkeypatch.setattr(
-        sys, "argv", ["bench.py", "--isolate", "--prior", "none"]
-    )
-    state["windows"] = [{"qa": 9.0, "qb": 9.0, "qc": 9.0}]
-    art = run()
-    assert art["noise_protocol"]["verdict"] == "inactive"
-    assert art["noise_protocol"]["prior"] is None
+def _must_not_run(*args, **kwargs):
+    raise AssertionError("bench.py started Spark or a child on bad input")
 
 
 def test_shared_bench_emits_json_as_final_stdout_line():
@@ -158,8 +63,15 @@ def test_shared_bench_emits_json_as_final_stdout_line():
     assert all(v >= 0 for v in art["queries"].values())
 
 
-@pytest.mark.parametrize("mode", ["shared", "single"])
-def test_payload_survives_a_raising_spark_stop(tmp_path, monkeypatch, capsys, mode):
+
+@pytest.mark.parametrize(
+    "argv",
+    [
+        pytest.param(["bench.py"], id="shared"),
+        pytest.param(["bench.py", "--reps", "2"], id="shared_reps2"),
+    ],
+)
+def test_payload_survives_a_raising_spark_stop(tmp_path, monkeypatch, capsys, argv):
     """The artifact is built before teardown; a spark.stop() that raises
     must still leave it as the final stdout line (the error propagates
     after it)."""
@@ -172,29 +84,82 @@ def test_payload_survives_a_raising_spark_stop(tmp_path, monkeypatch, capsys, mo
         bench.entrymod, "queries", lambda: {"qa": lambda s, d: mock.MagicMock()}
     )
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path / "sf0.001"))
-    monkeypatch.setenv("SPARK_GRAFT_WARM_DIR", str(tmp_path / "absent"))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
     monkeypatch.delenv("SPARK_GRAFT_QUERIES", raising=False)
-    monkeypatch.setattr(sys, "argv", ["bench.py"])
+    monkeypatch.setattr(sys, "argv", argv)
 
     with pytest.raises(RuntimeError, match="teardown failed"):
-        if mode == "shared":
-            bench.main()
-        else:
-            bench._single("qa")
+        bench.main()
     spark.stop.assert_called_once()
     art = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    if mode == "shared":
-        assert art["mode"] == "shared" and set(art["queries"]) == {"qa"}
-    else:
-        assert art["name"] == "qa" and len(art["reps"]) == 1
+    n_reps = 2 if "--reps" in argv else 1
+    assert art["mode"] == "shared" and set(art["queries"]) == {"qa"}
+    assert art["n_reps"] == n_reps and len(art["reps"]["qa"]) == n_reps
+    assert art["queries"]["qa"] == round(statistics.median(art["reps"]["qa"]), 3)
 
 
-def test_prior_default_picks_newest_floor():
-    got = bench._prior_floor_path()
-    assert got is not None and got.endswith("_floor.json")
-    # newest committed floor beside bench.py (r13 at the time of writing;
-    # assert monotonic shape, not the literal round number)
-    import re
+def test_isolate_counts_a_failed_child(monkeypatch, capsys):
+    """One child prints a valid artifact after log noise, the other
+    exits non-zero with no JSON: the failed query reads -1.0, counts in
+    n_failed, and "value" sums only the query that ran."""
+    ok, bad = "q1_pricing_summary", "top_bigrams"
+    monkeypatch.setenv("SPARK_GRAFT_QUERIES", f"{ok},{bad}")
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    monkeypatch.setattr(sys, "argv", ["bench.py", "--isolate", "--reps", "3"])
+    monkeypatch.setattr(bench.run_meta, "meta", lambda: {})
+    children = []
 
-    assert int(re.search(r"_r(\d+)_floor", got).group(1)) >= 13
+    def fake_run(cmd, env, **kwargs):
+        name = env["SPARK_GRAFT_QUERIES"]
+        children.append((cmd[1:], name))
+        if name == ok:
+            art = {"queries": {ok: 2.0}, "reps": {ok: [2.5, 2.0, 1.5]}}
+            return subprocess.CompletedProcess(cmd, 0, "noise\n" + json.dumps(art) + "\n", "")
+        return subprocess.CompletedProcess(cmd, 1, "", "java.lang.OutOfMemoryError")
+
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    bench.main()
+    out = capsys.readouterr()
+    art = json.loads(out.out.strip().splitlines()[-1])
+    assert art["mode"] == "isolate" and art["n_reps"] == 3
+    assert art["queries"] == {ok: 2.0, bad: -1.0}
+    assert art["reps"] == {ok: [2.5, 2.0, 1.5], bad: []}
+    assert art["n_failed"] == 1
+    assert art["value"] == pytest.approx(2.0)
+    assert f"{bad} failed" in out.err and "OutOfMemoryError" in out.err
+    # each child is the shared suite narrowed to one query
+    assert sorted(n for _, n in children) == sorted([ok, bad])
+    assert all(args == [os.path.abspath(bench.__file__), "--reps", "3"] for args, _ in children)
+
+
+@pytest.mark.parametrize(
+    "argv, bad",
+    [
+        (["--isolat"], ["--isolat"]),
+        (["--rep", "3"], ["--rep", "3"]),
+        (["--isolate", "--floor", "x.json"], ["--floor", "x.json"]),
+        (["-h"], ["-h"]),
+    ],
+    ids=["typo", "prefix", "unknown", "help"],
+)
+def test_unknown_flag_exits_2_before_spark(monkeypatch, capsys, argv, bad):
+    monkeypatch.setattr(bench, "get_spark", _must_not_run)
+    monkeypatch.setattr(sys, "argv", ["bench.py", *argv])
+    with pytest.raises(SystemExit) as exc:
+        bench.main()
+    assert exc.value.code == 2
+    assert "unrecognized arguments: " + " ".join(bad) in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("mode", [[], ["--isolate"]], ids=["shared", "isolate"])
+def test_unknown_query_name_exits_2_before_spark(monkeypatch, capsys, mode):
+    monkeypatch.setattr(bench, "get_spark", _must_not_run)
+    monkeypatch.setattr(subprocess, "run", _must_not_run)
+    monkeypatch.setenv("SPARK_GRAFT_QUERIES", "top_bigrams,top_bigram,q99")
+    monkeypatch.setattr(sys, "argv", ["bench.py", *mode])
+    with pytest.raises(SystemExit) as exc:
+        bench.main()
+    assert exc.value.code == 2
+    assert "unknown query names in SPARK_GRAFT_QUERIES: q99 top_bigram" in (
+        capsys.readouterr().err
+    )

@@ -1,6 +1,7 @@
 """The staged-stream helper behind the registry's streaming queries:
 the stage dir never outlives its builder, and tick rows land at the
-requested event time whatever the fixture's ts encoding."""
+requested event time whatever the fixture's ts encoding. The CDC
+upsert's feed and checkpoint dirs never outlive their builder either."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as em
 from advanced_real_time_data_pipeline_and_analytical_processing_spark import catalog
+from advanced_real_time_data_pipeline_and_analytical_processing_spark.sinks import merge_sink
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import stateful
 
 STAGED = (
@@ -30,8 +32,9 @@ LATEST_NS = 1_700_000_000_123_456_789
 
 
 def write_fixture(sf_dir, unit: str = "us") -> None:
-    """A two-event events table (ts stored as timestamp[unit]) and the
-    customer dimension the enrichment query joins."""
+    """A two-event events table (ts stored as timestamp[unit]), the
+    customer dimension the enrichment query joins and a two-order
+    orders table for the CDC upsert."""
     os.makedirs(sf_dir, exist_ok=True)
     ts = pa.array([LATEST_NS - 5_000_000_000, LATEST_NS], type=pa.timestamp("ns"))
     events = pa.table(
@@ -49,26 +52,42 @@ def write_fixture(sf_dir, unit: str = "us") -> None:
             "c_mktsegment": pa.array(["BUILDING", "MACHINERY"]),
         }
     )
+    orders = pa.table(
+        {
+            "o_orderkey": pa.array([7, 8], type=pa.int64()),
+            "o_orderstatus": pa.array(["O", "F"]),
+            "o_totalprice": pa.array([10.5, 20.25]),
+        }
+    )
     pq.write_table(events, os.path.join(sf_dir, "events.parquet"))
     pq.write_table(customer, os.path.join(sf_dir, "customer.parquet"))
+    pq.write_table(orders, os.path.join(sf_dir, "orders.parquet"))
 
 
-@pytest.mark.parametrize("name", STAGED)
+@pytest.mark.parametrize("name", STAGED + ("streaming_upsert",))
 def test_failed_drain_leaves_no_stage_dir(spark, tmp_path, monkeypatch, name):
     sf_dir = str(tmp_path / "sf")
     write_fixture(sf_dir)
     temp = tmp_path / "temp"
     temp.mkdir()
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
     monkeypatch.setattr(tempfile, "tempdir", str(temp))
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(tmp_path / "scratch"))
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(scratch))
 
     def failing_drain(*args, **kwargs):
         raise RuntimeError("drain failed")
 
+    def failing_merge_stream(source, table_dir, checkpoint_dir, *args):
+        os.makedirs(checkpoint_dir)  # the stream got as far as its WAL
+        raise RuntimeError("drain failed")
+
     monkeypatch.setattr(stateful, "drain_to_parquet", failing_drain)
+    monkeypatch.setattr(merge_sink, "start_merge_stream", failing_merge_stream)
     with pytest.raises(RuntimeError, match="drain failed"):
         em.queries()[name](spark, sf_dir)
     assert os.listdir(temp) == []
+    assert [d for d in os.listdir(scratch) if d.startswith("cdc_ckpt_")] == []
 
 
 @pytest.mark.parametrize("unit", ["ns", "us"])

@@ -1,11 +1,9 @@
 """Rule engine semantics: first-error-wins priority (reference
-code/helpers.py:97,108,119,129), absent-column skip, good/bad split
-partition laws."""
+code/helpers.py:97,108,119,129), absent-column skip."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.operators import validation as V
 
@@ -68,18 +66,3 @@ def test_absent_columns_skipped(spark):
     # heavy-null still applies over present columns; 'x' is non-null -> good
     assert out[0]["error_reason"] is None
 
-
-def test_split_partition_laws(spark):
-    rows = [("s1", "21.5", "40"), (None, "1", "2"), ("s2", "99", "3")]
-    marked = V.validate(make_df(spark, rows), RULES)
-    good, bad = V.split(marked)
-    assert good.count() + bad.count() == 3
-    assert V.ERROR_COL not in good.columns
-    assert bad.filter(F.col(V.ERROR_COL).isNull()).count() == 0
-
-
-def test_empty_input_typed_split(spark):
-    df = make_df(spark, []).limit(0)
-    good, bad = V.split(V.validate(df, RULES))
-    assert good.count() == 0 and bad.count() == 0
-    assert "error_reason" in bad.columns  # typed, not aliased input (ref bug §4.3-6)
