@@ -183,7 +183,7 @@ def _staged_events(spark: SparkSession, sf_dir: str, links=("events.parquet",)):
     symlink per name in ``links``; two names deliver every event twice).
     The stage dir is removed on exit, whether or not the drain ran to
     completion — run the drain inside the ``with``."""
-    stage_dir = tempfile.mkdtemp(prefix="stream_stage_")
+    stage_dir = tempfile.mkdtemp(prefix="stream_stage_", dir=stateful.scratch_dir())
     try:
         yield _EventStage(spark, sf_dir, stage_dir, links)
     finally:
@@ -4243,10 +4243,6 @@ def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental merge must converge to the batch merge's answer.
     Version-based merging makes the result file-order-independent."""
     import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-    import uuid as _uuid
 
     from advanced_real_time_data_pipeline_and_analytical_processing_spark.sinks import merge_sink
 
@@ -4261,40 +4257,33 @@ def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("price_cents", F.col("price_cents") + 1000)
         .withColumn("_version", F.lit(1).cast("long"))
     )
-    run = _uuid.uuid4().hex[:12]
-    # r14: snapshot table + checkpoint WAL on the fast ephemeral
-    # scratch (same contract as drain_to_parquet: bounded run, replay
-    # is idempotent, so the checkpoint needs no durability)
-    scratch = stateful._scratch_root()
-    # the snapshot table is read lazily by the returned frame — swept
-    # at interpreter exit like drain sinks (r15 scratch GC)
-    table = stateful.register_scratch_for_exit(
-        _os.path.join(scratch, f"cdc_table_{run}")
-    )
-    ckpt = _os.path.join(scratch, f"cdc_ckpt_{run}")
-    feed = _tempfile.mkdtemp(prefix="cdc_feed_")
-    # the feed and the checkpoint WAL are dead weight once the stream
-    # has drained (the snapshot table is all the final read needs) and
-    # are removed whether or not the drain completed
+    # the snapshot table is read lazily by the returned frame, so it
+    # stays in the scratch dir until exit; the feed is removed once the
+    # drain ends, whether or not it completed
+    scratch = stateful.scratch_dir()
+    table = tempfile.mkdtemp(prefix="cdc_table_", dir=scratch)
+    feed = tempfile.mkdtemp(prefix="cdc_feed_", dir=scratch)
     try:
         for i, part in enumerate((base, updates)):
-            tmp = _os.path.join(feed, f"_w{i}")
+            tmp = os.path.join(feed, f"_w{i}")
             part.coalesce(1).write.mode("overwrite").parquet(tmp)
-            src = _glob.glob(_os.path.join(tmp, "part-*.parquet"))[0]
-            _os.rename(src, _os.path.join(feed, f"{i:02d}_feed.parquet"))
-            _shutil.rmtree(tmp)
+            src = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+            os.rename(src, os.path.join(feed, f"{i:02d}_feed.parquet"))
+            shutil.rmtree(tmp)
         stream = (
             spark.readStream.schema(base.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
-        q = merge_sink.start_merge_stream(
-            stream, table, ckpt, ["o_orderkey"], "_version"
+        stateful.drain(
+            spark,
+            stream,
+            lambda batch, batch_id: merge_sink.merge_batch(
+                batch.sparkSession, batch, table, ["o_orderkey"], "_version", batch_id
+            ),
         )
-        q.awaitTermination()
     finally:
-        _shutil.rmtree(feed, ignore_errors=True)
-        _shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(feed, ignore_errors=True)
 
     final = merge_sink.read_table(spark, table)
     return final.groupBy("o_orderstatus").agg(

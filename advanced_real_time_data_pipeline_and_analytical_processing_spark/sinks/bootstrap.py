@@ -42,7 +42,7 @@ def initialize_layout(
     placement before the stream starts."""
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
+    HPath = getattr(jvm, "org.apache.hadoop.fs.Path")
     root = HPath(base)
     fs = root.getFileSystem(hconf)
     _ensure_dir(fs, root)
@@ -70,7 +70,7 @@ def bootstrap_ingest_dirs(spark: SparkSession, cfg) -> None:
     ``mkdirs`` per configured URI; absent/None entries skipped."""
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
+    HPath = getattr(jvm, "org.apache.hadoop.fs.Path")
     for d in (
         getattr(cfg, "source_dir", None),
         getattr(cfg, "processed_dir", None),

@@ -72,7 +72,11 @@ def upsert_jdbc(
     props.update(properties or {})
     staging = f"{table}_stage"
 
-    # 1. parallel executor-side stage write (replay-safe: overwrite)
+    # 1. parallel executor-side stage write (replay-safe: overwrite), one
+    # row per key: MERGE inserts every unmatched source row, and a key
+    # staged twice matches one target row twice on replay, which MERGE
+    # rejects (identical good rows share a row_hash)
+    df = df.dropDuplicates(key_cols)
     writer = df.write
     if "row_hash" in df.columns:
         writer = writer.option("createTableColumnTypes", "row_hash VARCHAR(64)")
@@ -81,7 +85,12 @@ def upsert_jdbc(
     # 2-3. driver-side MERGE + cleanup, one connection, one transaction
     spark = df.sparkSession
     jvm = spark._jvm
-    conn = jvm.java.sql.DriverManager.getConnection(url)
+    # the caller's properties carry the credentials, and on Derby the
+    # user also names the schema the staging table was written to
+    conn_props = getattr(jvm, "java.util.Properties")()
+    for k, v in (properties or {}).items():
+        conn_props.setProperty(k, v)
+    conn = getattr(jvm, "java.sql.DriverManager").getConnection(url, conn_props)
     try:
         conn.setAutoCommit(False)
         stmt = conn.createStatement()

@@ -73,29 +73,6 @@ def merge_batch(
     os.replace(tmp, os.path.join(table_dir, _MANIFEST))
 
 
-def start_merge_stream(
-    source: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    key_cols: list[str],
-    version_col: str,
-):
-    """Wire a streaming source into the merge sink under an
-    availableNow trigger: drain the backlog, then stop."""
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        merge_batch(
-            batch.sparkSession, batch, table_dir, key_cols, version_col, batch_id
-        )
-
-    return (
-        source.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def vacuum(table_dir: str, keep_latest: int = 1) -> list[str]:
     """Remove snapshot directories superseded by the manifest (keeping
     the current one plus ``keep_latest - 1`` most recent others for
@@ -129,14 +106,3 @@ def vacuum(table_dir: str, keep_latest: int = 1) -> list[str]:
             shutil.rmtree(path, ignore_errors=True)
             removed.append(path)
     return removed
-
-
-# ---------------------------------------------------------------------------
-# Time travel: read the table AS OF an earlier batch
-# ---------------------------------------------------------------------------
-# Snapshots are retained until vacuum() trims them, so any batch id
-# still on disk is a readable point-in-time view — the same AS OF
-# contract table formats expose, driven by the same manifest-per-
-# snapshot layout. Bucketed tables rewrite only touched buckets, so
-# "as of batch B" per bucket means its newest snapshot with id <= B.
-

@@ -34,29 +34,21 @@ def normalize_struct_json(doc: dict) -> dict:
     return doc
 
 
-def load_schema(schema_dir: str, data_file: str) -> StructType | None:
-    """Fetch the StructType for a data file; None → caller infers."""
-    path = os.path.join(schema_dir, derive_schema_filename(data_file))
-    if not os.path.exists(path):
-        return None
-    with open(path) as fh:
-        doc = json.load(fh)
-    return StructType.fromJson(normalize_struct_json(doc))
-
-
 def load_schema_any(spark, schema_dir: str, data_file: str) -> StructType | None:
-    """``load_schema`` for ANY Hadoop-resolvable URI — the form the
-    cluster job uses, where the schema prefix is ``s3a://bucket/schema``
-    (the reference read its schema documents from the same MinIO bucket
-    it watched for data, ``code/utils.py:81-101``). Plain paths take the
-    local fast path; URIs stream through ``FileSystem.open``."""
-    fname = derive_schema_filename(data_file)
-    if "://" not in schema_dir and not schema_dir.startswith("file:"):
-        return load_schema(schema_dir, fname)
+    """Fetch the StructType for a data file; None → caller infers.
+
+    ``schema_dir`` is any Hadoop-resolvable path — ``s3a://bucket/schema``
+    on the cluster (the reference read its schema documents from the
+    same MinIO bucket it watched for data, ``code/utils.py:81-101``).
+    Every path streams through ``FileSystem.open``, so a scheme-less
+    path resolves against ``fs.defaultFS`` exactly as
+    ``bootstrap.initialize_layout`` and ``deploy/upload_data.py``
+    resolved it when they wrote it."""
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    p = HPath(schema_dir.rstrip("/") + "/" + fname)
+    p = getattr(jvm, "org.apache.hadoop.fs.Path")(
+        schema_dir.rstrip("/") + "/" + derive_schema_filename(data_file)
+    )
     fs = p.getFileSystem(hconf)
     if not fs.exists(p):
         return None
@@ -64,7 +56,7 @@ def load_schema_any(spark, schema_dir: str, data_file: str) -> StructType | None
     try:
         # IOUtils drains the Hadoop input stream to a byte array without
         # guessing the length; decode as UTF-8 JSON.
-        raw = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+        raw = getattr(jvm, "org.apache.commons.io.IOUtils").toByteArray(stream)
     finally:
         stream.close()
     doc = json.loads(bytes(raw).decode("utf-8"))

@@ -10,7 +10,10 @@ Fixes applied vs the reference (SURVEY.md §4.3):
   (``readStream.format('csv'|'json')`` with explicit schema) instead of
   whole-text discovery + batch re-read.
 - §4.3-2 unbounded dedup state: the file source's checkpointed
-  exactly-once file tracking replaces ``dropDuplicates(file_path)``.
+  exactly-once file tracking does the work of
+  ``dropDuplicates(file_path)``, but it is no more bounded: its log
+  keeps every file it ever saw, about 107 B per file in
+  ``sources/0/*.compact`` (ROADMAP item 12).
 - §4.3-3 action storm: the success path runs the sink writes and
   nothing else — one job each for the good and the quarantine writes,
   no shuffle; the one-row audit record is written from the driver

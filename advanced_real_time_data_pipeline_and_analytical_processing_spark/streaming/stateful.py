@@ -8,10 +8,11 @@ pipeline needs, maintained across micro-batches:
 - ``running_user_stats``: per-key running count and sum, computed by
   Spark's native streaming aggregate (state-store merge in the JVM, no
   Python worker);
-- ``drain_to_parquet``: runs a bounded stateful stream to completion
-  with an availableNow trigger. Event-time sessions are
-  ``windows.session_windows`` (Spark's session window) drained here in
-  append mode.
+- ``drain``: runs a bounded stream to completion with an availableNow
+  trigger, its checkpoint in this process's ``scratch_dir()``;
+  ``drain_to_parquet`` drains into a parquet sink there. Event-time
+  sessions are ``windows.session_windows`` (Spark's session window)
+  drained here in append mode.
 
 Scale notes: state lives in the state store partitioned by grouping
 key — the shuffle is on the key, state size is O(distinct keys), and
@@ -21,10 +22,12 @@ each micro-batch touches only keys present in the batch.
 from __future__ import annotations
 
 import atexit
+import functools
 import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,15 +59,11 @@ def running_user_stats(stream_df: DataFrame) -> DataFrame:
 
 
 def _scratch_root() -> str:
-    """Scratch root for bounded availableNow drains (checkpoint WAL +
-    sink). The drain is a batch-equivalent computation: on failure the
-    whole drain re-runs from its staged inputs and the dynamic-
-    partition-overwrite sink makes the replay idempotent, so the
-    checkpoint has NO durability requirement by contract — it exists
-    only to sequence micro-batches within one run. Its cost is fsync-
-    bound (offset/commit WAL + one state-store delta file per partition
-    per batch), so it belongs on the fastest ephemeral storage the host
-    has: SPARK_GRAFT_STREAM_SCRATCH if set (point it at local NVMe on a
+    """Where bounded streams keep their scratch (see ``drain``: nothing
+    there needs to be durable). Its cost is fsync-bound (offset/commit
+    WAL + one state-store delta file per partition per batch), so it
+    belongs on the fastest ephemeral storage the host has:
+    SPARK_GRAFT_STREAM_SCRATCH if set (point it at local NVMe on a
     cluster), else /dev/shm when present (r14: measured 5.98 -> 5.45 s
     stateful_session_report, 7.78 -> 6.02 s stream_outer_join_report
     solo medians moving /tmp-on-disk -> tmpfs), else the system temp
@@ -90,38 +89,68 @@ def _scratch_root() -> str:
     return tempfile.gettempdir()
 
 
-# Scratch dirs (drain sinks, CDC snapshot tables) whose lazily-read
-# frames must outlive the drain call: swept at interpreter exit so a
-# long-lived engine doesn't accumulate RAM-backed sink parquet across
-# drains (VERDICT r14 what's-wrong #3 / ADVICE r14). Callers that are
-# done with a drained frame earlier can release_scratch() explicitly.
-_EXIT_SCRATCH: list[str] = []
-
-
-def _sweep_scratch() -> None:
-    while _EXIT_SCRATCH:
-        shutil.rmtree(_EXIT_SCRATCH.pop(), ignore_errors=True)
-
-
-atexit.register(_sweep_scratch)
-
-
-def register_scratch_for_exit(path: str) -> str:
-    """Mark a scratch dir for removal at interpreter exit (idempotent,
-    missing dirs ignored). Returns the path for call-through use."""
-    if path not in _EXIT_SCRATCH:
-        _EXIT_SCRATCH.append(path)
+@functools.cache
+def _scratch_dir_under(root: str) -> str:
+    os.makedirs(root, exist_ok=True)
+    path = tempfile.mkdtemp(prefix="spark_graft_", dir=root)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
 
 
-def release_scratch(path: str) -> None:
-    """Remove a registered scratch dir NOW — only valid once every
-    consumer of the frame that reads it has been fully materialized.
-    Kept for ROADMAP item 5, which calls it where drains are fully
-    consumed."""
-    if path in _EXIT_SCRATCH:
-        _EXIT_SCRATCH.remove(path)
-    shutil.rmtree(path, ignore_errors=True)
+def scratch_dir() -> str:
+    """This process's one scratch dir under ``_scratch_root()``, made on
+    first use (the root too, if missing) and removed at interpreter
+    exit. Every bounded stream keeps its staged inputs, checkpoint and
+    sink here; sinks must outlive their drain because the returned
+    frames read them lazily."""
+    return _scratch_dir_under(_scratch_root())
+
+
+def drain(
+    spark: SparkSession,
+    streamed: DataFrame,
+    write_batch: Callable[[DataFrame, int], None],
+    shuffle_partitions: int | None = None,
+    output_mode: str = "update",
+) -> None:
+    """Run a bounded streaming DataFrame to completion with an
+    availableNow trigger, handing each micro-batch to ``write_batch``.
+
+    The checkpoint only orders the micro-batches of this one run: on
+    failure the whole drain re-runs from its staged inputs, and an
+    idempotent ``write_batch`` makes a replayed micro-batch harmless.
+    So it lives in ``scratch_dir()`` and is removed when the drain
+    ends, completed or not. In a ``session.get_spark`` session the
+    checkpoint's offset, commit and state-store files commit through
+    the FileSystem API, so a drain starts no ``readlink`` child process
+    (perfbench's running-stats drain: 210 child processes before, 70
+    after). output_mode defaults to "update" (stateful running
+    aggregates); pass "append" for append-only plans — stream-stream
+    joins only support append.
+
+    `shuffle_partitions` scopes the STATE STORE partition count to this
+    query (a new checkpoint pins it permanently): stateful queries pay a
+    per-state-partition cost every micro-batch (store open/commit), so
+    the right number tracks key cardinality and state size, not the
+    session's scan parallelism — 32 partitions for 150 keys measured
+    3.4× slower than 8."""
+    checkpoint = os.path.join(scratch_dir(), f"ckpt_{uuid.uuid4().hex[:12]}")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    if shuffle_partitions:
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    try:
+        (
+            streamed.writeStream.foreachBatch(write_batch)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        if shuffle_partitions:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(checkpoint, ignore_errors=True)
 
 
 def drain_to_parquet(
@@ -130,64 +159,21 @@ def drain_to_parquet(
     shuffle_partitions: int | None = None,
     output_mode: str = "update",
 ) -> DataFrame:
-    """Run a (bounded) streaming DataFrame to completion with an
-    availableNow trigger, landing each micro-batch's update rows in an
-    executor-side parquet sink, then read the result back.
+    """``drain`` into an executor-side parquet sink, then read the
+    result back.
 
     Rows never funnel through the driver (Spark's memory sink would
     hold every update row in driver memory — a scale-killer at
     100 TB). The per-batch write is ``sinks.writers.write_partitions``
     (dynamic partition overwrite keyed on batch id, no ``_SUCCESS``
-    marker), so a replayed micro-batch is idempotent. In a
-    ``session.get_spark`` session the checkpoint's offset, commit and
-    state-store files commit through the FileSystem API, so a drain
-    starts no ``readlink`` child process (perfbench's running-stats
-    drain: 210 child processes before, 70 after). output_mode defaults
-    to "update" (stateful running aggregates); pass "append" for
-    append-only plans — stream-stream joins only support append.
-
-    `shuffle_partitions` scopes the STATE STORE partition count to this
-    query (a new checkpoint pins it permanently): stateful queries pay a
-    per-state-partition cost every micro-batch (store open/commit), so
-    the right number tracks key cardinality and state size, not the
-    session's scan parallelism — 32 partitions for 150 keys measured
-    3.4× slower than 8.
-
-    Scratch lifecycle (r15): both dirs live under _scratch_root(). The
-    checkpoint is deleted as soon as the drain completes; the sink dir
-    is registered for removal at interpreter exit — it must outlive
-    this call because the returned frame reads it lazily, but a
-    long-lived engine must not accumulate sink parquet on the (possibly
-    RAM-backed) scratch fs across drains."""
-    name = f"drain_{uuid.uuid4().hex[:12]}"
-    scratch = _scratch_root()
-    out = register_scratch_for_exit(os.path.join(scratch, f"out_{name}"))
-    checkpoint = os.path.join(scratch, f"ckpt_{name}")
+    marker), so a replayed micro-batch is idempotent. The sink lives in
+    ``scratch_dir()`` until exit."""
+    out = os.path.join(scratch_dir(), f"out_drain_{uuid.uuid4().hex[:12]}")
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
         write_partitions(df.withColumn("_batch_id", F.lit(batch_id)), out, "_batch_id")
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            streamed.writeStream.foreachBatch(write_batch)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        # the drain is complete: its checkpoint (offset/commit WAL +
-        # state store) has served its purpose and would otherwise
-        # accumulate on the scratch filesystem across a long-lived
-        # engine's many drains (r14: scratch defaults to tmpfs). The
-        # SINK dir must outlive us — the returned frame reads it lazily.
-        shutil.rmtree(checkpoint, ignore_errors=True)
+    drain(spark, streamed, write_batch, shuffle_partitions, output_mode)
     # The sink holds exactly the stream's columns: read them back with
     # the schema already known (no inference job); _batch_id comes from
     # partition discovery.

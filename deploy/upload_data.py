@@ -31,7 +31,7 @@ def upload_dir(spark: SparkSession, local_dir: str, dest_uri: str, exts: tuple[s
     the reference's mc cp (last upload wins)."""
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
+    HPath = getattr(jvm, "org.apache.hadoop.fs.Path")
     dest = HPath(dest_uri)
     fs = dest.getFileSystem(hconf)
     n = 0

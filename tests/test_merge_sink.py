@@ -9,6 +9,7 @@ import os
 from pyspark.sql import Row
 
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.sinks import merge_sink
+from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import stateful
 
 
 def test_merge_batch_upserts_and_replays_idempotently(spark, tmp_path):
@@ -44,7 +45,6 @@ def test_merge_batch_crash_leaves_old_snapshot_readable(spark, tmp_path):
 def test_streaming_merge_sink_end_to_end(spark, tmp_path):
     src_dir = str(tmp_path / "in")
     table = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ckpt")
     os.makedirs(src_dir)
     spark.createDataFrame(
         [Row(k=1, v="a", ver=0), Row(k=2, v="b", ver=0), Row(k=2, v="b2", ver=1)]
@@ -53,8 +53,13 @@ def test_streaming_merge_sink_end_to_end(spark, tmp_path):
     stream = spark.readStream.schema("k bigint, v string, ver bigint").parquet(
         src_dir
     )
-    q = merge_sink.start_merge_stream(stream, table, ckpt, ["k"], "ver")
-    q.awaitTermination(120)
+    stateful.drain(
+        spark,
+        stream,
+        lambda batch, batch_id: merge_sink.merge_batch(
+            batch.sparkSession, batch, table, ["k"], "ver", batch_id
+        ),
+    )
 
     rows = merge_sink.read_table(spark, table).collect()
     got = {r.k: (r.v, r.ver) for r in rows}

@@ -33,8 +33,6 @@ KEEP = {
     "grouped_stats",
     "numeric_columns",
     "GROUP_FALLBACK",
-    # ROADMAP item 5: called where drains are fully consumed
-    "release_scratch",
     # ROADMAP item 8 decides whether the merge sink keeps it
     "vacuum",
 }

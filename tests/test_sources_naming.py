@@ -7,7 +7,6 @@ from pyspark.sql import types as T
 
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.sources.schema_registry import (
     derive_schema_filename,
-    load_schema,
     load_schema_any,
 )
 
@@ -24,20 +23,20 @@ def test_schema_filename():
     assert derive_schema_filename("/a/b/Smart_Farming.json") == "Smart_Farming.json"
 
 
-def test_schema_roundtrip_and_fallback(tmp_path):
+def test_schema_roundtrip_and_fallback(spark, tmp_path):
     schema = T.StructType([T.StructField("a", T.IntegerType())])
     write_schema(schema, str(tmp_path), "ds1")
-    loaded = load_schema(str(tmp_path), "data/ds1.csv")
+    loaded = load_schema_any(spark, str(tmp_path), "data/ds1.csv")
     assert loaded == schema
-    assert load_schema(str(tmp_path), "data/absent.csv") is None
+    assert load_schema_any(spark, str(tmp_path), "data/absent.csv") is None
 
 
-def test_schema_metadata_backfill(tmp_path):
+def test_schema_metadata_backfill(spark, tmp_path):
     # reference code/utils.py:104-107: missing metadata keys backfilled
     doc = {"type": "struct", "fields": [{"name": "a", "type": "integer"}]}
     with open(os.path.join(tmp_path, "raw.json"), "w") as fh:
         json.dump(doc, fh)
-    loaded = load_schema(str(tmp_path), "raw.csv")
+    loaded = load_schema_any(spark, str(tmp_path), "raw.csv")
     assert loaded.fields[0].metadata == {}
     assert loaded.fields[0].nullable is True
 

@@ -1,12 +1,11 @@
 """The staged-stream helper behind the registry's streaming queries:
 the stage dir never outlives its builder, and tick rows land at the
 requested event time whatever the fixture's ts encoding. The CDC
-upsert's feed and checkpoint dirs never outlive their builder either."""
+upsert's feed never outlives its builder either."""
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -15,7 +14,6 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as em
 from advanced_real_time_data_pipeline_and_analytical_processing_spark import catalog
-from advanced_real_time_data_pipeline_and_analytical_processing_spark.sinks import merge_sink
 from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import stateful
 
 STAGED = (
@@ -68,26 +66,16 @@ def write_fixture(sf_dir, unit: str = "us") -> None:
 def test_failed_drain_leaves_no_stage_dir(spark, tmp_path, monkeypatch, name):
     sf_dir = str(tmp_path / "sf")
     write_fixture(sf_dir)
-    temp = tmp_path / "temp"
-    temp.mkdir()
-    scratch = tmp_path / "scratch"
-    scratch.mkdir()
-    monkeypatch.setattr(tempfile, "tempdir", str(temp))
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(scratch))
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(tmp_path / "scratch"))
 
     def failing_drain(*args, **kwargs):
         raise RuntimeError("drain failed")
 
-    def failing_merge_stream(source, table_dir, checkpoint_dir, *args):
-        os.makedirs(checkpoint_dir)  # the stream got as far as its WAL
-        raise RuntimeError("drain failed")
-
-    monkeypatch.setattr(stateful, "drain_to_parquet", failing_drain)
-    monkeypatch.setattr(merge_sink, "start_merge_stream", failing_merge_stream)
+    monkeypatch.setattr(stateful, "drain", failing_drain)
     with pytest.raises(RuntimeError, match="drain failed"):
         em.queries()[name](spark, sf_dir)
-    assert os.listdir(temp) == []
-    assert [d for d in os.listdir(scratch) if d.startswith("cdc_ckpt_")] == []
+    left = os.listdir(stateful.scratch_dir())
+    assert [d for d in left if d.startswith(("stream_stage_", "cdc_feed_"))] == []
 
 
 @pytest.mark.parametrize("unit", ["ns", "us"])

@@ -7,7 +7,10 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import subprocess
+import sys
 import threading
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -269,7 +272,11 @@ def test_running_user_stats_matches_fillna_fold_on_hostile_values(spark, tmp_pat
     drained = stateful.drain_to_parquet(spark, updates)
     assert drained.schema == parent_schema
     # the sink keeps each batch's rows under its _batch_id partition
-    (out,) = [str(p) for p in scratch.iterdir() if p.name.startswith("out_drain_")]
+    (out,) = [
+        os.path.join(stateful.scratch_dir(), e)
+        for e in os.listdir(stateful.scratch_dir())
+        if e.startswith("out_drain_")
+    ]
 
     # the pandas operator's fold: per batch, per key present in it
     want, state = {}, {}
@@ -292,10 +299,10 @@ def test_running_user_stats_matches_fillna_fold_on_hostile_values(spark, tmp_pat
 
 
 def test_drain_scratch_lifecycle_and_exit_sweep(spark, tmp_path, monkeypatch):
-    """r15 scratch GC: a DEFAULT drain sink lands on the scratch root,
-    its checkpoint WAL is already gone when the drain returns, the sink
-    is registered for the exit sweep (it must outlive the call — the
-    returned frame reads it lazily), and the sweep removes it."""
+    """A drain's sink lands in this process's scratch dir, its
+    checkpoint is already gone when the drain returns, and the sink
+    outlives the call (the returned frame reads it lazily). A process
+    that made its scratch dir removes it when it exits."""
     from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import stateful
 
     scratch = tmp_path / "scratch"
@@ -315,16 +322,54 @@ def test_drain_scratch_lifecycle_and_exit_sweep(spark, tmp_path, monkeypatch):
     final = stateful.drain_to_parquet(spark, stateful.running_user_stats(stream))
     assert final.count() == 2  # frame readable while the sink lives
 
-    entries = os.listdir(scratch)
-    sinks = [e for e in entries if e.startswith("out_drain_")]
-    assert len(sinks) == 1, entries
+    assert os.listdir(scratch) == [os.path.basename(stateful.scratch_dir())]
+    entries = os.listdir(stateful.scratch_dir())
+    assert len([e for e in entries if e.startswith("out_drain_")]) == 1, entries
     assert not any(e.startswith("ckpt_") for e in entries)  # WAL swept already
-    sink_path = os.path.join(str(scratch), sinks[0])
-    assert sink_path in stateful._EXIT_SCRATCH
 
-    stateful._sweep_scratch()  # what atexit runs
-    assert not os.path.exists(sink_path)
-    assert stateful._EXIT_SCRATCH == []
+    # exit removal, in a Spark-free process of its own
+    child_root = tmp_path / "child"
+    child_root.mkdir()
+    code = (
+        "import os\n"
+        "from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import stateful\n"
+        "open(os.path.join(stateful.scratch_dir(), 'sink'), 'w').close()\n"
+        "print(stateful.scratch_dir())\n"
+    )
+    env = dict(os.environ, SPARK_GRAFT_STREAM_SCRATCH=str(child_root))
+    done = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parents[1],
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert done.stdout.strip().startswith(str(child_root))
+    assert not os.path.exists(done.stdout.strip())
+    assert os.listdir(child_root) == []
+
+
+def test_failed_write_batch_leaves_no_checkpoint(spark, tmp_path, monkeypatch):
+    """A drain whose batch writer raises re-raises, restores the
+    session's shuffle partitions and removes its checkpoint."""
+    from pyspark.errors import StreamingQueryException
+
+    from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import stateful
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(tmp_path / "scratch"))
+    src = tmp_path / "src"
+    spark.createDataFrame([(1, 10.0)], "user_id bigint, value double").write.parquet(str(src))
+    stream = spark.readStream.schema("user_id bigint, value double").parquet(str(src))
+
+    def write_batch(df, batch_id):
+        raise RuntimeError("sink down")
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(StreamingQueryException, match="sink down"):
+        stateful.drain(spark, stream, write_batch, shuffle_partitions=3)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert os.listdir(stateful.scratch_dir()) == []
 
 
 def test_scratch_root_skips_low_space_devshm(monkeypatch):
@@ -357,18 +402,22 @@ def test_scratch_root_skips_low_space_devshm(monkeypatch):
     assert stateful._scratch_root() == "/somewhere/else"
 
 
-def test_register_scratch_for_exit_is_idempotent(tmp_path, monkeypatch):
-    """Registering a scratch dir twice leaves one entry, so one
-    release_scratch() unregisters it for good."""
+def test_scratch_dir_one_per_root_and_creates_missing_root(tmp_path, monkeypatch):
+    """One root gives one dir however often it is asked for; a root
+    that does not exist yet is created (perfbench points the variable
+    at a dir nothing else makes)."""
     from advanced_real_time_data_pipeline_and_analytical_processing_spark.streaming import stateful
 
-    monkeypatch.setattr(stateful, "_EXIT_SCRATCH", [])
-    path = str(tmp_path / "sink")
-    assert stateful.register_scratch_for_exit(path) == path
-    assert stateful.register_scratch_for_exit(path) == path
-    assert stateful._EXIT_SCRATCH == [path]
-    stateful.release_scratch(path)
-    assert stateful._EXIT_SCRATCH == []
+    root = tmp_path / "not" / "yet"
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(root))
+    first = stateful.scratch_dir()
+    assert stateful.scratch_dir() == first
+    assert os.path.dirname(first) == str(root)
+    assert os.listdir(root) == [os.path.basename(first)]
+
+    other = tmp_path / "other"
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(other))
+    assert os.path.dirname(stateful.scratch_dir()) == str(other)
 
 
 def test_file_lifecycle_processed_routing(spark, dirs, tmp_path):

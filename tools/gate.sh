@@ -1,9 +1,9 @@
 #!/usr/bin/env bash
 # One-command replica of every local gate, in the order that fails
-# fastest: registry pins plus the dead-name and one-valued-parameter
-# scan (AST only, no Spark: a few seconds), full pytest (~13 min on 4
-# vCPU), the oracle gate at sf0.01 (~4 min), the oracle gate at sf0.1,
-# bench.
+# fastest: registry pins, the dead-name and one-valued-parameter scan
+# and the full-name JVM class lookup scan (AST only, no Spark: a few
+# seconds), full pytest (~13 min on 4 vCPU), the oracle gate at sf0.01
+# (~4 min), the oracle gate at sf0.1, bench.
 #
 # The oracle gate (tools/check_oracle.py) runs every registry query ONCE
 # per tier and judges that one result with three comparators: C1 (str
@@ -31,7 +31,7 @@
 # committed _r{N} snapshot is verifiably tied to the tree that produced it.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-python -m pytest tests/test_registry.py tests/test_no_dead_code.py -q
+python -m pytest tests/test_registry.py tests/test_no_dead_code.py tests/test_jvm_lookup.py -q
 python tools/lint_oracle_types.py
 python -m pytest tests/ -x -q
 python tools/check_oracle.py /root/testdata/sf0.01
